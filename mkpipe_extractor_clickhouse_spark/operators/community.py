@@ -53,7 +53,7 @@ def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     r12: the nine g* queries total 20.7 s steady at sf0.1 recomputing
     it, 9.8 s computing it once; results bit-identical). This is the
     standard iterative-graph posture (pin the edge list, then loop —
-    cf. graph.py's connected-components localCheckpoint note), not a
+    cf. graph.py's star-round fallback), not a
     benchmark artifact: at a billion edges the recompute would be a
     full lineitem shuffle per PageRank round."""
     li = load_table(spark, sf_dir, "lineitem")

@@ -252,13 +252,14 @@ def j19_fuzzy_edit_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 def er1_fuzzy_entity_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Entity resolution end-to-end: the j19 fuzzy pair graph collapsed
     into entities. Pipeline: q-gram-blocked edit-distance pairs →
-    connected components (the large-star/small-star machinery from
-    graph.py, O(log² n) rounds — string node ids order lexically) →
+    connected components (graph.py: per-partition union-find, then an
+    exact driver finish — string node ids order by code point, which
+    is Spark's UTF-8 byte order) →
     per-cluster canonical spelling = the variant carried by the most
     part rows (tie → smaller name), plus spelling and row counts. This
     is the standard catalog-merge recipe: the only O(n²) anywhere is
     the oracle's all-pairs + recursive reachability; the engine side
-    is blocked candidates, bounded CC rounds, and broadcast count
+    is blocked candidates, a one-pass CC contraction, and broadcast count
     joins. Singleton names (no fuzzy twin) stay as their own entity —
     a merge plan must account for every input spelling."""
     from .graph import connected_components

@@ -1166,23 +1166,20 @@ def l18_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     step that turns pairwise matches into keep-one-per-cluster dedup
     decisions.
 
-    Spark side: large-star/small-star alternation (public Kiveris et
-    al. SoCC'14 MR-CC algorithm, operators/graph.py) — O(log² n)
-    rounds regardless of component diameter, so deep chain components
-    converge where plain label propagation would need diameter rounds.
-    The DuckDB oracle computes the same components by recursive
-    reachability, so the iterative result is verified exactly."""
-    # checkpoint: the Jaccard join is the dominant cost and feeds two
-    # union branches — without this it executes twice
-    pairs = (
-        l2_jaccard_neardup(spark, sf_dir)
-        .select("doc_a", "doc_b")
-        .localCheckpoint(eager=True)
-    )
+    Spark side: operators/graph.py's two-phase connected components —
+    per-partition union-find contracts the pair graph to a forest in
+    one Arrow pass, and the forest is finished exactly on the driver
+    (large-star/small-star rounds only past the driver bound), so the
+    cost is one pass over the pairs whatever the component diameter.
+    The pairs are read once, by that pass, so nothing is pinned.  The
+    DuckDB oracle computes the same components by recursive
+    reachability, so the result is verified exactly."""
     docs = load_table(spark, sf_dir, "documents").select(
         F.col("doc_id").alias("id")
     )
-    edges = pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
+    edges = l2_jaccard_neardup(spark, sf_dir).select(
+        F.col("doc_a").alias("u"), F.col("doc_b").alias("v")
+    )
     return connected_components(docs, edges)
 
 
@@ -3107,10 +3104,10 @@ def l114_dedup_cluster_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
     near-dup clusters (l18's relation), which is what the keep/drop
     decision actually acts on.
 
-    Spark side reuses l18's large-star/small-star components (O(log²n)
-    rounds, diameter-free) and adds two tiny aggregations; the oracle
-    re-derives components by recursive reachability, so the iterative
-    algorithm's sizes are verified exactly."""
+    Spark side reuses l18's components (graph.py's two-phase union-
+    find, diameter-free) and adds two tiny aggregations; the oracle
+    re-derives components by recursive reachability, so the sizes are
+    verified exactly."""
     clusters = l18_dedup_clusters(spark, sf_dir)
     csize = clusters.groupBy("cluster_id").agg(
         F.count("*").alias("cluster_size")

@@ -1052,6 +1052,39 @@ def _with_recall(
     return res.join(F.broadcast(rec))
 
 
+def _vector_matrix_fn(dim: int):
+    """Batch decoder shared by the Lloyd kernels: a list<double> Arrow
+    column of n vectors → an (n, dim) float64 matrix.  Fails loudly on
+    malformed input instead of mis-assigning it: null vectors, vectors
+    whose length is not dim (checked per row, so ragged rows that
+    happen to total n·dim cannot reshape misaligned) and non-finite
+    components (NaN/inf, or a null element, which decodes as NaN) raise
+    ValueError.  A factory so the returned function pickles by value
+    into the kernels' closures."""
+
+    def to_matrix(lv):
+        import numpy as np
+        import pyarrow.compute as pc
+
+        n = len(lv)
+        mm = pc.min_max(pc.list_value_length(lv))
+        lens = {mm["min"].as_py(), mm["max"].as_py()}
+        if lv.null_count or lens != {dim}:
+            raise ValueError(
+                f"ragged or null vectors: every vector must have dim {dim}"
+            )
+        flat = lv.flatten().to_numpy(zero_copy_only=False)
+        assert len(flat) == n * dim
+        X = flat.reshape(n, dim)
+        if not np.isfinite(X).all():
+            raise ValueError(
+                "non-finite vector component (NaN, inf or null element)"
+            )
+        return X
+
+    return to_matrix
+
+
 def _lloyd_update_fn(cent_blocks, dim: int, dsub: int):
     """mapInArrow kernel factory: one Lloyd assignment + partial-update
     pass over (v: array<double>) batches.  ``cent_blocks`` is a list
@@ -1069,6 +1102,7 @@ def _lloyd_update_fn(cent_blocks, dim: int, dsub: int):
     quantization is trunc(x·1e9 ± 0.5) toward zero (int64 cast), the
     _quantize9 algebra.  int64 partial sums are order-independent, so
     the update is deterministic under any partitioning."""
+    to_matrix = _vector_matrix_fn(dim)
 
     def fn(batches):
         import numpy as np
@@ -1087,7 +1121,7 @@ def _lloyd_update_fn(cent_blocks, dim: int, dsub: int):
             if n == 0:
                 continue
             seen = True
-            X = lv.flatten().to_numpy(zero_copy_only=False).reshape(n, dim)
+            X = to_matrix(lv)
             y = X * 1e9
             Q = (y + np.where(y >= 0, 0.5, -0.5)).astype(np.int64)
             for b, (cids, C) in enumerate(CB):
@@ -1140,6 +1174,7 @@ def _lloyd_assign_fn(cent_blocks, dim: int, dsub: int):
     (vec_id, v) batches → (vec_id, block, code) rows.  Same d2 fold
     order and first-min tie-break as _lloyd_update_fn, so the emitted
     codes are bit-identical to the JVM min_by assignment."""
+    to_matrix = _vector_matrix_fn(dim)
 
     def fn(batches):
         import numpy as np
@@ -1155,7 +1190,7 @@ def _lloyd_assign_fn(cent_blocks, dim: int, dsub: int):
             n = len(lv)
             if n == 0:
                 continue
-            X = lv.flatten().to_numpy(zero_copy_only=False).reshape(n, dim)
+            X = to_matrix(lv)
             out_b, out_code = [], []
             for b, (cids, C) in enumerate(CB):
                 Xb = X[:, b * dsub : (b + 1) * dsub]
@@ -1191,6 +1226,7 @@ def _lloyd_assign_residual_fn(cent_blocks, dim: int):
     _lloyd_update_fn) and rv = v − c(v), the elementwise IEEE subtract
     the JVM zip_with(v, cv, x − c) performed — bit-identical residuals
     without the broadcast-join + argmin-groupBy + residual-join chain."""
+    to_matrix = _vector_matrix_fn(dim)
 
     def fn(batches):
         import numpy as np
@@ -1206,7 +1242,7 @@ def _lloyd_assign_residual_fn(cent_blocks, dim: int):
             n = len(lv)
             if n == 0:
                 continue
-            X = lv.flatten().to_numpy(zero_copy_only=False).reshape(n, dim)
+            X = to_matrix(lv)
             D = np.empty((n, k), dtype=np.float64)
             for ci in range(k):
                 acc = np.zeros(n, dtype=np.float64)
@@ -1236,9 +1272,13 @@ def _lloyd_reduce(partial_rows, cent_blocks):
     exact davg9 finish: mean = double(Σ quantize9(x)) / (double(count)
     · 1e9) — the same two IEEE ops Spark's
     sum(long).cast(double) / (count · lit(1e9)) performs.  Clusters
-    with zero assigned rows drop out, as the grouped-mean update did."""
+    with zero assigned rows drop out, as the grouped-mean update did.
+
+    The count rides on the pos-0 row of each partial group (the kernel
+    emits every position of a group it emits at all), so a group
+    without one is a malformed partial and raises RuntimeError rather
+    than silently dropping its cluster."""
     acc: dict[tuple[int, int], list] = {}
-    dsub = None
     for r in partial_rows:
         key = (r["block"], r["cid"])
         if key not in acc:
@@ -1246,6 +1286,11 @@ def _lloyd_reduce(partial_rows, cent_blocks):
         acc[key][0][r["pos"]] = acc[key][0].get(r["pos"], 0) + r["qsum"]
         if r["pos"] == 0:
             acc[key][1] += r["cnt"]
+    missing = sorted(key for key, (qs, _) in acc.items() if 0 not in qs)
+    if missing:
+        raise RuntimeError(
+            f"Lloyd partials without a pos-0 row for (block, cid) {missing}"
+        )
     out = []
     for b in range(len(cent_blocks)):
         cids, cvs = [], []
@@ -1286,12 +1331,17 @@ def kmeans_fit(
 
     The input is deliberately NOT pinned (r13): both callers hand a
     parquet projection, so each pass re-reads just the embedding
-    column — cheaper locally than materializing an input-sized
-    checkpoint (A/B below) and the only fault-tolerant posture at
-    100 TB, where an input-sized localCheckpoint must not exist."""
+    column instead of materializing an input-sized checkpoint.  No pin
+    A/B was run for this choice; it stands on the 100 TB posture, where
+    an input-sized localCheckpoint must not exist.
+
+    Raises ValueError on an empty input and, from the kernel, on
+    ragged, null or non-finite vectors."""
     spark = vecs.sparkSession
     vecs = vecs.select("vec_id", "v")
     init = vecs.orderBy("vec_id").limit(k).collect()
+    if not init:
+        raise ValueError("no vectors to fit")
     init = sorted(init, key=lambda r: r["vec_id"])
     dim = len(init[0]["v"])
     cent_blocks = [(
@@ -1478,13 +1528,17 @@ def pq_train_encode(vecs: DataFrame) -> tuple[DataFrame, DataFrame]:
     Input contract (r13, no internal pin): callers hand either a cheap
     re-scannable projection (l21 — a parquet column read per pass) or
     an already-pinned relation (l21b's residuals) — pinning here again
-    would materialize an input-sized checkpoint twice."""
+    would materialize an input-sized checkpoint twice.  Raises
+    ValueError on empty input and on ragged, null or non-finite
+    vectors, as kmeans_fit does."""
     spark = vecs.sparkSession
     vecs = vecs.select("vec_id", "v")
     init = sorted(
         vecs.orderBy("vec_id").limit(PQ_K).collect(),
         key=lambda r: r["vec_id"],
     )
+    if not init:
+        raise ValueError("no vectors to fit")
     dim = len(init[0]["v"])
     dsub = dim // PQ_BLOCKS
     cent_blocks = [

@@ -3,6 +3,10 @@ hash-dependent paths must agree with their exact counterparts."""
 
 from __future__ import annotations
 
+import random
+
+import pytest
+
 from mkpipe_extractor_clickhouse_spark.operators import multimodal
 from mkpipe_extractor_clickhouse_spark.registry import all_specs
 
@@ -297,6 +301,252 @@ def test_connected_components_two_components_and_order(spark):
     )
     out = {r["doc_id"]: r["cluster_id"] for r in connected_components(nodes, edges).collect()}
     assert out == {0: 0, 1: 0, 2: 0, 3: 3, 4: 4, 5: 3, 6: 6, 7: 3}
+
+
+def _uf_labels(node_ids, pairs):
+    """Reference components: plain union-find, label = component min
+    under Python ordering."""
+    parent = {x: x for x in node_ids}
+
+    def root(x):
+        while parent[x] != x:
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        if a is None or b is None:
+            continue
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        ra, rb = root(a), root(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {x: root(x) for x in node_ids}
+
+
+def _cc_labels(nodes, edges):
+    from mkpipe_extractor_clickhouse_spark.operators.graph import (
+        connected_components,
+    )
+
+    out = connected_components(nodes, edges).collect()
+    assert len(out) == nodes.count()
+    return {r["doc_id"]: r["cluster_id"] for r in out}
+
+
+@pytest.fixture(params=["driver_finish", "star_fallback"])
+def cc_path(request, monkeypatch):
+    """Run a CC test on both phase-2 paths: the default bound finishes
+    every test graph on the driver; a bound of 2 edges forces the
+    large-star/small-star rounds over the phase-1 forest."""
+    from mkpipe_extractor_clickhouse_spark.operators import graph
+
+    if request.param == "star_fallback":
+        monkeypatch.setattr(graph, "_DRIVER_FINISH_EDGES", 2)
+    return request.param
+
+
+@pytest.mark.parametrize("seed,parts", [(1, 4), (2, 8)])
+def test_connected_components_random_graphs_match_union_find(
+    spark, cc_path, seed, parts
+):
+    """Random sparse graphs with their edges scattered over 4-8
+    partitions, so most components span partitions and phase 1 only
+    contracts them partially: both phase-2 paths must reproduce a
+    pure-Python union-find exactly (duplicate and reversed edges too)."""
+    rng = random.Random(seed)
+    n = 150
+    pairs = [(rng.randrange(n), rng.randrange(n)) for _ in range(110)]
+    pairs += [(b, a) for a, b in pairs[:10]] + pairs[10:20]
+    nodes = spark.range(n).toDF("id")
+    edges = spark.createDataFrame(pairs, "u long, v long").repartition(parts)
+    assert _cc_labels(nodes, edges) == _uf_labels(range(n), pairs)
+
+
+def test_connected_components_string_ids_non_ascii(spark, cc_path):
+    """String ids (er1's case): cluster ids must be the component
+    minimum in Spark's order, which compares UTF-8 bytes, while the
+    driver finish compares Python code points.  The two orders agree,
+    including astral characters that UTF-16 code-unit order (Java's
+    String.compareTo) would rank below U+FFFF."""
+    ids = ["a", "z", "é", "Ω", "日本", "\uffff", "\U0001f600", "e\u0301",
+           "zz", "Z", "ß", "\U0001f600x"]
+    rows = spark.createDataFrame([(i,) for i in ids], "id string")
+    assert [r.id for r in rows.orderBy("id").collect()] == sorted(ids)
+    pairs = [("\U0001f600", "\uffff"), ("z", "é"), ("é", "Ω"),
+             ("日本", "\U0001f600x"), ("\U0001f600x", "ß"), ("Z", "Z"),
+             ("é", "e\u0301")]
+    edges = spark.createDataFrame(pairs, "u string, v string").repartition(4)
+    labels = _cc_labels(rows, edges)
+    assert labels == _uf_labels(ids, pairs)
+    assert labels["\U0001f600"] == "\uffff"
+    assert labels["Ω"] == "e\u0301"  # not NFC-normalized: 'e' < 'z' < 'é'
+
+
+def test_connected_components_degenerate_inputs(spark, cc_path):
+    """Null endpoints and self-loops are ignored (as the u != v filter
+    always did), an empty or loop-only edge set labels every node by
+    itself, and nodes no edge touches stay singletons."""
+    nodes = spark.range(6).toDF("id")
+    schema = "u long, v long"
+    empty = spark.createDataFrame([], schema)
+    assert _cc_labels(nodes, empty) == {i: i for i in range(6)}
+    loops = spark.createDataFrame([(1, 1), (4, 4), (4, 4)], schema)
+    assert _cc_labels(nodes, loops) == {i: i for i in range(6)}
+    nulls = spark.createDataFrame(
+        [(None, 1), (2, None), (None, None), (5, 3), (3, 3)], schema
+    )
+    assert _cc_labels(nodes, nulls) == {
+        0: 0, 1: 1, 2: 2, 3: 3, 4: 4, 5: 3
+    }
+
+
+def test_connected_components_driver_finish_job_count(spark):
+    """Job-count lock for the two-phase design: the diameter-99 chain
+    costs at most 3 Spark jobs to build on the driver-finish path (2
+    here: the input's shuffle stage under AQE, then the phase-1 pass
+    with its bounded collect), where the star rounds spent a
+    checkpoint job, a count and an anti-join per round."""
+    from pyspark.sql import functions as F
+
+    from mkpipe_extractor_clickhouse_spark.operators.graph import (
+        connected_components,
+    )
+
+    sc = spark.sparkContext
+    n = 100
+    nodes = spark.range(n + 10).toDF("id")
+    edges = (
+        spark.range(n - 1)
+        .toDF("u")
+        .select("u", (F.col("u") + 1).alias("v"))
+        .repartition(8)
+    )
+    group = "cc-job-count-lock"
+    sc.setJobGroup(group, "connected_components build")
+    try:
+        out = connected_components(nodes, edges)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 1 <= len(jobs) <= 3, jobs
+    labels = {r["doc_id"]: r["cluster_id"] for r in out.collect()}
+    assert labels == {i: 0 if i < n else i for i in range(n + 10)}
+
+
+def _vector_batch(rows):
+    import pyarrow as pa
+
+    return pa.RecordBatch.from_arrays(
+        [
+            pa.array(range(len(rows)), type=pa.int64()),
+            pa.array(rows, type=pa.list_(pa.float64())),
+        ],
+        ["vec_id", "v"],
+    )
+
+
+_CENT = [([1, 2], [[0.0, 0.0], [1.0, 1.0]])]
+
+
+def _lloyd_kernels():
+    """Each Lloyd kernel over a one-batch input: the update kernel reads
+    (v), the assignment kernels read (vec_id, v)."""
+    from mkpipe_extractor_clickhouse_spark.operators import llm_similarity as ls
+
+    def update(batch):
+        return list(ls._lloyd_update_fn(_CENT, 2, 2)([batch.select(["v"])]))
+
+    def assign(batch):
+        return list(ls._lloyd_assign_fn(_CENT, 2, 2)([batch]))
+
+    def residual(batch):
+        return list(ls._lloyd_assign_residual_fn(_CENT, 2)([batch]))
+
+    return [update, assign, residual]
+
+
+@pytest.mark.parametrize(
+    "rows,match",
+    [
+        ([[0.0, 1.0], [float("nan"), 0.0]], "non-finite"),
+        ([[0.0, 1.0], [float("inf"), 0.0]], "non-finite"),
+        ([[0.0, 1.0], [None, 0.0]], "non-finite"),
+        ([[0.0, 1.0], [1.0]], "ragged or null"),
+        ([[0.0, 1.0], None], "ragged or null"),
+        # lengths 3 + 1 total n·dim = 4: only a per-row check catches it
+        ([[0.0, 1.0, 2.0], [3.0]], "ragged or null"),
+    ],
+)
+def test_lloyd_kernels_reject_malformed_vectors(rows, match):
+    """NaN/inf components, null elements, null vectors and ragged
+    vectors (even ones whose lengths total n·dim) raise ValueError in every Lloyd kernel instead of being
+    assigned to a centroid."""
+    for kernel in _lloyd_kernels():
+        with pytest.raises(ValueError, match=match):
+            kernel(_vector_batch(rows))
+        assert kernel(_vector_batch([[0.0, 1.0], [1.0, 0.5]]))
+
+
+def test_lloyd_kernel_error_surfaces_through_spark(spark):
+    """The ValueError raised on a worker reaches the caller of
+    kmeans_fit (wrapped by Spark, message intact)."""
+    from mkpipe_extractor_clickhouse_spark.operators.llm_similarity import (
+        kmeans_fit,
+    )
+
+    vecs = spark.createDataFrame(
+        [(1, [0.0, 1.0]), (2, [float("nan"), 0.0]), (3, [1.0, 1.0])],
+        "vec_id long, v array<double>",
+    )
+    with pytest.raises(Exception, match="non-finite vector component"):
+        kmeans_fit(vecs, k=2, max_iter=1)
+
+
+def test_lloyd_fits_reject_empty_input(spark):
+    """An empty corpus is a ValueError, not an IndexError on init[0]."""
+    from mkpipe_extractor_clickhouse_spark.operators.llm_similarity import (
+        kmeans_fit,
+        pq_train_encode,
+    )
+
+    empty = spark.createDataFrame([], "vec_id long, v array<double>")
+    with pytest.raises(ValueError, match="no vectors to fit"):
+        kmeans_fit(empty, k=2)
+    with pytest.raises(ValueError, match="no vectors to fit"):
+        pq_train_encode(empty)
+
+
+def test_lloyd_reduce_requires_pos0_per_group():
+    """_lloyd_reduce reads each group's count from its pos-0 row; a
+    partial group without one must fail instead of dropping the
+    cluster."""
+    from mkpipe_extractor_clickhouse_spark.operators.llm_similarity import (
+        _lloyd_reduce,
+    )
+
+    def row(cid, pos, qsum, cnt):
+        return {"block": 0, "cid": cid, "pos": pos, "qsum": qsum, "cnt": cnt}
+
+    cent = [([1, 2], [[0.0, 0.0], [1.0, 1.0]])]
+    ok = [row(1, 0, 2_000_000_000, 2), row(1, 1, 4_000_000_000, 2),
+          row(1, 0, 1_000_000_000, 1), row(1, 1, 0, 1)]
+    assert _lloyd_reduce(ok, cent) == [([1], [[1.0, 4.0 / 3.0]])]
+    with pytest.raises(RuntimeError, match="pos-0"):
+        _lloyd_reduce(ok + [row(2, 1, 5, 1)], cent)
+
+
+def test_collapse_probe_memo_holds_only_bools(spark, sf_dir):
+    """The dispatch-probe memo lives for the whole process: it must
+    keep only the bool decision, never a Row, DataFrame or other
+    object that would pin driver or JVM state across queries."""
+    from mkpipe_extractor_clickhouse_spark.operators import llm_dedup
+
+    _run("l2_jaccard_neardup", spark, sf_dir)
+    _run("l18_dedup_clusters", spark, sf_dir)
+    memo = llm_dedup._COLLAPSE_PROBE_CACHE
+    assert memo
+    assert all(type(v) is bool for v in memo.values()), memo
 
 
 def test_pq_topk_recall(spark, sf_dir):
