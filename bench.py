@@ -385,9 +385,7 @@ def main() -> None:
                         # per-kernel ratios vs DuckDB's native cosine,
                         # plus the explicit best-of: l4 is the
                         # mapInArrow bridge kernel, l4c the two-phase
-                        # packed-layout kernel (l4b was retired from
-                        # the measured suite in r9 — refuted r7, kept
-                        # registered as documentation).  Named best_*
+                        # packed-layout kernel.  Named best_*
                         # so nobody reads the min as a single kernel's
                         # steady ratio (ADVICE r7).
                         {

@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..registry import register
+from ._cache import ephemeral_cache
 from ._determinism import DAVG, DSUM, _Q, _quantize, davg, dsum
 
 
@@ -223,7 +224,7 @@ def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H-Q15: supplier(s) with the maximum quarterly revenue — the
     view-plus-scalar-subquery query. The revenue CTE is materialized
-    once (localCheckpoint) and its MAX comes back as a one-row
+    once (ephemeral_cache) and its MAX comes back as a one-row
     broadcast cross join — not a global window, which would funnel
     every supplier's aggregate through a single partition; quantized
     sums make the = MAX comparison exact, so ties surface
@@ -240,7 +241,7 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
             "total_revenue"
         )
     )
-    rev = rev.localCheckpoint(eager=False)  # reuse for max without re-agg
+    rev = ephemeral_cache(rev)  # reuse for max without re-agg
     max_rev = rev.agg(F.max("total_revenue").alias("_max_rev"))
     best = rev.join(F.broadcast(max_rev)).filter(
         F.col("total_revenue") == F.col("_max_rev")
@@ -442,8 +443,9 @@ def q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
     shipped value. Adaptation: no partsupp, so per-part value is
     dsum(p_retailprice × l_quantity) over NATION_5-supplied lineitems.
     The scalar global-total subquery is a one-row broadcast cross join
-    onto the grouped aggregate (computed from the same cached aggregate,
-    not a second lineitem scan). The 0.2% threshold multiply happens on
+    onto the grouped aggregate (it reads the aggregate's reused
+    exchange, not a second lineitem scan; a pin measured no gain at
+    sf0.1). The 0.2% threshold multiply happens on
     the exact quantized total, so boundary parts compare identically in
     both engines."""
     li = load_table(spark, sf_dir, "lineitem")
@@ -457,7 +459,6 @@ def q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.col("l_partkey").alias("ps_partkey"))
         .agg(dsum(F.col("p_retailprice") * F.col("l_quantity")).alias("value"))
     )
-    val = val.localCheckpoint(eager=False)  # reuse for total without re-scan
     total = val.agg(dsum("value").alias("_total"))
     return (
         val.join(F.broadcast(total))

@@ -190,8 +190,8 @@ def l119_ngram_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ~1.5 M bigrams otherwise runs entirely on the scan task (the
     # fixtures ship one row group), measured 2.57 s of the 2.29 s full
     # query; shuffling the 5 k docs once parallelizes it 32-way —
-    # 2.59 → 0.83 s end-to-end, identical result (exp_l119_repart).
-    # The exp_shingles_repart refutation (pre-explode repartition LOSES
+    # 2.59 → 0.83 s end-to-end, identical result (OPTIMIZATION_r12.md).
+    # The r12 refutation for shingles (pre-explode repartition LOSES
     # end-to-end for the PPJoin family) does not transfer: l119's
     # explode feeds a DISTINCT — its own shuffle boundary — so no
     # downstream consumer re-runs the widened stage.

@@ -265,7 +265,7 @@ def _int_tokens_dict(
     # consumer — the one-shot pin A/B (scripts/exp_pin_ab.py,
     # PERF_PIN_AB.json) measured the pin worth 1.3-1.8 s per shingle-
     # family query (l23/l71/l81/l84) and 0.7-0.9 s for the composed
-    # bitset-tier consumers (l22/l90).
+    # one-word-mask consumers (l22/l90).
     joined = tok.join(dict_, "token").select("doc_id", "tid", "df")
     return (ephemeral_cache(joined) if pin else joined), dict_
 
@@ -278,22 +278,20 @@ def ppjoin_pairs(tok: DataFrame, threshold: float) -> DataFrame:
     each doc's |d|-⌈t·|d|⌉+1 rarest tokens, so the join is inverted-
     index-shaped at any corpus size.
 
-    r11: when the dictionary fits 64 bits the whole verify INLINES into
-    the candidate join (_ppjoin_bitset_pairs) — each prefix row carries
-    its doc's bitset, overlap is one popcount at the join output, and
-    qualifying pairs just DISTINCT — dropping the aggregated-positional
-    groupBy (1.7 M groups at sf0.1) and both verify joins that
-    dominated the tiny-vocabulary wall (candidate stage 3.2 → inline).
-    Mid-width dictionaries (64 < vocab ≤ PPJOIN_MASK_MAX_VOCAB) get the
-    same fusion over ⌈vocab/64⌉ mask words (_ppjoin_maskarray_pairs —
-    the dedup scale-up's dense-corpus regime); only wide dictionaries
+    r11: when the dictionary fits PPJOIN_MASK_MAX_VOCAB bits the whole
+    verify INLINES into the candidate join (_ppjoin_maskarray_pairs) —
+    each prefix row carries its doc's ⌈vocab/64⌉-word bitset, overlap
+    is a popcount at the join output, and qualifying pairs just
+    DISTINCT — dropping the aggregated-positional groupBy (1.7 M groups
+    at sf0.1) and both verify joins that dominated the tiny-vocabulary
+    wall (candidate stage 3.2 → inline). Only wide dictionaries
     (shingles — collisions rare by construction) take the aggregated
     candidate-bound + verify-join machinery below."""
     # vocab comes from the (always-pinned) dictionary's row count — the
     # old toki.select("tid").distinct().count() re-shuffled the full
     # doc×token relation for a number the dictionary already is. The
     # joined relation stays pinned for EVERY tier: a tier-conditional
-    # unpin of the bitset path was tried (pin A/B showed plain l2
+    # unpin of the vocab ≤ 64 path was tried (pin A/B showed plain l2
     # +0.38 s for the pin) and REVERTED — composed consumers (l22
     # curation pipeline +0.94, l90 waterfall +0.79 in the follow-up
     # sweep) reference the pair relation more times than plain l2, and
@@ -301,8 +299,6 @@ def ppjoin_pairs(tok: DataFrame, threshold: float) -> DataFrame:
     # floor while the composed losses did not.
     toki, dict_ = _int_tokens_dict(tok, pin=True)
     vocab = dict_.count()
-    if vocab <= 64:
-        return _ppjoin_bitset_pairs(toki, threshold)
     if vocab <= PPJOIN_MASK_MAX_VOCAB:
         return _ppjoin_maskarray_pairs(toki, vocab, threshold)
     sizes = toki.groupBy("doc_id").agg(F.count("*").alias("n"))
@@ -393,99 +389,25 @@ def ppjoin_pairs(tok: DataFrame, threshold: float) -> DataFrame:
     )
 
 
-def _ppjoin_bitset_pairs(toki: DataFrame, threshold: float) -> DataFrame:
-    """PPJoin with the exact verify fused into the candidate join, for
-    dictionaries that fit one BIGINT bitset (≤ 64 distinct tokens).
-
-    The prefix relation carries (mask, n) alongside the prefix token, so
-    the self-join on tid evaluates popcount(ma & mb) and the jaccard
-    threshold MAP-SIDE on each collision — nothing shuffles after the
-    join except the qualifying pairs (≈ output-sized), deduped because a
-    pair can collide on several prefix tokens. Identical duplicate rows
-    carry bit-identical jaccard doubles (same popcount inputs), so the
-    DISTINCT is exact. Candidate-bound semantics match the general path:
-    prefix filter + length filter; the aggregated positional bound is
-    unnecessary when verification itself is this cheap."""
+def _doc_bitmasks(
+    tok: DataFrame, key: str, nwords: int
+) -> tuple[DataFrame, DataFrame]:
+    """Per-doc token bitsets over a distinct (doc_id, ``key``)
+    relation whose dictionary fits 64·nwords bits: each distinct key
+    gets a dense bit (row_number over the key order), and each doc
+    becomes long columns w0..w{nwords-1} plus its set size n. Returns
+    (tok joined to its bit, masks(doc_id, w0.., n)) — the one mask
+    construction behind the PPJoin mask tier and _verify_pairs' ≤ 64
+    branch."""
     bit_dict = (
-        toki.select("tid").distinct()
-        # ≤ 64 rows — the single-task window is fine
-        .select("tid", (F.row_number().over(Window.orderBy("tid")) - 1).alias("bit"))
-    )
-    tokb = toki.join(F.broadcast(bit_dict), "tid")
-    masks = tokb.groupBy("doc_id").agg(
-        F.sum(F.expr("shiftleft(CAST(1 AS BIGINT), bit)")).alias("mask"),
-        F.count("*").alias("n"),
-    )
-    ranked = tokb.join(masks, "doc_id").withColumn(
-        "rank",
-        F.row_number().over(Window.partitionBy("doc_id").orderBy("df", "tid")),
-    )
-    prefix = ranked.filter(
-        F.col("rank") <= F.col("n") - F.ceil(F.lit(threshold) * F.col("n")) + 1
-    ).select("doc_id", "tid", "mask", "n")
-    na, nb = F.col("a.n"), F.col("b.n")
-    overlap = F.expr("bit_count(a.mask & b.mask)")
-    jaccard = overlap * F.lit(1.0) / (na + nb - overlap)
-    return (
-        prefix.alias("a")
-        .join(prefix.alias("b"), on="tid")
-        .filter(
-            (F.col("a.doc_id") < F.col("b.doc_id"))
-            & (na >= F.ceil(F.lit(threshold) * nb))
-            & (nb >= F.ceil(F.lit(threshold) * na))
-        )
+        tok.select(key).distinct()
+        # ≤ 64·nwords rows — the single-task window is fine
         .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            jaccard.alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .distinct()
-    )
-
-
-PPJOIN_MASK_MAX_VOCAB = 1024
-
-
-def _ppjoin_maskarray_pairs(
-    toki: DataFrame, vocab: int, threshold: float
-) -> DataFrame:
-    """PPJoin with the exact verify fused into the candidate join for
-    MID-WIDTH dictionaries (64 < vocab ≤ PPJOIN_MASK_MAX_VOCAB): the
-    single-long bitset generalizes to ⌈vocab/64⌉ SEPARATE long columns
-    (w0..wk — scalar columns, not an array, so the per-collision
-    popcount sum stays inside whole-stage codegen; HOF zip_with/
-    aggregate evaluate interpreted, the f20 lesson) and overlap to
-    Σ bit_count(aw & bw), evaluated MAP-SIDE on each prefix collision —
-    nothing shuffles after the candidate join except qualifying pairs.
-
-    Why this exists (r11 dedup scale-up finding): the general path
-    bounds the verify through a groupBy over ALL prefix collisions,
-    which on a dense mid-width corpus IS the dominant shuffle — at
-    160 k salted docs (vocab 992) the collision aggregation alone ran
-    92 s cutting 127 M collisions to 54 M candidates that the verify
-    joins then still had to pay for. Here the same 127 M collisions
-    cost 16 ANDed-long popcounts each, map-side. The r10 multi-word-
-    bitmap refutation (10.3 vs 5.1 s) was measured in the SINGLE-long
-    regime (vocab 31), where the ≤64 scalar branch wins the dispatch
-    first — this path never runs there. Above the cap, masks stop
-    fitting comfortably in a shuffle row, and wide dictionaries
-    (shingles) make prefix collisions rare anyway, so the general
-    candidate+verify machinery stays the right shape.
-
-    Identical duplicate collision rows carry bit-identical jaccard
-    doubles (same integer popcount inputs), so the DISTINCT is exact —
-    the same argument as the single-long path."""
-    nwords = (vocab + 63) // 64
-    bit_dict = (
-        toki.select("tid").distinct()
-        # ≤ PPJOIN_MASK_MAX_VOCAB rows — the single-task window is fine
-        .select(
-            "tid", (F.row_number().over(Window.orderBy("tid")) - 1).alias("bit")
+            key, (F.row_number().over(Window.orderBy(key)) - 1).alias("bit")
         )
     )
-    tokb = toki.join(F.broadcast(bit_dict), "tid")
-    # each (doc_id, tid) is distinct upstream, so per-word SUM == OR
+    tokb = tok.join(F.broadcast(bit_dict), key)
+    # each (doc_id, key) is distinct upstream, so per-word SUM == OR
     word_sums = [
         F.sum(
             F.when(
@@ -495,7 +417,44 @@ def _ppjoin_maskarray_pairs(
         ).alias(f"w{w}")
         for w in range(nwords)
     ]
-    masks = tokb.groupBy("doc_id").agg(*word_sums, F.count("*").alias("n"))
+    return tokb, tokb.groupBy("doc_id").agg(*word_sums, F.count("*").alias("n"))
+
+
+PPJOIN_MASK_MAX_VOCAB = 1024
+
+
+def _ppjoin_maskarray_pairs(
+    toki: DataFrame, vocab: int, threshold: float
+) -> DataFrame:
+    """PPJoin with the exact verify fused into the candidate join for
+    dictionaries of vocab ≤ PPJOIN_MASK_MAX_VOCAB: each doc's token set
+    is ⌈vocab/64⌉ SEPARATE long columns (w0..wk — scalar columns, not
+    an array, so the per-collision popcount sum stays inside whole-
+    stage codegen; HOF zip_with/aggregate evaluate interpreted, the f20
+    lesson) and overlap is Σ bit_count(aw & bw), evaluated MAP-SIDE on
+    each prefix collision — nothing shuffles after the candidate join
+    except qualifying pairs. At vocab ≤ 64 that is one word and one
+    popcount per collision (the fixture's 31-token corpus: l2, l18,
+    l22, l90).
+
+    Why this exists (r11 dedup scale-up finding): the general path
+    bounds the verify through a groupBy over ALL prefix collisions,
+    which on a dense mid-width corpus IS the dominant shuffle — at
+    160 k salted docs (vocab 992) the collision aggregation alone ran
+    92 s cutting 127 M collisions to 54 M candidates that the verify
+    joins then still had to pay for. Here the same 127 M collisions
+    cost 16 ANDed-long popcounts each, map-side. Above the cap, masks
+    stop fitting comfortably in a shuffle row, and wide dictionaries
+    (shingles) make prefix collisions rare anyway, so the general
+    candidate+verify machinery stays the right shape. Candidate-bound
+    semantics match the general path: prefix filter + length filter;
+    the aggregated positional bound is unnecessary when verification
+    itself is this cheap.
+
+    Identical duplicate collision rows carry bit-identical jaccard
+    doubles (same integer popcount inputs), so the DISTINCT is exact."""
+    nwords = (vocab + 63) // 64
+    tokb, masks = _doc_bitmasks(toki, "tid", nwords)
     ranked = tokb.select("doc_id", "tid", "df").join(masks, "doc_id").withColumn(
         "rank",
         F.row_number().over(Window.partitionBy("doc_id").orderBy("df", "tid")),
@@ -560,26 +519,12 @@ def _verify_pairs(
     if vocab is None:
         vocab = tok.select("token").distinct().count()
     if vocab <= 64:
-        dict_df = tok.select("token").distinct()
-        w_dict = Window.orderBy("token")  # <= 64 rows — single task is fine
-        bit_dict = dict_df.select(
-            "token", (F.row_number().over(w_dict) - 1).alias("bit")
-        )
-        masks = (
-            tok.join(F.broadcast(bit_dict), "token")
-            .groupBy("doc_id")
-            .agg(
-                F.sum(F.expr("shiftleft(CAST(1 AS BIGINT), bit)")).alias(
-                    "mask"
-                ),
-                F.count("*").alias("n"),
-            )
-        )
+        _, masks = _doc_bitmasks(tok, "token", 1)
         verified = (
             cand.join(
                 masks.select(
                     F.col("doc_id").alias(a_col),
-                    F.col("mask").alias("ma"),
+                    F.col("w0").alias("ma"),
                     F.col("n").alias("na"),
                 ),
                 a_col,
@@ -587,7 +532,7 @@ def _verify_pairs(
             .join(
                 masks.select(
                     F.col("doc_id").alias(b_col),
-                    F.col("mask").alias("mb"),
+                    F.col("w0").alias("mb"),
                     F.col("n").alias("nb"),
                 ),
                 b_col,

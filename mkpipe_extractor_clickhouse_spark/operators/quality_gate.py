@@ -330,7 +330,7 @@ def ch_tukey_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (value, count) relation instead of a percentile() aggregate.
     # percentile()'s buffer is a boxed value→count OpenHashMap built
     # and merged on ONE task — 1.35 s of the query's 1.89 s at sf0.1
-    # (exp_tail_attrib; the single-buffer array form of r11 had already
+    # (OPTIMIZATION_r12.md; the single-buffer array form of r11 had already
     # halved it from two maps).  Here the collapse to ~583k distinct
     # cents is a codegen hash aggregate (partial→final, parallel), and
     # the only serial step left is the prefix-sum window over DISTINCT

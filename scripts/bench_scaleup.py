@@ -364,15 +364,11 @@ def time_point_interleaved(
     return r3(S), r3(B), r3(D)
 
 
-# l4b_shard_scan_topk was RETIRED from the measured suite in r9: the
-# r7 refutation stands (pyarrow list<float> decode costs more than the
-# JVM bridge it avoids — 11.87x at 9.6M vs l4's 5.29x); it stays
-# registered and strict-matched as documentation of the trade-off.
-# l4c_packed_topk replaces it: same shard-scan scheduling, but over a
-# one-time PACKED layout (plain-encoded binary f32 + precomputed f64
-# norms) whose decode is a memcpy, scored by an exact two-phase
-# f32-screen / f64-refine kernel.  Its one-time pack cost is reported
-# as pack_sec (the vector-index analogue of bucket_gen_sec).
+# l4c_packed_topk: shard-scan scheduling over a one-time PACKED layout
+# (plain-encoded binary f32 + precomputed f64 norms) whose decode is a
+# memcpy, scored by an exact two-phase f32-screen / f64-refine kernel.
+# Its one-time pack cost is reported as pack_sec (the vector-index
+# analogue of bucket_gen_sec).
 LLM_QUERIES = ("l1_exact_dedup", "l5_wordcount", "l12_token_count",
                "l3_topk_cosine", "l4_distributed_topk",
                "l4c_packed_topk")
@@ -1615,13 +1611,7 @@ def main() -> None:
                 "decode is a memcpy; scoring is an exact two-phase "
                 "f32-GEMM screen / f64 refine (l4c_eq_kernel asserts "
                 "row equality with the l4 kernel at the smallest "
-                "point). l4b (r7's bridge-free pyarrow shard scan over "
-                "the ORIGINAL list<float> layout) stays registered and "
-                "strict-matched but is RETIRED from these totals — its "
-                "refutation stands: pyarrow's dictionary-encoded "
-                "list<float> page decode costs more than the bridge it "
-                "avoids (0.88 vs 0.51 s at 0.8M; 5.6 vs 2.5 s at "
-                "9.6M, r7 measurement)."
+                "point)."
             ),
             "queries": list(LLM_QUERIES),
             "points": llm_points,

@@ -1,10 +1,13 @@
-"""Full-registry timing sweep: steady-state noop execution of EVERY
-registered query at a given sf (default sf0.1), slowest first to
-stderr-friendly JSON on stdout.  The round bench (bench.py) measures
-the curated headline + llm_suite sets; this sweep is the hot-spot
-finder — run it after a feature wave and optimize anything that stands
-out (round 4 found the PPJoin candidate stage and the LSH signature
-shuffle this way).
+"""Full-registry timing sweep: every registered query at a given sf
+(default sf0.1), slowest first, as JSON.  Per query it records
+``oneshot_sec`` (rebuild + execute, min of 2 after a warm-up: the cost
+a single invocation pays, build-time pins included), which ranks and
+attributes the tail, and ``steady_sec`` (re-execution of one built
+DataFrame, the pre-r12 protocol, kept for comparability).  The round
+bench (bench.py) measures the curated headline + llm_suite sets; this
+sweep is the hot-spot finder — run it after a feature wave and
+optimize anything that stands out (round 4 found the PPJoin candidate
+stage and the LSH signature shuffle this way).
 
 Usage:
     python scripts/bench_sweep.py [--sf-dir DIR] [--out FILE]
@@ -47,13 +50,7 @@ def main() -> int:
     n_out: dict[str, int] = {}
     errors: dict[str, str] = {}
     specs = all_specs()
-    # l4b_shard_scan_topk stays registered (strict-matched) as the
-    # documented refuted alternative (r7: pyarrow list<float> decode
-    # costs more than the JVM bridge it avoids — 11.87x at 9.6M), but
-    # it is retired from sweep/suite totals so the artifact's total
-    # reflects the kernels a user would actually run (l4 / l4c).
-    RETIRED = {"l4b_shard_scan_topk"}
-    names = args.names or sorted(set(specs) - RETIRED)
+    names = args.names or sorted(specs)
     oneshot: dict[str, float] = {}
     for name in names:
         try:

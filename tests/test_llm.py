@@ -807,29 +807,34 @@ def test_arrow_kernel_rejects_ragged_rows_summing_to_dim(spark):
     """The zero-copy reshape guard must validate PER-ROW lengths, not
     just the flat total: a batch of 3-dim and 5-dim vectors sums to
     2*4 and would silently reshape misaligned (wrong cosines) under a
-    sum-only check. With per-row validation the kernel takes the
-    boxing fallback, which fails LOUDLY on genuinely ragged input —
-    never a silently wrong score."""
-    import pytest
-
+    sum-only check. The kernel decodes through the Lloyd kernels'
+    _vector_matrix_fn, so ragged rows, null vectors and NaN components
+    all fail LOUDLY with its ValueError — never a silently wrong
+    score."""
     from mkpipe_extractor_clickhouse_spark.operators.llm_similarity import (
         arrow_topk_cosine,
     )
 
-    ragged = spark.createDataFrame(
-        [(1, [1.0, 0.0, 0.0]), (2, [0.0, 1.0, 0.0, 0.0, 0.0])],
-        "vec_id long, v array<float>",
-    ).coalesce(1)
-    with pytest.raises(Exception):
-        arrow_topk_cosine(ragged, [1.0, 0.0, 0.0, 0.0], k=2,
-                          exclude_id=None).collect()
+    q = [1.0, 0.0, 0.0, 0.0]
+    bad = [
+        ([(1, [1.0, 0.0, 0.0]), (2, [0.0, 1.0, 0.0, 0.0, 0.0])],
+         "ragged or null"),
+        ([(1, [1.0, 0.0, 0.0, 0.0]), (2, None)], "ragged or null"),
+        ([(1, [1.0, 0.0, 0.0, 0.0]), (2, [0.0, float("nan"), 0.0, 0.0])],
+         "non-finite"),
+    ]
+    for rows, match in bad:
+        vecs = spark.createDataFrame(
+            rows, "vec_id long, v array<float>"
+        ).coalesce(1)
+        with pytest.raises(Exception, match=match):
+            arrow_topk_cosine(vecs, q, k=2, exclude_id=None).collect()
     # uniform rows of the query's dim still flow through zero-copy
     ok = spark.createDataFrame(
         [(1, [1.0, 0.0, 0.0, 0.0]), (2, [0.0, 1.0, 0.0, 0.0])],
         "vec_id long, v array<float>",
     ).coalesce(1)
-    rows = arrow_topk_cosine(ok, [1.0, 0.0, 0.0, 0.0], k=2,
-                             exclude_id=None).collect()
+    rows = arrow_topk_cosine(ok, q, k=2, exclude_id=None).collect()
     assert [r.vec_id for r in rows] == [1, 2]
     assert rows[0].cosine == 1.0
 
@@ -1345,75 +1350,18 @@ def test_dedup_mixture_shift_conserves(spark, sf_dir):
         assert r.shift_ppm == r.weight_dedup_ppm - r.weight_full_ppm
 
 
-def test_ppjoin_bitset_path_equals_general_path(spark, sf_dir):
-    """r11 fused bitset verify: on a <=64-token dictionary ppjoin_pairs
-    dispatches _ppjoin_bitset_pairs (popcount verify inlined into the
-    candidate join). Pin it to the GENERAL candidate+verify machinery on
-    the same relation — same pairs, same jaccard to the bit — and pin
-    the dispatch itself on both sides of the vocab gate."""
-    from pyspark.sql import functions as F
-
-    from mkpipe_extractor_clickhouse_spark.operators.llm_dedup import (
-        JACCARD_T,
-        _doc_tokens,
-        _int_tokens,
-        _ppjoin_bitset_pairs,
-        _verify_pairs,
-        ppjoin_pairs,
-    )
-
-    tok = _doc_tokens(spark, sf_dir)
-    vocab = tok.select("token").distinct().count()
-    assert vocab <= 64, "fixture word vocabulary is the bitset regime"
-
-    toki = _int_tokens(tok)
-    fast = sorted(
-        (r.doc_a, r.doc_b, round(r.jaccard, 9))
-        for r in _ppjoin_bitset_pairs(toki, JACCARD_T).collect()
-    )
-    # general path: all candidate pairs (doc_a < doc_b, length filter
-    # only — a superset of the pruned candidate set) through the
-    # array-intersect verify, forced past the bitset branch by lying
-    # about the vocab
-    sizes = toki.groupBy("doc_id").agg(F.count("*").alias("n"))
-    a = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na"))
-    b = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("nb"))
-    cand = (
-        a.crossJoin(b)
-        .filter(
-            (F.col("doc_a") < F.col("doc_b"))
-            & (F.col("na") >= F.ceil(F.lit(JACCARD_T) * F.col("nb")))
-            & (F.col("nb") >= F.ceil(F.lit(JACCARD_T) * F.col("na")))
-        )
-        .select("doc_a", "doc_b")
-    )
-    slow = sorted(
-        (r.doc_a, r.doc_b, round(r.jaccard, 9))
-        for r in _verify_pairs(
-            cand,
-            toki.select("doc_id", F.col("tid").alias("token")),
-            JACCARD_T,
-            "doc_a",
-            "doc_b",
-            vocab=65,  # force the sorted-array-intersect branch
-        ).collect()
-    )
-    assert fast == slow
-    # and the registered entrypoint dispatches the bitset plan here
-    plan = ppjoin_pairs(tok, JACCARD_T)._jdf.queryExecution().optimizedPlan().toString()
-    assert "bit_count" in plan
-
-
-def test_ppjoin_maskarray_path_equals_general_path(spark, sf_dir):
-    """r11 mid-width fused verify: on a 64 < vocab <= 1024 dictionary
-    ppjoin_pairs dispatches _ppjoin_maskarray_pairs (multi-word popcount
-    verify inlined into the candidate join — the dedup scale-up's dense
-    salted-corpus regime). Build that regime from the fixture by
-    unioning three token-salted replicas (replicas are token-disjoint,
-    so expected pairs are exactly 3x the base corpus's), and pin the
-    fused path to the general array-intersect verify over the
+@pytest.mark.parametrize("replicas", [1, 3])
+def test_ppjoin_maskarray_path_equals_general_path(spark, sf_dir, replicas):
+    """r11 fused verify: on a vocab <= 1024 dictionary ppjoin_pairs
+    dispatches _ppjoin_maskarray_pairs (popcount verify inlined into
+    the candidate join). Build the regime from the fixture by unioning
+    token-salted replicas (replicas are token-disjoint, so expected
+    pairs are exactly replicas x the base corpus's): one replica is the
+    fixture's 31-token vocabulary (one mask word), three are 93 tokens
+    (two words, the dedup scale-up's dense salted-corpus shape). Pin
+    the fused path to the general array-intersect verify over the
     length-filtered all-pairs superset — same pairs, same jaccard to
-    the bit."""
+    the bit — and pin the dispatch itself."""
     from pyspark.sql import functions as F
 
     from mkpipe_extractor_clickhouse_spark.operators.llm_dedup import (
@@ -1428,14 +1376,15 @@ def test_ppjoin_maskarray_path_equals_general_path(spark, sf_dir):
     tok = _doc_tokens(spark, sf_dir)
     stride = tok.agg(F.max("doc_id")).collect()[0][0] + 1
     salted = None
-    for r in range(3):
+    for r in range(replicas):
         part = tok.select(
             (F.col("doc_id") + r * stride).alias("doc_id"),
             F.concat(F.lit(f"s{r}_"), F.col("token")).alias("token"),
         )
         salted = part if salted is None else salted.unionAll(part)
     vocab = salted.select("token").distinct().count()
-    assert 64 < vocab <= 1024, "three salted replicas are the mask-array regime"
+    words = {1: 1, 3: 2}[replicas]  # 31 and 93 tokens
+    assert vocab <= 1024 and (vocab + 63) // 64 == words
 
     toki = _int_tokens(salted)
     fast = sorted(
@@ -1443,7 +1392,7 @@ def test_ppjoin_maskarray_path_equals_general_path(spark, sf_dir):
         for r in _ppjoin_maskarray_pairs(toki, vocab, JACCARD_T).collect()
     )
     base_pairs = ppjoin_pairs(tok, JACCARD_T).count()
-    assert len(fast) == 3 * base_pairs  # salting preserves per-replica structure
+    assert len(fast) == replicas * base_pairs  # salting preserves per-replica structure
     sizes = toki.groupBy("doc_id").agg(F.count("*").alias("n"))
     a = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na"))
     b = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("nb"))
@@ -1473,7 +1422,8 @@ def test_ppjoin_maskarray_path_equals_general_path(spark, sf_dir):
         ppjoin_pairs(salted, JACCARD_T)
         ._jdf.queryExecution().optimizedPlan().toString()
     )
-    assert "bit_count" in plan  # vocab > 64, so this is the mask path
+    assert "bit_count" in plan  # vocab <= 1024, so this is the mask path
+
 
 def test_cms_topk_portable_invariants(spark, sf_dir):
     """a23b: CMS-ranked heavy hitters — estimates never undercount,

@@ -882,3 +882,28 @@ def test_headline_builders_do_not_pin(spark, sf_dir, monkeypatch):
             f"headline builder {name} pins at build time - move "
             "bench.py's headline pass to the one-shot protocol"
         )
+
+
+def test_operators_pin_only_through_ephemeral_cache():
+    """One pin primitive: no operator module calls ``localCheckpoint(``
+    itself — every pin goes through ``_cache.ephemeral_cache``, which
+    checkpoints eagerly (the lazy form emits "non-existent accumulator"
+    ERROR noise) and honors the SPARK_GRAFT_NO_PIN A/B arm. A source
+    scan of call sites, so prose that names the method does not count."""
+    import ast
+    from pathlib import Path
+
+    import mkpipe_extractor_clickhouse_spark.operators as ops_pkg
+
+    offenders = []
+    for path in sorted(Path(ops_pkg.__file__).parent.glob("*.py")):
+        if path.name == "_cache.py":
+            continue
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "localCheckpoint"
+            ):
+                offenders.append(f"{path.name}:{node.lineno}")
+    assert not offenders, f"raw localCheckpoint calls: {offenders}"
