@@ -23,15 +23,31 @@ Connections:
     slices); as a DESTINATION it streams per-partition JSONEachRow
     INSERTs (ClickHouseHttpSink). Wire-tested end-to-end against the
     in-process protocol double (x44 / tests/test_ch_http.py).
+
+Scheduling.  One call is one tick over the selected tables of every
+pipeline.  Tables that write the same destination table (destination
+path plus ``target_name``) form a *chain*: they run one at a time, in
+config order, so their watermarks commit in that order.  Different
+chains run at the same time, on one process-wide thread pool of width
+``min(chains, sc.defaultParallelism)``.  Each chain runs with the
+caller's job group, job tags, description and scheduler pool, so its
+Spark jobs are attributed and scheduled as if the caller had submitted
+them.  A failing table with ``pass_on_error`` reports status ``error``
+and its chain goes on; without it, the failure stops its own chain
+only, the other chains finish and commit, and then the first such error
+in config order is raised.  Results come back per pipeline, in config
+order.
 """
 
 from __future__ import annotations
 
+import functools
 import os
-
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
 from pyspark.sql import SparkSession
+from pyspark.util import inheritable_thread_target
 
 from .sources.extract import (
     ExtractResult,
@@ -131,34 +147,74 @@ class Pipeline:
         """One tick over every table — the MkPipe pipeline semantics,
         including per-table pass_on_error (reference README.md:117) and
         tag-selective execution (reference README.md:116): with ``tags``
-        given, only tables carrying at least one of them run."""
-        runner = self.runner()
-        results: list[PipelineResult] = []
-        for tdict in self.tables:
+        given, only tables carrying at least one of them run.  Tables
+        are scheduled as in :func:`run_pipelines`."""
+        return _run_tick(spark, [self], tags)[0]
+
+
+@functools.cache
+def _tick_pool(width: int) -> ThreadPoolExecutor:
+    """The process-wide pool that runs table chains.  Long-lived on
+    purpose: in PySpark's pinned-thread mode every Python thread owns a
+    JVM thread, which a per-tick pool would start and stop every tick."""
+    return ThreadPoolExecutor(max_workers=width, thread_name_prefix="mkpipe-tick")
+
+
+def _run_tick(
+    spark: SparkSession, pipes: list[Pipeline], tags: list[str] | None
+) -> list[list[PipelineResult]]:
+    """One tick over the selected tables of ``pipes``; results per
+    pipeline, in config order.  Chains, their pool and the error order
+    are as the module docstring states.  A table tick is a few small
+    Spark jobs, so tables run one after another leave most task slots
+    idle."""
+    results: list[list[PipelineResult | None]] = [[] for _ in pipes]
+    chains: dict[tuple[str, str], list] = {}
+    for i, pipe in enumerate(pipes):
+        runner = pipe.runner()
+        for tdict in pipe.tables:
             if tags is not None and not set(tags) & set(tdict.get("tags", [])):
                 continue
             table = table_config_from_dict(tdict)
-            try:
-                res: ExtractResult = runner.run_once(spark, table)
-                results.append(
-                    PipelineResult(
-                        table=table.target_name or table.name,
+            slot = (i, len(results[i]))
+            results[i].append(None)
+            key = (os.path.abspath(pipe.dest_dir), table.target_name)
+            chains.setdefault(key, []).append((slot, runner, table))
+    errors: dict[tuple[int, int], Exception] = {}
+
+    def run_chain(chain) -> None:
+        try:
+            for (i, j), runner, table in chain:
+                try:
+                    res: ExtractResult = runner.run_once(spark, table)
+                    results[i][j] = PipelineResult(
+                        table=table.target_name,
                         status="extracted" if res.df is not None else "no_new_data",
                         write_mode=res.write_mode,
                         last_point=res.last_point_value,
                     )
-                )
-            except Exception as e:  # noqa: BLE001 — pass_on_error contract
-                if not table.pass_on_error:
-                    raise
-                results.append(
-                    PipelineResult(
-                        table=table.target_name or table.name,
-                        status="error",
-                        error=str(e),
+                except Exception as e:  # noqa: BLE001 — pass_on_error contract
+                    if not table.pass_on_error:
+                        errors[i, j] = e
+                        return
+                    results[i][j] = PipelineResult(
+                        table=table.target_name, status="error", error=str(e)
                     )
-                )
-        return results
+        finally:
+            # the inherited session tags would outlive the tick on this
+            # long-lived thread
+            spark.clearTags()
+
+    pool = _tick_pool(spark.sparkContext.defaultParallelism)
+    futures = [
+        pool.submit(inheritable_thread_target(spark)(run_chain), chain)
+        for chain in chains.values()
+    ]
+    for f in futures:
+        f.result()
+    if errors:
+        raise errors[min(errors)]
+    return results
 
 
 def run_pipelines(
@@ -167,9 +223,11 @@ def run_pipelines(
     """Execute a full config dict of the reference's YAML shape:
     ``{"connections": {...}, "pipelines": [{name, source, destination,
     tables}]}``. Parquet connections declare ``path``; destinations
-    declare ``path`` too."""
+    declare ``path`` too.  Every pipeline is checked before any table
+    runs; then all their tables run as one tick (see ``_run_tick``)."""
     conns = config.get("connections", {})
-    out: dict[str, list[PipelineResult]] = {}
+    names: list[str] = []
+    pipes: list[Pipeline] = []
     for p in config.get("pipelines", []):
         src = conns[p["source"]]
         dst = conns[p["destination"]]
@@ -250,15 +308,17 @@ def run_pipelines(
                 "needs an explicit 'path'; "
                 "refusing to default into the source data directory"
             )
-        pipe = Pipeline(
-            source_dir=src.get("path", ""),
-            dest_dir=dst["path"],
-            tables=p.get("tables", []),
-            sql_dir=p.get("sql_dir"),
-            loader=custom_loader,
-            extractor=custom_extractor,
-            manifest_dest=dst.get("variant") == "manifest",
-            auto_compact_max_dirs=dst.get("auto_compact_max_dirs"),
+        names.append(p["name"])
+        pipes.append(
+            Pipeline(
+                source_dir=src.get("path", ""),
+                dest_dir=dst["path"],
+                tables=p.get("tables", []),
+                sql_dir=p.get("sql_dir"),
+                loader=custom_loader,
+                extractor=custom_extractor,
+                manifest_dest=dst.get("variant") == "manifest",
+                auto_compact_max_dirs=dst.get("auto_compact_max_dirs"),
+            )
         )
-        out[p["name"]] = pipe.run(spark, tags=tags)
-    return out
+    return dict(zip(names, _run_tick(spark, pipes, tags)))

@@ -32,11 +32,13 @@ from __future__ import annotations
 
 import logging
 import os
+import threading
 from dataclasses import dataclass, field
 from typing import Literal
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.errors import AnalysisException
 
 from ..catalog import SCHEMAS, load_table, register_views
@@ -46,6 +48,12 @@ from .state import WatermarkStore
 WriteMode = Literal["overwrite", "append"]
 
 logger = logging.getLogger(__name__)
+
+# Temp views belong to the whole session, and a view name resolves when
+# spark.sql analyses the query: concurrent custom queries over different
+# source directories must not see each other's registrations between the
+# two, so registration and analysis happen under this one lock.
+_VIEWS_LOCK = threading.Lock()
 
 
 @dataclass
@@ -249,22 +257,26 @@ class ParquetExtractor:
                 if t == table.name
                 or re.search(rf"\b{t}\b", custom_query, re.IGNORECASE)
             ]
-            register_views(spark, self.sf_dir, mentioned)
-            if source_filter is not None:
-                load_table(spark, self.sf_dir, table.name).filter(
-                    source_filter
-                ).createOrReplaceTempView(table.name)
             spliced = splice_query_filter(custom_query, spec)
-            try:
-                return spark.sql(spliced)
-            except AnalysisException:
-                # Quoted/exotic identifiers can defeat the mention scan;
-                # register the whole catalog (cheap, lazy metadata) and
-                # retry before surfacing a resolution error.
-                register_views(
-                    spark, self.sf_dir, [t for t in SCHEMAS if t not in mentioned]
-                )
-                return spark.sql(spliced)
+            with _VIEWS_LOCK:
+                register_views(spark, self.sf_dir, mentioned)
+                if source_filter is not None:
+                    load_table(spark, self.sf_dir, table.name).filter(
+                        source_filter
+                    ).createOrReplaceTempView(table.name)
+                try:
+                    return spark.sql(spliced)
+                except AnalysisException:
+                    # Quoted/exotic identifiers can defeat the mention
+                    # scan; register the whole catalog (cheap, lazy
+                    # metadata) and retry before surfacing a resolution
+                    # error.
+                    register_views(
+                        spark,
+                        self.sf_dir,
+                        [t for t in SCHEMAS if t not in mentioned],
+                    )
+                    return spark.sql(spliced)
         df = load_table(spark, self.sf_dir, table.name)
         if spec is not None and not spec.is_trivial:
             df = df.filter(spec.to_column())
@@ -387,7 +399,11 @@ class ParquetLoader:
         return spark.read.option("mergeSchema", "true").parquet(self.path(table))
 
     def existing_keys(
-        self, spark: SparkSession, table: TableConfig, window: FilterSpec | None
+        self,
+        spark: SparkSession,
+        table: TableConfig,
+        window: FilterSpec | None,
+        like: DataFrame | None = None,
     ) -> DataFrame:
         """Destination keys that could collide with the incoming batch.
 
@@ -399,23 +415,23 @@ class ParquetLoader:
         build side is O(boundary), not O(history), and the filter prunes
         whole directories when the destination is partitioned by the
         iterate column (``partition_columns``) and row groups otherwise
-        (parquet min/max pushdown)."""
-        existing = spark.read.parquet(self.path(table))
-        if (
-            window is not None
-            and not window.is_trivial
-            and window.column in existing.columns
-        ):
-            existing = existing.filter(window.to_column())
-        return existing.select(*table.dedup_keys)
+        (parquet min/max pushdown).
+
+        With the batch as ``like``, the read declares its schema (see
+        :func:`boundary_schema`), so Spark runs no footer-inference job."""
+        reader = spark.read
+        if like is not None:
+            reader = reader.schema(boundary_schema(like, table, window))
+        return bound_to_window(reader.parquet(self.path(table)), table, window)
 
     def load(self, spark: SparkSession, table: TableConfig, result: ExtractResult) -> None:
         if result.df is None:
             return  # no_new_data (__init__.py:107-108)
         df = result.df
         path = self.path(table)
-        if result.write_mode == "append" and table.dedup_keys and os.path.exists(path):
-            existing = self.existing_keys(spark, table, result.window)
+        before = set(data_files(path)) if result.write_mode == "append" else set()
+        if result.write_mode == "append" and table.dedup_keys and before:
+            existing = self.existing_keys(spark, table, result.window, like=df)
             df = df.join(existing, on=list(table.dedup_keys), how="left_anti")
         if table.write_partitions:
             df = apply_write_partitions(df, table.write_partitions)
@@ -425,6 +441,75 @@ class ParquetLoader:
             # and downstream range queries prune whole directories.
             writer = writer.partitionBy(*table.partition_columns)
         writer.parquet(path)
+        drop_empty_files(
+            [f for f in data_files(path) if f not in before], keep_one=not before
+        )
+
+
+def boundary_schema(
+    batch: DataFrame, table: TableConfig, window: FilterSpec | None
+) -> T.StructType:
+    """Schema of a destination's boundary read: the dedup keys, plus the
+    window column when the batch has it, typed as the batch types them.
+    Declaring it spares Spark the footer-inference job an undeclared
+    ``spark.read.parquet`` runs on every append; destination files that
+    predate a column read it as null, as a merged-schema read would."""
+    fields = {f.name.lower(): f for f in batch.schema.fields}
+    names = [k.lower() for k in table.dedup_keys]
+    if (
+        window is not None
+        and not window.is_trivial
+        and window.column.lower() in fields
+        and window.column.lower() not in names
+    ):
+        names.append(window.column.lower())
+    return T.StructType([fields[n] for n in names])
+
+
+def bound_to_window(
+    existing: DataFrame, table: TableConfig, window: FilterSpec | None
+) -> DataFrame:
+    """The dedup keys of the destination rows inside the extraction
+    window (see :meth:`ParquetLoader.existing_keys`)."""
+    if (
+        window is not None
+        and not window.is_trivial
+        and window.column in existing.columns
+    ):
+        existing = existing.filter(window.to_column())
+    return existing.select(*table.dedup_keys)
+
+
+def data_files(root: str) -> list[str]:
+    """Parquet data files under ``root``, recursively (hive-partitioned
+    layouts keep theirs in key=value subdirectories), skipping the
+    ``_``/``.``-prefixed names Spark's file index skips."""
+    return sorted(
+        os.path.join(d, n)
+        for d, _dirs, names in os.walk(root)
+        for n in names
+        if n.endswith(".parquet") and not n.startswith(("_", "."))
+    )
+
+
+def drop_empty_files(written: list[str], keep_one: bool) -> None:
+    """Delete the 0-row files among ``written``.  A write leaves one
+    whenever its first task has no rows (a boundary re-read the anti-join
+    absorbed entirely, or one empty input split); every later read would
+    list and open it.  Row counts come from the parquet footers, a
+    driver-side metadata read with no Spark job.  With ``keep_one``, a
+    write that landed no rows at all keeps one file, the only carrier of
+    the table's schema."""
+    import pyarrow.parquet as pq
+
+    empty = [f for f in written if pq.read_metadata(f).num_rows == 0]
+    if keep_one and len(empty) == len(written):
+        empty = empty[1:]
+    for f in empty:
+        os.unlink(f)
+        crc = os.path.join(os.path.dirname(f), f".{os.path.basename(f)}.crc")
+        if os.path.exists(crc):
+            os.unlink(crc)
 
 
 @dataclass

@@ -49,6 +49,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 _MANIFEST_DIR = "_manifests"
 _VERSION_DIGITS = 8
@@ -70,6 +71,13 @@ def _json_safe(v):
     if hasattr(v, "isoformat"):
         return v.isoformat()
     return v
+
+
+def _reader(spark: SparkSession, schema: T.StructType | None):
+    """A declared schema, or footer merging across batches."""
+    if schema is None:
+        return spark.read.option("mergeSchema", "true")
+    return spark.read.schema(schema)
 
 
 class ManifestedTable:
@@ -254,6 +262,7 @@ class ManifestedTable:
         if partition_by:
             w = w.partitionBy(*partition_by)
         w.parquet(path)
+        drop_empty_files(data_files(path), keep_one=True)
         with open(os.path.join(path, "_PARTITION_SPEC.json"), "w") as fh:
             json.dump({"partition_by": list(partition_by or ())}, fh)
         if self.check_constraints:
@@ -297,18 +306,9 @@ class ManifestedTable:
             return {}
         import pyarrow.parquet as pq
 
-        batch_dir = os.path.join(self.table_dir, name)
         mins: dict[str, object] = {}
         maxs: dict[str, object] = {}
-        # recursive walk: hive-partitioned batches (stage_batch
-        # partition_by) keep their data files in key=value subdirs
-        files = sorted(
-            os.path.join(root, f)
-            for root, _dirs, names in os.walk(batch_dir)
-            for f in names
-            if f.endswith(".parquet") and not f.startswith(("_", "."))
-        )
-        for fpath in files:
+        for fpath in data_files(os.path.join(self.table_dir, name)):
             md = pq.read_metadata(fpath)
             for rg in range(md.num_row_groups):
                 group = md.row_group(rg)
@@ -798,22 +798,26 @@ class ManifestedTable:
     # ---- reads -----------------------------------------------------
 
     def read(
-        self, spark: SparkSession, version: int | None = None
+        self,
+        spark: SparkSession,
+        version: int | None = None,
+        schema: T.StructType | None = None,
     ) -> DataFrame | None:
         """Snapshot read (head, or time travel to ``version``).
 
         Returns None for an empty table. mergeSchema for the same
-        schema-evolution tolerance as ParquetLoader.read.  A snapshot
-        containing hive-partitioned batches (partition evolution)
-        delegates to read_evolved — a flat multi-path scan would
-        misplan mixed layouts."""
+        schema-evolution tolerance as ParquetLoader.read; a declared
+        ``schema`` reads just those columns instead, with no footer
+        merge job.  A snapshot containing hive-partitioned batches
+        (partition evolution) delegates to read_evolved — a flat
+        multi-path scan would misplan mixed layouts."""
         m = self.manifest(version)
         if not m["dirs"]:
             return None
         if any(self.batch_spec(d) for d in m["dirs"]):
-            return self.read_evolved(spark, version)
+            return self.read_evolved(spark, version, schema)
         paths = [os.path.join(self.table_dir, d) for d in m["dirs"]]
-        return spark.read.option("mergeSchema", "true").parquet(*paths)
+        return _reader(spark, schema).parquet(*paths)
 
     def batch_spec(self, name: str) -> tuple[str, ...]:
         """The partition spec a batch dir was staged with (empty tuple
@@ -827,7 +831,10 @@ class ManifestedTable:
             return ()
 
     def read_evolved(
-        self, spark: SparkSession, version: int | None = None
+        self,
+        spark: SparkSession,
+        version: int | None = None,
+        schema: T.StructType | None = None,
     ) -> DataFrame | None:
         """Snapshot read across EVOLVING partition specs (the Iceberg
         partition-evolution read model): batches staged flat, batches
@@ -848,9 +855,7 @@ class ManifestedTable:
         for spec, dirs in sorted(groups.items()):
             paths = [os.path.join(self.table_dir, d) for d in dirs]
             # same-spec dirs share one multi-path scan (one file index)
-            parts.append(
-                spark.read.option("mergeSchema", "true").parquet(*paths)
-            )
+            parts.append(_reader(spark, schema).parquet(*paths))
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p, allowMissingColumns=True)
@@ -1321,17 +1326,18 @@ def _staged_rows(batch_dir: str) -> int:
     side metadata, no Spark job)."""
     import pyarrow.parquet as pq
 
-    total = 0
-    for f in os.listdir(batch_dir):
-        if f.endswith(".parquet"):
-            total += pq.read_metadata(os.path.join(batch_dir, f)).num_rows
-    return total
+    return sum(pq.read_metadata(f).num_rows for f in data_files(batch_dir))
+
 
 from .extract import (  # noqa: E402
     ExtractResult,
     ParquetExtractor,
     TableConfig,
     apply_write_partitions,
+    bound_to_window,
+    boundary_schema,
+    data_files,
+    drop_empty_files,
 )
 
 
@@ -1384,16 +1390,11 @@ class ManifestLoader:
             and table.dedup_keys
             and mt.manifest()["dirs"]
         ):
-            existing = mt.read(spark)
-            window = result.window
-            if (
-                window is not None
-                and not window.is_trivial
-                and window.column in existing.columns
-            ):
-                existing = existing.filter(window.to_column())
+            existing = mt.read(
+                spark, schema=boundary_schema(df, table, result.window)
+            )
             df = df.join(
-                existing.select(*table.dedup_keys),
+                bound_to_window(existing, table, result.window),
                 on=list(table.dedup_keys),
                 how="left_anti",
             )

@@ -1427,3 +1427,28 @@ def test_partition_evolution_reads_and_prunes(spark, tmp_path):
     assert day2.count() == 30
     plan = day2._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters: [isnotnull(day" in plan or "day#" in plan
+
+
+def test_declared_schema_read_spans_evolved_specs(spark, tmp_path):
+    """The boundary read of an append declares its schema; over a
+    snapshot whose batches have different partition specs it goes
+    through read_evolved too, and runs no footer-inference job."""
+    from pyspark.sql import types as T
+
+    t = ManifestedTable(str(tmp_path / "ev"))
+    df = spark.range(0, 60).select(
+        F.col("id").alias("k"), (F.col("id") % 3).alias("day")
+    )
+    t.commit_overwrite(df.filter(F.col("k") < 30))
+    t.commit_append(df.filter(F.col("k") >= 30), partition_by=("day",))
+    sc = spark.sparkContext
+    group = f"declared-read-{tmp_path.name}"
+    sc.setJobGroup(group, "declared-schema snapshot read")
+    try:
+        out = t.read(spark, schema=T.StructType([T.StructField("k", T.LongType())]))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    assert sorted(r.k for r in out.select("k").collect()) == list(range(60))

@@ -5,7 +5,11 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from mkpipe_extractor_clickhouse_spark.pipeline import Pipeline, run_pipelines
+from mkpipe_extractor_clickhouse_spark.pipeline import (
+    Pipeline,
+    run_pipelines,
+    table_config_from_dict,
+)
 
 
 def test_config_dict_pipeline(spark, sf_dir, tmp_path):
@@ -184,3 +188,308 @@ def test_pipeline_manifest_destination(spark, sf_dir, tmp_path):
     run_pipelines(config, spark)
     assert loader.table(t).head_version() == head
     assert loader.table(t).read(spark).count() == n_src
+
+
+# ---- scheduling: one chain per destination table, run concurrently ----
+
+
+def _lake_config(src: str, dst: str, tables: list[dict]) -> dict:
+    return {
+        "connections": {
+            "src": {"variant": "parquet", "path": src},
+            "dst": {"variant": "parquet", "path": dst},
+        },
+        "pipelines": [
+            {"name": "p", "source": "src", "destination": "dst", "tables": tables}
+        ],
+    }
+
+
+def _record_ticks(monkeypatch):
+    """Wall interval and thread of every table tick, keyed by target."""
+    import threading
+    import time
+
+    from mkpipe_extractor_clickhouse_spark.sources.extract import (
+        IncrementalRunner,
+    )
+
+    ticks: list[tuple[str, float, float, int]] = []
+    run_once = IncrementalRunner.run_once
+
+    def traced(self, spark, table, source_filter=None):
+        t0 = time.perf_counter()
+        try:
+            return run_once(self, spark, table, source_filter)
+        finally:
+            ticks.append(
+                (table.target_name, t0, time.perf_counter(), threading.get_ident())
+            )
+
+    monkeypatch.setattr(IncrementalRunner, "run_once", traced)
+    return ticks
+
+
+def test_results_in_config_order(spark, sf_dir, tmp_path):
+    tables = [{"name": t} for t in ("supplier", "region", "nation", "customer")]
+    config = _lake_config(sf_dir, str(tmp_path / "a"), tables)
+    config["connections"]["dst2"] = {"variant": "parquet", "path": str(tmp_path / "b")}
+    config["pipelines"].append(
+        {"name": "q", "source": "src", "destination": "dst2", "tables": tables[::-1]}
+    )
+    out = run_pipelines(config, spark)
+    assert list(out) == ["p", "q"]
+    assert [r.table for r in out["p"]] == ["supplier", "region", "nation", "customer"]
+    assert [r.table for r in out["q"]] == ["customer", "nation", "region", "supplier"]
+    assert {r.status for rs in out.values() for r in rs} == {"extracted"}
+
+
+def test_same_target_entries_run_in_order(spark, sf_dir, tmp_path, monkeypatch):
+    """Two entries that write one destination table form one chain: they
+    never overlap, and the rows and watermark equal a sequential run."""
+    from mkpipe_extractor_clickhouse_spark.sources.extract import (
+        IncrementalRunner,
+        ParquetExtractor,
+        ParquetLoader,
+    )
+    from mkpipe_extractor_clickhouse_spark.sources.state import WatermarkStore
+
+    def window(lo, hi):
+        return {
+            "name": "events",
+            "target_name": "ev",
+            "replication_method": "incremental",
+            "iterate_column": "event_id",
+            "iterate_column_type": "int",
+            "filter_lower_bound": lo,
+            "filter_upper_bound": hi,
+        }
+
+    tables = [window(0, 300), {"name": "nation"}, window(300, 600), {"name": "region"}]
+    ticks = _record_ticks(monkeypatch)
+    dst = str(tmp_path / "conc")
+    out = run_pipelines(_lake_config(sf_dir, dst, tables), spark)["p"]
+    assert [r.table for r in out] == ["ev", "nation", "ev", "region"]
+    ev = sorted((a, b) for name, a, b, _ in ticks if name == "ev")
+    assert len(ev) == 2 and ev[0][1] <= ev[1][0]
+
+    seq = str(tmp_path / "seq")
+    runner = IncrementalRunner(
+        ParquetExtractor(sf_dir), ParquetLoader(seq), WatermarkStore(f"{seq}/_state.json")
+    )
+    for t in (tables[0], tables[2]):
+        runner.run_once(spark, table_config_from_dict(t))
+
+    def rows(d):
+        return sorted(spark.read.parquet(f"{d}/ev.parquet").collect())
+
+    assert rows(dst) == rows(seq)
+    assert WatermarkStore(f"{dst}/_state.json").get("ev") == "599"
+    assert runner.store.get("ev") == "599"
+
+
+def test_failing_chain_stops_alone_then_raises_first_error(spark, sf_dir, tmp_path):
+    import os
+
+    import pytest
+
+    dst = str(tmp_path / "wh")
+    tables = [
+        {"name": "region"},
+        {"name": "no_such_table_a", "target_name": "bad"},
+        {"name": "nation", "target_name": "bad"},  # same chain: never runs
+        {"name": "no_such_table_b"},
+        {"name": "supplier"},
+    ]
+    with pytest.raises(KeyError, match="no_such_table_a"):
+        run_pipelines(_lake_config(sf_dir, dst, tables), spark)
+    assert spark.read.parquet(f"{dst}/region.parquet").count() == 5
+    assert spark.read.parquet(f"{dst}/supplier.parquet").count() > 0
+    assert not os.path.exists(f"{dst}/bad.parquet")
+
+
+def test_pool_threads_are_reused_across_ticks(spark, sf_dir, tmp_path, monkeypatch):
+    import threading
+
+    def pool_threads():
+        return {t.ident for t in threading.enumerate() if t.name.startswith("mkpipe-tick")}
+
+    ticks = _record_ticks(monkeypatch)
+    config = _lake_config(
+        sf_dir, str(tmp_path / "wh"), [{"name": "region"}, {"name": "nation"}]
+    )
+    run_pipelines(config, spark)
+    first = pool_threads()
+    run_pipelines(config, spark)
+    assert pool_threads() == first
+    assert {t[3] for t in ticks} <= first
+    assert threading.get_ident() not in first
+
+
+def test_append_tick_runs_three_jobs_in_callers_group(spark, sf_dir, tmp_path):
+    """An append tick is an empty probe, the anti-join's broadcast build
+    and the write: the boundary read declares its schema, so no footer-
+    inference job.  The jobs carry the caller's job group although they
+    run on pool threads."""
+    sc = spark.sparkContext
+    pipe = Pipeline(
+        source_dir=sf_dir,
+        dest_dir=str(tmp_path),
+        tables=[
+            {
+                "name": "events",
+                "replication_method": "incremental",
+                "iterate_column": "event_id",
+                "iterate_column_type": "int",
+                "dedup_keys": ["event_id"],
+            }
+        ],
+    )
+    assert pipe.run(spark)[0].write_mode == "overwrite"
+    group = f"append-tick-{tmp_path.name}"
+    sc.setJobGroup(group, "one append tick")
+    try:
+        res = pipe.run(spark)[0]
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert res.write_mode == "append"
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 3
+
+
+def _slices(spark, sf_dir, src: str, upper: int) -> None:
+    """The source as of one arrival: the events with event_id < upper."""
+    from mkpipe_extractor_clickhouse_spark.catalog import load_table
+
+    load_table(spark, sf_dir, "events").filter(F.col("event_id") < upper).repartition(
+        4
+    ).write.mode("overwrite").parquet(f"{src}/events.parquet")
+
+
+def test_appends_leave_no_empty_files(spark, sf_dir, tmp_path):
+    """No append leaves a 0-row file, in a parquet or a manifest
+    destination, and an idle tick leaves the file set unchanged."""
+    import pyarrow.parquet as pq
+
+    from mkpipe_extractor_clickhouse_spark.sources.extract import data_files
+
+    src = str(tmp_path / "src")
+    table = {
+        "name": "events",
+        "replication_method": "incremental",
+        "iterate_column": "event_id",
+        "iterate_column_type": "int",
+        "dedup_keys": ["event_id"],
+    }
+    config = {
+        "connections": {
+            "src": {"variant": "parquet", "path": src},
+            "lake": {"variant": "parquet", "path": str(tmp_path / "lake")},
+            "mfst": {"variant": "manifest", "path": str(tmp_path / "mfst")},
+        },
+        "pipelines": [
+            {"name": n, "source": "src", "destination": n, "tables": [table]}
+            for n in ("lake", "mfst")
+        ],
+    }
+    for upper in (200, 400, 600, 800):  # initial load, then three appends
+        _slices(spark, sf_dir, src, upper)
+        out = run_pipelines(config, spark)
+        assert {r.status for rs in out.values() for r in rs} == {"extracted"}
+    files = data_files(str(tmp_path / "lake")) + data_files(str(tmp_path / "mfst"))
+    assert files and all(pq.read_metadata(f).num_rows > 0 for f in files)
+    assert spark.read.parquet(f"{tmp_path}/lake/events.parquet").count() == 800
+    run_pipelines(config, spark)  # idle: only the boundary row re-delivers
+    assert data_files(str(tmp_path / "lake")) + data_files(str(tmp_path / "mfst")) == files
+
+
+def test_empty_overwrite_keeps_one_schema_file(spark, sf_dir, tmp_path):
+    from mkpipe_extractor_clickhouse_spark.sources.extract import data_files
+
+    src = str(tmp_path / "src")
+    _slices(spark, sf_dir, src, 0)
+    pipe = Pipeline(
+        source_dir=src, dest_dir=str(tmp_path / "wh"), tables=[{"name": "events"}]
+    )
+    pipe.run(spark)
+    assert len(data_files(f"{tmp_path}/wh/events.parquet")) == 1
+    assert spark.read.parquet(f"{tmp_path}/wh/events.parquet").count() == 0
+
+
+def test_concurrent_custom_queries_read_their_own_views(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """Temp views are session-wide: two chains whose custom queries both
+    name ``nation``, over different source directories, must each read
+    their own.  The patched registration sleeps so that, without the
+    extractor's lock, the other chain re-registers the view in between."""
+    import time
+
+    from mkpipe_extractor_clickhouse_spark.catalog import load_table
+    from mkpipe_extractor_clickhouse_spark.sources import extract
+
+    nation = load_table(spark, sf_dir, "nation")
+    key = F.col("n_nationkey")
+    for name, cond in (("a", key < 10), ("b", key >= 10)):
+        nation.filter(cond).write.parquet(f"{tmp_path}/{name}/nation.parquet")
+
+    register = extract.register_views
+
+    def slow_register(*a, **kw):
+        register(*a, **kw)
+        time.sleep(1.0)
+
+    monkeypatch.setattr(extract, "register_views", slow_register)
+    table = {"name": "nation", "custom_query": "SELECT * FROM nation {query_filter}"}
+    config = {
+        "connections": {
+            "a": {"variant": "parquet", "path": f"{tmp_path}/a"},
+            "b": {"variant": "parquet", "path": f"{tmp_path}/b"},
+            "out_a": {"variant": "parquet", "path": f"{tmp_path}/out_a"},
+            "out_b": {"variant": "parquet", "path": f"{tmp_path}/out_b"},
+        },
+        "pipelines": [
+            {"name": n, "source": n, "destination": f"out_{n}", "tables": [table]}
+            for n in ("a", "b")
+        ],
+    }
+    run_pipelines(config, spark)
+
+    def keys(n):
+        out = spark.read.parquet(f"{tmp_path}/out_{n}/nation.parquet")
+        return sorted(r.n_nationkey for r in out.collect())
+
+    assert keys("a") == list(range(10))
+    assert keys("b") == list(range(10, 25))
+
+
+def test_many_chains_commit_every_watermark(spark, sf_dir, tmp_path):
+    """More chains than pool threads, with frequent thread switches: every
+    chain's watermark lands in the shared state file, none lost."""
+    import sys
+
+    from mkpipe_extractor_clickhouse_spark.sources.state import WatermarkStore
+
+    tables = [
+        {
+            "name": "events",
+            "target_name": f"ev{i}",
+            "replication_method": "incremental",
+            "iterate_column": "event_id",
+            "iterate_column_type": "int",
+            "filter_lower_bound": 0,
+            "filter_upper_bound": 50 * (i + 1),
+        }
+        for i in range(2 * spark.sparkContext.defaultParallelism)
+    ]
+    dst = str(tmp_path / "wh")
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        out = run_pipelines(_lake_config(sf_dir, dst, tables), spark)["p"]
+    finally:
+        sys.setswitchinterval(interval)
+    expected = {t["target_name"]: str(t["filter_upper_bound"] - 1) for t in tables}
+    assert {r.table: r.last_point for r in out} == expected
+    assert WatermarkStore(f"{dst}/_state.json")._read() == expected
