@@ -23,12 +23,18 @@ cannot recompute those blocks from source (acceptable for the
 short-lived intra-query intermediates this is used for; cluster jobs
 that need fault-tolerant reuse should persist to a real checkpoint
 dir instead).
+
+``collect_if_small`` is the other driver-memory primitive: one bounded
+collect that hands a small relation to a driver-side finish and refuses
+a large one, so an exact kernel can skip its distributed rounds on small
+inputs while the driver never holds more than the caller's bound.
 """
 
 from __future__ import annotations
 
 import os
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 
 
@@ -45,3 +51,13 @@ def ephemeral_cache(df: DataFrame, *, required: bool = False) -> DataFrame:
     if not required and os.environ.get("SPARK_GRAFT_NO_PIN") == "1":
         return df
     return df.localCheckpoint(eager=True)
+
+
+def collect_if_small(df: DataFrame, max_rows: int) -> pa.Table | None:
+    """``df`` as an Arrow table if it has at most ``max_rows`` rows, else
+    None.  One job (``limit(max_rows + 1).toArrow()``) whatever the
+    answer, and the driver holds at most ``max_rows + 1`` rows: a caller
+    that gets None drops nothing it needs and runs its distributed path,
+    which reads ``df`` again."""
+    head = df.limit(max_rows + 1).toArrow()
+    return head if head.num_rows <= max_rows else None

@@ -7,16 +7,18 @@ edge ``(node, local minimum)``.  Each local component becomes a star, so
 the output is a forest of at most Σ distinct-nodes-per-partition edges
 with exactly the connectivity of the input.
 
-Phase 2 merges the forest exactly.  When it fits under
-``_DRIVER_FINISH_EDGES`` (one bounded collect) the same union-find
-finishes it on the driver and the labels come back as a broadcast
-relation — one data pass and no iteration at all.  A larger forest runs
-large-star/small-star rounds instead (public Kiveris et al. "Connected
-Components in MapReduce and Beyond", SoCC'14: O(log² n) rounds whatever
-the component diameter), on the forest rather than the raw edges, so
-driver memory never scales with input size.  This is the
-composable-coreset shape (partial results per partition, then an exact
-merge of the small union) that the t13 fold and the Lloyd kernel use.
+Phase 2 merges the forest exactly, on one of two paths.  The forest
+goes through ``_cache.collect_if_small`` with the bound
+``_DRIVER_FINISH_EDGES``: if it fits, the same union-find finishes it on
+the driver and the labels come back as a broadcast relation — one data
+pass and no iteration at all.  A larger forest runs large-star/small-star
+rounds instead (public Kiveris et al. "Connected Components in MapReduce
+and Beyond", SoCC'14: O(log² n) rounds whatever the component diameter),
+on the forest rather than the raw edges, so driver memory never scales
+with input size.  This is the composable-coreset shape (partial results
+per partition, then an exact merge of the small union) that the t13 fold
+uses, and the Lloyd fits in ``llm_similarity`` take the same two paths
+through the same helper.
 
 Node ids may be any orderable type the engine hands in: int64 doc ids
 (l18/l40/l114) or strings (er1).  The cluster id is the component's
@@ -36,7 +38,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
-from ._cache import ephemeral_cache
+from ._cache import collect_if_small, ephemeral_cache
 
 # Largest phase-1 forest finished on the driver: two ids per edge, a few
 # hundred MB of Python objects at most.  Beyond it the star rounds run
@@ -178,8 +180,8 @@ def connected_components(
         [StructField("u", id_type), StructField("v", id_type)]
     )
     forest = oriented.mapInArrow(_forest_fn(), schema)
-    head = forest.limit(_DRIVER_FINISH_EDGES + 1).toArrow()
-    if head.num_rows <= _DRIVER_FINISH_EDGES:
+    head = collect_if_small(forest, _DRIVER_FINISH_EDGES)
+    if head is not None:
         links = pa.Table.from_batches(
             list(_forest_fn()(head.to_batches())), schema=head.schema
         )

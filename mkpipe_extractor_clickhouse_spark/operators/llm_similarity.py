@@ -21,7 +21,7 @@ from pyspark.sql import types as T
 
 from ..catalog import load_table
 from ..registry import register
-from ._cache import ephemeral_cache
+from ._cache import collect_if_small, ephemeral_cache
 from ._determinism import DAVG9, DSUM, _Q, _Q9, _quantize, _quantize9, davg9
 
 TOP_K = 10
@@ -1157,36 +1157,91 @@ def _lloyd_reduce(partial_rows, cent_blocks):
     return out
 
 
+# Largest vector input a Lloyd fit runs on the driver, in bytes of
+# doubles (rows × dim × 8).  The driver then holds the collected Arrow
+# table plus a few NumPy temporaries of the same size (the matrix, its
+# quantized copy) — a few hundred MB at most, whatever the input size.
+# A larger input runs the distributed loop, where the driver holds only
+# the k·dim codebook and the pre-reduced partials.
+_DRIVER_FIT_BYTES = 64 << 20
+
+
+def _lloyd_iterate(vonly: DataFrame, cent_blocks, dim: int, dsub: int, iters: int):
+    """The one Lloyd loop behind kmeans_fit and pq_train_encode:
+    ``iters`` updates of ``cent_blocks`` over the (v) column ``vonly``.
+    Returns (codebook after the last update, codebook before it); the
+    second is the one the last assignment ran against.
+
+    Two paths, one per input size, chosen by one bounded collect
+    (``collect_if_small``, the connected-components phase-2 helper):
+
+    * the vectors fit in ``_DRIVER_FIT_BYTES``: every iteration runs
+      _lloyd_update_fn over the collected batches on the driver — one
+      Spark job for the whole fit;
+    * otherwise each iteration is one distributed pass: the kernel's
+      per-partition partials are pre-reduced in Spark, grouped by
+      (block, cid, pos) with Σqsum as decimal(38,0) (exact, like the
+      driver's Python ints), so the driver collects k·dim rows, not
+      P·k·dim.
+
+    Both paths end in _lloyd_reduce over exact integer sums, and the
+    int64 partials do not depend on how rows are split, so the two paths
+    give bit-identical codebooks (while no partial passes 2^63, i.e. the
+    |x| summed per cluster and position in one kernel call stays below
+    ~9.2e9)."""
+    local = collect_if_small(vonly, _DRIVER_FIT_BYTES // (max(dim, 1) * 8))
+    batches = None if local is None else local.combine_chunks().to_batches()
+    prev = cent_blocks
+    for _ in range(iters):
+        prev = cent_blocks
+        update = _lloyd_update_fn(cent_blocks, dim, dsub)
+        if batches is not None:
+            partials = [r for b in update(batches) for r in b.to_pylist()]
+        else:
+            partials = (
+                vonly.mapInArrow(
+                    update, "block int, cid int, pos int, qsum long, cnt long"
+                )
+                .groupBy("block", "cid", "pos")
+                .agg(
+                    F.sum(F.col("qsum").cast("decimal(38,0)")).alias("qsum"),
+                    F.sum("cnt").alias("cnt"),
+                )
+                .collect()
+            )
+        cent_blocks = _lloyd_reduce(partials, cent_blocks)
+    return cent_blocks, prev
+
+
 def kmeans_fit(
     vecs: DataFrame, k: int = 10, max_iter: int = 10
 ) -> DataFrame:
-    """Lloyd's k-means over the embedding column — mapInArrow NumPy
-    kernel (r13, guide §4.2): each iteration is ONE Arrow pass over the
-    pinned vectors emitting per-partition (cid, pos, Σquantize9(x),
-    count) partials (k·dim·P tiny rows — model-sized, not data-sized),
-    reduced driver-side with the exact davg9 algebra.  This replaced a
-    per-iteration broadcast-join + posexplode + two grouped aggs + an
-    eager checkpoint (~0.4 s fixed floor per iteration at any SF).
+    """Lloyd's k-means over the embedding column: the k lowest vec_ids
+    seed the centroids (one job), then _lloyd_iterate runs ``max_iter``
+    updates — on the driver after one bounded collect when the vectors
+    fit in ``_DRIVER_FIT_BYTES``, else one mapInArrow pass per iteration
+    whose partials are pre-reduced in Spark to k·dim rows.  A small fit
+    therefore costs two jobs whatever ``max_iter`` is; a large one keeps
+    the canonical distributed shape (MLlib's), with driver memory bounded
+    by the model on either path.
 
-    Deterministic and BIT-IDENTICAL to the previous DataFrame loop (the
-    l20/l21b oracles track the codebook bit-for-bit): init centroids
-    are the k lowest vec_ids, d2 folds positions in order, ties break
-    to the lower cid, update means are davg9-quantized — see
-    _lloyd_update_fn for the exact-IEEE correspondence.
+    Deterministic and BIT-IDENTICAL to the DataFrame loop the kernel
+    replaced (the l20/l21b oracles track the codebook bit-for-bit):
+    d2 folds positions in order, ties break to the lower cid, update
+    means are davg9-quantized — see _lloyd_update_fn for the exact-IEEE
+    correspondence.
 
     Returns (cid, cv: array<double>) as a driver-local relation (k·dim
-    doubles — broadcast-sized by construction).  At 100 TB each
-    iteration is one data pass + a P·k·dim partial collect, the
-    canonical distributed k-means (MLlib's shape).
+    doubles — broadcast-sized by construction).
 
     The input is deliberately NOT pinned (r13): both callers hand a
-    parquet projection, so each pass re-reads just the embedding
-    column instead of materializing an input-sized checkpoint.  No pin
-    A/B was run for this choice; it stands on the 100 TB posture, where
-    an input-sized localCheckpoint must not exist.
+    parquet projection, so each distributed pass re-reads just the
+    embedding column instead of materializing an input-sized
+    checkpoint, which must not exist at 100 TB.
 
     Raises ValueError on an empty input and, from the kernel, on
-    ragged, null or non-finite vectors."""
+    ragged, null or non-finite vectors (locally on the driver path,
+    through Spark on the distributed one)."""
     spark = vecs.sparkSession
     vecs = vecs.select("vec_id", "v")
     init = vecs.orderBy("vec_id").limit(k).collect()
@@ -1198,13 +1253,9 @@ def kmeans_fit(
         list(range(1, len(init) + 1)),
         [list(r["v"]) for r in init],
     )]
-    vonly = vecs.select("v")
-    for _ in range(max_iter):
-        partials = vonly.mapInArrow(
-            _lloyd_update_fn(cent_blocks, dim, dim),
-            "block int, cid int, pos int, qsum long, cnt long",
-        ).collect()
-        cent_blocks = _lloyd_reduce(partials, cent_blocks)
+    cent_blocks, _ = _lloyd_iterate(
+        vecs.select("v"), cent_blocks, dim, dim, max_iter
+    )
     cids, cvs = cent_blocks[0]
     return spark.createDataFrame(
         [(int(c), v) for c, v in zip(cids, cvs)], "cid int, cv array<double>"
@@ -1357,23 +1408,23 @@ PQ_RERANK = 100  # exact re-rank depth
 
 
 def pq_train_encode(vecs: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """Train per-block PQ codebooks and encode the corpus — mapInArrow
-    NumPy kernel (r13, guide §4.2): all M block codebooks train
-    SIMULTANEOUSLY in each Arrow pass (the kernel slices the full
-    vector into M subvectors in-memory — no posexplode relation, no
-    per-iteration broadcast join + grouped mean + eager checkpoint),
-    partials reduce driver-side with the exact davg9 algebra, and the
-    final encoding is one assignment-only Arrow pass against the
-    penultimate codebook (exactly the relation the old loop's last
-    `assigned` was).  Deterministic and BIT-IDENTICAL to the previous
-    DataFrame loop — the l21/l21b unrolled SQL oracles track the
-    codebooks bit-for-bit (see _lloyd_update_fn).
+    """Train per-block PQ codebooks and encode the corpus.  All M block
+    codebooks train SIMULTANEOUSLY in each Lloyd update (the kernel
+    slices the full vector into M subvectors in memory — no posexplode
+    relation), through the same _lloyd_iterate as kmeans_fit: on the
+    driver after one bounded collect when the vectors fit in
+    ``_DRIVER_FIT_BYTES``, else one distributed pass per iteration with
+    partials pre-reduced in Spark to M·K·(dim/M) rows.  The encoding is
+    one assignment-only Arrow pass against the penultimate codebook
+    (exactly the relation the old DataFrame loop's last `assigned` was).
+    Deterministic and BIT-IDENTICAL to that loop on both paths — the
+    l21/l21b unrolled SQL oracles track the codebooks bit-for-bit (see
+    _lloyd_update_fn).
 
     Returns (codebook: (block, cid, cv), codes: (vec_id, block, code)).
     At 100 TB the codes table is the persisted index — M bytes per
     vector instead of 4·dim — and the codebook is a K·M·(dim/M) float
-    broadcast; each training pass collects only P·M·K·(dim/M)
-    model-sized partials.
+    broadcast.
 
     Input contract (r13, no internal pin): callers hand either a cheap
     re-scannable projection (l21 — a parquet column read per pass) or
@@ -1398,15 +1449,9 @@ def pq_train_encode(vecs: DataFrame) -> tuple[DataFrame, DataFrame]:
         )
         for b in range(PQ_BLOCKS)
     ]
-    vonly = vecs.select("v")
-    prev = cent_blocks
-    for _ in range(PQ_ITERS):
-        prev = cent_blocks
-        partials = vonly.mapInArrow(
-            _lloyd_update_fn(cent_blocks, dim, dsub),
-            "block int, cid int, pos int, qsum long, cnt long",
-        ).collect()
-        cent_blocks = _lloyd_reduce(partials, cent_blocks)
+    cent_blocks, prev = _lloyd_iterate(
+        vecs.select("v"), cent_blocks, dim, dsub, PQ_ITERS
+    )
     cent = spark.createDataFrame(
         [
             (b, int(cid), cv)
@@ -1614,15 +1659,19 @@ def ivfpq_index(corpus: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame, Dat
 
     Scale shape: the persisted index is assigned ⋈ codes — one int +
     M bytes per vector, partitionable by list id; both codebooks are
-    tiny broadcasts. Training is Lloyd Arrow passes (kmeans_fit /
-    pq_train_encode), never an all-pairs.  r13: the coarse assignment
+    tiny broadcasts. Training is the shared Lloyd loop (kmeans_fit for
+    the coarse quantizer, pq_train_encode for the residual codebooks),
+    never an all-pairs: each fit runs on the driver after one bounded
+    collect while its input fits in ``_DRIVER_FIT_BYTES``, else as
+    distributed passes with pre-reduced partials.  r13: the coarse assignment
     and the residual computation fuse into ONE Arrow pass
     (_lloyd_assign_residual_fn) whose pinned output feeds both the
     probe membership join and the residual-PQ training — replacing a
     broadcast-join + argmin-groupBy + residual-join chain (bit-exact;
     the l21b oracle's strict hash pins it).  Pin size note: rows ∝
     corpus docs (vec_id + cid + dim doubles) — input-sized, reused by
-    4 PQ training passes + encode + membership; at 100 TB write the
+    the PQ fit (one bounded collect on the driver path, PQ_ITERS passes
+    on the distributed one) + encode + membership; at 100 TB write the
     index to storage instead (it IS the persisted artifact)."""
     coarse = kmeans_fit(corpus, k=IVFPQ_NLISTS, max_iter=3)
     crows = sorted(coarse.collect(), key=lambda r: r["cid"])

@@ -343,9 +343,10 @@ class ManifestedTable:
         commit replaces: the target name becomes v(parent+1), so ANY
         intervening publish makes the link collide and raise — the
         check is the filesystem name itself, no read-then-write gap.
-        Append-style commits leave parent unset (they rebase onto
-        whatever the head is); replace-style commits (compact) must
-        pin it or they would silently drop concurrent appends.
+        A commit whose dirs list was built from a head read (append,
+        the loader's tick, compact, merge) must pin that head, or a
+        publish landing in between drops out of the list; only a commit
+        listing nothing but its own batch (overwrite) may leave it unset.
 
         The publish primitive is ``os.link(tmp, target)``: atomic and
         *exclusive* (EEXIST when target exists). A bare
@@ -1417,6 +1418,10 @@ class ManifestLoader:
         meta = {"last_point": result.resolve_last_point()}
         new_stats = mt._compute_stats(name)
         while True:
+            # parent is pinned to the head the dirs list was merged
+            # against, as in ManifestedTable.commit_append: a commit
+            # landing after this read makes the publish collide and the
+            # retry re-merge, instead of dropping it from the new dirs.
             head = mt.manifest()
             if result.write_mode == "overwrite":
                 dirs, stats = [name], {name: new_stats}
@@ -1424,7 +1429,13 @@ class ManifestLoader:
                 dirs = head["dirs"] + [name]
                 stats = {**head.get("stats", {}), name: new_stats}
             try:
-                v = mt._publish(dirs, result.write_mode, meta, stats=stats)
+                v = mt._publish(
+                    dirs,
+                    result.write_mode,
+                    meta,
+                    parent=head["version"],
+                    stats=stats,
+                )
                 if (
                     self.auto_compact_max_dirs is not None
                     and len(dirs) > self.auto_compact_max_dirs

@@ -3,6 +3,7 @@ hash-dependent paths must agree with their exact counterparts."""
 
 from __future__ import annotations
 
+import os
 import random
 
 import pytest
@@ -488,9 +489,35 @@ def test_lloyd_kernels_reject_malformed_vectors(rows, match):
         assert kernel(_vector_batch([[0.0, 1.0], [1.0, 0.5]]))
 
 
-def test_lloyd_kernel_error_surfaces_through_spark(spark):
-    """The ValueError raised on a worker reaches the caller of
-    kmeans_fit (wrapped by Spark, message intact)."""
+@pytest.fixture(params=["driver_fit", "distributed"])
+def lloyd_path(request, monkeypatch):
+    """Run a Lloyd test on both paths of _lloyd_iterate: the default
+    bound fits every test input on the driver; a bound of 0 bytes forces
+    one distributed pass per iteration."""
+    from mkpipe_extractor_clickhouse_spark.operators import llm_similarity
+
+    if request.param == "distributed":
+        monkeypatch.setattr(llm_similarity, "_DRIVER_FIT_BYTES", 0)
+    return request.param
+
+
+def _lloyd_paths(monkeypatch):
+    """The two Lloyd paths inside one test: yields each path's name with
+    ``_DRIVER_FIT_BYTES`` set for it (restored afterwards)."""
+    from mkpipe_extractor_clickhouse_spark.operators import llm_similarity
+
+    for path in ("driver_fit", "distributed"):
+        with monkeypatch.context() as m:
+            if path == "distributed":
+                m.setattr(llm_similarity, "_DRIVER_FIT_BYTES", 0)
+            yield path
+
+
+def test_lloyd_kernel_error_surfaces_through_spark(spark, monkeypatch):
+    """A malformed vector fails the fit on both paths with its message
+    intact: a plain ValueError on the driver path, where the kernel runs
+    locally, and the worker's ValueError wrapped by Spark on the
+    distributed one."""
     from mkpipe_extractor_clickhouse_spark.operators.llm_similarity import (
         kmeans_fit,
     )
@@ -499,22 +526,126 @@ def test_lloyd_kernel_error_surfaces_through_spark(spark):
         [(1, [0.0, 1.0]), (2, [float("nan"), 0.0]), (3, [1.0, 1.0])],
         "vec_id long, v array<double>",
     )
-    with pytest.raises(Exception, match="non-finite vector component"):
-        kmeans_fit(vecs, k=2, max_iter=1)
+    for path in _lloyd_paths(monkeypatch):
+        expected = ValueError if path == "driver_fit" else Exception
+        with pytest.raises(expected, match="non-finite vector component"):
+            kmeans_fit(vecs, k=2, max_iter=1)
 
 
-def test_lloyd_fits_reject_empty_input(spark):
-    """An empty corpus is a ValueError, not an IndexError on init[0]."""
+def test_lloyd_fits_reject_empty_input(spark, monkeypatch):
+    """An empty corpus is a ValueError, not an IndexError on init[0],
+    on both Lloyd paths."""
     from mkpipe_extractor_clickhouse_spark.operators.llm_similarity import (
         kmeans_fit,
         pq_train_encode,
     )
 
     empty = spark.createDataFrame([], "vec_id long, v array<double>")
-    with pytest.raises(ValueError, match="no vectors to fit"):
-        kmeans_fit(empty, k=2)
-    with pytest.raises(ValueError, match="no vectors to fit"):
-        pq_train_encode(empty)
+    for _ in _lloyd_paths(monkeypatch):
+        with pytest.raises(ValueError, match="no vectors to fit"):
+            kmeans_fit(empty, k=2)
+        with pytest.raises(ValueError, match="no vectors to fit"):
+            pq_train_encode(empty)
+
+
+@pytest.mark.parametrize(
+    "name", ["l20_kmeans_ivf", "l21_pq_topk", "l21b_ivfpq_topk"]
+)
+def test_lloyd_queries_match_oracle_on_both_paths(spark, lloyd_path, name):
+    """l20, l21 and l21b hash-match their unrolled SQL oracles at sf0.01
+    (500 vectors) on both Lloyd paths: the oracles track the codebooks
+    bit for bit, so either path drifting by one ulp fails here."""
+    import duckdb
+
+    from mkpipe_extractor_clickhouse_spark.registry import _normalized_oracle
+
+    from .conftest import TEST_SF_DIR
+    from ._compare import compare_results
+
+    sf_dir = os.path.join(os.path.dirname(TEST_SF_DIR), "sf0.01")
+    tab = _run(name, spark, sf_dir).toArrow()
+    con = duckdb.connect()
+    try:
+        con.execute(
+            "CREATE VIEW embeddings AS SELECT * FROM read_parquet("
+            f"'{sf_dir}/embeddings.parquet')"
+        )
+        otab = con.sql(
+            _normalized_oracle(name, SPECS[name].oracle)
+        ).fetch_arrow_table()
+    finally:
+        con.close()
+    assert tab.num_rows > 0
+    compare_results(
+        tab.column_names,
+        list(zip(*[c.to_pylist() for c in tab.columns])),
+        otab.column_names,
+        list(zip(*[c.to_pylist() for c in otab.columns])),
+        strict=True,
+    )
+
+
+def test_lloyd_paths_give_bit_identical_codebooks(spark, monkeypatch):
+    """The distributed path (per-partition partials, pre-reduced in
+    Spark with a decimal Σqsum) and the driver path (one kernel call
+    over the collected batches) produce the same codebooks and codes bit
+    for bit, over 5 partitions and clusters of very uneven sizes."""
+    from mkpipe_extractor_clickhouse_spark.operators.llm_similarity import (
+        kmeans_fit,
+        pq_train_encode,
+    )
+
+    rng = random.Random(17)
+    centers = [(-50.0, 3), (0.0, 240), (7.5, 40), (120.0, 9), (0.3, 1)]
+    rows, vid = [], 0
+    for c, n in centers:
+        for _ in range(n):
+            rows.append((vid, [c + rng.gauss(0, 1.5) for _ in range(16)]))
+            vid += 1
+    rng.shuffle(rows)
+    vecs = spark.createDataFrame(rows, "vec_id long, v array<double>")
+    vecs = vecs.repartition(5)
+    assert vecs.rdd.getNumPartitions() >= 4
+    got = {}
+    for path in _lloyd_paths(monkeypatch):
+        cent = kmeans_fit(vecs, k=5, max_iter=4)
+        book, codes = pq_train_encode(vecs)
+        got[path] = (
+            sorted((r["cid"], list(r["cv"])) for r in cent.collect()),
+            sorted((r["block"], r["cid"], list(r["cv"])) for r in book.collect()),
+            sorted(tuple(r) for r in codes.collect()),
+        )
+    assert len(got["driver_fit"][0]) == 5
+    assert got["driver_fit"] == got["distributed"]
+
+
+def test_kmeans_fit_small_input_job_count(spark):
+    """Job-count lock for the driver path: a small fit costs 2 Spark
+    jobs (the init's k lowest vec_ids, then the bounded collect) however
+    many iterations it runs, where the distributed loop pays one job per
+    iteration on top of the init."""
+    from mkpipe_extractor_clickhouse_spark.operators.llm_similarity import (
+        kmeans_fit,
+    )
+
+    from pyspark.sql import functions as F
+
+    # 4 partitions and no shuffle below the fit, as over a parquet scan
+    vecs = spark.range(0, 200, 1, 4).select(
+        F.col("id").alias("vec_id"),
+        F.array(*[F.sin(F.col("id") * (j + 1)) for j in range(8)]).alias("v"),
+    )
+    sc = spark.sparkContext
+    group = "kmeans-job-count-lock"
+    sc.setJobGroup(group, "kmeans_fit build")
+    try:
+        cent = kmeans_fit(vecs, k=4, max_iter=5)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 1 <= len(jobs) <= 2, jobs
+    assert cent.count() == 4
 
 
 def test_lloyd_reduce_requires_pos0_per_group():

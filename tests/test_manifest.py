@@ -241,6 +241,47 @@ def test_concurrent_appends_lose_no_commit(spark, mt):
     assert mt.read(spark).count() == 20
 
 
+def test_loader_append_keeps_commit_landing_after_head_read(
+    spark, tmp_path, monkeypatch
+):
+    """Deterministic lost-update check for ManifestLoader.load: another
+    writer's commit_append lands right after the loader's first head
+    read.  The loader must re-merge against the new head, so both
+    batches stay listed and the newest watermark is the loader's."""
+    from mkpipe_extractor_clickhouse_spark.sources.extract import ExtractResult
+
+    table = TableConfig(name="t", replication_method="incremental")
+    loader = ManifestLoader(str(tmp_path))
+    other = loader.table(table)  # the other writer's handle
+    real = ManifestedTable.manifest
+    fired = []
+
+    def manifest(self, version=None):
+        head = real(self, version)
+        if version is None and not fired:
+            fired.append(head["version"])
+            other.commit_append(spark.range(100, 103), meta={"writer": "other"})
+        return head
+
+    monkeypatch.setattr(ManifestedTable, "manifest", manifest)
+    v = loader.load(
+        spark,
+        table,
+        ExtractResult(
+            df=spark.range(3), write_mode="append", last_point_value="2"
+        ),
+    )
+    monkeypatch.undo()
+    assert fired == [0]
+    head = other.manifest()
+    assert v == head["version"] == 2
+    assert len(head["dirs"]) == 2
+    assert sorted(r.id for r in other.read(spark).collect()) == [
+        0, 1, 2, 100, 101, 102
+    ]
+    assert loader.last_point(table) == "2"
+
+
 def test_vacuum_retention_spares_fresh_inflight_dirs(spark, mt):
     """An in-flight writer's staged dir (young mtime) survives vacuum;
     only dirs older than the retention window are swept."""
