@@ -236,7 +236,7 @@ def x8_manifest_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     back equal to the full source proves watermark advancement,
     snapshot isolation, and boundary dedup under the lakehouse-style
     commit protocol."""
-    from ..sources.manifest import ManifestIncrementalRunner, ManifestLoader
+    from ..sources.manifest import ManifestLoader
 
     workdir = tempfile.mkdtemp(prefix="x8_mfst_")
     atexit.register(shutil.rmtree, workdir, ignore_errors=True)
@@ -247,10 +247,7 @@ def x8_manifest_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         iterate_column_type="datetime",
         dedup_keys=("event_id",),
     )
-    runner = ManifestIncrementalRunner(
-        extractor=ParquetExtractor(sf_dir),
-        loader=ManifestLoader(workdir),
-    )
+    runner = IncrementalRunner(ParquetExtractor(sf_dir), ManifestLoader(workdir))
     for cutoff in _CUTOFFS:
         source_filter = (
             F.col("ts") < F.lit(cutoff).cast("timestamp_ntz")

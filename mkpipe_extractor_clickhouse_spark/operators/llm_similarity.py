@@ -1242,7 +1242,20 @@ def kmeans_fit(
     Raises ValueError on an empty input and, from the kernel, on
     ragged, null or non-finite vectors (locally on the driver path,
     through Spark on the distributed one)."""
-    spark = vecs.sparkSession
+    return _codebook_relation(vecs.sparkSession, *_kmeans_codebook(vecs, k, max_iter))
+
+
+def _codebook_relation(spark: SparkSession, cids, cvs) -> DataFrame:
+    return spark.createDataFrame(
+        [(int(c), v) for c, v in zip(cids, cvs)], "cid int, cv array<double>"
+    )
+
+
+def _kmeans_codebook(vecs: DataFrame, k: int, max_iter: int):
+    """kmeans_fit's fit, as the driver-local codebook (cids ascending,
+    centroid vectors): callers that go on to use the codebook on the
+    driver (ivfpq_index) take it from here instead of collecting the
+    relation kmeans_fit wraps it in."""
     vecs = vecs.select("vec_id", "v")
     init = vecs.orderBy("vec_id").limit(k).collect()
     if not init:
@@ -1256,10 +1269,7 @@ def kmeans_fit(
     cent_blocks, _ = _lloyd_iterate(
         vecs.select("v"), cent_blocks, dim, dim, max_iter
     )
-    cids, cvs = cent_blocks[0]
-    return spark.createDataFrame(
-        [(int(c), v) for c, v in zip(cids, cvs)], "cid int, cv array<double>"
-    )
+    return cent_blocks[0]
 
 
 def _l20_oracle(k: int = 10, iters: int = 5) -> str:
@@ -1659,7 +1669,7 @@ def ivfpq_index(corpus: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame, Dat
 
     Scale shape: the persisted index is assigned ⋈ codes — one int +
     M bytes per vector, partitionable by list id; both codebooks are
-    tiny broadcasts. Training is the shared Lloyd loop (kmeans_fit for
+    tiny broadcasts. Training is the shared Lloyd loop (kmeans_fit's fit for
     the coarse quantizer, pq_train_encode for the residual codebooks),
     never an all-pairs: each fit runs on the driver after one bounded
     collect while its input fits in ``_DRIVER_FIT_BYTES``, else as
@@ -1673,13 +1683,10 @@ def ivfpq_index(corpus: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame, Dat
     the PQ fit (one bounded collect on the driver path, PQ_ITERS passes
     on the distributed one) + encode + membership; at 100 TB write the
     index to storage instead (it IS the persisted artifact)."""
-    coarse = kmeans_fit(corpus, k=IVFPQ_NLISTS, max_iter=3)
-    crows = sorted(coarse.collect(), key=lambda r: r["cid"])
-    cent_blocks = [(
-        [int(r["cid"]) for r in crows],
-        [list(r["cv"]) for r in crows],
-    )]
-    dim = len(crows[0]["cv"])
+    cids, cvs = _kmeans_codebook(corpus, IVFPQ_NLISTS, 3)
+    coarse = _codebook_relation(corpus.sparkSession, cids, cvs)
+    cent_blocks = [(cids, cvs)]
+    dim = len(cvs[0])
     assigned_res = ephemeral_cache(
         corpus.select("vec_id", "v").mapInArrow(
             _lloyd_assign_residual_fn(cent_blocks, dim),

@@ -23,6 +23,15 @@ Connections:
     slices); as a DESTINATION it streams per-partition JSONEachRow
     INSERTs (ClickHouseHttpSink). Wire-tested end-to-end against the
     in-process protocol double (x44 / tests/test_ch_http.py).
+  * ``variant: manifest`` (destination only) — manifest-committed
+    parquet tables (sources/manifest.py).  Its ManifestLoader publishes
+    each batch and its watermark in one atomic commit, so there is no
+    sidecar ``_state.json``; ``auto_compact_max_dirs`` bounds the batch
+    directories a table accretes.
+
+A variant only picks the extractor and the loader.  Every table runs
+through the one ``IncrementalRunner``, whose watermark lives in
+``<path>/_state.json`` unless the loader's own commits carry it.
 
 Scheduling.  One call is one tick over the selected tables of every
 pipeline.  Tables that write the same destination table (destination
@@ -107,38 +116,22 @@ class Pipeline:
     source_dir: str
     dest_dir: str
     tables: list[dict] = field(default_factory=list)
-    state_path: str | None = None
     sql_dir: str | None = None
     loader: object | None = None  # override: any ParquetLoader-contract loader
     extractor: object | None = None  # override: any extract()-contract source
-    manifest_dest: bool = False  # destination variant: manifest-committed
-    auto_compact_max_dirs: int | None = None  # manifest auto-maintenance
 
-    def runner(self):
+    def runner(self) -> IncrementalRunner:
         os.makedirs(self.dest_dir, exist_ok=True)
-        extractor = self.extractor or ParquetExtractor(
-            self.source_dir, sql_dir=self.sql_dir
-        )
-        if self.manifest_dest:
-            # lakehouse destination: snapshots + the watermark INSIDE
-            # the same atomic commit — no sidecar state file at all
-            from .sources.manifest import (
-                ManifestIncrementalRunner,
-                ManifestLoader,
-            )
-
-            return ManifestIncrementalRunner(
-                extractor=extractor,
-                loader=ManifestLoader(
-                    self.dest_dir,
-                    auto_compact_max_dirs=self.auto_compact_max_dirs,
-                ),
-            )
-        state = self.state_path or f"{self.dest_dir}/_state.json"
+        loader = self.loader or ParquetLoader(self.dest_dir)
         return IncrementalRunner(
-            extractor=extractor,
-            loader=self.loader or ParquetLoader(self.dest_dir),
-            store=WatermarkStore(state),
+            extractor=self.extractor
+            or ParquetExtractor(self.source_dir, sql_dir=self.sql_dir),
+            loader=loader,
+            # a loader whose commits carry the watermark (the manifest
+            # destination) needs no sidecar state file
+            store=None
+            if hasattr(loader, "last_point")
+            else WatermarkStore(f"{self.dest_dir}/_state.json"),
         )
 
     def run(
@@ -231,8 +224,27 @@ def run_pipelines(
     for p in config.get("pipelines", []):
         src = conns[p["source"]]
         dst = conns[p["destination"]]
+        if "path" not in dst and dst.get("variant") in ("clickhouse_http", "manifest"):
+            # An http destination still needs a LOCAL state directory
+            # for watermarks.  Never default into the source data dir
+            # (two pipelines sharing a source would clobber one state
+            # file, and makedirs would pollute the source tree):
+            # require an explicit path, namespaced per pipeline.
+            raise ValueError(
+                f"pipeline {p['name']!r}: {dst.get('variant')} destination "
+                "needs an explicit 'path'; "
+                "refusing to default into the source data directory"
+            )
         custom_loader = None
-        if dst.get("variant") == "clickhouse_http":
+        if dst.get("variant") == "manifest":
+            # lakehouse destination: snapshots + the watermark INSIDE
+            # the same atomic commit — no sidecar state file at all
+            from .sources.manifest import ManifestLoader
+
+            custom_loader = ManifestLoader(
+                dst["path"], auto_compact_max_dirs=dst.get("auto_compact_max_dirs")
+            )
+        elif dst.get("variant") == "clickhouse_http":
             # jar-free remote destination: rows stream out over the
             # ClickHouse HTTP INSERT protocol, one connection per task
             from .sources.ch_http import ClickHouseHttpLoader, ClickHouseHttpSink
@@ -295,19 +307,6 @@ def run_pipelines(
             raise ValueError(
                 f"pipeline {p['name']!r}: parquet source needs a 'path'"
             )
-        if "path" not in dst and (
-            custom_loader is not None or dst.get("variant") == "manifest"
-        ):
-            # An http destination still needs a LOCAL state directory
-            # for watermarks.  Never default into the source data dir
-            # (two pipelines sharing a source would clobber one state
-            # file, and makedirs would pollute the source tree):
-            # require an explicit path, namespaced per pipeline.
-            raise ValueError(
-                f"pipeline {p['name']!r}: {dst.get('variant')} destination "
-                "needs an explicit 'path'; "
-                "refusing to default into the source data directory"
-            )
         names.append(p["name"])
         pipes.append(
             Pipeline(
@@ -317,8 +316,6 @@ def run_pipelines(
                 sql_dir=p.get("sql_dir"),
                 loader=custom_loader,
                 extractor=custom_extractor,
-                manifest_dest=dst.get("variant") == "manifest",
-                auto_compact_max_dirs=dst.get("auto_compact_max_dirs"),
             )
         )
     return dict(zip(names, _run_tick(spark, pipes, tags)))

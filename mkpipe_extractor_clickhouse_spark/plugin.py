@@ -22,12 +22,12 @@ requires a reachable ClickHouse, which this container does not ship.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrameReader, SparkSession
 
 from .sources.extract import TableConfig, WriteMode, plan_window
-from .sources.filter_spec import FilterSpec, splice_query_filter
+from .sources.filter_spec import FilterSpec, remote_window_query
 from .sources.jdbc import ConnectionConfig, JdbcSource
 
 
@@ -89,18 +89,12 @@ class ClickhouseSparkExtractor:
         ClickHouse side, not post-transfer.  Range-partitioned parallel
         reads pass through to Spark's JDBC partitioning options."""
         spec, write_mode = plan_window(table, last_point)
-        custom = table.custom_query
-        if custom is not None:
-            sql = splice_query_filter(custom, spec)
-            reader = self.source.reader(spark, sql, is_query=True)
-        elif spec is not None and not spec.is_trivial:
-            sql = (
-                f"SELECT * FROM {self.connection.database}.{table.name} "
-                f"{spec.to_sql(dialect='ansi')}"
-            )
+        sql = remote_window_query(
+            f"{self.connection.database}.{table.name}", table.custom_query, spec
+        )
+        if sql is not None:
             reader = self.source.reader(spark, sql, is_query=True)
         else:
-            sql = None
             reader = self.source.reader(
                 spark,
                 table.name,

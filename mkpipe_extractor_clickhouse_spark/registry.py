@@ -21,10 +21,8 @@ Determinism rules enforced by convention here (SURVEY §5.5):
 from __future__ import annotations
 
 import importlib
-import json
 from collections.abc import Callable
-from dataclasses import dataclass, field
-from pathlib import Path
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -121,12 +119,9 @@ def _load_modules() -> None:
 
 # The round driver records only the first ~50 ``queries()`` entries per
 # round (CORRECTNESS_r01.json stopped at entry 50 of 117), so dict order
-# decides which operators get a hard driver verdict.  We rotate: queries
-# already green in a past round's artifact sort LAST, never-covered ones
-# FIRST — with an explicit priority list putting one representative per
-# SURVEY §2 family at the very front so every family earns a driver row
-# as early as possible.  Self-maintaining: round N+1 re-reads the
-# artifacts and bubbles up whatever is still unverified.
+# decides which operators get a hard driver verdict.  An explicit
+# priority list puts one representative per SURVEY §2 family at the very
+# front; every other query follows in registration order.
 _DRIVER_PRIORITY = (
     # Round-10 window closure (VERDICT r9 item 4): the 15 queries never
     # yet driver-windowed across r1-r9 — pinned at the absolute front
@@ -248,45 +243,10 @@ _DRIVER_PRIORITY = (
 )
 
 
-def _driver_covered() -> set[str]:
-    """Query names already green in a past round's CORRECTNESS artifact.
-
-    Green = hash-match, or a recorded rows-only run for declared
-    no-oracle queries.  Failed entries do NOT count — they re-sort to
-    the front so the next round's artifact re-checks the fix.
-    """
-    covered: set[str] = set()
-    root = Path(__file__).resolve().parent.parent
-    for path in sorted(root.glob("CORRECTNESS_r*.json")):
-        try:
-            data = json.loads(path.read_text())
-        except (OSError, ValueError):
-            continue
-        if not isinstance(data, dict):
-            continue
-        for name, row in data.items():
-            if not isinstance(row, dict):
-                continue
-            if row.get("hash_match") is True or (
-                row.get("err") == "no_oracle"
-                and row.get("spark_rows") is not None
-                # A query upgraded from rows-only to a real oracle since
-                # the artifact was recorded is NOT covered: the new hash
-                # check still needs a driver row.
-                and (name not in _REGISTRY or _REGISTRY[name].oracle is None)
-            ):
-                covered.add(name)
-    return covered
-
-
 def _driver_order(names: list[str]) -> list[str]:
-    covered = _driver_covered()
     prio = {n: i for i, n in enumerate(_DRIVER_PRIORITY)}
     reg = {n: i for i, n in enumerate(names)}
-    return sorted(
-        names,
-        key=lambda n: (n in covered, prio.get(n, len(prio)), reg[n]),
-    )
+    return sorted(names, key=lambda n: (prio.get(n, len(prio)), reg[n]))
 
 
 def all_specs() -> dict[str, QuerySpec]:

@@ -351,19 +351,19 @@ class ClickHouseHttpExtractor:
     """Config-driven incremental EXTRACTOR whose remote is a ClickHouse
     server over HTTP — the reference's actual job (extract FROM
     ClickHouse on a watermark loop, reference __init__.py:59-134),
-    jar-free. Mirrors ParquetExtractor's contract and plugin.py's JDBC
-    decision tree exactly: ``plan_window`` picks the window and write
-    mode, and the window predicate renders INTO the POSTed SQL — a
-    ``custom_query`` gets the ``{query_filter}`` splice, a plain table
-    gets ``WHERE <window>`` via the typed FilterSpec renderer — so the
-    filter runs SERVER-SIDE and only qualifying rows cross the wire.
+    jar-free.  It runs the one tick path of ``extract.py``: only the
+    read is its own.  ``plan_window`` picks the window and write mode;
+    ``remote_window_query`` (shared with plugin.py's JDBC surface)
+    renders the window INTO the POSTed SQL, so the filter runs
+    SERVER-SIDE and only qualifying rows cross the wire; then
+    ``finish_extract`` emits the status records, runs the empty probe
+    and sets up the watermark, exactly as for the parquet extractor.
     ``custom_query`` ships to the server VERBATIM (it speaks ClickHouse
     natively; the dialect translator is for queries this engine must
     run itself). Optional range partitioning gives each Spark task its
-    own slice fetch (x42's wire proof). The watermark rides the write
-    as an observe() metric when the result projects the iterate
-    column; otherwise one server-side MAX aggregate (a single row back
-    — never a second full transfer)."""
+    own slice fetch (x42's wire proof). When the result does not
+    project the iterate column, the watermark is one server-side MAX
+    aggregate (a single row back — never a second full transfer)."""
 
     source: ClickHouseHttpSource
     partition_column: str | None = None
@@ -378,11 +378,8 @@ class ClickHouseHttpExtractor:
         last_point: str | None = None,
         source_filter=None,
     ):
-        from pyspark.sql import Observation
-        from pyspark.sql import functions as F
-
-        from .extract import ExtractResult, plan_window
-        from .filter_spec import splice_query_filter
+        from .extract import finish_extract, plan_window
+        from .filter_spec import remote_window_query
 
         if source_filter is not None:
             raise ValueError(
@@ -391,14 +388,9 @@ class ClickHouseHttpExtractor:
                 "server's own state"
             )
         spec, write_mode = plan_window(table, last_point)
-        if table.custom_query is not None:
-            remote = splice_query_filter(table.custom_query, spec)
-        elif spec is not None and not spec.is_trivial:
-            remote = (
-                f"SELECT * FROM {table.name} {spec.to_sql(dialect='ansi')}"
-            )
-        else:
-            remote = f"SELECT * FROM {table.name}"
+        remote = remote_window_query(
+            table.name, table.custom_query, spec
+        ) or f"SELECT * FROM {table.name}"
         # Per-TABLE slicing first (reference README "All Table
         # Parameters"), connection-level as the default, iterate_column
         # as the final fallback (the reference's behavior) when a slice
@@ -447,28 +439,15 @@ class ClickHouseHttpExtractor:
                     num_partitions=n_parts,
                 )
         df = self.source.load(spark, remote, is_query=True, **load_kw)
-        if spec is None:
-            return ExtractResult(df, "overwrite", None)
-        if df.isEmpty():
-            if write_mode == "overwrite":
-                return ExtractResult(df=df, write_mode=write_mode, window=spec)
-            return ExtractResult(df=None, write_mode=write_mode, window=spec)
-        if table.iterate_column in df.columns:
-            obs = Observation()
-            df = df.observe(obs, F.max(table.iterate_column).alias("max_val"))
-            return ExtractResult(
-                df,
-                write_mode,
-                window=spec,
-                observation=obs,
-                iterate_column=table.iterate_column,
-            )
-        wm_sql = (
-            f"SELECT MAX({table.iterate_column}) AS max_val "
-            f"FROM {table.name} {spec.to_sql(dialect='ansi')}"
+        return finish_extract(
+            df,
+            table,
+            spec,
+            write_mode,
+            lambda: self.source.load(
+                spark,
+                f"SELECT MAX({table.iterate_column}) AS max_val "
+                f"FROM {table.name} {spec.to_sql(dialect='ansi')}",
+                is_query=True,
+            ),
         )
-        row = self.source.load(spark, wm_sql, is_query=True).first()
-        last_point_value = (
-            str(row["max_val"]) if row and row["max_val"] is not None else None
-        )
-        return ExtractResult(df, write_mode, last_point_value, window=spec)

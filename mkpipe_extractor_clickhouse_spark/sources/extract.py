@@ -12,6 +12,21 @@ Reproduces the full decision tree of the reference ``extract()``
     → df=None "no new data" (``:103-108``)
   * watermark = stringified max(iterate_column) (``:110-115``)
 
+One tick path, shared by every source and destination:
+
+  * :func:`plan_window` decides the window and write mode (the JDBC
+    plugin surface uses it too);
+  * each extractor only reads its source for that window, then hands
+    the batch to :func:`finish_extract` — the status records, the empty
+    probe and the watermark (this parquet extractor, and the ClickHouse
+    HTTP one in ``ch_http.py``);
+  * each file destination runs :func:`prepare_batch` — the
+    boundary-bounded dedup and the file-count control — before its own
+    write (``ParquetLoader`` here, ``ManifestLoader`` in
+    ``manifest.py``);
+  * :class:`IncrementalRunner` runs extract → load → commit, with the
+    watermark in a sidecar store or in the destination's own commits.
+
 Differences (deliberate fixes, SURVEY §4 caveats — *behavior* preserved,
 costs removed):
   * predicates are typed Column expressions pushed into the parquet/JDBC
@@ -33,7 +48,7 @@ from __future__ import annotations
 import logging
 import os
 import threading
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from typing import Literal
 
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -96,8 +111,9 @@ class TableConfig:
 
 @dataclass
 class ExtractResult:
-    """Handoff contract to the loader (reference __init__.py:132-134):
-    df=None means "no new data, skip the write".
+    """Handoff contract from :func:`finish_extract` to the loader
+    (reference __init__.py:132-134): df=None means "no new data, skip
+    the write".
 
     ``window`` is the extraction predicate the batch satisfies; the
     loader uses it to bound the idempotent-append anti-join to the
@@ -109,7 +125,9 @@ class ExtractResult:
     ``max(iterate_column)`` scan per tick (__init__.py:112) — at a
     100 TB source that is a second full read — whereas the observed
     max is computed by the same tasks that write the data, for free.
-    Call :meth:`resolve_last_point` after the batch is materialized."""
+    Whoever commits the watermark calls :meth:`resolve_last_point`
+    after the batch is materialized: :class:`IncrementalRunner` for a
+    sidecar store, the loader itself when its commit carries it."""
 
     df: DataFrame | None
     write_mode: WriteMode
@@ -140,8 +158,6 @@ class ExtractResult:
         except Exception:
             if self.df is None or self.iterate_column is None:
                 return None
-            from pyspark.sql import functions as F
-
             row = self.df.agg(
                 F.max(self.iterate_column).alias("max_val")
             ).first()
@@ -291,74 +307,90 @@ class ParquetExtractor:
         last_point: str | None = None,
         source_filter=None,
     ) -> ExtractResult:
-        # structured-dict log records, reference __init__.py:59-65
-        logger.info(
-            {
-                "table": table.target_name,
-                "status": "extracting",
-                "replication_method": table.replication_method,
-            }
-        )
         custom_query = self._resolve_custom_query(table)
         spec, write_mode = plan_window(table, last_point)
+        df = self._read_source(spark, table, spec, custom_query, source_filter)
+        # The watermark fallback must see the SAME source constraint as
+        # the extraction, or it would advance past rows the source never
+        # delivered and silently skip them forever.
+        return finish_extract(
+            df,
+            table,
+            spec,
+            write_mode,
+            lambda: self._read_source(
+                spark, table, spec, None, source_filter
+            ).agg(F.max(table.iterate_column).alias("max_val")),
+        )
 
-        if spec is not None:
-            df = self._read_source(spark, table, spec, custom_query, source_filter)
 
-            # Empty probe on the un-observed lineage: take(1) touches
-            # minimal input, and must NOT be the observation's first
-            # action (the observed metric would then cover one partial
-            # scan instead of the whole batch).
-            if df.isEmpty():
-                if write_mode == "overwrite":
-                    # reference __init__.py:105
-                    logger.info(
-                        {"table": table.target_name, "status": "empty_source_initial_load"}
-                    )
-                    return ExtractResult(df=df, write_mode=write_mode, window=spec)
-                logger.info({"table": table.target_name, "status": "no_new_data"})
-                return ExtractResult(df=None, write_mode=write_mode, window=spec)
+def finish_extract(
+    df: DataFrame,
+    table: TableConfig,
+    spec: FilterSpec | None,
+    write_mode: WriteMode,
+    base_max,
+) -> ExtractResult:
+    """The tail every extractor shares (reference __init__.py:59-65,
+    103-134): the status records, the empty probe and the watermark.
+    ``df`` is the batch read for the window ``spec`` that
+    :func:`plan_window` chose; ``base_max()`` returns the one-row
+    ``max_val`` relation over the un-projected source window, for a
+    batch that does not carry the iterate column.
 
-            # reference __init__.py:125-131
-            logger.info(
-                {
-                    "table": table.target_name,
-                    "status": "extracted",
-                    "write_mode": write_mode,
-                }
-            )
-            if table.iterate_column in df.columns:
-                # Watermark rides the write as an observed metric — no
-                # second source scan (see ExtractResult.observation).
-                obs = Observation()
-                df = df.observe(
-                    obs, F.max(table.iterate_column).alias("max_val")
-                )
-                return ExtractResult(
-                    df,
-                    write_mode,
-                    window=spec,
-                    observation=obs,
-                    iterate_column=table.iterate_column,
-                )
-            # The reference aggregates max(iterate_column) over the query
-            # *result* (__init__.py:112) and therefore breaks when a
-            # custom query doesn't project the iterate column; here we
-            # fall back to the filtered base table in that case. The
-            # fallback must see the SAME source constraint as the
-            # extraction, or the watermark would advance past rows the
-            # source never delivered and silently skip them forever.
-            wm_df = self._read_source(spark, table, spec, None, source_filter)
-            row = wm_df.agg(F.max(table.iterate_column).alias("max_val")).first()
-            last_point_value = (
-                str(row["max_val"]) if row and row["max_val"] is not None else None
-            )
-            return ExtractResult(df, write_mode, last_point_value, window=spec)
-
-        # full replication (reference __init__.py:116-123): no filter
-        # spec — a custom query gets the trivial WHERE 1=1 splice.
-        df = self._read_source(spark, table, None, custom_query, source_filter)
+      * full replication (no spec) → overwrite, no probe, no watermark;
+      * empty + initial → the empty df, overwrite; empty + append →
+        df=None "no new data";
+      * otherwise the watermark rides the batch's first action as an
+        observed ``max`` (see :class:`ExtractResult`), or comes from one
+        ``base_max()`` row when the batch does not project the column.
+    """
+    # structured-dict log records, reference __init__.py:59-65
+    logger.info(
+        {
+            "table": table.target_name,
+            "status": "extracting",
+            "replication_method": table.replication_method,
+        }
+    )
+    if spec is None:
         return ExtractResult(df, "overwrite", None)
+    # Empty probe on the un-observed lineage: take(1) touches minimal
+    # input, and must NOT be the observation's first action (the
+    # observed metric would then cover one partial scan instead of the
+    # whole batch).
+    if df.isEmpty():
+        if write_mode == "overwrite":
+            # reference __init__.py:105
+            logger.info(
+                {"table": table.target_name, "status": "empty_source_initial_load"}
+            )
+            return ExtractResult(df=df, write_mode=write_mode, window=spec)
+        logger.info({"table": table.target_name, "status": "no_new_data"})
+        return ExtractResult(df=None, write_mode=write_mode, window=spec)
+    # reference __init__.py:125-131
+    logger.info(
+        {"table": table.target_name, "status": "extracted", "write_mode": write_mode}
+    )
+    if table.iterate_column in df.columns:
+        obs = Observation()
+        df = df.observe(obs, F.max(table.iterate_column).alias("max_val"))
+        return ExtractResult(
+            df,
+            write_mode,
+            window=spec,
+            observation=obs,
+            iterate_column=table.iterate_column,
+        )
+    # The reference aggregates max(iterate_column) over the query
+    # *result* (__init__.py:112) and therefore breaks when a custom
+    # query does not project the iterate column; the caller's
+    # ``base_max`` reads the source window instead.
+    row = base_max().first()
+    last_point_value = (
+        str(row["max_val"]) if row and row["max_val"] is not None else None
+    )
+    return ExtractResult(df, write_mode, last_point_value, window=spec)
 
 
 def apply_write_partitions(df: DataFrame, n: int) -> DataFrame:
@@ -398,43 +430,16 @@ class ParquetLoader:
         destinations."""
         return spark.read.option("mergeSchema", "true").parquet(self.path(table))
 
-    def existing_keys(
-        self,
-        spark: SparkSession,
-        table: TableConfig,
-        window: FilterSpec | None,
-        like: DataFrame | None = None,
-    ) -> DataFrame:
-        """Destination keys that could collide with the incoming batch.
-
-        Idempotent-append dedup absorbs the ``>=`` boundary re-read
-        (SURVEY §4.2).  Duplicates can only exist where the destination
-        overlaps the extraction window — previous ticks wrote rows with
-        iterate_column <= last_point, the batch carries >= last_point —
-        so the read is bounded to the window predicate: the anti-join
-        build side is O(boundary), not O(history), and the filter prunes
-        whole directories when the destination is partitioned by the
-        iterate column (``partition_columns``) and row groups otherwise
-        (parquet min/max pushdown).
-
-        With the batch as ``like``, the read declares its schema (see
-        :func:`boundary_schema`), so Spark runs no footer-inference job."""
-        reader = spark.read
-        if like is not None:
-            reader = reader.schema(boundary_schema(like, table, window))
-        return bound_to_window(reader.parquet(self.path(table)), table, window)
-
     def load(self, spark: SparkSession, table: TableConfig, result: ExtractResult) -> None:
         if result.df is None:
             return  # no_new_data (__init__.py:107-108)
-        df = result.df
         path = self.path(table)
         before = set(data_files(path)) if result.write_mode == "append" else set()
-        if result.write_mode == "append" and table.dedup_keys and before:
-            existing = self.existing_keys(spark, table, result.window, like=df)
-            df = df.join(existing, on=list(table.dedup_keys), how="left_anti")
-        if table.write_partitions:
-            df = apply_write_partitions(df, table.write_partitions)
+        df = prepare_batch(
+            result,
+            table,
+            lambda schema: spark.read.schema(schema).parquet(path) if before else None,
+        )
         writer = df.write.mode(result.write_mode)
         if table.partition_columns:
             # Hive-style destination layout: boundary-bounded dedup reads
@@ -444,6 +449,39 @@ class ParquetLoader:
         drop_empty_files(
             [f for f in data_files(path) if f not in before], keep_one=not before
         )
+
+
+def prepare_batch(result: ExtractResult, table: TableConfig, read_dest) -> DataFrame:
+    """The batch prelude every file destination shares: the
+    idempotent-append dedup, then the output-file-count control.
+
+    Idempotent-append dedup absorbs the ``>=`` boundary re-read
+    (SURVEY §4.2).  Duplicates can only exist where the destination
+    overlaps the extraction window — previous ticks wrote rows with
+    iterate_column <= last_point, the batch carries >= last_point — so
+    the destination read is bounded to the window predicate
+    (:func:`bound_to_window`): the anti-join build side is O(boundary),
+    not O(history), and the filter prunes whole directories when the
+    destination is partitioned by the iterate column
+    (``partition_columns``) and row groups otherwise (parquet min/max
+    pushdown).
+
+    ``read_dest(schema)`` is the loader's own read of its destination
+    with the declared :func:`boundary_schema`, so Spark runs no
+    footer-inference job; it returns None while the destination holds
+    no data."""
+    df = result.df
+    if result.write_mode == "append" and table.dedup_keys:
+        existing = read_dest(boundary_schema(df, table, result.window))
+        if existing is not None:
+            df = df.join(
+                bound_to_window(existing, table, result.window),
+                on=list(table.dedup_keys),
+                how="left_anti",
+            )
+    if table.write_partitions:
+        df = apply_write_partitions(df, table.write_partitions)
+    return df
 
 
 def boundary_schema(
@@ -470,7 +508,7 @@ def bound_to_window(
     existing: DataFrame, table: TableConfig, window: FilterSpec | None
 ) -> DataFrame:
     """The dedup keys of the destination rows inside the extraction
-    window (see :meth:`ParquetLoader.existing_keys`)."""
+    window (see :func:`prepare_batch`)."""
     if (
         window is not None
         and not window.is_trivial
@@ -514,28 +552,39 @@ def drop_empty_files(written: list[str], keep_one: bool) -> None:
 
 @dataclass
 class IncrementalRunner:
-    """extract → load → commit-state loop (one MkPipe "pipeline" tick).
+    """The one extract → load → commit loop (one MkPipe "pipeline"
+    tick), for every extractor and every destination.
 
-    State commit happens after a successful write, and appends are
-    idempotent via dedup_keys, so a crash between write and commit
-    re-extracts the same window without duplicating rows.
+    The watermark lives in one of two places:
+
+      * ``store`` given: a sidecar :class:`WatermarkStore`, committed
+        after a successful write.  Appends are idempotent via
+        dedup_keys, so a crash between write and commit re-extracts the
+        same window without duplicating rows.
+      * ``store`` None: the loader's own commits (``loader.last_point``,
+        the manifest destination).  Its atomic publish carries data and
+        watermark together, so there is no crash window at all.
     """
 
     extractor: ParquetExtractor
     loader: ParquetLoader
-    store: WatermarkStore
+    store: WatermarkStore | None = None
 
     def run_once(
         self, spark: SparkSession, table: TableConfig, source_filter=None
     ) -> ExtractResult:
-        last_point = self.store.get(table.target_name)
+        if self.store is None:
+            last_point = self.loader.last_point(table)
+        else:
+            last_point = self.store.get(table.target_name)
         result = self.extractor.extract(
             table, spark, last_point=last_point, source_filter=source_filter
         )
         self.loader.load(spark, table, result)
-        # The write above was the observation's action — resolving the
-        # watermark here reads the captured metric, no extra scan.
-        last_point = result.resolve_last_point()
-        if last_point is not None:
-            self.store.set(table.target_name, last_point)
+        if self.store is not None:
+            # The write above was the observation's action — resolving
+            # the watermark here reads the captured metric, no extra scan.
+            last_point = result.resolve_last_point()
+            if last_point is not None:
+                self.store.set(table.target_name, last_point)
         return result

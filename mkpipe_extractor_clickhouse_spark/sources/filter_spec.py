@@ -109,3 +109,19 @@ def splice_query_filter(custom_query: str, spec: FilterSpec | None) -> str:
     118-119): the spec's WHERE clause, or ``WHERE 1=1`` when absent."""
     clause = spec.to_sql() if spec is not None else "WHERE 1=1"
     return custom_query.replace("{query_filter}", clause)
+
+
+def remote_window_query(
+    relation: str, custom_query: str | None, spec: FilterSpec | None
+) -> str | None:
+    """The SQL a remote source runs for one extraction window (reference
+    __init__.py:66-99): a custom query gets the ``{query_filter}``
+    splice; a plain ``relation`` with a non-trivial window gets
+    ``SELECT * FROM <relation> WHERE <window>``, so the predicate runs
+    server-side, not post-transfer.  None means a plain read of the whole
+    relation."""
+    if custom_query is not None:
+        return splice_query_filter(custom_query, spec)
+    if spec is not None and not spec.is_trivial:
+        return f"SELECT * FROM {relation} {spec.to_sql(dialect='ansi')}"
+    return None

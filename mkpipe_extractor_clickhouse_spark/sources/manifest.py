@@ -1332,13 +1332,10 @@ def _staged_rows(batch_dir: str) -> int:
 
 from .extract import (  # noqa: E402
     ExtractResult,
-    ParquetExtractor,
     TableConfig,
-    apply_write_partitions,
-    bound_to_window,
-    boundary_schema,
     data_files,
     drop_empty_files,
+    prepare_batch,
 )
 
 
@@ -1349,7 +1346,9 @@ class ManifestLoader:
     leaves a crash window between "data written" and "state committed"
     (survivable only because appends are idempotent); here the same
     atomic manifest rename publishes data and watermark together, so
-    the window does not exist at all."""
+    the window does not exist at all.  Run it under an
+    ``IncrementalRunner`` with no store: the runner then reads the
+    watermark back through :meth:`last_point`."""
 
     dest_dir: str
     # auto-maintenance: after a commit leaves more than this many batch
@@ -1381,27 +1380,14 @@ class ManifestLoader:
     ) -> int | None:
         """Stage the batch, resolve the observed watermark (the staging
         write IS the observation's action), publish both atomically.
-        Same boundary-bounded idempotent-append dedup as ParquetLoader."""
+        The batch prelude is ParquetLoader's (``prepare_batch``), over a
+        read of the head snapshot."""
         if result.df is None:
             return None
-        df = result.df
         mt = self.table(table)
-        if (
-            result.write_mode == "append"
-            and table.dedup_keys
-            and mt.manifest()["dirs"]
-        ):
-            existing = mt.read(
-                spark, schema=boundary_schema(df, table, result.window)
-            )
-            df = df.join(
-                bound_to_window(existing, table, result.window),
-                on=list(table.dedup_keys),
-                how="left_anti",
-            )
-        if table.write_partitions:
-            df = apply_write_partitions(df, table.write_partitions)
-
+        df = prepare_batch(
+            result, table, lambda schema: mt.read(spark, schema=schema)
+        )
         name = mt.stage_batch(df)
         if result.write_mode == "append" and _staged_rows(
             os.path.join(mt.table_dir, name)
@@ -1447,29 +1433,6 @@ class ManifestLoader:
                 return v
             except CommitConflict:
                 continue
-
-
-@dataclass
-class ManifestIncrementalRunner:
-    """extract → stage → one atomic publish (data + watermark).
-
-    No WatermarkStore: the incremental state lives in the table's own
-    commit history, read back via ManifestLoader.last_point — a crash
-    anywhere leaves either the old snapshot+old watermark or the new
-    snapshot+new watermark, never a mix."""
-
-    extractor: ParquetExtractor
-    loader: ManifestLoader
-
-    def run_once(
-        self, spark: SparkSession, table: TableConfig, source_filter=None
-    ) -> ExtractResult:
-        last_point = self.loader.last_point(table)
-        result = self.extractor.extract(
-            table, spark, last_point=last_point, source_filter=source_filter
-        )
-        self.loader.load(spark, table, result)
-        return result
 
 
 class ManifestStreamSink:

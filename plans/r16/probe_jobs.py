@@ -5,7 +5,7 @@ status REST API; the bracketed text is Spark's own call-site name.
     python plans/r16/probe_jobs.py <repo checkout> > jobs.txt
 
 Inputs come from ``perfbench``'s own generator and tick config; each
-table-tick's jobs are tagged by wrapping the runners' ``run_once``.  A
+table-tick's jobs are tagged by wrapping the runner's ``run_once``.  A
 job with no SQL execution is the footer read Spark runs to infer a
 schema."""
 import json, os, shutil, sys, tempfile, urllib.request
@@ -15,7 +15,7 @@ import helper as H, workloads as W
 from run import TRACE_CONF
 from mkpipe_extractor_clickhouse_spark.session import get_spark
 from mkpipe_extractor_clickhouse_spark.pipeline import run_pipelines
-from mkpipe_extractor_clickhouse_spark.sources import extract, manifest
+from mkpipe_extractor_clickhouse_spark.sources import extract
 
 tmp = tempfile.mkdtemp(prefix="probe_jobs_")
 sf_dir = os.path.join(tmp, "catalog")
@@ -24,16 +24,15 @@ spark = get_spark(extra_conf=TRACE_CONF)
 sc = spark.sparkContext
 W.first_touch(spark, sf_dir, W.IncrementalTick.tables)
 
-for cls in (extract.IncrementalRunner, manifest.ManifestIncrementalRunner):
-    def wrap(fn):
-        def run_once(self, spark, table, source_filter=None):
-            sc.addJobTag("table:" + table.target_name)
-            try:
-                return fn(self, spark, table, source_filter)
-            finally:
-                sc.removeJobTag("table:" + table.target_name)
-        return run_once
-    cls.run_once = wrap(cls.run_once)
+def wrap(fn):
+    def run_once(self, spark, table, source_filter=None):
+        sc.addJobTag("table:" + table.target_name)
+        try:
+            return fn(self, spark, table, source_filter)
+        finally:
+            sc.removeJobTag("table:" + table.target_name)
+    return run_once
+extract.IncrementalRunner.run_once = wrap(extract.IncrementalRunner.run_once)
 
 wl = W.IncrementalTick.__new__(W.IncrementalTick)
 proot = os.path.join(tmp, "pass")

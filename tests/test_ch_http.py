@@ -306,7 +306,11 @@ def test_http_extractor_window_pushdown(spark, sf_dir, ch_server):
     assert any(f"event_id >= {last}" in q for q in log)
 
 
-def test_http_extractor_empty_window_is_no_new_data(spark, ch_server):
+def test_http_extractor_empty_window_is_no_new_data(spark, ch_server, caplog):
+    """An empty append window is df=None, with the same structured
+    status record the parquet extractor emits."""
+    import logging
+
     from mkpipe_extractor_clickhouse_spark.sources.ch_http import (
         ClickHouseHttpExtractor,
     )
@@ -324,8 +328,14 @@ def test_http_extractor_empty_window_is_no_new_data(spark, ch_server):
         ),
     )
     # append tick whose watermark is beyond all data → df=None
-    res = ex.extract(t, spark, last_point="1000000000")
+    with caplog.at_level(
+        logging.INFO, logger="mkpipe_extractor_clickhouse_spark.sources.extract"
+    ):
+        res = ex.extract(t, spark, last_point="1000000000")
     assert res.df is None and res.write_mode == "append"
+    assert {"table": "events", "status": "no_new_data"} in [
+        r.msg for r in caplog.records
+    ]
 
 
 def test_http_extractor_partitioned_slices(spark, sf_dir, ch_server):

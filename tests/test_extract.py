@@ -121,6 +121,15 @@ def _plan(df) -> str:
     )
 
 
+def _boundary_keys(spark, runner, table, window):
+    """The anti-join build side of the loader's batch prelude for
+    ``window``: the destination's dedup keys, bounded to the window."""
+    from mkpipe_extractor_clickhouse_spark.sources.extract import bound_to_window
+
+    dest = spark.read.parquet(runner.loader.path(table))
+    return bound_to_window(dest, table, window)
+
+
 def test_append_dedup_bounded_to_window(spark, sf_dir, runner):
     """The idempotent-append anti-join must read only boundary keys from
     the destination, not the full history (VERDICT r1 scale fix)."""
@@ -138,7 +147,7 @@ def test_append_dedup_bounded_to_window(spark, sf_dir, runner):
     # Destination now holds 600 rows; a boundary-bounded keys read for
     # the next window (>= 599) must see exactly the 1 boundary row.
     window = FilterSpec(column="event_id", column_type="int", last_point="599")
-    existing = runner.loader.existing_keys(spark, table, window)
+    existing = _boundary_keys(spark, runner, table, window)
     assert existing.count() == 1
     # and the bound reaches the parquet scan, not a post-scan filter only
     plan = _plan(existing)
@@ -178,7 +187,7 @@ def test_partitioned_destination_prunes_boundary_read(spark, sf_dir, runner):
     from mkpipe_extractor_clickhouse_spark.sources.filter_spec import FilterSpec
 
     window = FilterSpec(column="user_id", column_type="int", last_point="14")
-    plan = _plan(runner.loader.existing_keys(spark, table, window))
+    plan = _plan(_boundary_keys(spark, runner, table, window))
     pf = plan.split("PartitionFilters")[1].split("\n")[0]
     assert "user_id" in pf and ">= 14" in pf
 

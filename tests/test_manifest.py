@@ -12,12 +12,12 @@ from pyspark.sql import functions as F
 
 from mkpipe_extractor_clickhouse_spark.catalog import load_table
 from mkpipe_extractor_clickhouse_spark.sources.extract import (
+    IncrementalRunner,
     ParquetExtractor,
     TableConfig,
 )
 from mkpipe_extractor_clickhouse_spark.sources.manifest import (
     ManifestedTable,
-    ManifestIncrementalRunner,
     ManifestLoader,
 )
 
@@ -88,7 +88,7 @@ def test_manifest_runner_transactional_watermark(spark, sf_dir, tmp_path):
         iterate_column_type="int",
         dedup_keys=("event_id",),
     )
-    runner = ManifestIncrementalRunner(
+    runner = IncrementalRunner(
         extractor=ParquetExtractor(sf_dir),
         loader=ManifestLoader(str(tmp_path)),
     )
@@ -427,14 +427,7 @@ def test_loader_records_zone_maps_per_tick(spark, sf_dir, tmp_path):
     """An incremental pipeline with stats_columns configured gets zone
     maps on every tick's batch for free (footer metadata, no extra
     scan) — the seam a time-bounded backfill later prunes on."""
-    from mkpipe_extractor_clickhouse_spark.sources.extract import (
-        ParquetExtractor,
-        TableConfig,
-    )
-    from mkpipe_extractor_clickhouse_spark.sources.manifest import (
-        ManifestIncrementalRunner,
-        ManifestLoader,
-    )
+    from mkpipe_extractor_clickhouse_spark.sources.manifest import ManifestLoader
     from pyspark.sql import functions as F
 
     table = TableConfig(
@@ -446,7 +439,7 @@ def test_loader_records_zone_maps_per_tick(spark, sf_dir, tmp_path):
         stats_columns=("ts",),
     )
     loader = ManifestLoader(str(tmp_path))
-    runner = ManifestIncrementalRunner(
+    runner = IncrementalRunner(
         extractor=ParquetExtractor(sf_dir), loader=loader
     )
     for cutoff in ("2024-01-10", "2024-01-20", None):
@@ -896,10 +889,7 @@ def test_loader_auto_compaction_bounds_dir_count(spark, sf_dir):
     import tempfile
 
     from mkpipe_extractor_clickhouse_spark.catalog import load_table
-    from mkpipe_extractor_clickhouse_spark.sources.manifest import (
-        ManifestIncrementalRunner,
-        ManifestLoader,
-    )
+    from mkpipe_extractor_clickhouse_spark.sources.manifest import ManifestLoader
 
     with tempfile.TemporaryDirectory() as tmp:
         table = TableConfig(
@@ -910,7 +900,7 @@ def test_loader_auto_compaction_bounds_dir_count(spark, sf_dir):
             dedup_keys=("event_id",),
         )
         loader = ManifestLoader(tmp, auto_compact_max_dirs=3)
-        runner = ManifestIncrementalRunner(
+        runner = IncrementalRunner(
             extractor=ParquetExtractor(sf_dir), loader=loader
         )
         n_source = load_table(spark, sf_dir, "events").count()
@@ -1090,7 +1080,6 @@ def test_loader_auto_compact_races_append_tick(spark, sf_dir):
 
     from mkpipe_extractor_clickhouse_spark.sources.manifest import (
         ManifestedTable,
-        ManifestIncrementalRunner,
         ManifestLoader,
     )
 
@@ -1103,7 +1092,7 @@ def test_loader_auto_compact_races_append_tick(spark, sf_dir):
             dedup_keys=("event_id",),
         )
         loader = ManifestLoader(tmp, auto_compact_max_dirs=1)
-        runner = ManifestIncrementalRunner(
+        runner = IncrementalRunner(
             extractor=ParquetExtractor(sf_dir), loader=loader
         )
         runner.run_once(spark, table, source_filter=F.col("event_id") < 50)

@@ -3,6 +3,7 @@ end-to-end (reference README.md:17-42 surface)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from mkpipe_extractor_clickhouse_spark.pipeline import (
@@ -138,8 +139,8 @@ def test_cli_main(sf_dir, tmp_path):
 
 
 def test_pipeline_manifest_destination(spark, sf_dir, tmp_path):
-    """variant: manifest destination runs ticks through the
-    ManifestIncrementalRunner — snapshots + watermark in ONE atomic
+    """variant: manifest destination runs ticks through the one runner
+    with a ManifestLoader — snapshots + watermark in ONE atomic
     commit, no sidecar _state.json at all."""
     import os
 
@@ -326,15 +327,22 @@ def test_pool_threads_are_reused_across_ticks(spark, sf_dir, tmp_path, monkeypat
     assert threading.get_ident() not in first
 
 
-def test_append_tick_runs_three_jobs_in_callers_group(spark, sf_dir, tmp_path):
+@pytest.mark.parametrize("variant", ["parquet", "manifest"])
+def test_append_tick_runs_three_jobs_in_callers_group(
+    spark, sf_dir, tmp_path, variant
+):
     """An append tick is an empty probe, the anti-join's broadcast build
-    and the write: the boundary read declares its schema, so no footer-
-    inference job.  The jobs carry the caller's job group although they
-    run on pool threads."""
+    and the write (the staging write, for a manifest destination): the
+    boundary read declares its schema, so no footer-inference job.  The
+    jobs carry the caller's job group although they run on pool
+    threads."""
+    from mkpipe_extractor_clickhouse_spark.sources.manifest import ManifestLoader
+
     sc = spark.sparkContext
     pipe = Pipeline(
         source_dir=sf_dir,
         dest_dir=str(tmp_path),
+        loader=ManifestLoader(str(tmp_path)) if variant == "manifest" else None,
         tables=[
             {
                 "name": "events",
@@ -346,7 +354,7 @@ def test_append_tick_runs_three_jobs_in_callers_group(spark, sf_dir, tmp_path):
         ],
     )
     assert pipe.run(spark)[0].write_mode == "overwrite"
-    group = f"append-tick-{tmp_path.name}"
+    group = f"append-tick-{variant}-{tmp_path.name}"
     sc.setJobGroup(group, "one append tick")
     try:
         res = pipe.run(spark)[0]

@@ -907,3 +907,36 @@ def test_operators_pin_only_through_ephemeral_cache():
             ):
                 offenders.append(f"{path.name}:{node.lineno}")
     assert not offenders, f"raw localCheckpoint calls: {offenders}"
+
+
+def test_one_tick_path():
+    """One tick path: exactly one class in the package defines
+    ``run_once`` (the one runner, for every destination), and
+    ``Observation(`` is constructed only in ``sources/extract.py`` (the
+    one extractor tail, which sets up the observed watermark).  A
+    source scan of definitions and call sites, so prose does not count."""
+    import ast
+    from pathlib import Path
+
+    import mkpipe_extractor_clickhouse_spark as pkg
+
+    root = Path(pkg.__file__).parent
+    runners, observations = [], []
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if isinstance(node, ast.ClassDef) and any(
+                isinstance(f, (ast.FunctionDef, ast.AsyncFunctionDef))
+                and f.name == "run_once"
+                for f in node.body
+            ):
+                runners.append(f"{rel}::{node.name}")
+            if isinstance(node, ast.Call) and (
+                getattr(node.func, "id", None) == "Observation"
+                or getattr(node.func, "attr", None) == "Observation"
+            ):
+                observations.append(f"{rel}:{node.lineno}")
+    assert runners == ["sources/extract.py::IncrementalRunner"], runners
+    assert observations and all(
+        o.startswith("sources/extract.py:") for o in observations
+    ), observations

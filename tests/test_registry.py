@@ -1,6 +1,6 @@
 """Driver-ordering contract: the round driver records only the first
-~50 ``queries()`` entries, so queries with no past CORRECTNESS artifact
-row must sort before already-verified ones."""
+~50 ``queries()`` entries, so every SURVEY §2 family without a past
+CORRECTNESS artifact row needs a representative among them."""
 
 from __future__ import annotations
 
@@ -24,32 +24,12 @@ def _past_green() -> set[str]:
     return green
 
 
-def test_never_covered_queries_sort_first():
-    names = list(registry.all_specs())
-    green = _past_green()
-    seen_covered = False
-    for n in names:
-        if n in green and registry.all_specs()[n].oracle is None or (
-            n in green and n not in registry._driver_covered()
-        ):
-            # upgraded-oracle queries legitimately re-sort early
-            continue
-        if n in green:
-            seen_covered = True
-        else:
-            assert not seen_covered, (
-                f"never-covered query {n} sorts after a covered one"
-            )
-
-
 def test_priority_families_in_first_50():
     """Every SURVEY §2 family with no green CORRECTNESS artifact row yet
     has a representative in the first 50 driver slots.
 
-    Artifact-aware by design: once the driver records a family's
-    representative green, the rotation (registry._driver_order) correctly
-    re-sorts it to the back to make room for never-verified queries, so
-    the slot requirement only applies while the family is uncovered.
+    Artifact-aware by design: once the driver has recorded a family's
+    representative green, the slot requirement no longer applies to it.
     """
     first50 = set(list(registry.all_specs())[:50])
     green = _past_green()
