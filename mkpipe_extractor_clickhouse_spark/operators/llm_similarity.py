@@ -1246,9 +1246,19 @@ def kmeans_fit(
 
 
 def _codebook_relation(spark: SparkSession, cids, cvs) -> DataFrame:
-    return spark.createDataFrame(
-        [(int(c), v) for c, v in zip(cids, cvs)], "cid int, cv array<double>"
+    return _one_slice(
+        spark, [(int(c), v) for c, v in zip(cids, cvs)], "cid int, cv array<double>"
     )
+
+
+def _one_slice(spark: SparkSession, rows: list, schema: str) -> DataFrame:
+    """A driver-built codebook as a one-partition relation.
+    ``createDataFrame`` over a Python list slices it into
+    ``defaultParallelism`` partitions, so every job reading a k-row
+    codebook (its broadcast, a join) would run that many tasks.  The
+    list, not an RDD, goes in: the JVM converts a list's rows, while an
+    RDD's rows go through a Python worker."""
+    return spark.createDataFrame(rows, schema).coalesce(1)
 
 
 def _kmeans_codebook(vecs: DataFrame, k: int, max_iter: int):
@@ -1462,7 +1472,8 @@ def pq_train_encode(vecs: DataFrame) -> tuple[DataFrame, DataFrame]:
     cent_blocks, prev = _lloyd_iterate(
         vecs.select("v"), cent_blocks, dim, dsub, PQ_ITERS
     )
-    cent = spark.createDataFrame(
+    cent = _one_slice(
+        spark,
         [
             (b, int(cid), cv)
             for b, (cids, cvs) in enumerate(cent_blocks)

@@ -182,7 +182,7 @@ def _run_tick(
                     res: ExtractResult = runner.run_once(spark, table)
                     results[i][j] = PipelineResult(
                         table=table.target_name,
-                        status="extracted" if res.df is not None else "no_new_data",
+                        status="no_new_data" if res.no_new_data else "extracted",
                         write_mode=res.write_mode,
                         last_point=res.last_point_value,
                     )

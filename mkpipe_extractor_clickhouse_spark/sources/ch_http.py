@@ -356,8 +356,12 @@ class ClickHouseHttpExtractor:
     ``remote_window_query`` (shared with plugin.py's JDBC surface)
     renders the window INTO the POSTed SQL, so the filter runs
     SERVER-SIDE and only qualifying rows cross the wire; then
-    ``finish_extract`` emits the status records, runs the empty probe
-    and sets up the watermark, exactly as for the parquet extractor.
+    ``finish_extract`` emits the status records and sets up the observed
+    row count and watermark, exactly as for the parquet extractor.  An
+    append inside a runner tick is then one fetch of the window: no
+    empty probe runs, the write's observed count decides "no new data"
+    (the probe, one more remote round trip, stays on the initial load
+    and for extract-only callers).
     ``custom_query`` ships to the server VERBATIM (it speaks ClickHouse
     natively; the dialect translator is for queries this engine must
     run itself). Optional range partitioning gives each Spark task its

@@ -18,8 +18,9 @@ One tick path, shared by every source and destination:
     plugin surface uses it too);
   * each extractor only reads its source for that window, then hands
     the batch to :func:`finish_extract` — the status records, the empty
-    probe and the watermark (this parquet extractor, and the ClickHouse
-    HTTP one in ``ch_http.py``);
+    probe where one is still needed, and the observed row count and
+    watermark (this parquet extractor, and the ClickHouse HTTP one in
+    ``ch_http.py``);
   * each file destination runs :func:`prepare_batch` — the
     boundary-bounded dedup and the file-count control — before its own
     write (``ParquetLoader`` here, ``ManifestLoader`` in
@@ -31,11 +32,15 @@ Differences (deliberate fixes, SURVEY §4 caveats — *behavior* preserved,
 costs removed):
   * predicates are typed Column expressions pushed into the parquet/JDBC
     scan by Catalyst, not interpolated SQL strings;
-  * the watermark ``max(iterate_column)`` is an ``observe()`` metric
-    computed by the write's own tasks — the reference re-executes the
-    source query for the probe and again for the watermark
-    (``:103, :112``), i.e. up to three scans per tick where this runs
-    one full scan plus a take(1) probe;
+  * the watermark ``max(iterate_column)`` and the batch's row count
+    are ``observe()`` metrics computed by the write's own tasks — the
+    reference re-executes the source query for the probe and again for
+    the watermark (``:103, :112``), i.e. up to three scans per tick.
+    Under :class:`IncrementalRunner` an append is one scan: the write's
+    observed count decides "no new data", so no probe runs.  The
+    take(1) probe stays on the initial overwrite (an empty source still
+    overwrites) and for callers that only extract, which get the
+    reference's df=None handoff;
   * the loader dedups the ``>=`` boundary re-read on append via a
     key-based anti-join, making incremental runs idempotent (the
     reference leaves boundary duplicates to the destination); the
@@ -45,6 +50,7 @@ costs removed):
 
 from __future__ import annotations
 
+import contextvars
 import logging
 import os
 import threading
@@ -69,6 +75,14 @@ logger = logging.getLogger(__name__)
 # source directories must not see each other's registrations between the
 # two, so registration and analysis happen under this one lock.
 _VIEWS_LOCK = threading.Lock()
+
+# True while an IncrementalRunner extracts: its loader writes every
+# batch, so an append needs no empty probe (the write's observed row
+# count decides).  A context variable, so concurrent table chains and
+# extract-only callers each see their own value.
+_RUNNER_TICK: contextvars.ContextVar[bool] = contextvars.ContextVar(
+    "runner_tick", default=False
+)
 
 
 @dataclass
@@ -119,56 +133,81 @@ class ExtractResult:
     loader uses it to bound the idempotent-append anti-join to the
     watermark boundary instead of scanning every historical key.
 
-    ``observation`` carries the watermark aggregate as an
-    ``df.observe()`` metric riding the batch's FIRST action (normally
-    the loader's write): the reference pays a dedicated
-    ``max(iterate_column)`` scan per tick (__init__.py:112) — at a
-    100 TB source that is a second full read — whereas the observed
-    max is computed by the same tasks that write the data, for free.
-    Whoever commits the watermark calls :meth:`resolve_last_point`
-    after the batch is materialized: :class:`IncrementalRunner` for a
-    sidecar store, the loader itself when its commit carries it."""
+    ``observation`` carries the batch's row count and, when the batch
+    projects the iterate column, the watermark ``max`` as ``df.observe()``
+    metrics riding the batch's FIRST action (normally the loader's
+    write): the reference pays a dedicated ``max(iterate_column)`` scan
+    per tick (__init__.py:112) — at a 100 TB source that is a second
+    full read — whereas the observed metrics are computed by the same
+    tasks that write the data, for free.  Whoever commits the watermark
+    calls :meth:`resolve_last_point` after the batch is materialized:
+    :class:`IncrementalRunner` for a sidecar store, the loader itself
+    when its commit carries it.  A batch whose write observed 0 rows is
+    :attr:`no_new_data` and never moves the watermark."""
 
     df: DataFrame | None
     write_mode: WriteMode
     last_point_value: str | None = None
     window: FilterSpec | None = None
     observation: Observation | None = None
-    iterate_column: str | None = None  # for the guarded-probe fallback
+    iterate_column: str | None = None  # observed max, for the fallback
+    rows: int | None = None  # observed row count, once resolved
 
     def resolve_last_point(self) -> str | None:
-        """Stringified watermark (reference __init__.py:113-115).
+        """Stringified watermark (reference __init__.py:113-115)."""
+        self._resolve()
+        return self.last_point_value
+
+    @property
+    def no_new_data(self) -> bool:
+        """The probed df=None handoff, or an observed count of 0: the
+        append a runner tick runs without a probe lets its write decide."""
+        if self.df is None:
+            return True
+        self._resolve()
+        return self.rows == 0
+
+    def _resolve(self) -> None:
+        """Read the observed metrics into ``rows`` and
+        ``last_point_value``.
 
         Zero-cost when an action already ran on ``df`` (the observation
-        captured the max during it). For extract-only callers that
+        captured the metrics during it). For extract-only callers that
         never materialized the batch, this triggers the one dedicated
         scan the reference always pays — detected via the JVM
         observation's non-blocking probe, so it never deadlocks waiting
         for an action that will not come."""
-        if self.last_point_value is not None or self.observation is None:
-            return self.last_point_value
+        if self.observation is None or self.rows is not None:
+            return
         try:
             # Non-blocking probe via the JVM observation. getRowOrEmpty
             # is private[sql] Scala — present in the pinned Spark 4.1.2
             # but not public API, so guard it: a pyspark upgrade or a
-            # Connect session must degrade to the dedicated max() scan
+            # Connect session must degrade to the dedicated aggregate
             # the reference always pays (__init__.py:112), not crash.
             jo = self.observation._jo
             pending = jo is not None and not jo.getRowOrEmpty().isDefined()
         except Exception:
-            if self.df is None or self.iterate_column is None:
-                return None
-            row = self.df.agg(
-                F.max(self.iterate_column).alias("max_val")
-            ).first()
-            val = row["max_val"] if row else None
+            metrics = self.df.agg(*_observed(self.iterate_column)).first().asDict()
+        else:
+            if pending:
+                self.df.count()
+            metrics = self.observation.get
+        self.rows = metrics["rows"]
+        if "max_val" in metrics:
+            val = metrics["max_val"]
             self.last_point_value = str(val) if val is not None else None
-            return self.last_point_value
-        if pending and self.df is not None:
-            self.df.count()
-        val = self.observation.get["max_val"]
-        self.last_point_value = str(val) if val is not None else None
-        return self.last_point_value
+        if self.rows == 0:
+            self.last_point_value = None
+
+
+def _observed(iterate_column: str | None) -> list:
+    """The batch metrics :func:`finish_extract` observes: the row count,
+    and the watermark max when the batch projects the iterate column."""
+    metrics = [F.count(F.lit(1)).alias("rows")]
+    if iterate_column is not None:
+        metrics.append(F.max(iterate_column).alias("max_val"))
+    return metrics
 
 
 def plan_window(
@@ -340,7 +379,10 @@ def finish_extract(
 
       * full replication (no spec) → overwrite, no probe, no watermark;
       * empty + initial → the empty df, overwrite; empty + append →
-        df=None "no new data";
+        df=None "no new data" — except inside an
+        :class:`IncrementalRunner` tick, where an append runs no probe:
+        the write's observed row count decides (see
+        :attr:`ExtractResult.no_new_data`);
       * otherwise the watermark rides the batch's first action as an
         observed ``max`` (see :class:`ExtractResult`), or comes from one
         ``base_max()`` row when the batch does not project the column.
@@ -355,42 +397,44 @@ def finish_extract(
     )
     if spec is None:
         return ExtractResult(df, "overwrite", None)
-    # Empty probe on the un-observed lineage: take(1) touches minimal
-    # input, and must NOT be the observation's first action (the
-    # observed metric would then cover one partial scan instead of the
-    # whole batch).
-    if df.isEmpty():
-        if write_mode == "overwrite":
-            # reference __init__.py:105
-            logger.info(
-                {"table": table.target_name, "status": "empty_source_initial_load"}
-            )
-            return ExtractResult(df=df, write_mode=write_mode, window=spec)
-        logger.info({"table": table.target_name, "status": "no_new_data"})
-        return ExtractResult(df=None, write_mode=write_mode, window=spec)
-    # reference __init__.py:125-131
-    logger.info(
-        {"table": table.target_name, "status": "extracted", "write_mode": write_mode}
-    )
-    if table.iterate_column in df.columns:
-        obs = Observation()
-        df = df.observe(obs, F.max(table.iterate_column).alias("max_val"))
-        return ExtractResult(
-            df,
-            write_mode,
-            window=spec,
-            observation=obs,
-            iterate_column=table.iterate_column,
+    if write_mode == "overwrite" or not _RUNNER_TICK.get():
+        # Empty probe on the un-observed lineage: take(1) touches
+        # minimal input, and must NOT be the observation's first action
+        # (the observed metrics would then cover one partial scan
+        # instead of the whole batch).
+        if df.isEmpty():
+            if write_mode == "overwrite":
+                # reference __init__.py:105
+                logger.info(
+                    {"table": table.target_name, "status": "empty_source_initial_load"}
+                )
+                return ExtractResult(df=df, write_mode=write_mode, window=spec)
+            logger.info({"table": table.target_name, "status": "no_new_data"})
+            return ExtractResult(df=None, write_mode=write_mode, window=spec)
+        # reference __init__.py:125-131
+        logger.info(
+            {"table": table.target_name, "status": "extracted", "write_mode": write_mode}
         )
-    # The reference aggregates max(iterate_column) over the query
-    # *result* (__init__.py:112) and therefore breaks when a custom
-    # query does not project the iterate column; the caller's
-    # ``base_max`` reads the source window instead.
-    row = base_max().first()
-    last_point_value = (
-        str(row["max_val"]) if row and row["max_val"] is not None else None
+    column = table.iterate_column if table.iterate_column in df.columns else None
+    obs = Observation()
+    df = df.observe(obs, *_observed(column))
+    last_point_value = None
+    if column is None:
+        # The reference aggregates max(iterate_column) over the query
+        # *result* (__init__.py:112) and therefore breaks when a custom
+        # query does not project the iterate column; the caller's
+        # ``base_max`` reads the source window instead.
+        row = base_max().first()
+        if row and row["max_val"] is not None:
+            last_point_value = str(row["max_val"])
+    return ExtractResult(
+        df,
+        write_mode,
+        last_point_value,
+        window=spec,
+        observation=obs,
+        iterate_column=column,
     )
-    return ExtractResult(df, write_mode, last_point_value, window=spec)
 
 
 def apply_write_partitions(df: DataFrame, n: int) -> DataFrame:
@@ -555,6 +599,11 @@ class IncrementalRunner:
     """The one extract → load → commit loop (one MkPipe "pipeline"
     tick), for every extractor and every destination.
 
+    An append batch reaches the loader un-probed (see
+    :func:`finish_extract`): the loaders write a 0-row batch as no file
+    and no commit, and :attr:`ExtractResult.no_new_data` reads the
+    write's observed count.
+
     The watermark lives in one of two places:
 
       * ``store`` given: a sidecar :class:`WatermarkStore`, committed
@@ -577,10 +626,21 @@ class IncrementalRunner:
             last_point = self.loader.last_point(table)
         else:
             last_point = self.store.get(table.target_name)
-        result = self.extractor.extract(
-            table, spark, last_point=last_point, source_filter=source_filter
-        )
+        tick = _RUNNER_TICK.set(True)
+        try:
+            result = self.extractor.extract(
+                table, spark, last_point=last_point, source_filter=source_filter
+            )
+        finally:
+            _RUNNER_TICK.reset(tick)
         self.loader.load(spark, table, result)
+        if result.write_mode == "append" and result.df is not None:
+            # no probe ran: the write's observed count decides
+            # (reference __init__.py:107, 125-131)
+            record = {"table": table.target_name, "status": "no_new_data"}
+            if not result.no_new_data:
+                record.update(status="extracted", write_mode="append")
+            logger.info(record)
         if self.store is not None:
             # The write above was the observation's action — resolving
             # the watermark here reads the captured metric, no extra scan.

@@ -46,6 +46,7 @@ import json
 import os
 import shutil
 import uuid
+from datetime import date, datetime
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -70,6 +71,24 @@ def _json_safe(v):
     order for a fixed format); numbers pass through."""
     if hasattr(v, "isoformat"):
         return v.isoformat()
+    return v
+
+
+def _zone_key(v):
+    """A zone-map value or a range bound, decoded for comparison:
+    datetimes, dates (as midnight) and ISO-8601 strings in either form
+    (``T`` or space separator) as datetimes, other values unchanged.
+    Comparing the stored ISO strings with an undecoded string bound
+    would be wrong: ``'2024-01-10 06:00:00'`` sorts below every
+    same-day ``'2024-01-10T…'`` value, so it reads as an earlier
+    instant than it is."""
+    if isinstance(v, str):
+        try:
+            return datetime.fromisoformat(v)
+        except ValueError:
+            return v
+    if isinstance(v, date) and not isinstance(v, datetime):
+        return datetime.combine(v, datetime.min.time())
     return v
 
 
@@ -324,10 +343,15 @@ class ManifestedTable:
                         mins[cname] = st.min
                     if cname not in maxs or st.max > maxs[cname]:
                         maxs[cname] = st.max
+        # Only values JSON stores in order (numbers, ISO strings); a
+        # column with other stats (decimals, binary) gets no zone map,
+        # so its dirs are always kept.
+        ranges = {
+            c: [_json_safe(mins[c]), _json_safe(maxs[c])] for c in mins if c in maxs
+        }
         return {
-            c: [_json_safe(mins[c]), _json_safe(maxs[c])]
-            for c in mins
-            if c in maxs
+            c: r for c, r in ranges.items()
+            if all(isinstance(v, (int, float, str)) for v in r)
         }
 
     def _publish(
@@ -809,16 +833,10 @@ class ManifestedTable:
         Returns None for an empty table. mergeSchema for the same
         schema-evolution tolerance as ParquetLoader.read; a declared
         ``schema`` reads just those columns instead, with no footer
-        merge job.  A snapshot containing hive-partitioned batches
-        (partition evolution) delegates to read_evolved — a flat
-        multi-path scan would misplan mixed layouts."""
-        m = self.manifest(version)
-        if not m["dirs"]:
-            return None
-        if any(self.batch_spec(d) for d in m["dirs"]):
-            return self.read_evolved(spark, version, schema)
-        paths = [os.path.join(self.table_dir, d) for d in m["dirs"]]
-        return _reader(spark, schema).parquet(*paths)
+        merge job.  Batch dirs are planned by :meth:`_read_dirs`, so a
+        snapshot with hive-partitioned batches (partition evolution)
+        reads as :meth:`read_evolved` describes."""
+        return self._read_dirs(spark, self.manifest(version)["dirs"], schema)
 
     def batch_spec(self, name: str) -> tuple[str, ...]:
         """The partition spec a batch dir was staged with (empty tuple
@@ -840,23 +858,36 @@ class ManifestedTable:
         """Snapshot read across EVOLVING partition specs (the Iceberg
         partition-evolution read model): batches staged flat, batches
         partitioned by one spec, and batches partitioned by a later
-        spec coexist in one table; each dir is planned with ITS OWN
-        layout (hive partition inference per basePath, so partition
-        pruning still applies per batch where the filter touches that
-        batch's partition columns) and the union aligns schemas by
-        name with missing columns as NULL.  One logical Union of
-        per-dir scans — Catalyst pushes row filters into every leg."""
-        m = self.manifest(version)
-        if not m["dirs"]:
+        spec coexist in one table.  Every snapshot read plans its dirs
+        this way (:meth:`_read_dirs`); this name stays for callers that
+        want to say so."""
+        return self.read(spark, version, schema)
+
+    def _read_dirs(
+        self,
+        spark: SparkSession,
+        dirs: list[str],
+        schema: T.StructType | None = None,
+    ) -> DataFrame | None:
+        """One read of the batch dirs ``dirs`` (None when empty).  Each
+        dir is planned with ITS OWN layout: same-spec dirs share one
+        multi-path scan (one file index, hive partition inference per
+        basePath, so partition pruning still applies per batch where the
+        filter touches that batch's partition columns), and the specs'
+        scans are unioned by name with missing columns as NULL — one
+        logical Union, and Catalyst pushes row filters into every leg.
+        All-flat dirs are one plain multi-path scan."""
+        if not dirs:
             return None
         groups: dict[tuple[str, ...], list[str]] = {}
-        for d in m["dirs"]:
+        for d in dirs:
             groups.setdefault(self.batch_spec(d), []).append(d)
-        parts = []
-        for spec, dirs in sorted(groups.items()):
-            paths = [os.path.join(self.table_dir, d) for d in dirs]
-            # same-spec dirs share one multi-path scan (one file index)
-            parts.append(_reader(spark, schema).parquet(*paths))
+        parts = [
+            _reader(spark, schema).parquet(
+                *(os.path.join(self.table_dir, d) for d in same_spec)
+            )
+            for _, same_spec in sorted(groups.items())
+        ]
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p, allowMissingColumns=True)
@@ -1191,26 +1222,27 @@ class ManifestedTable:
         range predicate ``lo <= col <= hi`` using the manifest's
         per-batch min/max. A dir is skipped only when its recorded
         range PROVABLY cannot intersect the query range; dirs without
-        stats are always kept (skipping is an optimization, never a
-        filter). Bounds are compared in the same encoding the stats
-        were stored in (_json_safe: timestamps as ISO strings)."""
+        stats, and dirs whose stats do not compare with the bounds, are
+        always kept (skipping is an optimization, never a filter).
+        Stats and bounds are compared as :func:`_zone_key` decodes
+        them, so a timestamp bound may be a datetime or a string in
+        either ISO form (``2024-01-10T06:00:00`` or
+        ``2024-01-10 06:00:00``)."""
         m = self.manifest(version)
         stats = m.get("stats", {})
-        lo_k = _json_safe(lo) if lo is not None else None
-        hi_k = _json_safe(hi) if hi is not None else None
+        lo_k = _zone_key(lo) if lo is not None else None
+        hi_k = _zone_key(hi) if hi is not None else None
         kept, skipped = [], []
         for d in m["dirs"]:
             rng = stats.get(d, {}).get(col)
-            if rng is None:
-                kept.append(d)
-                continue
-            mn, mx = rng
-            if (hi_k is not None and mn > hi_k) or (
-                lo_k is not None and mx < lo_k
-            ):
-                skipped.append(d)
-            else:
-                kept.append(d)
+            try:
+                mn, mx = (_zone_key(v) for v in rng)
+                skip = (hi_k is not None and mn > hi_k) or (
+                    lo_k is not None and mx < lo_k
+                )
+            except TypeError:  # no stats, or stats of another type
+                skip = False
+            (skipped if skip else kept).append(d)
         return kept, skipped
 
     def read_pruned(
@@ -1229,10 +1261,9 @@ class ManifestedTable:
         from pyspark.sql import functions as F
 
         kept, _ = self.prune_dirs(col, lo, hi, version)
-        if not kept:
+        df = self._read_dirs(spark, kept)
+        if df is None:
             return None
-        paths = [os.path.join(self.table_dir, d) for d in kept]
-        df = spark.read.option("mergeSchema", "true").parquet(*paths)
         if lo is not None:
             df = df.filter(F.col(col) >= F.lit(lo))
         if hi is not None:
@@ -1272,10 +1303,9 @@ class ManifestedTable:
         from pyspark.sql import functions as F
 
         kept, _ = self.prune_dirs_point(col, value, version)
-        if not kept:
+        df = self._read_dirs(spark, kept)
+        if df is None:
             return None
-        paths = [os.path.join(self.table_dir, d) for d in kept]
-        df = spark.read.option("mergeSchema", "true").parquet(*paths)
         return df.filter(F.col(col) == F.lit(value))
 
     def vacuum(
@@ -1337,6 +1367,22 @@ from .extract import (  # noqa: E402
     drop_empty_files,
     prepare_batch,
 )
+from .filter_spec import FilterSpec  # noqa: E402
+
+
+def _window_range(window: FilterSpec) -> tuple:
+    """The ``(lo, hi)`` zone-map range of an extraction window, typed as
+    the iterate column: ``col >= last_point`` or the static bounds (the
+    exclusive upper bound taken as inclusive: pruning may keep a dir it
+    could skip, never skip one it must keep)."""
+
+    def typed(v):
+        if v is None:
+            return None
+        return int(v) if window.column_type == "int" else _zone_key(str(v))
+
+    lo = window.last_point if window.last_point is not None else window.lower
+    return typed(lo), typed(window.upper)
 
 
 @dataclass
@@ -1360,10 +1406,13 @@ class ManifestLoader:
     auto_compact_max_dirs: int | None = None
 
     def table(self, table: TableConfig) -> ManifestedTable:
+        """The destination table; its zone maps always cover the
+        iterate column, which :meth:`load` prunes the boundary read on."""
         name = table.target_name or table.name
+        stats = (*getattr(table, "stats_columns", ()), table.iterate_column)
         return ManifestedTable(
             os.path.join(self.dest_dir, f"{name}.mfst"),
-            stats_cols=getattr(table, "stats_columns", ()),
+            stats_cols=tuple(dict.fromkeys(c for c in stats if c)),
         )
 
     def last_point(self, table: TableConfig) -> str | None:
@@ -1378,16 +1427,24 @@ class ManifestLoader:
     def load(
         self, spark: SparkSession, table: TableConfig, result: ExtractResult
     ) -> int | None:
-        """Stage the batch, resolve the observed watermark (the staging
-        write IS the observation's action), publish both atomically.
-        The batch prelude is ParquetLoader's (``prepare_batch``), over a
-        read of the head snapshot."""
+        """Stage the batch, resolve the observed watermark and row count
+        (the staging write IS the observation's action), publish them
+        atomically.  The batch prelude is ParquetLoader's
+        (``prepare_batch``), over a read of the head snapshot's batch
+        dirs whose iterate-column zone map can meet the window
+        (:func:`_window_range`); with none, the anti-join is skipped."""
         if result.df is None:
             return None
         mt = self.table(table)
-        df = prepare_batch(
-            result, table, lambda schema: mt.read(spark, schema=schema)
-        )
+
+        def read_dest(schema):
+            window = result.window
+            if window is None:
+                return mt.read(spark, schema=schema)
+            kept, _ = mt.prune_dirs(window.column, *_window_range(window))
+            return mt._read_dirs(spark, kept, schema)
+
+        df = prepare_batch(result, table, read_dest)
         name = mt.stage_batch(df)
         if result.write_mode == "append" and _staged_rows(
             os.path.join(mt.table_dir, name)
@@ -1401,7 +1458,7 @@ class ManifestLoader:
             # is never consumed by this check.
             shutil.rmtree(os.path.join(mt.table_dir, name))
             return None
-        meta = {"last_point": result.resolve_last_point()}
+        meta = {"last_point": result.resolve_last_point(), "rows": result.rows}
         new_stats = mt._compute_stats(name)
         while True:
             # parent is pinned to the head the dirs list was merged

@@ -338,6 +338,58 @@ def test_http_extractor_empty_window_is_no_new_data(spark, ch_server, caplog):
     ]
 
 
+def test_http_append_tick_fetches_window_once(spark, sf_dir, ch_server, tmp_path):
+    """An append tick of a pipeline with an HTTP source posts the window
+    query once, for the write: no empty probe fetches it first (the
+    write's observed count decides "no new data").  Only the initial
+    load, which must overwrite even when empty, still probes."""
+    from mkpipe_extractor_clickhouse_spark.pipeline import run_pipelines
+
+    port, log, _ = ch_server
+    config = {
+        "connections": {
+            "ch": {
+                "variant": "clickhouse_http",
+                "host": "127.0.0.1",
+                "port": port,
+                "user": USER,
+                "password": KEY,
+            },
+            "lake": {"variant": "parquet", "path": str(tmp_path / "lake")},
+        },
+        "pipelines": [
+            {
+                "name": "p",
+                "source": "ch",
+                "destination": "lake",
+                "tables": [
+                    {
+                        "name": "events",
+                        "replication_method": "incremental",
+                        "iterate_column": "event_id",
+                        "iterate_column_type": "int",
+                        "dedup_keys": ["event_id"],
+                    }
+                ],
+            }
+        ],
+    }
+
+    def fetches(since: int) -> list[str]:
+        return [q for q in log[since:] if q.endswith("FORMAT JSONEachRow")]
+
+    before = len(log)
+    assert run_pipelines(config, spark)["p"][0].status == "extracted"
+    assert len(fetches(before)) == 2  # the initial load's probe and write
+    before = len(log)
+    res = run_pipelines(config, spark)["p"][0]
+    assert (res.status, res.write_mode) == ("extracted", "append")
+    (fetch,) = fetches(before)
+    assert f"event_id >= {res.last_point}" in fetch
+    n_src = load_table(spark, sf_dir, "events").count()
+    assert spark.read.parquet(f"{tmp_path}/lake/events.parquet").count() == n_src
+
+
 def test_http_extractor_partitioned_slices(spark, sf_dir, ch_server):
     """Range partitioning hands each Spark task its own slice SELECT."""
     from mkpipe_extractor_clickhouse_spark.sources.ch_http import (

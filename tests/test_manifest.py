@@ -463,6 +463,197 @@ def test_loader_records_zone_maps_per_tick(spark, sf_dir, tmp_path):
     assert skipped  # the early ticks' batches cannot match
 
 
+def _spy_read_dirs(monkeypatch) -> list[list[str]]:
+    """The batch dirs of every ``ManifestedTable._read_dirs`` call."""
+    opened: list[list[str]] = []
+    real = ManifestedTable._read_dirs
+
+    def read_dirs(self, spark, dirs, schema=None):
+        opened.append(list(dirs))
+        return real(self, spark, dirs, schema)
+
+    monkeypatch.setattr(ManifestedTable, "_read_dirs", read_dirs)
+    return opened
+
+
+def test_boundary_read_opens_only_overlapping_batches(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """An append's anti-join reads only the batch dirs whose
+    iterate-column zone map meets the window ``event_id >= last_point``
+    (the loader records that zone map without ``stats_columns``): after
+    each of four appends, the newest batch, plus a dir committed without
+    stats (a table written before zone maps), which is always kept."""
+    table = TableConfig(
+        name="events",
+        replication_method="incremental",
+        iterate_column="event_id",
+        iterate_column_type="int",
+        dedup_keys=("event_id",),
+    )
+    loader = ManifestLoader(str(tmp_path))
+    runner = IncrementalRunner(extractor=ParquetExtractor(sf_dir), loader=loader)
+    ev_id = F.col("event_id")
+    runner.run_once(spark, table, source_filter=ev_id < 100)
+    mt = loader.table(table)
+    ManifestedTable(mt.table_dir).commit_append(
+        load_table(spark, sf_dir, "events").filter(ev_id < 5)
+    )
+    opened = _spy_read_dirs(monkeypatch)
+    for cut in (200, 300, 400, 500):
+        runner.run_once(spark, table, source_filter=ev_id < cut)
+    monkeypatch.undo()
+
+    m = mt.manifest()
+    first, legacy, *appends = m["dirs"]
+    assert len(appends) == 4 and legacy not in m["stats"]
+    assert m["stats"][appends[-1]]["event_id"] == [400, 499]
+    assert opened == [
+        [first, legacy],
+        [legacy, appends[0]],
+        [legacy, appends[1]],
+        [legacy, appends[2]],
+    ]
+    got = mt.read(spark)
+    assert got.count() == 505  # the legacy dir's 5 rows stay as written
+    assert got.select("event_id").distinct().count() == 500
+    assert loader.last_point(table) == "499"
+
+
+def test_boundary_read_skipped_when_no_batch_meets_window(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """A static-bounds window above every batch's zone map opens no
+    batch dir, so the append runs no anti-join."""
+    loader = ManifestLoader(str(tmp_path))
+    runner = IncrementalRunner(extractor=ParquetExtractor(sf_dir), loader=loader)
+
+    def table(lo, hi):
+        return TableConfig(
+            name="events",
+            replication_method="incremental",
+            iterate_column="event_id",
+            iterate_column_type="int",
+            dedup_keys=("event_id",),
+            filter_lower_bound=lo,
+            filter_upper_bound=hi,
+        )
+
+    runner.run_once(spark, table(0, 100))
+    opened = _spy_read_dirs(monkeypatch)
+    res = runner.run_once(spark, table(100, 200))
+    monkeypatch.undo()
+    assert opened == [[]]
+    assert res.rows == 100
+    assert loader.table(table(0, 100)).read(spark).count() == 200
+
+
+def test_datetime_zone_maps_keep_straddling_dir(spark, tmp_path):
+    """Timestamp zone maps are stored as ISO strings
+    (``2024-01-10T05:00:00``).  A string bound in ``str(datetime)`` form
+    (``2024-01-10 06:00:00``) sorted below every same-day stored value,
+    so as an upper bound it skipped the dir that straddles it.  Bounds
+    are now compared as instants, in either string form or as
+    datetimes."""
+    from datetime import datetime
+
+    t = ManifestedTable(str(tmp_path / "ts.mfst"), stats_cols=("ts",))
+    for hours in ((0, 4), (5, 7), (8, 9)):
+        t.commit_append(
+            spark.createDataFrame(
+                [(datetime(2024, 1, 10, h),) for h in hours], "ts timestamp_ntz"
+            )
+        )
+    early, straddling, late = t.manifest()["dirs"]
+    assert t.manifest()["stats"][straddling]["ts"] == [
+        "2024-01-10T05:00:00",
+        "2024-01-10T07:00:00",
+    ]
+    for bound in (
+        "2024-01-10 06:00:00",
+        "2024-01-10T06:00:00",
+        datetime(2024, 1, 10, 6),
+    ):
+        assert t.prune_dirs("ts", hi=bound) == ([early, straddling], [late])
+        assert t.prune_dirs("ts", lo=bound) == ([straddling, late], [early])
+    got = t.read_pruned(
+        spark, "ts", lo="2024-01-10 06:00:00", hi="2024-01-10 08:00:00"
+    )
+    assert got.count() == 2  # 07:00 and 08:00
+
+
+def test_datetime_window_prunes_manifest_boundary_read(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """With a datetime iterate column the window's ``last_point`` is the
+    ``str(datetime)`` form; the loader compares it as an instant, so the
+    boundary read keeps exactly the batch holding the watermark row."""
+    ts = F.col("ts")
+    table = TableConfig(
+        name="events",
+        replication_method="incremental",
+        iterate_column="ts",
+        iterate_column_type="datetime",
+        dedup_keys=("event_id",),
+    )
+    loader = ManifestLoader(str(tmp_path))
+    runner = IncrementalRunner(extractor=ParquetExtractor(sf_dir), loader=loader)
+    for cutoff in ("2024-01-10", "2024-01-20"):
+        runner.run_once(
+            spark, table, source_filter=ts < F.lit(cutoff).cast("timestamp_ntz")
+        )
+    opened = _spy_read_dirs(monkeypatch)
+    runner.run_once(spark, table)
+    monkeypatch.undo()
+    mt = loader.table(table)
+    first, second, _ = mt.manifest()["dirs"]
+    assert opened == [[second]]
+    n_src = load_table(spark, sf_dir, "events").count()
+    assert mt.read(spark).count() == n_src
+
+
+def test_zone_maps_skip_values_json_cannot_order(spark, tmp_path):
+    """A decimal or binary column gets no zone map (its footer stats are
+    ``Decimal``/``bytes``, which the manifest cannot store in order), so
+    the commit succeeds and its dir is always kept."""
+    from decimal import Decimal
+
+    t = ManifestedTable(str(tmp_path / "d.mfst"), stats_cols=("d", "b", "n"))
+    t.commit_append(
+        spark.createDataFrame(
+            [(Decimal(1), bytearray(b"a"), 1), (Decimal(5), bytearray(b"z"), 5)],
+            "d decimal(38,0), b binary, n long",
+        )
+    )
+    (d,) = t.manifest()["dirs"]
+    assert t.manifest()["stats"][d] == {"n": [1, 5]}
+    assert t.prune_dirs("d", lo=10) == ([d], [])
+
+
+def test_manifest_commit_records_observed_rows(spark, sf_dir, tmp_path):
+    """The commit's ``meta`` carries the extract's observed row count
+    beside the watermark: the boundary row the append re-delivers is
+    counted, although the anti-join drops it from the batch."""
+    table = TableConfig(
+        name="events",
+        replication_method="incremental",
+        iterate_column="event_id",
+        iterate_column_type="int",
+        dedup_keys=("event_id",),
+    )
+    loader = ManifestLoader(str(tmp_path))
+    runner = IncrementalRunner(extractor=ParquetExtractor(sf_dir), loader=loader)
+    ev_id = F.col("event_id")
+    runner.run_once(spark, table, source_filter=ev_id < 100)
+    runner.run_once(spark, table, source_filter=ev_id < 250)
+    mt = loader.table(table)
+    assert [mt.manifest(v)["meta"] for v in mt.versions()] == [
+        {"last_point": "99", "rows": 100},
+        {"last_point": "249", "rows": 151},
+    ]
+    assert mt.read(spark).count() == 250
+
+
 # ---- catalog-level multi-table transactions -------------------------------
 
 

@@ -328,14 +328,15 @@ def test_pool_threads_are_reused_across_ticks(spark, sf_dir, tmp_path, monkeypat
 
 
 @pytest.mark.parametrize("variant", ["parquet", "manifest"])
-def test_append_tick_runs_three_jobs_in_callers_group(
+def test_append_tick_runs_two_jobs_in_callers_group(
     spark, sf_dir, tmp_path, variant
 ):
-    """An append tick is an empty probe, the anti-join's broadcast build
-    and the write (the staging write, for a manifest destination): the
-    boundary read declares its schema, so no footer-inference job.  The
-    jobs carry the caller's job group although they run on pool
-    threads."""
+    """An append tick is the anti-join's broadcast build and the write
+    (the staging write, for a manifest destination): the write's
+    observed row count decides "no new data", so no empty probe runs,
+    and the boundary read declares its schema, so no footer-inference
+    job.  The jobs carry the caller's job group although they run on
+    pool threads."""
     from mkpipe_extractor_clickhouse_spark.sources.manifest import ManifestLoader
 
     sc = spark.sparkContext
@@ -363,7 +364,7 @@ def test_append_tick_runs_three_jobs_in_callers_group(
         sc.setLocalProperty("spark.job.description", None)
     assert res.write_mode == "append"
     sc._jsc.sc().listenerBus().waitUntilEmpty()
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 3
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 2
 
 
 def _slices(spark, sf_dir, src: str, upper: int) -> None:
@@ -410,6 +411,64 @@ def test_appends_leave_no_empty_files(spark, sf_dir, tmp_path):
     assert spark.read.parquet(f"{tmp_path}/lake/events.parquet").count() == 800
     run_pipelines(config, spark)  # idle: only the boundary row re-delivers
     assert data_files(str(tmp_path / "lake")) + data_files(str(tmp_path / "mfst")) == files
+
+
+def test_empty_append_window_is_no_new_data(spark, sf_dir, tmp_path, caplog):
+    """An append over an empty static-bounds window runs no probe: the
+    write observes 0 rows, the tick reports ``no_new_data``, and neither
+    destination gains a file, a commit or a new watermark."""
+    import logging
+
+    from mkpipe_extractor_clickhouse_spark.sources.extract import (
+        TableConfig,
+        data_files,
+    )
+    from mkpipe_extractor_clickhouse_spark.sources.manifest import ManifestLoader
+    from mkpipe_extractor_clickhouse_spark.sources.state import WatermarkStore
+
+    def config(lo: int, hi: int) -> dict:
+        table = {
+            "name": "events",
+            "replication_method": "incremental",
+            "iterate_column": "event_id",
+            "iterate_column_type": "int",
+            "dedup_keys": ["event_id"],
+            "filter_lower_bound": lo,
+            "filter_upper_bound": hi,
+        }
+        return {
+            "connections": {
+                "src": {"variant": "parquet", "path": sf_dir},
+                "lake": {"variant": "parquet", "path": str(tmp_path / "lake")},
+                "mfst": {"variant": "manifest", "path": str(tmp_path / "mfst")},
+            },
+            "pipelines": [
+                {"name": n, "source": "src", "destination": n, "tables": [table]}
+                for n in ("lake", "mfst")
+            ],
+        }
+
+    out = run_pipelines(config(0, 50), spark)
+    assert {r.status for rs in out.values() for r in rs} == {"extracted"}
+    files = data_files(str(tmp_path / "lake")) + data_files(str(tmp_path / "mfst"))
+    mt = ManifestLoader(str(tmp_path / "mfst")).table(TableConfig(name="events"))
+    head = mt.head_version()
+    with caplog.at_level(
+        logging.INFO, logger="mkpipe_extractor_clickhouse_spark.sources.extract"
+    ):
+        out = run_pipelines(config(10**9, 10**9 + 10), spark)
+    assert [(r.status, r.last_point) for rs in out.values() for r in rs] == [
+        ("no_new_data", None)
+    ] * 2
+    assert [r.msg for r in caplog.records].count(
+        {"table": "events", "status": "no_new_data"}
+    ) == 2
+    assert files == data_files(str(tmp_path / "lake")) + data_files(
+        str(tmp_path / "mfst")
+    )
+    assert WatermarkStore(f"{tmp_path}/lake/_state.json").get("events") == "49"
+    assert mt.head_version() == head
+    assert mt.manifest()["meta"]["last_point"] == "49"
 
 
 def test_empty_overwrite_keeps_one_schema_file(spark, sf_dir, tmp_path):
