@@ -2827,7 +2827,7 @@ def x52_partition_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-snapshot metadata, old data files are NEVER rewritten when the
     spec changes): the first load commits FLAT, the second commits
     hive-partitioned by day, the third by (day, event_type) — three
-    layouts coexisting in one manifest table.  read_evolved plans each
+    layouts coexisting in one manifest table.  read plans each
     batch with its own layout (per-spec file index, so day filters
     still prune directories inside the partitioned batches) and aligns
     the union by name.  The builder asserts the recorded specs, that a
@@ -2846,7 +2846,7 @@ def x52_partition_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     v1 = mt.commit_overwrite(
         ev.filter(F.col("day").between("2024-01-04", "2024-01-06"))
     )
-    flat_count = mt.read_evolved(spark).count()
+    flat_count = mt.read(spark).count()
     mt.commit_append(
         ev.filter(F.col("day").between("2024-01-07", "2024-01-09")),
         partition_by=("day",),
@@ -2858,10 +2858,10 @@ def x52_partition_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     specs = sorted(mt.batch_spec(d) for d in mt.manifest()["dirs"])
     if specs != [(), ("day",), ("day", "event_type")]:
         raise RuntimeError(f"unexpected specs: {specs}")
-    if mt.read_evolved(spark, version=v1).count() != flat_count:
+    if mt.read(spark, version=v1).count() != flat_count:
         raise RuntimeError("time travel to the flat snapshot broke")
     return (
-        mt.read_evolved(spark)
+        mt.read(spark)
         .groupBy("day")
         .agg(
             F.count("*").alias("n_rows"),

@@ -37,15 +37,29 @@ Scale: manifests hold directory names, not per-file lists — O(commits)
 bytes, pruned by vacuum; reads hand Spark a list of paths and planning
 proceeds exactly as for any multi-dir parquet table (partition pruning
 and pushdown unaffected).
+
+One commit path: every version goes through ``ManifestedTable._commit``.
+A write op states only the dirs its new version lists; ``_commit``
+fills in each listed dir's zone map (``stats``) and bloom by one rule —
+carried from the head when the head lists the dir, else computed once
+from the dir's staged files (batch dirs are immutable, so both give the
+same value) — and publishes them with the retrying CAS.  So a manifest
+carries the zone map and bloom of every dir it lists, for the table's
+``stats_cols`` and ``bloom_cols`` (a dir the head lists without them,
+such as one committed before they were declared, stays as recorded).
+Every read of listed batch dirs goes through
+``ManifestedTable._read_dirs``, which plans each by its partition spec.
 """
 
 from __future__ import annotations
 
 import errno
+import functools
 import json
 import os
 import shutil
 import uuid
+from collections.abc import Callable
 from datetime import date, datetime
 
 from pyspark.sql import DataFrame, SparkSession
@@ -97,6 +111,37 @@ def _reader(spark: SparkSession, schema: T.StructType | None):
     if schema is None:
         return spark.read.option("mergeSchema", "true")
     return spark.read.schema(schema)
+
+
+def _union_by_name(parts: list[DataFrame]) -> DataFrame:
+    """One logical Union of ``parts`` aligned by column name, missing
+    columns as NULL."""
+    return functools.reduce(
+        lambda a, b: a.unionByName(b, allowMissingColumns=True), parts
+    )
+
+
+def _link_exclusive(target: str, record: dict, conflict: str) -> None:
+    """Write ``record`` as JSON to ``target`` iff no file has that name:
+    the compare-and-swap every version, ref and catalog publish uses.
+    The record is fully written to a temp file first and then
+    hard-linked to ``target``; ``os.link`` is atomic and *exclusive*
+    (EEXIST when the target exists), raised here as
+    ``CommitConflict(conflict)``.  ``os.rename`` cannot serve as the
+    CAS: rename onto an existing name silently replaces on POSIX, so two
+    racers past an exists() check would both "succeed" and the second
+    would overwrite the first's record."""
+    tmp = os.path.join(
+        os.path.dirname(target), f".tmp-{uuid.uuid4().hex[:12]}.json"
+    )
+    with open(tmp, "w") as f:
+        json.dump(record, f)
+    try:
+        os.link(tmp, target)
+    except FileExistsError:
+        raise CommitConflict(conflict) from None
+    finally:
+        os.unlink(tmp)
 
 
 class ManifestedTable:
@@ -173,18 +218,12 @@ class ManifestedTable:
             return {}
         import pyarrow.parquet as pq
 
-        batch_dir = os.path.join(self.table_dir, name)
         out: dict[str, str] = {}
-        # recursive walk for hive-partitioned batches (see
-        # _compute_stats); a bloomed column living in the PARTITION
-        # path contributes no data pages, so it is simply absent here
-        # — read_pruned treats a missing entry as might-contain.
-        files = sorted(
-            os.path.join(root, f)
-            for root, _dirs, names in os.walk(batch_dir)
-            for f in names
-            if f.endswith(".parquet") and not f.startswith(("_", "."))
-        )
+        # a bloomed column living in the PARTITION path of a
+        # hive-partitioned batch contributes no data pages, so it is
+        # simply absent here — read_point treats a missing entry as
+        # might-contain.
+        files = data_files(os.path.join(self.table_dir, name))
         for col in self.bloom_cols:
             bits = bytearray(self.bloom_bits // 8)
             seen = set()
@@ -274,7 +313,7 @@ class ManifestedTable:
         each batch is SELF-DESCRIBING: the table's partition spec can
         EVOLVE across commits (the Iceberg partition-evolution model —
         old batches keep their layout forever, new batches use the new
-        spec, read_evolved merges them)."""
+        spec, read merges them)."""
         name = f"batch-{uuid.uuid4().hex[:12]}"
         path = os.path.join(self.table_dir, name)
         w = df.write.mode("overwrite")
@@ -354,6 +393,30 @@ class ManifestedTable:
             if all(isinstance(v, (int, float, str)) for v in r)
         }
 
+    def _stage_rows(
+        self, df: DataFrame, partition_by: tuple[str, ...] | None = None
+    ) -> str | None:
+        """:meth:`stage_batch`, but None (and no dir left behind) when
+        the staged batch holds no rows.  The count comes from the staged
+        parquet footers, a driver-side metadata read, not a Spark job."""
+        import pyarrow.parquet as pq
+
+        name = self.stage_batch(df, partition_by=partition_by)
+        path = os.path.join(self.table_dir, name)
+        if sum(pq.read_metadata(f).num_rows for f in data_files(path)):
+            return name
+        shutil.rmtree(path)
+        return None
+
+    def _rewrite(self, spark: SparkSession, d: str, keep) -> str | None:
+        """Batch dir ``d`` restaged with only its rows matching the
+        Column ``keep``, in ``d``'s own partition spec (so a
+        hive-partitioned dir stays hive-partitioned and its partition
+        columns keep their read type); None when no row matches."""
+        return self._stage_rows(
+            self._read_dirs(spark, [d]).filter(keep), self.batch_spec(d)
+        )
+
     def _publish(
         self,
         dirs: list[str],
@@ -363,63 +426,89 @@ class ManifestedTable:
         stats: dict | None = None,
         bloom: dict | None = None,
     ) -> int:
-        """Atomic version publish. ``parent`` pins the snapshot this
-        commit replaces: the target name becomes v(parent+1), so ANY
-        intervening publish makes the link collide and raise — the
-        check is the filesystem name itself, no read-then-write gap.
-        A commit whose dirs list was built from a head read (append,
-        the loader's tick, compact, merge) must pin that head, or a
-        publish landing in between drops out of the list; only a commit
-        listing nothing but its own batch (overwrite) may leave it unset.
-
-        The publish primitive is ``os.link(tmp, target)``: atomic and
-        *exclusive* (EEXIST when target exists). A bare
-        ``os.rename`` cannot serve as the CAS — rename onto an
-        existing name silently replaces on POSIX, so two racers past
-        an exists() check would both "succeed" and the second would
-        overwrite the first's commit."""
+        """Atomic version publish, one attempt: writes v(parent+1) with
+        the zone maps and blooms of the listed ``dirs`` or raises
+        CommitConflict (:func:`_link_exclusive`).  ``parent`` pins the
+        snapshot this commit replaces: ANY intervening publish makes the
+        link collide — the check is the filesystem name itself, no
+        read-then-write gap.  Unset, the version after the current head
+        is taken.  Write ops go through :meth:`_commit`, which retries."""
         head = self.head_version() if parent is None else parent
         version = head + 1
-        tmp = os.path.join(
-            self.table_dir,
-            _MANIFEST_DIR,
-            f".tmp-{uuid.uuid4().hex[:12]}.json",
+        listed = set(dirs)
+
+        def recorded(per_dir):
+            return {d: v for d, v in (per_dir or {}).items() if d in listed and v}
+
+        record = {
+            "version": version,
+            "parent": head,
+            "op": op,
+            "dirs": dirs,
+            "meta": meta,
+            "stats": recorded(stats),
+        }
+        blooms = recorded(bloom)
+        if blooms:
+            record["bloom"] = blooms
+        _link_exclusive(
+            self._manifest_path(version),
+            record,
+            f"version {version} already published",
         )
-        with open(tmp, "w") as f:
-            json.dump(
-                {
-                    "version": version,
-                    "parent": head,
-                    "op": op,
-                    "dirs": dirs,
-                    "meta": meta,
-                    "stats": {
-                        d: s
-                        for d, s in (stats or {}).items()
-                        if d in dirs and s
-                    },
-                    **(
-                        {
-                            "bloom": {
-                                d: b
-                                for d, b in bloom.items()
-                                if d in dirs and b
-                            }
-                        }
-                        if bloom
-                        else {}
-                    ),
-                },
-                f,
-            )
-        target = self._manifest_path(version)
-        try:
-            os.link(tmp, target)  # atomic-exclusive POSIX publish (CAS)
-        except FileExistsError:
-            raise CommitConflict(f"version {version} already published")
-        finally:
-            os.unlink(tmp)
         return version
+
+    def _commit(
+        self,
+        op: str,
+        meta: dict,
+        dirs_for: Callable[[dict], list[str] | None],
+        pin: bool = True,
+    ) -> int | None:
+        """The one way a write op publishes a version; returns it.
+
+        ``dirs_for(head)`` maps the head manifest to the dirs the new
+        version lists, or to None to abandon the commit (the call then
+        returns None).  Each listed dir's zone map and bloom are carried
+        from the head when the head lists the dir, and otherwise
+        computed from its staged files, once per call however many
+        attempts it takes.  A lost CAS re-reads the head and calls
+        ``dirs_for`` again; an op whose list needs staged work keeps
+        that work across the calls itself.
+
+        With ``pin`` the publish is pinned to the head the list was
+        built from.  A list built from a head read (append, the
+        loader's tick, compact, merge, delete, TTL) must pin it, or a
+        publish landing in between drops out of the list; only a list
+        that does not depend on the head (overwrite, rollback, a branch
+        append, a clone) may leave it unpinned.  (Caught by
+        tests/test_manifest.py::test_concurrent_appends_lose_no_commit
+        under host-load interleavings.)"""
+        computed: dict[str, tuple[dict, dict]] = {}
+        while True:
+            head = self.manifest()
+            dirs = dirs_for(head)
+            if dirs is None:
+                return None
+            listed = set(head["dirs"])
+            stats, bloom = dict(head.get("stats", {})), dict(head.get("bloom", {}))
+            for d in dirs:
+                if d in listed:
+                    continue
+                if d not in computed:
+                    computed[d] = (self._compute_stats(d), self._compute_bloom(d))
+                stats[d], bloom[d] = computed[d]
+            try:
+                return self._publish(
+                    dirs,
+                    op,
+                    meta,
+                    parent=head["version"] if pin else None,
+                    stats=stats,
+                    bloom=bloom,
+                )
+            except CommitConflict:
+                continue
 
     def commit_append(
         self,
@@ -428,70 +517,28 @@ class ManifestedTable:
         partition_by: tuple[str, ...] | None = None,
     ) -> int:
         """Stage + publish head∪batch; retries version conflicts (the
-        staged data is reused — only the metadata rename re-runs).
-
-        ``parent`` is PINNED to the manifest this append merged its
-        dirs list against. Without the pin there is a lost-update
-        window: the dirs list is computed from one head read while
-        _publish would re-read the (possibly newer) head for the
-        version number — a concurrent commit landing between the two
-        reads would be silently dropped from our dirs list even
-        though our publish "succeeds". Pinning makes the stale merge
-        collide on the version name instead, and the retry re-merges
-        against the fresh head. (Caught by
-        tests/test_manifest.py::test_concurrent_appends_lose_no_commit
-        under host-load interleavings.)
+        staged data is reused — only the metadata publish re-runs).
 
         ``partition_by`` stages the batch hive-partitioned on those
         columns — the partition spec may differ per commit (partition
-        evolution); read via read_evolved."""
+        evolution); :meth:`read` merges the specs."""
         name = self.stage_batch(df, partition_by=partition_by)
-        new_stats = self._compute_stats(name)
-        new_bloom = self._compute_bloom(name)
-        while True:
-            head = self.manifest()
-            dirs = head["dirs"] + [name]
-            stats = {**head.get("stats", {}), name: new_stats}
-            bloom = {**head.get("bloom", {}), name: new_bloom}
-            try:
-                return self._publish(
-                    dirs,
-                    "append",
-                    meta or {},
-                    parent=head["version"],
-                    stats=stats,
-                    bloom=bloom,
-                )
-            except CommitConflict:
-                continue  # re-read head, keep our batch dir
+        return self._commit("append", meta or {}, lambda head: head["dirs"] + [name])
 
     def commit_overwrite(self, df: DataFrame, meta: dict | None = None) -> int:
         """Stage + publish a manifest listing ONLY the new batch — a
         metadata-only table replacement; old data remains for time
         travel until vacuum."""
         name = self.stage_batch(df)
-        stats = {name: self._compute_stats(name)}
-        bloom = {name: self._compute_bloom(name)}
-        while True:
-            try:
-                return self._publish(
-                    [name], "overwrite", meta or {}, stats=stats,
-                    bloom=bloom,
-                )
-            except CommitConflict:
-                continue
+        return self._commit("overwrite", meta or {}, lambda head: [name], pin=False)
 
     def rollback(self, version: int) -> int:
         """Publish a new head that re-exposes an old snapshot's dirs —
         the instant-undo a pipeline needs after a bad batch."""
-        old = self.manifest(version)
-        while True:
-            try:
-                return self._publish(
-                    old["dirs"], "rollback", {"to_version": version}
-                )
-            except CommitConflict:
-                continue
+        dirs = self.manifest(version)["dirs"]
+        return self._commit(
+            "rollback", {"to_version": version}, lambda head: dirs, pin=False
+        )
 
     # ---- named refs: branches and tags ------------------------------
     #
@@ -538,19 +585,11 @@ class ManifestedTable:
     ) -> None:
         """CAS the ref from generation ``expect_gen`` to a new record;
         a concurrent update collides on the generation filename."""
-        rd = self._ref_dir(name)
-        tmp = os.path.join(rd, f".tmp-{uuid.uuid4().hex[:12]}")
-        with open(tmp, "w") as f:
-            json.dump({"name": name, "version": version, "kind": kind}, f)
-        target = os.path.join(rd, f"g{expect_gen + 1:06d}.json")
-        try:
-            os.link(tmp, target)
-        except FileExistsError:
-            raise CommitConflict(
-                f"ref {name} advanced past generation {expect_gen}"
-            )
-        finally:
-            os.unlink(tmp)
+        _link_exclusive(
+            os.path.join(self._ref_dir(name), f"g{expect_gen + 1:06d}.json"),
+            {"name": name, "version": version, "kind": kind},
+            f"ref {name} advanced past generation {expect_gen}",
+        )
 
     def branch_create(
         self, name: str, version: int | None = None, kind: str = "branch"
@@ -598,8 +637,6 @@ class ManifestedTable:
         if self._ref_tip(name)[1]["kind"] != "branch":
             raise CommitConflict(f"ref {name} is a tag (immutable)")
         batch = self.stage_batch(df)
-        new_stats = self._compute_stats(batch)
-        new_bloom = self._compute_bloom(batch)
         while True:
             gen, rec = self._ref_tip(name)
             if rec["kind"] != "branch":
@@ -609,23 +646,13 @@ class ManifestedTable:
                     os.path.join(self.table_dir, batch), ignore_errors=True
                 )
                 raise CommitConflict(f"ref {name} is a tag (immutable)")
-            base = self.manifest(rec["version"])
-            dirs = base["dirs"] + [batch]
-            stats = {**base.get("stats", {}), batch: new_stats}
-            bloom = {**base.get("bloom", {}), batch: new_bloom}
-            while True:
-                try:
-                    v = self._publish(
-                        dirs,
-                        "append",
-                        {**(meta or {}), "ref": name,
-                         "ref_base": rec["version"]},
-                        stats=stats,
-                        bloom=bloom,
-                    )
-                    break
-                except CommitConflict:
-                    continue  # linear version name taken; renumber
+            dirs = self.manifest(rec["version"])["dirs"] + [batch]
+            v = self._commit(
+                "append",
+                {**(meta or {}), "ref": name, "ref_base": rec["version"]},
+                lambda head: dirs,
+                pin=False,  # the list is the branch tip's; the ref CAS guards it
+            )
             try:
                 self._ref_set(name, v, expect_gen=gen, kind="branch")
                 return v
@@ -670,77 +697,60 @@ class ManifestedTable:
 
     # ---- TTL expiry --------------------------------------------------
 
+    def _ttl_split(
+        self, head: dict, col: str, cutoff
+    ) -> tuple[list[str], list[str], list[str]]:
+        """Split ``head``'s dirs for a TTL on ``col < cutoff`` into
+        (expired, straddling, kept) by their zone maps: expired dirs'
+        max is below the cutoff, kept dirs' min is at or past it.  Stats
+        and cutoff are compared as :func:`_zone_key` decodes them, as in
+        :meth:`prune_dirs`; a dir without a zone map for ``col``, or
+        whose stats do not compare with the cutoff, straddles (its rows
+        must be looked at)."""
+        cut = _zone_key(cutoff)
+        stats = head.get("stats", {})
+        expired, straddling, kept = [], [], []
+        for d in head["dirs"]:
+            try:
+                mn, mx = (_zone_key(v) for v in stats.get(d, {}).get(col))
+                side = expired if mx < cut else kept if mn >= cut else straddling
+            except TypeError:  # no stats, or stats of another type
+                side = straddling
+            side.append(d)
+        return expired, straddling, kept
+
     def apply_ttl(self, spark: SparkSession, col: str, cutoff) -> dict:
         """ClickHouse-style table TTL (``TTL ts + INTERVAL ...``):
         expire every row with ``col < cutoff`` in one snapshot
         publish.  Three-way classification per batch dir via the
-        manifest's zone maps — METADATA-ONLY drop when the batch max
-        is below the cutoff (no read, no write, the common case once
-        data is time-clustered), untouched carry-over when the batch
-        min is already past it, and a REWRITE only for dirs straddling
-        the cutoff (or lacking stats).  Old dirs stay reachable
-        through time travel until vacuum, like every other
-        replace-style op.  Publishes op='ttl' pinned to the snapshot
-        it classified (parent CAS), retrying with staged rewrites
-        reused, so a concurrent append can never be silently expired
-        against a stale dirs list."""
-        from pyspark.sql import functions as F
+        manifest's zone maps (:meth:`_ttl_split`) — METADATA-ONLY drop
+        when the batch max is below the cutoff (no read, no write, the
+        common case once data is time-clustered), untouched carry-over
+        when the batch min is already past it, and a REWRITE only for
+        dirs straddling the cutoff (or lacking stats), each in its own
+        partition spec.  Old dirs stay reachable through time travel
+        until vacuum, like every other replace-style op.  Publishes
+        op='ttl' pinned to the snapshot it classified, retrying with
+        staged rewrites reused, so a concurrent append can never be
+        silently expired against a stale dirs list."""
+        keep = F.col(col) >= F.lit(cutoff)
+        rewrite = functools.cache(lambda d: self._rewrite(spark, d, keep))
+        split: tuple[list[str], list[str], list[str]] = ([], [], [])
 
-        cut_key = _json_safe(cutoff)
-        rewritten_cache: dict[str, str | None] = {}
-        while True:
-            m = self.manifest()
-            stats = m.get("stats", {})
-            dropped, kept, rewrite = [], [], []
-            for d in m["dirs"]:
-                rng = stats.get(d, {}).get(col)
-                if rng is None:
-                    rewrite.append(d)  # no zone map → must look at rows
-                elif rng[1] < cut_key:
-                    dropped.append(d)
-                elif rng[0] >= cut_key:
-                    kept.append(d)
-                else:
-                    rewrite.append(d)
-            new_dirs = list(kept)
-            new_stats = {d: stats[d] for d in kept if d in stats}
-            new_bloom = {
-                d: b
-                for d, b in m.get("bloom", {}).items()
-                if d in kept
-            }
-            for d in rewrite:
-                if d not in rewritten_cache:
-                    df = spark.read.parquet(
-                        os.path.join(self.table_dir, d)
-                    ).filter(F.col(col) >= F.lit(cutoff))
-                    if df.isEmpty():
-                        rewritten_cache[d] = None
-                    else:
-                        nd = self.stage_batch(df)
-                        rewritten_cache[d] = nd
-                nd = rewritten_cache[d]
-                if nd is not None:
-                    new_dirs.append(nd)
-                    new_stats[nd] = self._compute_stats(nd)
-                    new_bloom[nd] = self._compute_bloom(nd)
-            try:
-                v = self._publish(
-                    new_dirs,
-                    "ttl",
-                    {"col": col, "cutoff": _json_safe(cutoff)},
-                    parent=m["version"],
-                    stats=new_stats,
-                    bloom=new_bloom,
-                )
-            except CommitConflict:
-                continue  # classify again against the fresh head
-            return {
-                "version": v,
-                "dropped_metadata_only": sorted(dropped),
-                "rewritten": sorted(d for d in rewrite),
-                "kept": sorted(kept),
-            }
+        def dirs_for(head):
+            nonlocal split
+            split = self._ttl_split(head, col, cutoff)
+            _, straddling, kept = split
+            return kept + [n for n in map(rewrite, straddling) if n]
+
+        v = self._commit("ttl", {"col": col, "cutoff": _json_safe(cutoff)}, dirs_for)
+        expired, straddling, kept = split
+        return {
+            "version": v,
+            "dropped_metadata_only": sorted(expired),
+            "rewritten": sorted(straddling),
+            "kept": sorted(kept),
+        }
 
     def apply_ttl_rollup(
         self, spark: SparkSession, col: str, cutoff, agg_builder
@@ -751,74 +761,50 @@ class ManifestedTable:
         schema, e.g. one row per (day, type) with value summed), which
         is staged as one batch alongside the surviving recent rows.
         Zone maps classify dirs exactly like apply_ttl: dirs entirely
-        past the cutoff carry over by name; whole-expired and
+        past the cutoff carry over by name, straddling dirs are
+        rewritten to their surviving rows, and whole-expired and
         straddling dirs contribute their old rows to ONE global
         aggregation (stronger than ClickHouse's per-part rollup — no
         partial groups survive).  Publish is parent-pinned with staged
         work reused on conflict."""
-        from pyspark.sql import functions as F
+        keep = F.col(col) >= F.lit(cutoff)
+        rewrite = functools.cache(lambda d: self._rewrite(spark, d, keep))
 
-        cut_key = _json_safe(cutoff)
-        staged: dict[tuple[str, ...], tuple[str | None, list[str]]] = {}
-        while True:
-            m = self.manifest()
-            stats = m.get("stats", {})
-            old_side, kept = [], []
-            for d in m["dirs"]:
-                rng = stats.get(d, {}).get(col)
-                if rng is not None and rng[0] >= cut_key:
-                    kept.append(d)
-                else:
-                    old_side.append(d)  # expired or straddling or no stats
-            key = tuple(sorted(old_side))
-            if key not in staged:
-                new_dirs_for_old: list[str] = []
-                rolled_dir: str | None = None
-                if old_side:
-                    paths = [
-                        os.path.join(self.table_dir, d) for d in old_side
-                    ]
-                    src = spark.read.option("mergeSchema", "true").parquet(
-                        *paths
+        rolled: dict[tuple[str, ...], str | None] = {}
+        split: tuple[list[str], list[str], list[str]] = ([], [], [])
+
+        def dirs_for(head):
+            nonlocal split
+            split = self._ttl_split(head, col, cutoff)
+            expired, straddling, kept = split
+            old = tuple(sorted(expired + straddling))
+            if old and old not in rolled:
+                # The expired rows are read through the whole snapshot,
+                # so the aggregate is typed as the table reads (a
+                # partition column of an old hive-partitioned dir alone
+                # would read with its inferred type); kept dirs hold no
+                # row below the cutoff.
+                rolled[old] = self._stage_rows(
+                    agg_builder(
+                        self._read_dirs(spark, head["dirs"]).filter(
+                            F.col(col) < F.lit(cutoff)
+                        )
                     )
-                    survivors = src.filter(F.col(col) >= F.lit(cutoff))
-                    if not survivors.isEmpty():
-                        new_dirs_for_old.append(self.stage_batch(survivors))
-                    rolled = agg_builder(
-                        src.filter(F.col(col) < F.lit(cutoff))
-                    )
-                    if not rolled.isEmpty():
-                        rolled_dir = self.stage_batch(rolled)
-                staged[key] = (rolled_dir, new_dirs_for_old)
-            rolled_dir, survivor_dirs = staged[key]
-            new_dirs = list(kept) + list(survivor_dirs)
-            if rolled_dir is not None:
-                new_dirs.append(rolled_dir)
-            new_stats = {d: stats[d] for d in kept if d in stats}
-            new_bloom = {
-                d: b for d, b in m.get("bloom", {}).items() if d in kept
-            }
-            for d in new_dirs:
-                if d not in new_stats and d not in kept:
-                    new_stats[d] = self._compute_stats(d)
-                    new_bloom[d] = self._compute_bloom(d)
-            try:
-                v = self._publish(
-                    new_dirs,
-                    "ttl_rollup",
-                    {"col": col, "cutoff": _json_safe(cutoff)},
-                    parent=m["version"],
-                    stats=new_stats,
-                    bloom=new_bloom,
                 )
-            except CommitConflict:
-                continue
-            return {
-                "version": v,
-                "collapsed_dirs": sorted(old_side),
-                "rolled_dir": rolled_dir,
-                "kept": sorted(kept),
-            }
+            survivors = [n for n in map(rewrite, straddling) if n]
+            return kept + survivors + [n for n in (rolled.get(old),) if n]
+
+        v = self._commit(
+            "ttl_rollup", {"col": col, "cutoff": _json_safe(cutoff)}, dirs_for
+        )
+        expired, straddling, kept = split
+        old = tuple(sorted(expired + straddling))
+        return {
+            "version": v,
+            "collapsed_dirs": list(old),
+            "rolled_dir": rolled.get(old),
+            "kept": sorted(kept),
+        }
 
     # ---- reads -----------------------------------------------------
 
@@ -833,9 +819,13 @@ class ManifestedTable:
         Returns None for an empty table. mergeSchema for the same
         schema-evolution tolerance as ParquetLoader.read; a declared
         ``schema`` reads just those columns instead, with no footer
-        merge job.  Batch dirs are planned by :meth:`_read_dirs`, so a
-        snapshot with hive-partitioned batches (partition evolution)
-        reads as :meth:`read_evolved` describes."""
+        merge job.
+
+        Partition specs may EVOLVE across commits (the Iceberg
+        partition-evolution read model): batches staged flat, batches
+        partitioned by one spec, and batches partitioned by a later spec
+        coexist in one snapshot, each planned with its own layout by
+        :meth:`_read_dirs`."""
         return self._read_dirs(spark, self.manifest(version)["dirs"], schema)
 
     def batch_spec(self, name: str) -> tuple[str, ...]:
@@ -848,20 +838,6 @@ class ManifestedTable:
                 return tuple(json.load(fh).get("partition_by", ()))
         except OSError:
             return ()
-
-    def read_evolved(
-        self,
-        spark: SparkSession,
-        version: int | None = None,
-        schema: T.StructType | None = None,
-    ) -> DataFrame | None:
-        """Snapshot read across EVOLVING partition specs (the Iceberg
-        partition-evolution read model): batches staged flat, batches
-        partitioned by one spec, and batches partitioned by a later
-        spec coexist in one table.  Every snapshot read plans its dirs
-        this way (:meth:`_read_dirs`); this name stays for callers that
-        want to say so."""
-        return self.read(spark, version, schema)
 
     def _read_dirs(
         self,
@@ -882,16 +858,12 @@ class ManifestedTable:
         groups: dict[tuple[str, ...], list[str]] = {}
         for d in dirs:
             groups.setdefault(self.batch_spec(d), []).append(d)
-        parts = [
+        return _union_by_name([
             _reader(spark, schema).parquet(
                 *(os.path.join(self.table_dir, d) for d in same_spec)
             )
             for _, same_spec in sorted(groups.items())
-        ]
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p, allowMissingColumns=True)
-        return out
+        ])
 
     def read_with_commit_seq(
         self,
@@ -903,10 +875,9 @@ class ManifestedTable:
         commit that first introduced its batch dir — derived from the
         manifest chain, NOT a physical column in the data. This is the
         merge-on-read primitive: latest-per-key resolution orders by
-        ``seq_col`` (see x9). One lazy per-dir scan unioned — same
-        planning as ``read`` plus a constant column per dir."""
-        from pyspark.sql import functions as F
-
+        ``seq_col`` (see x9). One :meth:`_read_dirs` read per commit
+        version, with that version as a constant column, unioned by
+        name."""
         v = self.head_version() if version is None else version
         first_seen: dict[str, int] = {}
         for ver in self.versions():
@@ -914,19 +885,15 @@ class ManifestedTable:
                 break
             for d in self.manifest(ver)["dirs"]:
                 first_seen.setdefault(d, ver)
-        dirs = self.manifest(v)["dirs"]
-        if not dirs:
+        by_seq: dict[int, list[str]] = {}
+        for d in self.manifest(v)["dirs"]:
+            by_seq.setdefault(first_seen[d], []).append(d)
+        if not by_seq:
             return None
-        parts = [
-            spark.read.option("mergeSchema", "true")
-            .parquet(os.path.join(self.table_dir, d))
-            .withColumn(seq_col, F.lit(first_seen[d]))
-            for d in dirs
-        ]
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p, allowMissingColumns=True)
-        return out
+        return _union_by_name([
+            self._read_dirs(spark, dirs).withColumn(seq_col, F.lit(seq))
+            for seq, dirs in sorted(by_seq.items())
+        ])
 
     # ---- maintenance ----------------------------------------------
 
@@ -1053,22 +1020,18 @@ class ManifestedTable:
                 shutil.rmtree(staged)
         # Unlike append, compaction must replace EXACTLY the snapshot it
         # rewrote: if any writer published after ``base``, committing
-        # the compacted dir would silently drop their rows. Pinning
-        # parent=base makes any intervening publish collide on the
-        # version file name; on conflict, abandon the orphan dir (for
-        # vacuum) — the next compaction run picks up the new head.
-        try:
-            return self._publish(
-                names,
-                "compact",
-                {},
-                parent=base,
-                stats={n: self._compute_stats(n) for n in names},
-            )
-        except CommitConflict:
+        # the compacted dir would silently drop their rows. So the
+        # commit is abandoned once the head is past ``base`` (the pin
+        # makes a publish racing it collide), the rewrite is removed,
+        # and the next compaction run picks up the new head.
+        v = self._commit(
+            "compact", {}, lambda head: names if head["version"] == base else None
+        )
+        if v is None:
             for n in names:
                 shutil.rmtree(os.path.join(self.table_dir, n))
             return self.head_version()
+        return v
 
     def merge(
         self,
@@ -1083,8 +1046,8 @@ class ManifestedTable:
         is staged as a fresh batch and published with ``parent``
         pinned to the snapshot it merged against — a concurrent append
         between our read and publish collides on the version name and
-        the merge retries against the new head (staged data from the
-        failed attempt is left for vacuum). Readers always see either
+        the merge retries against the new head (the failed attempt's
+        staged batch is removed). Readers always see either
         the pre-merge or the post-merge snapshot, never a mix.
 
         Scale note: CoW rewrites the whole snapshot, the right trade
@@ -1092,29 +1055,25 @@ class ManifestedTable:
         tables, partition-scope the rewrite (sources/merge.py does
         this for the plain parquet loader) or layer the x9
         merge-on-read view and compact lazily."""
-        keep_keys = list(keys)
-        while True:
-            base = self.head_version()
-            current = self.read(spark)
+        keys = list(keys)
+        name = None
+
+        def dirs_for(head):
+            nonlocal name
+            if name is not None:  # the last attempt lost to a newer head
+                shutil.rmtree(os.path.join(self.table_dir, name))
+            current = self._read_dirs(spark, head["dirs"])
             if current is None:
                 merged = source
             else:
                 remaining = current.join(
-                    source.select(*keep_keys).distinct(), keep_keys, "left_anti"
+                    source.select(*keys).distinct(), keys, "left_anti"
                 )
                 merged = remaining.unionByName(source)
             name = self.stage_batch(merged)
-            try:
-                return self._publish(
-                    [name],
-                    "merge",
-                    meta or {},
-                    parent=base,
-                    stats={name: self._compute_stats(name)},
-                )
-            except CommitConflict:
-                shutil.rmtree(os.path.join(self.table_dir, name))
-                continue  # re-read the new head and re-merge
+            return [name]
+
+        return self._commit("merge", meta or {}, dirs_for)
 
     def delete_rows(
         self,
@@ -1130,46 +1089,29 @@ class ManifestedTable:
         and remain byte-identical (the property tests assert). This is
         the Delta/Iceberg delete-with-file-skipping model: cost scales
         with the data that actually holds the subject, not the table.
-        Requires ``col`` in stats_cols for selectivity (dirs without
-        stats are conservatively rewritten). Publishes with ``parent``
-        pinned — a concurrent append collides and the delete retries
-        against the new head, so the erased rows can never resurface
-        through a lost-update race."""
-        from pyspark.sql import functions as F
+        Each rewritten dir keeps its own partition spec; one left with
+        no rows is dropped.  Requires ``col`` in stats_cols for
+        selectivity (dirs without stats are conservatively rewritten).
+        Publishes with ``parent`` pinned — a concurrent append collides
+        and the delete retries against the new head (rewrites reused),
+        so the erased rows can never resurface through a lost-update
+        race.  Returns the head unchanged when no dir can hold the
+        value."""
+        keep = ~F.col(col).eqNullSafe(F.lit(value))
+        rewrite = functools.cache(lambda d: self._rewrite(spark, d, keep))
 
-        while True:
-            base = self.head_version()
-            m = self.manifest(base)
-            touched, untouched = self.prune_dirs(col, value, value, base)
+        def dirs_for(head):
+            touched, untouched = self.prune_dirs(col, value, value, head["version"])
             if not touched:
-                return base  # value provably absent — nothing to do
-            paths = [os.path.join(self.table_dir, d) for d in touched]
-            remaining = (
-                spark.read.option("mergeSchema", "true")
-                .parquet(*paths)
-                .filter(~F.col(col).eqNullSafe(F.lit(value)))
-            )
-            name = self.stage_batch(remaining)
-            dirs = untouched + [name]
-            stats = {
-                **{
-                    d: s
-                    for d, s in m.get("stats", {}).items()
-                    if d in untouched
-                },
-                name: self._compute_stats(name),
-            }
-            try:
-                return self._publish(
-                    dirs,
-                    "delete",
-                    {**(meta or {}), "col": col, "value": _json_safe(value)},
-                    parent=base,
-                    stats=stats,
-                )
-            except CommitConflict:
-                shutil.rmtree(os.path.join(self.table_dir, name))
-                continue  # re-read the new head and re-target
+                return None  # value provably absent — nothing to do
+            return untouched + [n for n in map(rewrite, touched) if n]
+
+        v = self._commit(
+            "delete",
+            {**(meta or {}), "col": col, "value": _json_safe(value)},
+            dirs_for,
+        )
+        return self.head_version() if v is None else v
 
     def clone_at(
         self, dest_dir: str, version: int | None = None
@@ -1183,7 +1125,13 @@ class ManifestedTable:
         do not follow. The dev/test idiom: fork a production snapshot
         instantly, mutate the fork freely."""
         m = self.manifest(version)
-        clone = ManifestedTable(dest_dir, stats_cols=self.stats_cols)
+        clone = ManifestedTable(
+            dest_dir,
+            stats_cols=self.stats_cols,
+            bloom_cols=self.bloom_cols,
+            bloom_bits=self.bloom_bits,
+            bloom_hashes=self.bloom_hashes,
+        )
         try:
             for d in m["dirs"]:
                 src = os.path.join(self.table_dir, d)
@@ -1205,11 +1153,11 @@ class ManifestedTable:
             # don't leave a half-created clone tree behind
             shutil.rmtree(dest_dir, ignore_errors=True)
             raise
-        clone._publish(
-            list(m["dirs"]),
+        clone._commit(
             "clone",
             {"source": self.table_dir, "source_version": m["version"]},
-            stats=dict(m.get("stats", {})),
+            lambda head: m["dirs"],
+            pin=False,
         )
         return clone
 
@@ -1308,6 +1256,15 @@ class ManifestedTable:
             return None
         return df.filter(F.col(col) == F.lit(value))
 
+    def _newest_meta(self, key: str):
+        """``meta[key]`` of the newest version that records one (None
+        when no version does)."""
+        for v in reversed(self.versions()):
+            value = self.manifest(v)["meta"].get(key)
+            if value is not None:
+                return value
+        return None
+
     def vacuum(
         self, keep_versions: int = 1, min_age_seconds: float = 3600.0
     ) -> list[str]:
@@ -1350,14 +1307,6 @@ class ManifestedTable:
 # ---- ExtractResult integration ------------------------------------
 
 from dataclasses import dataclass  # noqa: E402
-
-
-def _staged_rows(batch_dir: str) -> int:
-    """Row count of a staged batch from parquet footers only (driver-
-    side metadata, no Spark job)."""
-    import pyarrow.parquet as pq
-
-    return sum(pq.read_metadata(f).num_rows for f in data_files(batch_dir))
 
 
 from .extract import (  # noqa: E402
@@ -1409,7 +1358,7 @@ class ManifestLoader:
         """The destination table; its zone maps always cover the
         iterate column, which :meth:`load` prunes the boundary read on."""
         name = table.target_name or table.name
-        stats = (*getattr(table, "stats_columns", ()), table.iterate_column)
+        stats = (*table.stats_columns, table.iterate_column)
         return ManifestedTable(
             os.path.join(self.dest_dir, f"{name}.mfst"),
             stats_cols=tuple(dict.fromkeys(c for c in stats if c)),
@@ -1417,12 +1366,7 @@ class ManifestLoader:
 
     def last_point(self, table: TableConfig) -> str | None:
         """Watermark of the newest commit that recorded one."""
-        mt = self.table(table)
-        for v in reversed(mt.versions()):
-            lp = mt.manifest(v)["meta"].get("last_point")
-            if lp is not None:
-                return lp
-        return None
+        return self.table(table)._newest_meta("last_point")
 
     def load(
         self, spark: SparkSession, table: TableConfig, result: ExtractResult
@@ -1445,51 +1389,31 @@ class ManifestLoader:
             return mt._read_dirs(spark, kept, schema)
 
         df = prepare_batch(result, table, read_dest)
-        name = mt.stage_batch(df)
-        if result.write_mode == "append" and _staged_rows(
-            os.path.join(mt.table_dir, name)
-        ) == 0:
+        overwrite = result.write_mode == "overwrite"
+        name = mt.stage_batch(df) if overwrite else mt._stage_rows(df)
+        if name is None:
             # Pure boundary re-read (every batch row was already in the
             # destination): publishing would only churn versions, and
             # the watermark cannot have advanced — dedup removes only
             # rows the destination already holds, all ≤ the stored
-            # last_point. Footer row counts are a driver-side metadata
-            # read, NOT a Spark action, so the write-time observation
-            # is never consumed by this check.
-            shutil.rmtree(os.path.join(mt.table_dir, name))
+            # last_point. The row count is read from the staged footers,
+            # so the write-time observation is never consumed by it.
             return None
         meta = {"last_point": result.resolve_last_point(), "rows": result.rows}
-        new_stats = mt._compute_stats(name)
-        while True:
-            # parent is pinned to the head the dirs list was merged
-            # against, as in ManifestedTable.commit_append: a commit
-            # landing after this read makes the publish collide and the
-            # retry re-merge, instead of dropping it from the new dirs.
-            head = mt.manifest()
-            if result.write_mode == "overwrite":
-                dirs, stats = [name], {name: new_stats}
-            else:
-                dirs = head["dirs"] + [name]
-                stats = {**head.get("stats", {}), name: new_stats}
-            try:
-                v = mt._publish(
-                    dirs,
-                    result.write_mode,
-                    meta,
-                    parent=head["version"],
-                    stats=stats,
-                )
-                if (
-                    self.auto_compact_max_dirs is not None
-                    and len(dirs) > self.auto_compact_max_dirs
-                ):
-                    # best-effort maintenance AFTER the tick's commit is
-                    # durable; a concurrent writer makes compact abort,
-                    # never the reverse
-                    mt.compact(spark, target_files=1)
-                return v
-            except CommitConflict:
-                continue
+        v = mt._commit(
+            result.write_mode,
+            meta,
+            lambda head: [name] if overwrite else head["dirs"] + [name],
+        )
+        if (
+            self.auto_compact_max_dirs is not None
+            and len(mt.manifest(v)["dirs"]) > self.auto_compact_max_dirs
+        ):
+            # best-effort maintenance AFTER the tick's commit is
+            # durable; a concurrent writer makes compact abort, never
+            # the reverse
+            mt.compact(spark, target_files=1)
+        return v
 
 
 class ManifestStreamSink:
@@ -1508,11 +1432,7 @@ class ManifestStreamSink:
         self.table = ManifestedTable(table_dir)
 
     def last_batch_id(self) -> int | None:
-        for v in reversed(self.table.versions()):
-            b = self.table.manifest(v)["meta"].get("batch_id")
-            if b is not None:
-                return b
-        return None
+        return self.table._newest_meta("batch_id")
 
     def handle(self, batch_df: DataFrame, batch_id: int) -> bool:
         """foreachBatch body; returns False for a skipped re-delivery."""
@@ -1617,18 +1537,12 @@ class ManifestCatalog:
         for each other's tables and the second publish would silently
         roll one table's pointer back."""
         version = parent + 1
-        tmp = os.path.join(self._dir, f".tmp-{uuid.uuid4().hex[:12]}.json")
-        with open(tmp, "w") as f:
-            json.dump(
-                {"version": version, "tables": tables, "meta": meta}, f
-            )
-        try:
-            os.link(tmp, self._path(version))
-            return version
-        except FileExistsError:
-            raise CommitConflict(f"catalog version {version} already published")
-        finally:
-            os.unlink(tmp)
+        _link_exclusive(
+            self._path(version),
+            {"version": version, "tables": tables, "meta": meta},
+            f"catalog version {version} already published",
+        )
+        return version
 
     def commit_multi(
         self,

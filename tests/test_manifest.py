@@ -1185,10 +1185,12 @@ def test_compact_crash_between_stage_and_publish(spark, mt):
     head_before = mt.head_version()
     orig_publish = mt._publish
 
-    def crashing_publish(dirs, op, meta, parent=None, stats=None):
+    def crashing_publish(dirs, op, meta, parent=None, stats=None, bloom=None):
         if op == "compact":
             raise RuntimeError("simulated crash before swap-in")
-        return orig_publish(dirs, op, meta, parent=parent, stats=stats)
+        return orig_publish(
+            dirs, op, meta, parent=parent, stats=stats, bloom=bloom
+        )
 
     mt._publish = crashing_publish
     try:
@@ -1639,7 +1641,7 @@ def test_partition_evolution_reads_and_prunes(spark, tmp_path):
     specs = sorted(t.batch_spec(d) for d in t.manifest()["dirs"])
     assert specs == [(), ("day",), ("day", "typ")]
     assert t.batch_spec(flat_dir) == ()
-    out = t.read_evolved(spark)
+    out = t.read(spark)
     assert out.count() == 90
     got = sorted(tuple(r) for r in out.select("k", "val").collect())
     assert got == [(i, 2 * i) for i in range(90)]
@@ -1653,7 +1655,7 @@ def test_partition_evolution_reads_and_prunes(spark, tmp_path):
 def test_declared_schema_read_spans_evolved_specs(spark, tmp_path):
     """The boundary read of an append declares its schema; over a
     snapshot whose batches have different partition specs it goes
-    through read_evolved too, and runs no footer-inference job."""
+    through the per-spec read too, and runs no footer-inference job."""
     from pyspark.sql import types as T
 
     t = ManifestedTable(str(tmp_path / "ev"))
@@ -1673,3 +1675,152 @@ def test_declared_schema_read_spans_evolved_specs(spark, tmp_path):
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     assert sc.statusTracker().getJobIdsForGroup(group) == []
     assert sorted(r.k for r in out.select("k").collect()) == list(range(60))
+
+
+# ---- one commit path: metadata invariant, TTL classifier, evolved specs ----
+
+
+@pytest.mark.parametrize("cutoff", ["2024-01-10 06:00:00", "datetime"])
+@pytest.mark.parametrize("op", ["apply_ttl", "apply_ttl_rollup"])
+def test_ttl_cutoff_compares_as_instant(spark, tmp_path, op, cutoff):
+    """A TTL cutoff in ``str(datetime)`` form expires the same rows as
+    the datetime: three same-day rows, each hours before the cutoff, all
+    expire.  Compared as raw strings, ``'2024-01-10 06:00:00'`` sorted
+    below the stored ``'2024-01-10T…'`` zone map, so the dir was kept
+    whole."""
+    from datetime import datetime
+
+    if cutoff == "datetime":
+        cutoff = datetime(2024, 1, 10, 6)
+    t = ManifestedTable(str(tmp_path / "ts.mfst"), stats_cols=("ts",))
+    t.commit_append(
+        spark.createDataFrame(
+            [(datetime(2024, 1, 10, h), 1) for h in (1, 3, 5)],
+            "ts timestamp_ntz, v long",
+        )
+    )
+    if op == "apply_ttl":
+        s = t.apply_ttl(spark, "ts", cutoff)
+        assert len(s["dropped_metadata_only"]) == 1 and not s["kept"]
+        assert t.read(spark) is None
+    else:
+        s = t.apply_ttl_rollup(
+            spark,
+            "ts",
+            cutoff,
+            lambda old: old.agg(F.max("ts").alias("ts"), F.sum("v").alias("v")),
+        )
+        assert not s["kept"] and s["rolled_dir"]
+        got = [tuple(r) for r in t.read(spark).collect()]
+        assert got == [(datetime(2024, 1, 10, 5), 3)]
+
+
+def _bloomed_loader_table(spark, sf_dir, tmp_path):
+    """Two loader ticks into a destination whose table also declares a
+    bloom column."""
+
+    class BloomedLoader(ManifestLoader):
+        def table(self, table):
+            mt = super().table(table)
+            return ManifestedTable(
+                mt.table_dir, stats_cols=mt.stats_cols, bloom_cols=("user_id",)
+            )
+
+    table = TableConfig(
+        name="events",
+        replication_method="incremental",
+        iterate_column="event_id",
+        iterate_column_type="int",
+        dedup_keys=("event_id",),
+    )
+    loader = BloomedLoader(str(tmp_path / "dest"))
+    runner = IncrementalRunner(extractor=ParquetExtractor(sf_dir), loader=loader)
+    for cut in (100, 200):
+        runner.run_once(spark, table, source_filter=F.col("event_id") < cut)
+    return loader.table(table)
+
+
+def _roll_by_u(old):
+    return old.groupBy("u").agg(F.min("k").alias("k"))
+
+
+# op name → op(table, spark, df, tmp_path), run on a table with zone maps
+# on k and blooms on u
+_WRITE_OPS = {
+    "append": lambda t, spark, df, tmp: t.commit_append(df.filter("k < 5")),
+    "overwrite": lambda t, spark, df, tmp: t.commit_overwrite(df.filter("k < 5")),
+    "rollback": lambda t, spark, df, tmp: (
+        t.commit_overwrite(df.filter("k < 5")),
+        t.rollback(t.head_version() - 1),
+    ),
+    "merge": lambda t, spark, df, tmp: t.merge(
+        spark, df.filter("k < 3").withColumn("u", F.lit(99).cast("long")), keys=("k",)
+    ),
+    "delete_rows": lambda t, spark, df, tmp: t.delete_rows(spark, "k", 15),
+    "compact": lambda t, spark, df, tmp: t.compact(spark),
+    "compact_sort_by": lambda t, spark, df, tmp: t.compact(spark, target_files=2, sort_by="k"),
+    "compact_split_dirs": lambda t, spark, df, tmp: t.compact(
+        spark, target_files=3, sort_by="k", split_dirs=True
+    ),
+    "apply_ttl": lambda t, spark, df, tmp: t.apply_ttl(spark, "k", 15),
+    "apply_ttl_rollup": lambda t, spark, df, tmp: t.apply_ttl_rollup(spark, "k", 15, _roll_by_u),
+    "clone_at": lambda t, spark, df, tmp: t.clone_at(str(tmp / "clone")),
+    "commit_append_on": lambda t, spark, df, tmp: (
+        t.branch_create("dev"),
+        t.commit_append_on("dev", df.filter("k < 5")),
+    ),
+}
+
+
+@pytest.mark.parametrize("op", [*_WRITE_OPS, "ManifestLoader.load"])
+def test_every_write_op_records_zone_maps_and_blooms(spark, sf_dir, tmp_path, op):
+    """Whatever op publishes it, a manifest carries the zone map and the
+    bloom of every dir it lists: dirs the op carries over keep theirs,
+    dirs it writes or re-exposes get theirs."""
+    if op == "ManifestLoader.load":
+        t = published = _bloomed_loader_table(spark, sf_dir, tmp_path)
+    else:
+        t = ManifestedTable(
+            str(tmp_path / "t.mfst"), stats_cols=("k",), bloom_cols=("u",)
+        )
+        df = spark.range(0, 30).select(
+            F.col("id").alias("k"), (F.col("id") * 7 % 11).alias("u")
+        )
+        for lo in (0, 10, 20):
+            t.commit_append(df.filter(F.col("k").between(lo, lo + 9)))
+        out = _WRITE_OPS[op](t, spark, df, tmp_path)
+        published = out if op == "clone_at" else t
+    m = published.manifest()
+    assert m["dirs"]
+    for d in m["dirs"]:
+        assert set(m["stats"].get(d, {})) == set(t.stats_cols), d
+        assert set(m.get("bloom", {}).get(d, {})) == set(t.bloom_cols), d
+
+
+@pytest.mark.parametrize("op", ["delete_rows", "apply_ttl", "apply_ttl_rollup"])
+def test_rewrites_keep_each_dirs_partition_spec(spark, tmp_path, op):
+    """A table with a hive-partitioned batch (``partition_by=("p",)``)
+    and a flat one: ops that rewrite dirs read each through its own
+    spec and restage it with that spec, so the rows are right and ``p``
+    reads with the type it had."""
+    t = ManifestedTable(str(tmp_path / "pe.mfst"), stats_cols=("k",))
+    df = spark.range(0, 20).select(F.col("id").alias("k"), (F.col("id") % 2).alias("p"))
+    t.commit_append(df.filter("k < 10"), partition_by=("p",))
+    t.commit_append(df.filter("k >= 10"))
+    p_type = t.read(spark).schema["p"].dataType
+    if op == "delete_rows":
+        t.delete_rows(spark, "p", 1)  # no zone map for p: both dirs rewritten
+        expect = [(k, 0) for k in range(0, 20, 2)]
+    elif op == "apply_ttl":
+        s = t.apply_ttl(spark, "k", 5)
+        assert len(s["rewritten"]) == 1 and len(s["kept"]) == 1
+        expect = [(k, k % 2) for k in range(5, 20)]
+    else:
+        s = t.apply_ttl_rollup(
+            spark, "k", 5, lambda old: old.groupBy("p").agg(F.min("k").alias("k"))
+        )
+        assert len(s["kept"]) == 1 and s["rolled_dir"]
+        expect = [(0, 0), (1, 1)] + [(k, k % 2) for k in range(5, 20)]
+    out = t.read(spark)
+    assert out.schema["p"].dataType == p_type
+    assert sorted(tuple(r) for r in out.select("k", "p").collect()) == expect
