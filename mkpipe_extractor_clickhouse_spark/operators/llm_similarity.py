@@ -4,10 +4,14 @@ baseline, partition-local top-k merge (the distributed form, public
 REPOSE/ICDE'21 pattern per PAPERS.md), label centroids,
 nearest-centroid assignment, and an IVF-bucketed ANN scale path.
 
-Vector math is higher-order array built-ins (zip_with / aggregate) —
-JVM-side, codegen'd — except the partition-local heap (l4), which is a
-mapInPandas with NumPy dot products (Arrow-batched, the sanctioned
-slow path for per-partition imperative logic).
+Vector math takes two forms.  The simple scans (cosine to a query,
+label centroids, nearest centroid, IVF) use higher-order array
+built-ins (zip_with / aggregate), which Spark interprets row by row
+since it does not codegen them.  The k-means fit and scoring (l20), the
+PQ codebooks and codes (l21, l21b) and the top-k heaps (l4, l4c) run
+as Arrow-batched NumPy kernels (mapInArrow).  Every Lloyd kernel folds
+its distances through one helper, _d2_matrix, whose in-order fold keeps
+them bit-identical to the JVM form the oracles track.
 """
 
 from __future__ import annotations
@@ -935,6 +939,32 @@ def _vector_matrix_fn(dim: int):
     return to_matrix
 
 
+def _d2_matrix_fn():
+    """Factory of _d2_matrix, so the helper pickles by value into the
+    kernels' closures (like _vector_matrix_fn's decoder)."""
+
+    def d2_matrix(X, C):
+        """(n, k) squared distances from the rows of X (n, d) to the rows
+        of C (k, d), folded over positions IN ORDER: acc + (x − c)²,
+        starting from 0.0, one IEEE subtract, multiply and add per
+        position — the left fold of the JVM
+        aggregate(zip_with(v, cv, (x − c)²), 0.0, acc + x) that the
+        Lloyd kernels replaced, so every d2 is bit-identical to it.  All
+        k centroids advance together, one position at a time."""
+        import numpy as np
+
+        D = np.zeros((X.shape[0], C.shape[0]), dtype=np.float64)
+        for j in range(C.shape[1]):
+            d = X[:, j, None] - C[:, j]
+            D += d * d
+        return D
+
+    return d2_matrix
+
+
+_d2_matrix = _d2_matrix_fn()
+
+
 def _lloyd_update_fn(cent_blocks, dim: int, dsub: int):
     """mapInArrow kernel factory: one Lloyd assignment + partial-update
     pass over (v: array<double>) batches.  ``cent_blocks`` is a list
@@ -944,10 +974,9 @@ def _lloyd_update_fn(cent_blocks, dim: int, dsub: int):
     rows assigned to (block, cid) — the davg9 numerator, exactly.
 
     Bit-exactness contract (the l20/l21/l21b oracles track codebooks
-    bit-for-bit): d2 is folded over positions IN ORDER (acc + (x-c)²,
-    one IEEE add/sub/mul chain — identical to the JVM
-    aggregate(zip_with(...)) left fold this kernel replaced), argmin
-    takes the FIRST minimum (centroids ordered by ascending cid ⇒ ties
+    bit-for-bit): d2 is _d2_matrix's in-order fold (identical to the
+    JVM aggregate(zip_with(...)) left fold), argmin takes the FIRST
+    minimum (centroids ordered by ascending cid ⇒ ties
     to the lower cid, min_by(struct(d2, cid)) semantics), and the
     quantization is trunc(x·1e9 ± 0.5) toward zero (int64 cast), the
     _quantize9 algebra.  int64 partial sums are order-independent, so
@@ -975,19 +1004,10 @@ def _lloyd_update_fn(cent_blocks, dim: int, dsub: int):
             y = X * 1e9
             Q = (y + np.where(y >= 0, 0.5, -0.5)).astype(np.int64)
             for b, (cids, C) in enumerate(CB):
-                Xb = X[:, b * dsub : (b + 1) * dsub]
-                k = C.shape[0]
-                D = np.empty((n, k), dtype=np.float64)
-                for ci in range(k):
-                    acc = np.zeros(n, dtype=np.float64)
-                    crow = C[ci]
-                    for j in range(dsub):  # in-order fold = JVM aggregate()
-                        d = Xb[:, j] - crow[j]
-                        acc = acc + d * d
-                    D[:, ci] = acc
+                D = _d2_matrix(X[:, b * dsub : (b + 1) * dsub], C)
                 lab = np.argmin(D, axis=1)  # first min = lowest cid
                 Qb = Q[:, b * dsub : (b + 1) * dsub]
-                for ci in range(k):
+                for ci in range(C.shape[0]):
                     m = lab == ci
                     c = int(m.sum())
                     if c:
@@ -1022,8 +1042,8 @@ def _lloyd_update_fn(cent_blocks, dim: int, dsub: int):
 def _lloyd_assign_fn(cent_blocks, dim: int, dsub: int):
     """mapInArrow kernel factory: assignment-only pass over
     (vec_id, v) batches → (vec_id, block, code) rows.  Same d2 fold
-    order and first-min tie-break as _lloyd_update_fn, so the emitted
-    codes are bit-identical to the JVM min_by assignment."""
+    (_d2_matrix) and first-min tie-break as _lloyd_update_fn, so the
+    emitted codes are bit-identical to the JVM min_by assignment."""
     to_matrix = _vector_matrix_fn(dim)
 
     def fn(batches):
@@ -1043,16 +1063,7 @@ def _lloyd_assign_fn(cent_blocks, dim: int, dsub: int):
             X = to_matrix(lv)
             out_b, out_code = [], []
             for b, (cids, C) in enumerate(CB):
-                Xb = X[:, b * dsub : (b + 1) * dsub]
-                k = C.shape[0]
-                D = np.empty((n, k), dtype=np.float64)
-                for ci in range(k):
-                    acc = np.zeros(n, dtype=np.float64)
-                    crow = C[ci]
-                    for j in range(dsub):
-                        d = Xb[:, j] - crow[j]
-                        acc = acc + d * d
-                    D[:, ci] = acc
+                D = _d2_matrix(X[:, b * dsub : (b + 1) * dsub], C)
                 lab = np.argmin(D, axis=1)
                 out_b.append(np.full(n, b, dtype=np.int32))
                 out_code.append(cids[lab])
@@ -1072,7 +1083,7 @@ def _lloyd_assign_fn(cent_blocks, dim: int, dsub: int):
 def _lloyd_assign_residual_fn(cent_blocks, dim: int):
     """mapInArrow kernel factory for the IVFADC index build: one pass
     over (vec_id, v) batches → (vec_id, cid, rv) where cid is the
-    nearest coarse centroid (same fold order / tie-break as
+    nearest coarse centroid (same _d2_matrix fold and tie-break as
     _lloyd_update_fn) and rv = v − c(v), the elementwise IEEE subtract
     the JVM zip_with(v, cv, x − c) performed — bit-identical residuals
     without the broadcast-join + argmin-groupBy + residual-join chain."""
@@ -1085,7 +1096,6 @@ def _lloyd_assign_residual_fn(cent_blocks, dim: int):
         cids, C = cent_blocks[0]
         cids = np.asarray(cids, dtype=np.int32)
         C = np.asarray(C, dtype=np.float64)
-        k = C.shape[0]
         for batch in batches:
             ids = batch.column(0)
             lv = batch.column(1)
@@ -1093,15 +1103,7 @@ def _lloyd_assign_residual_fn(cent_blocks, dim: int):
             if n == 0:
                 continue
             X = to_matrix(lv)
-            D = np.empty((n, k), dtype=np.float64)
-            for ci in range(k):
-                acc = np.zeros(n, dtype=np.float64)
-                crow = C[ci]
-                for j in range(dim):
-                    d = X[:, j] - crow[j]
-                    acc = acc + d * d
-                D[:, ci] = acc
-            lab = np.argmin(D, axis=1)
+            lab = np.argmin(_d2_matrix(X, C), axis=1)
             R = X - C[lab]  # elementwise IEEE, == zip_with(v, cv, x - c)
             offsets = pa.array(
                 np.arange(0, (n + 1) * dim, dim, dtype=np.int32)
@@ -1112,6 +1114,41 @@ def _lloyd_assign_residual_fn(cent_blocks, dim: int):
             yield pa.RecordBatch.from_arrays(
                 [ids, pa.array(cids[lab], type=pa.int32()), rv],
                 ["vec_id", "cid", "rv"],
+            )
+
+    return fn
+
+
+def _lloyd_score_fn(cids, C, dim: int):
+    """mapInArrow kernel factory for scoring a corpus against a k-means
+    codebook (l20's cells): one pass over (v, label) batches →
+    (cid, d2, label), where cid is the nearest centroid and d2 its
+    squared distance.  Same _d2_matrix fold and first-min, lowest-cid
+    tie-break as _lloyd_update_fn, so (cid, d2) is bit-identical to the
+    JVM min_by(cid, struct(d2, cid)) / min(d2) over the broadcast cross
+    join this kernel replaced.  ``label`` passes through unchanged."""
+    to_matrix = _vector_matrix_fn(dim)
+
+    def fn(batches):
+        import numpy as np
+        import pyarrow as pa
+
+        cid_arr = np.asarray(cids, dtype=np.int32)
+        Cm = np.asarray(C, dtype=np.float64)
+        for batch in batches:
+            lv = batch.column(0)
+            n = len(lv)
+            if n == 0:
+                continue
+            D = _d2_matrix(to_matrix(lv), Cm)
+            lab = np.argmin(D, axis=1)
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(cid_arr[lab], type=pa.int32()),
+                    pa.array(D[np.arange(n), lab], type=pa.float64()),
+                    batch.column(1),
+                ],
+                ["cid", "d2", "label"],
             )
 
     return fn
@@ -1263,8 +1300,8 @@ def _one_slice(spark: SparkSession, rows: list, schema: str) -> DataFrame:
 
 def _kmeans_codebook(vecs: DataFrame, k: int, max_iter: int):
     """kmeans_fit's fit, as the driver-local codebook (cids ascending,
-    centroid vectors): callers that go on to use the codebook on the
-    driver (ivfpq_index) take it from here instead of collecting the
+    centroid vectors): callers that hand the codebook to a kernel (l20's
+    scoring, ivfpq_index) take it from here instead of collecting the
     relation kmeans_fit wraps it in."""
     vecs = vecs.select("vec_id", "v")
     init = vecs.orderBy("vec_id").limit(k).collect()
@@ -1380,43 +1417,41 @@ def l20_kmeans_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     within-cell mean distance, and — the r3 ask #5 quality surface —
     the majority ground-truth label and its purity in ppm (BIGINT, so
     the rows-only driver check pins clustering quality with no float
-    hazard; tests/test_llm.py bounds it)."""
+    hazard; tests/test_llm.py bounds it).
+
+    The fit is _kmeans_codebook's driver-local codebook.  Scoring is one
+    distributed mapInArrow pass (_lloyd_score_fn: nearest cid and its
+    d2, label passed through), aggregated once by (cid, label) into a
+    count and Σ d2::decimal(28,10), then finished by cid.  Decimal
+    addition is exact, so summing the per-label sums gives the same
+    Σ d2, and mean_d2 the same bits, as one sum per cell.  Three jobs
+    execute it: the pass with its partial aggregate, then one per
+    shuffle.  No higher-order array function, no vec_id shuffle and no
+    second scan of the corpus."""
     vecs = _vectors(spark, sf_dir)
-    cent = kmeans_fit(vecs, k=10, max_iter=5)
-    d2 = F.aggregate(
-        F.zip_with("v", "cv", lambda x, c: (x - c) * (x - c)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    assigned = (
-        vecs.join(F.broadcast(cent))
-        .select("vec_id", "cid", d2.alias("d2"))
-        .groupBy("vec_id")
-        .agg(
-            F.min_by("cid", F.struct("d2", "cid")).alias("cid"),
-            F.min("d2").alias("d2"),
+    cids, cvs = _kmeans_codebook(vecs, k=10, max_iter=5)
+    label_type = vecs.schema["label"].dataType.simpleString()
+    cl = (
+        vecs.select("v", "label")
+        .mapInArrow(
+            _lloyd_score_fn(cids, cvs, len(cvs[0])),
+            f"cid int, d2 double, label {label_type}",
         )
-    )
-    cells = assigned.groupBy("cid").agg(
-        F.count("*").alias("cell_size"),
-        F.round((F.sum(F.col("d2").cast("decimal(28,10)")).cast("double") / F.count("*")), 6).alias(
-            "mean_d2"
-        ),
-    )
-    purity = (
-        assigned.join(vecs.select("vec_id", "label"), "vec_id")
         .groupBy("cid", "label")
-        .agg(F.count("*").alias("cl"))
-        .groupBy("cid")
         .agg(
-            # deterministic at ties: highest label among max-count ones
-            F.max(F.struct("cl", "label"))["label"].alias("majority_label"),
-            (F.max("cl") * F.lit(1_000_000) / F.sum("cl"))
-            .cast("long")
-            .alias("purity_ppm"),
+            F.count("*").alias("cl"),
+            F.sum(F.col("d2").cast("decimal(28,10)")).alias("sd2"),
         )
     )
-    return cells.join(purity, "cid")
+    return cl.groupBy("cid").agg(
+        F.sum("cl").alias("cell_size"),
+        F.round(F.sum("sd2").cast("double") / F.sum("cl"), 6).alias("mean_d2"),
+        # deterministic at ties: highest label among max-count ones
+        F.max(F.struct("cl", "label"))["label"].alias("majority_label"),
+        (F.max("cl") * F.lit(1_000_000) / F.sum("cl"))
+        .cast("long")
+        .alias("purity_ppm"),
+    )
 
 
 # ---- Product quantization (PQ) ANN --------------------------------------

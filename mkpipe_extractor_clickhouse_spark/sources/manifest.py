@@ -1134,21 +1134,25 @@ class ManifestedTable:
         )
         try:
             for d in m["dirs"]:
-                src = os.path.join(self.table_dir, d)
-                dst = os.path.join(dest_dir, d)
-                os.makedirs(dst, exist_ok=True)
-                for fn in os.listdir(src):
-                    try:
-                        os.link(os.path.join(src, fn), os.path.join(dst, fn))
-                    except OSError as e:
-                        # EXDEV: dest on a different filesystem — a
-                        # hardlink can't cross mounts, so fall back to a
-                        # real copy (still correct, just not zero-copy).
-                        if e.errno != errno.EXDEV:
-                            raise
-                        shutil.copy2(
-                            os.path.join(src, fn), os.path.join(dst, fn)
-                        )
+                # a hive-partitioned batch nests p=<v>/ subdirectories:
+                # recreate the tree and link the files at every level
+                top = os.path.join(self.table_dir, d)
+                for src, _, files in os.walk(top):
+                    dst = os.path.join(dest_dir, d, os.path.relpath(src, top))
+                    os.makedirs(dst, exist_ok=True)
+                    for fn in files:
+                        try:
+                            os.link(os.path.join(src, fn), os.path.join(dst, fn))
+                        except OSError as e:
+                            # EXDEV: dest on a different filesystem — a
+                            # hardlink can't cross mounts, so fall back to
+                            # a real copy (still correct, just not
+                            # zero-copy).
+                            if e.errno != errno.EXDEV:
+                                raise
+                            shutil.copy2(
+                                os.path.join(src, fn), os.path.join(dst, fn)
+                            )
         except OSError:
             # don't leave a half-created clone tree behind
             shutil.rmtree(dest_dir, ignore_errors=True)
@@ -1269,9 +1273,11 @@ class ManifestedTable:
         self, keep_versions: int = 1, min_age_seconds: float = 3600.0
     ) -> list[str]:
         """Delete batch dirs unreferenced by the newest
-        ``keep_versions`` manifests (and drop older manifests).
-        Returns the removed dir names. With keep_versions=1 only the
-        live snapshot survives — time travel is traded for space.
+        ``keep_versions`` manifests and by the tip of every ref (and
+        drop the other manifests). Returns the removed dir names. With
+        keep_versions=1 only the live snapshot and the ref tips survive
+        — time travel is traded for space, while every branch and tag
+        still reads through read_ref.
 
         ``min_age_seconds`` is the Delta/Iceberg-style retention guard:
         a concurrent writer inside stage→publish has a staged dir that
@@ -1282,7 +1288,8 @@ class ManifestedTable:
         import time
 
         vs = self.versions()
-        keep = vs[-keep_versions:] if keep_versions > 0 else []
+        keep = set(vs[-keep_versions:] if keep_versions > 0 else [])
+        keep.update(set(self.refs().values()) & set(vs))
         referenced: set[str] = set()
         for v in keep:
             referenced.update(self.manifest(v)["dirs"])

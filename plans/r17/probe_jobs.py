@@ -1,21 +1,23 @@
-"""List the Spark jobs of l20, l21 and l21b (build, then a ``noop``
+"""List the Spark jobs of registered queries (build, then a ``noop``
 write) with call site and task count, and time each query one-shot.
 
-    python plans/r17/probe_jobs.py <repo checkout> <sf_dir> [--list]
+    python plans/r17/probe_jobs.py <repo checkout> <sf_dir> [query ...] [--list]
 
+The queries default to l20_kmeans_ivf, l21_pq_topk and l21b_ivfpq_topk.
 Without ``--list`` it prints one line per query: the one-shot time
 (rebuild plus ``noop`` write, min of 3) and the job and task counts of
 the build and execute phases of the first of those three.  ``--list``
 also prints every job: its phase, id, task count and Spark's call-site
 name, read back from the status REST API."""
 import json, os, sys, time, urllib.request
-root = os.path.abspath(sys.argv[1])
-sf_dir = sys.argv[2]
+args = [a for a in sys.argv[1:] if a != "--list"]
+root = os.path.abspath(args[0])
+sf_dir = args[1]
+QUERIES = tuple(args[2:]) or ("l20_kmeans_ivf", "l21_pq_topk", "l21b_ivfpq_topk")
 sys.path.insert(0, root)
 from mkpipe_extractor_clickhouse_spark.session import get_spark
 from mkpipe_extractor_clickhouse_spark.registry import all_specs
 
-QUERIES = ("l20_kmeans_ivf", "l21_pq_topk", "l21b_ivfpq_topk")
 spark = get_spark(extra_conf={
     "spark.ui.enabled": "true", "spark.ui.port": "0",
     "spark.ui.showConsoleProgress": "false", "spark.ui.retainedJobs": "100000",

@@ -452,7 +452,8 @@ _CENT = [([1, 2], [[0.0, 0.0], [1.0, 1.0]])]
 
 def _lloyd_kernels():
     """Each Lloyd kernel over a one-batch input: the update kernel reads
-    (v), the assignment kernels read (vec_id, v)."""
+    (v), the assignment kernels read (vec_id, v) and the scoring kernel
+    (v, label), with vec_id standing in for the label."""
     from mkpipe_extractor_clickhouse_spark.operators import llm_similarity as ls
 
     def update(batch):
@@ -464,7 +465,10 @@ def _lloyd_kernels():
     def residual(batch):
         return list(ls._lloyd_assign_residual_fn(_CENT, 2)([batch]))
 
-    return [update, assign, residual]
+    def score(batch):
+        return list(ls._lloyd_score_fn(*_CENT[0], 2)([batch.select(["v", "vec_id"])]))
+
+    return [update, assign, residual, score]
 
 
 @pytest.mark.parametrize(
@@ -530,6 +534,83 @@ def test_lloyd_kernel_error_surfaces_through_spark(spark, monkeypatch):
         expected = ValueError if path == "driver_fit" else Exception
         with pytest.raises(expected, match="non-finite vector component"):
             kmeans_fit(vecs, k=2, max_iter=1)
+
+
+def test_d2_matrix_is_the_in_order_fold():
+    """_d2_matrix, the one d2 fold of every Lloyd kernel, gives each
+    entry the bits of the scalar left fold acc + (x − c)² from 0.0 (the
+    JVM aggregate(zip_with(...)) order), on values where a different
+    summation order rounds differently."""
+    import numpy as np
+
+    from mkpipe_extractor_clickhouse_spark.operators.llm_similarity import (
+        _d2_matrix,
+    )
+
+    rng = np.random.default_rng(5)
+    X = rng.normal(0, 1, (40, 13)) * rng.choice([1e-8, 1.0, 1e8], (40, 13))
+    C = rng.normal(0, 1, (6, 13)) * 1e4
+    D = _d2_matrix(X, C)
+    assert D.shape == (40, 6)
+    for i in range(40):
+        for c in range(6):
+            acc = 0.0
+            for x, cc in zip(X[i].tolist(), C[c].tolist()):
+                acc = acc + (x - cc) * (x - cc)
+            assert D[i, c] == acc, (i, c)
+
+
+def test_l20_scoring_kernel_rejects_malformed_vectors(spark, monkeypatch):
+    """A NaN or ragged vector fails l20 in its scoring kernel, not only
+    in the fit: with the codebook fixed (so no fit runs over the bad
+    row), the Spark job of the scoring pass raises the kernel's
+    ValueError message."""
+    from mkpipe_extractor_clickhouse_spark.operators import llm_similarity
+
+    monkeypatch.setattr(
+        llm_similarity,
+        "_kmeans_codebook",
+        lambda vecs, k, max_iter: ([1, 2], [[0.0, 0.0], [1.0, 1.0]]),
+    )
+    for bad, match in (
+        ([float("nan"), 0.0], "non-finite vector component"),
+        ([1.0], "ragged or null vectors"),
+    ):
+        vecs = spark.createDataFrame(
+            [(1, [0.0, 1.0], 0), (2, bad, 1), (3, [1.0, 1.0], 0)],
+            "vec_id long, v array<double>, label int",
+        )
+        monkeypatch.setattr(llm_similarity, "_vectors", lambda spark, sf_dir: vecs)
+        df = llm_similarity.l20_kmeans_ivf(spark, "unused")
+        with pytest.raises(Exception, match=match):
+            df.collect()
+
+
+def test_l20_execute_phase_job_count_and_plan(spark):
+    """Lock for l20's scoring at sf0.01: its execute phase (after the
+    build has fit the codebook) is at most 3 Spark jobs — the scoring
+    pass with its partial aggregate and the two shuffles — and its
+    optimized plan holds no higher-order array function (the
+    aggregate(zip_with(...)) fold over a broadcast cross join it
+    replaced ran 9 jobs)."""
+    from .conftest import TEST_SF_DIR
+
+    sf_dir = os.path.join(os.path.dirname(TEST_SF_DIR), "sf0.01")
+    df = _run("l20_kmeans_ivf", spark, sf_dir)
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    for name in ("lambdafunction", "aggregate(", "zip_with("):
+        assert name not in plan, name
+    sc = spark.sparkContext
+    group = "l20-execute-job-count-lock"
+    sc.setJobGroup(group, "l20 execute")
+    try:
+        rows = df.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 1 <= len(jobs) <= 3, jobs
+    assert sum(r["cell_size"] for r in rows) == 500
 
 
 def test_lloyd_fits_reject_empty_input(spark, monkeypatch):

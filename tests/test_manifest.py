@@ -77,6 +77,21 @@ def test_vacuum_drops_only_unreferenced(spark, mt):
     assert mt.versions() == [mt.head_version()]
 
 
+def test_vacuum_keeps_ref_tips(spark, mt):
+    """A branch tip behind the head keeps its manifest and batch dirs
+    through vacuum, so read_ref still reads it."""
+    mt.commit_append(spark.range(5))
+    v2 = mt.commit_append(spark.range(3))
+    mt.branch_create("dev")  # tip at v2
+    v3 = mt.commit_overwrite(spark.range(2))
+    removed = mt.vacuum(keep_versions=1, min_age_seconds=0)
+    assert removed == []  # v3's dir is live, v1's and v2's are dev's
+    assert mt.versions() == [v2, v3]
+    assert mt.refs() == {"dev": v2}
+    assert mt.read_ref(spark, "dev").count() == 8
+    assert mt.read(spark).count() == 2
+
+
 def test_manifest_runner_transactional_watermark(spark, sf_dir, tmp_path):
     """Two incremental ticks through the manifest loader: final
     snapshot equals the source, boundary duplicates absorbed, and the
@@ -871,6 +886,35 @@ def test_clone_at_is_zero_copy_and_independent(spark, sf_dir, tmp_path):
     assert src.read(spark).count() == n_src
     assert (
         clone.read(spark).filter(F.col("user_id") == 3).count() == 0
+    )
+
+
+def test_clone_at_hive_partitioned_batch(spark, tmp_path):
+    """clone_at recreates a hive-partitioned batch's p=<v>/ tree and
+    links the files inside it: the clone reads the same rows, with the
+    partition column, as the source."""
+    src = ManifestedTable(str(tmp_path / "src"), stats_cols=("k",))
+    df = spark.range(0, 20).select(
+        F.col("id").alias("k"), (F.col("id") % 3).alias("p")
+    )
+    src.commit_append(df.filter("k < 10"), partition_by=("p",))
+    src.commit_append(df.filter("k >= 10"))
+    clone = src.clone_at(str(tmp_path / "fork"))
+
+    def rows(t):
+        return sorted(tuple(r) for r in t.read(spark).select("k", "p").collect())
+
+    assert rows(clone) == rows(src) == [(k, k % 3) for k in range(20)]
+    d0 = src.manifest()["dirs"][0]
+    part = sorted(
+        n for n in os.listdir(tmp_path / "src" / d0) if n.startswith("p=")
+    )[0]
+    f0 = sorted(
+        n for n in os.listdir(tmp_path / "src" / d0 / part)
+        if n.endswith(".parquet")
+    )[0]
+    assert os.path.samefile(
+        tmp_path / "src" / d0 / part / f0, tmp_path / "fork" / d0 / part / f0
     )
 
 
