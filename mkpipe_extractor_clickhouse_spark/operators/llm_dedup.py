@@ -30,7 +30,7 @@ from pyspark.sql import types as T
 
 from ..catalog import load_table
 from ..registry import register
-from ._cache import ephemeral_cache
+from ._cache import collect_if_small, ephemeral_cache
 from .graph import connected_components
 
 JACCARD_T = 0.9
@@ -221,22 +221,35 @@ def _collapse_pays(
     return pays
 
 
-def _int_tokens(tok: DataFrame, pin: bool = True) -> DataFrame:
-    """Compatibility face of :func:`_int_tokens_dict` — returns just
-    the (doc_id, tid, df) relation."""
-    joined, _ = _int_tokens_dict(tok, pin=pin)
-    return joined
-
-
-def _int_tokens_dict(
-    tok: DataFrame, pin: bool = True
-) -> tuple[DataFrame, DataFrame]:
-    """(doc_id, tid, df) plus the pinned token dictionary (token, df,
-    tid): the token relation with each distinct token
-    replaced by a dense-ish integer id and its global document
-    frequency. Ints downstream mean the candidate join keys and the
-    verify arrays ship 8 bytes instead of shingle strings (r10:
+def _int_tokens(tok: DataFrame, dict_: DataFrame | None = None) -> DataFrame:
+    """(doc_id, tid, df): the token relation with each distinct token
+    replaced by its integer id in the pinned dictionary ``dict_``
+    (built by :func:`_token_dict` when not given) and its global
+    document frequency. Ints downstream mean the candidate join keys
+    and the verify arrays ship 8 bytes instead of shingle strings (r10:
     measured 3.8 → 3.0 s steady on l71 at sf0.1).
+
+    The joined relation is ALSO pinned (r12): PPJoin's
+    general tier consumes it several times (sizes, prefix ranking,
+    verify sets) and Spark re-runs the tokenize/shingle + dict join
+    above the reused exchanges per consumer — the one-shot pin A/B
+    (scripts/exp_pin_ab.py, PERF_PIN_AB.json) measured the pin worth
+    1.3-1.8 s per shingle-family query (l23/l71/l81/l84). The mask tier
+    (:func:`_ppjoin_mask_pairs`) reads the tokens once, in one Arrow
+    pass, so it takes no joined pin. Its word-token consumers did not
+    need one: on a 4-core host (sf0.1, one-shot rebuild plus ``noop``,
+    min of 3, best of two sessions) moving them to that tier took
+    l2 1.67 → 1.49 s, l22 1.78 → 1.57 s and l90 1.72 → 1.43 s
+    (plans/r21/README.md)."""
+    dict_ = _token_dict(tok) if dict_ is None else dict_
+    joined = tok.join(dict_, "token").select("doc_id", "tid", "df")
+    return ephemeral_cache(joined)
+
+
+def _token_dict(tok: DataFrame) -> DataFrame:
+    """The pinned token dictionary (token, df, tid) of a distinct
+    (doc_id, token) relation: each distinct token's document frequency
+    and an integer id.
 
     The id is ``monotonically_increasing_id`` over the grouped
     dictionary — and the dictionary MUST be pinned with
@@ -251,23 +264,15 @@ def _int_tokens_dict(
     shingle dictionary through one window partition is a single-task
     bottleneck at scale; any bijection works — ranking ties break on
     (df, tid), still one global total order.)"""
-    dict_ = ephemeral_cache(
+    return ephemeral_cache(
         tok.groupBy("token")
         .agg(F.count("*").alias("df"))
         .withColumn("tid", F.monotonically_increasing_id()),
         required=True,  # mono-id mapping must be a fact, not a plan
     )
-    # The joined relation is ALSO pinned when ``pin`` (r12): the
-    # PPJoin tiers consume it several times (sizes, prefix ranking,
-    # verify sets — and composed consumers like the curation pipeline
-    # reference the pair relation again on top) and Spark re-runs the
-    # tokenize/shingle + dict join above the reused exchanges per
-    # consumer — the one-shot pin A/B (scripts/exp_pin_ab.py,
-    # PERF_PIN_AB.json) measured the pin worth 1.3-1.8 s per shingle-
-    # family query (l23/l71/l81/l84) and 0.7-0.9 s for the composed
-    # one-word-mask consumers (l22/l90).
-    joined = tok.join(dict_, "token").select("doc_id", "tid", "df")
-    return (ephemeral_cache(joined) if pin else joined), dict_
+
+
+PPJOIN_MASK_MAX_VOCAB = 1024
 
 
 def ppjoin_pairs(tok: DataFrame, threshold: float) -> DataFrame:
@@ -278,29 +283,29 @@ def ppjoin_pairs(tok: DataFrame, threshold: float) -> DataFrame:
     each doc's |d|-⌈t·|d|⌉+1 rarest tokens, so the join is inverted-
     index-shaped at any corpus size.
 
-    r11: when the dictionary fits PPJOIN_MASK_MAX_VOCAB bits the whole
-    verify INLINES into the candidate join (_ppjoin_maskarray_pairs) —
-    each prefix row carries its doc's ⌈vocab/64⌉-word bitset, overlap
-    is a popcount at the join output, and qualifying pairs just
-    DISTINCT — dropping the aggregated-positional groupBy (1.7 M groups
-    at sf0.1) and both verify joins that dominated the tiny-vocabulary
-    wall (candidate stage 3.2 → inline). Only wide dictionaries
-    (shingles — collisions rare by construction) take the aggregated
-    candidate-bound + verify-join machinery below."""
-    # vocab comes from the (always-pinned) dictionary's row count — the
-    # old toki.select("tid").distinct().count() re-shuffled the full
-    # doc×token relation for a number the dictionary already is. The
-    # joined relation stays pinned for EVERY tier: a tier-conditional
-    # unpin of the vocab ≤ 64 path was tried (pin A/B showed plain l2
-    # +0.38 s for the pin) and REVERTED — composed consumers (l22
-    # curation pipeline +0.94, l90 waterfall +0.79 in the follow-up
-    # sweep) reference the pair relation more times than plain l2, and
-    # the l2 delta itself sat inside the measured ±0.5 s arm-noise
-    # floor while the composed losses did not.
-    toki, dict_ = _int_tokens_dict(tok, pin=True)
-    vocab = dict_.count()
-    if vocab <= PPJOIN_MASK_MAX_VOCAB:
-        return _ppjoin_maskarray_pairs(toki, vocab, threshold)
+    Two tiers, picked by the dictionary's size. The dictionary is
+    pinned first (one job path for both tiers), then ONE bounded read
+    of the pin (collect_if_small, at most PPJOIN_MASK_MAX_VOCAB + 1
+    rows) both picks the tier and, when it fits, hands the whole
+    dictionary to the driver:
+
+      * mask tier (≤ PPJOIN_MASK_MAX_VOCAB tokens, every word-token
+        caller on the fixtures): _ppjoin_mask_pairs — one Arrow pass
+        builds each doc's bitmask and prefix, overlap is a map-side
+        popcount at the candidate join. No joined pin, no windows.
+      * general tier (wider dictionaries: shingles, whose collisions
+        are rare by construction): the aggregated candidate-bound and
+        verify-join machinery below, over the pinned (doc_id, tid, df)
+        relation.
+
+    The bounded read comes from the PIN, never from the unpinned
+    dictionary: a probe of the unpinned plan re-runs the tokenize/
+    shingle subtree, which the general tier then pays again."""
+    dict_ = _token_dict(tok)
+    held = collect_if_small(dict_.select("token", "df"), PPJOIN_MASK_MAX_VOCAB)
+    if held is not None:
+        return _ppjoin_mask_pairs(tok, held, threshold)
+    toki = _int_tokens(tok, dict_=dict_)
     sizes = toki.groupBy("doc_id").agg(F.count("*").alias("n"))
     # Global token frequency orders tokens rarest-first: prefixes then
     # collide only on rare tokens, which is what bounds the fan-out.
@@ -315,7 +320,7 @@ def ppjoin_pairs(tok: DataFrame, threshold: float) -> DataFrame:
         .withColumn(
             "rank",
             # per-doc ordering rarest-first; deterministic tiebreak on
-            # tid ((df, tid) is a global total order — see _int_tokens)
+            # tid ((df, tid) is a global total order — see _token_dict)
             F.row_number().over(Window.partitionBy("doc_id").orderBy("df", "tid")),
         )
     )
@@ -385,20 +390,18 @@ def ppjoin_pairs(tok: DataFrame, threshold: float) -> DataFrame:
         threshold,
         "doc_a",
         "doc_b",
-        vocab=vocab,
+        # wider than the mask tier, so verify by sorted-array
+        # intersect: a vocab over 64 never takes the one-word branch
+        vocab=max(PPJOIN_MASK_MAX_VOCAB, 64) + 1,
     )
 
 
-def _doc_bitmasks(
-    tok: DataFrame, key: str, nwords: int
-) -> tuple[DataFrame, DataFrame]:
+def _doc_bitmasks(tok: DataFrame, key: str, nwords: int) -> DataFrame:
     """Per-doc token bitsets over a distinct (doc_id, ``key``)
     relation whose dictionary fits 64·nwords bits: each distinct key
     gets a dense bit (row_number over the key order), and each doc
-    becomes long columns w0..w{nwords-1} plus its set size n. Returns
-    (tok joined to its bit, masks(doc_id, w0.., n)) — the one mask
-    construction behind the PPJoin mask tier and _verify_pairs' ≤ 64
-    branch."""
+    becomes long columns w0..w{nwords-1} plus its set size n: masks
+    (doc_id, w0.., n) for _verify_pairs' ≤ 64 branch."""
     bit_dict = (
         tok.select(key).distinct()
         # ≤ 64·nwords rows — the single-task window is fine
@@ -417,27 +420,93 @@ def _doc_bitmasks(
         ).alias(f"w{w}")
         for w in range(nwords)
     ]
-    return tokb, tokb.groupBy("doc_id").agg(*word_sums, F.count("*").alias("n"))
+    return tokb.groupBy("doc_id").agg(*word_sums, F.count("*").alias("n"))
 
 
-PPJOIN_MASK_MAX_VOCAB = 1024
+def _mask_prefix_fn(tokens, threshold: float, nwords: int):
+    """mapInArrow kernel factory of the PPJoin mask tier: one pass over
+    (doc_id, tokens: array<token>) batches, one row per doc and its
+    tokens distinct, that emits (doc_id, tid, n, w0..w{nwords-1}) for
+    every token of the doc's PPJoin prefix.
+
+    ``tokens`` is the driver-held dictionary in rank order — ascending
+    (df, token), rarest first, one global total order — so a token's
+    tid is its position there, and it is also its bit: word tid // 64,
+    bit tid % 64. Per doc: n is the number of its tokens found in
+    the dictionary (a null token or one the dictionary lacks is
+    dropped, as the general tier's dictionary join drops it), the mask
+    words OR those bits (two's-complement longs, so bit 63 reads
+    negative, as shiftleft(1, 63) does in Spark) and the prefix is the
+    n − ⌈t·n⌉ + 1 smallest tids, with ⌈t·n⌉ evaluated in doubles as
+    Spark's ceil(t * n) is. A factory so the dictionary pickles by
+    value into the kernel's closure."""
+
+    def fn(batches):
+        import numpy as np
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        for batch in batches:
+            ids, lists = batch.column(0), batch.column(1)
+            ndocs = len(ids)
+            flat = lists.flatten()
+            tid = pc.fill_null(
+                pc.index_in(flat, value_set=tokens.cast(flat.type)), -1
+            ).to_numpy(zero_copy_only=False).astype(np.int64)
+            doc = np.repeat(
+                np.arange(ndocs),
+                pc.list_value_length(lists).to_numpy(zero_copy_only=False),
+            )
+            found = tid >= 0
+            doc, tid = doc[found], tid[found]
+            order = np.lexsort((tid, doc))
+            doc, tid = doc[order], tid[order]
+            n = np.bincount(doc, minlength=ndocs).astype(np.int64)
+            start = np.cumsum(n) - n
+            rank = np.arange(len(tid)) - start[doc] + 1
+            plen = n - np.ceil(threshold * n.astype(np.float64)).astype(np.int64) + 1
+            words = np.zeros((ndocs, nwords), dtype=np.uint64)
+            np.bitwise_or.at(
+                words,
+                (doc, tid // 64),
+                np.left_shift(np.uint64(1), (tid % 64).astype(np.uint64)),
+            )
+            words = words.view(np.int64)
+            sel = rank <= plen[doc]
+            pdoc = doc[sel]
+            yield pa.RecordBatch.from_arrays(
+                [
+                    ids.take(pa.array(pdoc, type=pa.int64())),
+                    pa.array(tid[sel], type=pa.int64()),
+                    pa.array(n[pdoc], type=pa.int64()),
+                    *[pa.array(words[pdoc, w], type=pa.int64()) for w in range(nwords)],
+                ],
+                ["doc_id", "tid", "n", *[f"w{w}" for w in range(nwords)]],
+            )
+
+    return fn
 
 
-def _ppjoin_maskarray_pairs(
-    toki: DataFrame, vocab: int, threshold: float
-) -> DataFrame:
-    """PPJoin with the exact verify fused into the candidate join for
-    dictionaries of vocab ≤ PPJOIN_MASK_MAX_VOCAB: each doc's token set
-    is ⌈vocab/64⌉ SEPARATE long columns (w0..wk — scalar columns, not
-    an array, so the per-collision popcount sum stays inside whole-
-    stage codegen; HOF zip_with/aggregate evaluate interpreted, the f20
-    lesson) and overlap is Σ bit_count(aw & bw), evaluated MAP-SIDE on
-    each prefix collision — nothing shuffles after the candidate join
-    except qualifying pairs. At vocab ≤ 64 that is one word and one
-    popcount per collision (the fixture's 31-token corpus: l2, l18,
-    l22, l90).
+def _ppjoin_mask_pairs(tok: DataFrame, held, threshold: float) -> DataFrame:
+    """PPJoin's mask tier, for a dictionary the driver holds (``held``:
+    its (token, df) rows, at most PPJOIN_MASK_MAX_VOCAB): each doc's
+    token set is ⌈vocab/64⌉ SEPARATE long columns (w0..wk — scalar
+    columns, not an array, so the per-collision popcount sum stays
+    inside whole-stage codegen; HOF zip_with/aggregate evaluate
+    interpreted, the f20 lesson) and overlap is Σ bit_count(aw & bw),
+    evaluated MAP-SIDE on each prefix collision — nothing shuffles
+    after the candidate join except qualifying pairs. At vocab ≤ 64
+    that is one word and one popcount per collision (the fixture's
+    31-token corpus: l2, l18, l22, l90).
 
-    Why this exists (r11 dedup scale-up finding): the general path
+    The driver ranks the dictionary by (df, token) — deterministic, so
+    no id needs pinning — and one groupBy(doc_id) plus the
+    _mask_prefix_fn Arrow pass builds masks, sizes and prefixes
+    together: no joined pin, no bit-numbering window, no prefix-rank
+    window. The tokens stay Spark's: the pass reads the caller's
+    relation, it does not re-tokenize.
+
+    Why the tier exists (r11 dedup scale-up finding): the general path
     bounds the verify through a groupBy over ALL prefix collisions,
     which on a dense mid-width corpus IS the dominant shuffle — at
     160 k salted docs (vocab 992) the collision aggregation alone ran
@@ -453,22 +522,33 @@ def _ppjoin_maskarray_pairs(
 
     Identical duplicate collision rows carry bit-identical jaccard
     doubles (same integer popcount inputs), so the DISTINCT is exact."""
-    nwords = (vocab + 63) // 64
-    tokb, masks = _doc_bitmasks(toki, "tid", nwords)
-    ranked = tokb.select("doc_id", "tid", "df").join(masks, "doc_id").withColumn(
-        "rank",
-        F.row_number().over(Window.partitionBy("doc_id").orderBy("df", "tid")),
+    import pyarrow.compute as pc
+
+    held = held.filter(pc.is_valid(held["token"])).sort_by(
+        [("df", "ascending"), ("token", "ascending")]
     )
-    prefix = ranked.filter(
-        F.col("rank") <= F.col("n") - F.ceil(F.lit(threshold) * F.col("n")) + 1
+    tokens = held["token"].combine_chunks()
+    nwords = max(1, (len(tokens) + 63) // 64)
+    schema = T.StructType(
+        [
+            T.StructField("doc_id", tok.schema["doc_id"].dataType),
+            T.StructField("tid", T.LongType()),
+            T.StructField("n", T.LongType()),
+            *[T.StructField(f"w{w}", T.LongType()) for w in range(nwords)],
+        ]
     )
-    pa = prefix.select(
+    prefix = (
+        tok.groupBy("doc_id")
+        .agg(F.collect_list("token").alias("tokens"))
+        .mapInArrow(_mask_prefix_fn(tokens, threshold, nwords), schema)
+    )
+    side_a = prefix.select(
         F.col("doc_id").alias("doc_a"),
         "tid",
         F.col("n").alias("na"),
         *[F.col(f"w{w}").alias(f"a{w}") for w in range(nwords)],
     )
-    pb = prefix.select(
+    side_b = prefix.select(
         F.col("doc_id").alias("doc_b"),
         "tid",
         F.col("n").alias("nb"),
@@ -479,7 +559,7 @@ def _ppjoin_maskarray_pairs(
     )
     jaccard = overlap * F.lit(1.0) / (F.col("na") + F.col("nb") - overlap)
     return (
-        pa.join(pb, on="tid")
+        side_a.join(side_b, on="tid")
         .filter(
             (F.col("doc_a") < F.col("doc_b"))
             & (F.col("na") >= F.ceil(F.lit(threshold) * F.col("nb")))
@@ -519,7 +599,7 @@ def _verify_pairs(
     if vocab is None:
         vocab = tok.select("token").distinct().count()
     if vocab <= 64:
-        _, masks = _doc_bitmasks(tok, "token", 1)
+        masks = _doc_bitmasks(tok, "token", 1)
         verified = (
             cand.join(
                 masks.select(

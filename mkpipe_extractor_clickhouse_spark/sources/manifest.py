@@ -532,10 +532,22 @@ class ManifestedTable:
         name = self.stage_batch(df)
         return self._commit("overwrite", meta or {}, lambda head: [name], pin=False)
 
+    def _live_dirs(self, version: int) -> list[str]:
+        """A snapshot's dirs, refusing a snapshot that vacuum kept for
+        ref lineage only and whose dirs it removed."""
+        dirs = self.manifest(version)["dirs"]
+        gone = [d for d in dirs if not os.path.isdir(os.path.join(self.table_dir, d))]
+        if gone:
+            raise FileNotFoundError(
+                f"snapshot {version} is kept for ref lineage only; "
+                f"vacuum removed its dirs {gone}"
+            )
+        return dirs
+
     def rollback(self, version: int) -> int:
         """Publish a new head that re-exposes an old snapshot's dirs —
         the instant-undo a pipeline needs after a bad batch."""
-        dirs = self.manifest(version)["dirs"]
+        dirs = self._live_dirs(version)
         return self._commit(
             "rollback", {"to_version": version}, lambda head: dirs, pin=False
         )
@@ -659,18 +671,26 @@ class ManifestedTable:
             except CommitConflict:
                 continue  # branch tip moved: re-merge against it
 
-    def _ref_chain_contains(self, tip: int, ancestor: int) -> bool:
-        """Walk a snapshot's branch lineage (ref_base for branch
-        commits, parent otherwise) back to ``ancestor``."""
+    def _lineage(self, tip: int, floor: int):
+        """Yield a snapshot's branch lineage (ref_base for branch
+        commits, parent otherwise) from ``tip`` down: every version
+        above ``floor``, whose manifests the walk reads, then the first
+        version at or below it."""
         v = tip
-        while v > ancestor:
+        while v > floor:
+            yield v
             m = self.manifest(v)
             v = (
                 m["meta"]["ref_base"]
                 if m.get("meta", {}).get("ref") is not None
                 else m.get("parent", 0)
             )
-        return v == ancestor
+        yield v
+
+    def _ref_chain_contains(self, tip: int, ancestor: int) -> bool:
+        """Walk a snapshot's branch lineage back to ``ancestor``."""
+        *_, last = self._lineage(tip, ancestor)
+        return last == ancestor
 
     def fast_forward(self, dst: str, src: str) -> int:
         """Advance ref ``dst`` to ``src``'s tip iff dst's tip is an
@@ -1125,6 +1145,7 @@ class ManifestedTable:
         do not follow. The dev/test idiom: fork a production snapshot
         instantly, mutate the fork freely."""
         m = self.manifest(version)
+        self._live_dirs(m["version"])
         clone = ManifestedTable(
             dest_dir,
             stats_cols=self.stats_cols,
@@ -1279,6 +1300,12 @@ class ManifestedTable:
         — time travel is traded for space, while every branch and tag
         still reads through read_ref.
 
+        The manifests (not the dirs) along each ref's lineage above the
+        oldest ref tip also stay, so fast_forward can still walk from
+        one ref's tip back to another's. They are lineage only: a
+        version kept this way may have lost its dirs, so it no longer
+        reads by time travel or rollback.
+
         ``min_age_seconds`` is the Delta/Iceberg-style retention guard:
         a concurrent writer inside stage→publish has a staged dir that
         is indistinguishable from a crash orphan, so only dirs whose
@@ -1289,7 +1316,15 @@ class ManifestedTable:
 
         vs = self.versions()
         keep = set(vs[-keep_versions:] if keep_versions > 0 else [])
-        keep.update(set(self.refs().values()) & set(vs))
+        tips = set(self.refs().values()) & set(vs)
+        keep.update(tips)
+        lineage: set[int] = set()
+        floor = min(tips, default=0)
+        for tip in tips:
+            try:
+                lineage.update(v for v in self._lineage(tip, floor) if v > floor)
+            except FileNotFoundError:
+                pass  # a chain cut by an earlier vacuum: keep what was walked
         referenced: set[str] = set()
         for v in keep:
             referenced.update(self.manifest(v)["dirs"])
@@ -1306,7 +1341,7 @@ class ManifestedTable:
                 shutil.rmtree(full)
                 removed.append(name)
         for v in vs:
-            if v not in keep:
+            if v not in keep and v not in lineage:
                 os.unlink(self._manifest_path(v))
         return removed
 

@@ -1,13 +1,18 @@
-"""A/B two git revisions on the repository benchmark.
+"""A/B two git revisions, or two checkouts, on the repository benchmark.
 
     python scripts/ab.py --workload llm_dedup_search --seeds 1301-1310 \
         [--seconds 5] [--trace 0] [PARENT_REV [CHANGE_REV]]
+    python scripts/ab.py --clone --workload llm_dedup_search \
+        --seeds 1301-1310 PARENT_DIR CHANGE_DIR
 
 Each arm is a detached ``git worktree`` of its revision (default
 ``HEAD~1`` against ``HEAD``) in a temporary directory (``$TMPDIR``
-decides where).  Pair i runs ``perfbench/run.py`` once per arm on the
-i-th seed, parent first on odd pairs and change first on even ones, so
-slow drift on a shared host hits both arms alike.  Every run's bounded
+decides where).  With ``--clone`` the two arguments are existing
+checkout directories (clones, exported trees, or a working copy with
+uncommitted changes), run where they are and left untouched.  Pair i
+runs ``perfbench/run.py`` once per arm on the i-th seed, parent first
+on odd pairs and change first on even ones, so slow drift on a shared
+host hits both arms alike.  Every run's bounded
 metrics are printed as one line as soon as the pair finishes; the
 summary gives, per metric ``BENCHMARK.json`` bounds, each arm's median
 and interquartile range, the relative change of the medians and the
@@ -115,13 +120,25 @@ def main(argv=None) -> int:
     p = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     p.add_argument("parent", nargs="?", default="HEAD~1")
     p.add_argument("change", nargs="?", default="HEAD")
+    p.add_argument("--clone", action="store_true",
+                   help="PARENT and CHANGE are checkout directories, not git revisions")
     p.add_argument("--workload", required=True)
     p.add_argument("--seeds", required=True, type=parse_seeds)
     p.add_argument("--seconds", type=float, default=5)
     p.add_argument("--trace", type=int, choices=[0, 1], default=0)
     args = p.parse_args(argv)
     metrics = bounded_metrics()
-    revs = {"parent": git("rev-parse", args.parent), "change": git("rev-parse", args.change)}
+    arms: dict[str, Path] = {}
+    revs: dict[str, str] = {}
+    if args.clone:
+        for arm in ("parent", "change"):
+            arms[arm] = Path(getattr(args, arm)).resolve()
+            if not (arms[arm] / "perfbench" / "run.py").is_file():
+                p.error(f"{arm} checkout {arms[arm]} has no perfbench/run.py")
+        label = {arm: str(path) for arm, path in arms.items()}
+    else:
+        revs = {"parent": git("rev-parse", args.parent), "change": git("rev-parse", args.change)}
+        label = {arm: rev[:10] for arm, rev in revs.items()}
 
     # SIGTERM/SIGHUP unwind through the finally below like Ctrl-C does.
     for sig in (signal.SIGTERM, signal.SIGHUP):
@@ -129,13 +146,12 @@ def main(argv=None) -> int:
     tmp = Path(tempfile.mkdtemp(prefix="ab-"))
     trees: list[Path] = []
     try:
-        arms = {}
         for arm, rev in revs.items():
             path = tmp / arm
             git("worktree", "add", "--detach", str(path), rev)
             trees.append(path)
             arms[arm] = path
-        print(f"parent {revs['parent'][:10]}  change {revs['change'][:10]}  "
+        print(f"parent {label['parent']}  change {label['change']}  "
               f"workload {args.workload}  seconds {args.seconds}  trace {args.trace}")
         results = []
         for i, seed in enumerate(args.seeds, start=1):

@@ -1562,26 +1562,38 @@ def test_dedup_mixture_shift_conserves(spark, sf_dir):
         assert r.shift_ppm == r.weight_dedup_ppm - r.weight_full_ppm
 
 
+def _ppjoin_tiers(tok, monkeypatch):
+    """ppjoin_pairs over ``tok`` on both tiers as {(doc_a, doc_b):
+    jaccard}: the mask tier at the default cap, then the general tier,
+    forced by a PPJOIN_MASK_MAX_VOCAB of 0. Also returns both optimized
+    plans."""
+    from mkpipe_extractor_clickhouse_spark.operators import llm_dedup
+
+    out = []
+    for cap in (llm_dedup.PPJOIN_MASK_MAX_VOCAB, 0):
+        with monkeypatch.context() as m:
+            m.setattr(llm_dedup, "PPJOIN_MASK_MAX_VOCAB", cap)
+            df = llm_dedup.ppjoin_pairs(tok, llm_dedup.JACCARD_T)
+            pairs = {(r.doc_a, r.doc_b): r.jaccard for r in df.collect()}
+            out.append((pairs, df._jdf.queryExecution().optimizedPlan().toString()))
+    return out
+
+
 @pytest.mark.parametrize("replicas", [1, 3])
-def test_ppjoin_maskarray_path_equals_general_path(spark, sf_dir, replicas):
-    """r11 fused verify: on a vocab <= 1024 dictionary ppjoin_pairs
-    dispatches _ppjoin_maskarray_pairs (popcount verify inlined into
-    the candidate join). Build the regime from the fixture by unioning
+def test_ppjoin_mask_tier_equals_general_tier(spark, sf_dir, replicas, monkeypatch):
+    """The two PPJoin tiers give the same pairs with the same jaccard
+    bits. Build the mask regime from the fixture by unioning
     token-salted replicas (replicas are token-disjoint, so expected
     pairs are exactly replicas x the base corpus's): one replica is the
     fixture's 31-token vocabulary (one mask word), three are 93 tokens
-    (two words, the dedup scale-up's dense salted-corpus shape). Pin
-    the fused path to the general array-intersect verify over the
-    length-filtered all-pairs superset — same pairs, same jaccard to
-    the bit — and pin the dispatch itself."""
+    (two words, the dedup scale-up's dense salted-corpus shape). The
+    general tier is forced by a cap of 0; the mask tier's plan carries
+    the map-side popcount and the general tier's does not."""
     from pyspark.sql import functions as F
 
     from mkpipe_extractor_clickhouse_spark.operators.llm_dedup import (
         JACCARD_T,
         _doc_tokens,
-        _int_tokens,
-        _ppjoin_maskarray_pairs,
-        _verify_pairs,
         ppjoin_pairs,
     )
 
@@ -1598,43 +1610,63 @@ def test_ppjoin_maskarray_path_equals_general_path(spark, sf_dir, replicas):
     words = {1: 1, 3: 2}[replicas]  # 31 and 93 tokens
     assert vocab <= 1024 and (vocab + 63) // 64 == words
 
-    toki = _int_tokens(salted)
-    fast = sorted(
-        (r.doc_a, r.doc_b, round(r.jaccard, 9))
-        for r in _ppjoin_maskarray_pairs(toki, vocab, JACCARD_T).collect()
-    )
+    (mask, mask_plan), (general, general_plan) = _ppjoin_tiers(salted, monkeypatch)
     base_pairs = ppjoin_pairs(tok, JACCARD_T).count()
-    assert len(fast) == replicas * base_pairs  # salting preserves per-replica structure
-    sizes = toki.groupBy("doc_id").agg(F.count("*").alias("n"))
-    a = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na"))
-    b = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("nb"))
-    cand = (
-        a.crossJoin(b)
-        .filter(
-            (F.col("doc_a") < F.col("doc_b"))
-            & (F.col("na") >= F.ceil(F.lit(JACCARD_T) * F.col("nb")))
-            & (F.col("nb") >= F.ceil(F.lit(JACCARD_T) * F.col("na")))
-        )
-        .select("doc_a", "doc_b")
+    assert base_pairs > 0
+    assert len(mask) == replicas * base_pairs  # salting preserves per-replica structure
+    assert mask == general
+    assert "bit_count" in mask_plan
+    assert "bit_count" not in general_plan
+
+
+def test_ppjoin_drops_null_tokens_on_both_tiers(spark, monkeypatch):
+    """A null token counts toward neither a doc's size nor the
+    dictionary, on both tiers: docs 1 and 2 share ten tokens, and doc 1
+    also holds a null, so their jaccard stays exactly 1.0 (counting the
+    null would read 10/11). Doc 3 holds only a null and pairs with
+    nothing."""
+    rows = [(d, f"t{i}") for d in (1, 2) for i in range(10)]
+    rows += [(1, None), (3, None), (4, "t0"), (4, "u1")]
+    tok = spark.createDataFrame(rows, "doc_id long, token string")
+    (mask, _), (general, _) = _ppjoin_tiers(tok, monkeypatch)
+    assert mask == general == {(1, 2): 1.0}
+
+
+def test_ppjoin_empty_token_relation(spark, monkeypatch):
+    """An empty (doc_id, token) relation gives zero pairs on both tiers
+    and keeps the output schema."""
+    from mkpipe_extractor_clickhouse_spark.operators.llm_dedup import ppjoin_pairs
+
+    tok = spark.createDataFrame([], "doc_id long, token string")
+    (mask, _), (general, _) = _ppjoin_tiers(tok, monkeypatch)
+    assert mask == general == {}
+    assert ppjoin_pairs(tok, 0.9).columns == ["doc_a", "doc_b", "jaccard"]
+
+
+def test_mask_prefix_kernel_words_and_prefix():
+    """The mask tier's Arrow kernel on its own: tids are dictionary
+    positions, bit 63 of a word reads as a negative long (Spark's
+    shiftleft(1, 63)), a null or unknown token is dropped, and the
+    prefix is the n - ceil(t*n) + 1 rarest tids."""
+    import pyarrow as pa
+
+    from mkpipe_extractor_clickhouse_spark.operators.llm_dedup import (
+        _mask_prefix_fn,
     )
-    slow = sorted(
-        (r.doc_a, r.doc_b, round(r.jaccard, 9))
-        for r in _verify_pairs(
-            cand,
-            toki.select("doc_id", F.col("tid").alias("token")),
-            JACCARD_T,
-            "doc_a",
-            "doc_b",
-            vocab=2048,  # force the sorted-array-intersect branch
-        ).collect()
+
+    tokens = pa.array([f"k{i}" for i in range(70)])
+    docs = pa.array([["k63", "k0", "k64", None, "zz"], [], ["k69"]])
+    batch = pa.RecordBatch.from_arrays(
+        [pa.array([10, 11, 12], type=pa.int64()), docs], ["doc_id", "tokens"]
     )
-    assert fast == slow
-    # and the registered entrypoint dispatches the mask-array plan here
-    plan = (
-        ppjoin_pairs(salted, JACCARD_T)
-        ._jdf.queryExecution().optimizedPlan().toString()
-    )
-    assert "bit_count" in plan  # vocab <= 1024, so this is the mask path
+    out = pa.Table.from_batches(list(_mask_prefix_fn(tokens, 0.5, 2)([batch])))
+    got = out.to_pylist()
+    # doc 10: tids {0, 63, 64}, n 3, prefix 3 - ceil(1.5) + 1 = 2 tids
+    assert [(r["doc_id"], r["tid"], r["n"]) for r in got] == [
+        (10, 0, 3), (10, 63, 3), (12, 69, 1),
+    ]
+    assert got[0]["w0"] == 1 - 2**63 and got[0]["w1"] == 1
+    assert got[2]["w0"] == 0 and got[2]["w1"] == 1 << 5
 
 
 def test_cms_topk_portable_invariants(spark, sf_dir):

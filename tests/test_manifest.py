@@ -92,6 +92,40 @@ def test_vacuum_keeps_ref_tips(spark, mt):
     assert mt.read(spark).count() == 2
 
 
+def test_fast_forward_after_vacuum(spark, mt):
+    """vacuum keeps the manifests along a branch's lineage down to the
+    oldest ref tip, so fast_forward can still walk dev's chain back to
+    main's tip after the intermediate snapshot was vacuumed."""
+    v1 = mt.commit_append(spark.range(5))
+    mt.branch_create("main")
+    mt.branch_create("dev")
+    v2 = mt.commit_append_on("dev", spark.range(3))
+    v3 = mt.commit_append_on("dev", spark.range(2))
+    mt.vacuum(keep_versions=1, min_age_seconds=0)
+    assert mt.versions() == [v1, v2, v3]
+    assert mt.fast_forward("main", "dev") == v3
+    assert mt.read_ref(spark, "main").count() == 10
+
+
+def test_lineage_only_snapshot_refuses_rollback_and_clone(spark, mt, tmp_path):
+    """A snapshot vacuum keeps only for ref lineage may have lost its
+    dirs: rollback and clone_at refuse it rather than publish a head
+    or a clone that misses data."""
+    mt.commit_append(spark.range(5))
+    mt.branch_create("old")
+    v2 = mt.commit_append(spark.range(3))
+    mt.commit_overwrite(spark.range(2))
+    mt.branch_create("new")  # tip v3; its lineage walks v3 → v2 → v1
+    mt.vacuum(keep_versions=1, min_age_seconds=0)
+    assert v2 in mt.versions()  # lineage only: v2's own batch is gone
+    with pytest.raises(FileNotFoundError):
+        mt.rollback(v2)
+    with pytest.raises(FileNotFoundError):
+        mt.clone_at(str(tmp_path / "c.mfst"), version=v2)
+    assert not (tmp_path / "c.mfst").exists()
+    assert mt.read_ref(spark, "old").count() == 5
+
+
 def test_manifest_runner_transactional_watermark(spark, sf_dir, tmp_path):
     """Two incremental ticks through the manifest loader: final
     snapshot equals the source, boundary duplicates absorbed, and the

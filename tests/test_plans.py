@@ -909,6 +909,80 @@ def test_operators_pin_only_through_ephemeral_cache():
     assert not offenders, f"raw localCheckpoint calls: {offenders}"
 
 
+# (module, enclosing function) → why its monotonically_increasing_id
+# may stay unpinned.
+_UNPINNED_MONO_ID_OK = {
+    ("skew.py", "salted_agg"): (
+        "the salt only shards a partial aggregate: any value per row "
+        "gives the same totals"
+    ),
+    ("skew.py", "salted_join"): (
+        "the dim side is replicated across every salt, so a fact row "
+        "joins the same dim rows whatever salt it draws"
+    ),
+}
+
+
+def test_operators_pin_every_mono_id():
+    """No unpinned ``monotonically_increasing_id``: the id is minted
+    from partition index and arrival order, so two re-evaluations of
+    one subtree can mint different ids. Every call in an operator
+    module must sit inside ``ephemeral_cache(..., required=True)``,
+    which makes the mapping a fact, or be on the allowlist above with
+    its reason. A source scan of call sites, SQL strings included."""
+    import ast
+    from pathlib import Path
+
+    import mkpipe_extractor_clickhouse_spark.operators as ops_pkg
+
+    def is_required_pin(node) -> bool:
+        return (
+            isinstance(node, ast.Call)
+            and getattr(node.func, "id", getattr(node.func, "attr", None))
+            == "ephemeral_cache"
+            and any(
+                k.arg == "required"
+                and isinstance(k.value, ast.Constant)
+                and k.value.value is True
+                for k in node.keywords
+            )
+        )
+
+    def mints_mono_id(node) -> bool:
+        if isinstance(node, ast.Call):
+            name = getattr(node.func, "id", getattr(node.func, "attr", None))
+            if name == "monotonically_increasing_id":
+                return True
+        return (
+            isinstance(node, ast.Constant)
+            and isinstance(node.value, str)
+            and "monotonically_increasing_id(" in node.value
+        )
+
+    offenders, used = [], set()
+    for path in sorted(Path(ops_pkg.__file__).parent.glob("*.py")):
+        tree = ast.parse(path.read_text(), str(path))
+        parent = {c: p for p in ast.walk(tree) for c in ast.iter_child_nodes(p)}
+        for node in ast.walk(tree):
+            if not mints_mono_id(node):
+                continue
+            chain, up = [], node
+            while up in parent:
+                up = parent[up]
+                chain.append(up)
+            if any(is_required_pin(a) for a in chain):
+                continue
+            func = next(
+                (a.name for a in chain if isinstance(a, ast.FunctionDef)), None
+            )
+            if (path.name, func) in _UNPINNED_MONO_ID_OK:
+                used.add((path.name, func))
+                continue
+            offenders.append(f"{path.name}:{node.lineno} in {func}")
+    assert not offenders, f"unpinned monotonically_increasing_id: {offenders}"
+    assert used == set(_UNPINNED_MONO_ID_OK), "stale allowlist entries"
+
+
 def test_one_tick_path():
     """One tick path: exactly one class in the package defines
     ``run_once`` (the one runner, for every destination), and
