@@ -61,3 +61,21 @@ def collect_if_small(df: DataFrame, max_rows: int) -> pa.Table | None:
     which reads ``df`` again."""
     head = df.limit(max_rows + 1).toArrow()
     return head if head.num_rows <= max_rows else None
+
+
+def file_fingerprint(path: str) -> tuple:
+    """Cheap identity of a parquet source, no Spark job: a single file's
+    ``((size, mtime_ns),)``, or a directory's ``(name, size, mtime_ns)``
+    per ``.parquet`` part file (``os.walk`` order, names sorted within a
+    directory).  It changes whenever the data is rewritten.  Raises
+    OSError when ``path`` does not exist."""
+    if not os.path.isdir(path):
+        st = os.stat(path)
+        return ((st.st_size, st.st_mtime_ns),)
+    parts = []
+    for root, _dirs, names in os.walk(path):
+        for f in sorted(names):
+            if f.endswith(".parquet"):
+                st = os.stat(os.path.join(root, f))
+                parts.append((f, st.st_size, st.st_mtime_ns))
+    return tuple(parts)

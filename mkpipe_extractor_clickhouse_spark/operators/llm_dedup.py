@@ -24,13 +24,13 @@ from __future__ import annotations
 import math
 import os
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..catalog import load_table
 from ..registry import register
-from ._cache import collect_if_small, ephemeral_cache
+from ._cache import collect_if_small, ephemeral_cache, file_fingerprint
 from .graph import connected_components
 
 JACCARD_T = 0.9
@@ -165,18 +165,14 @@ _COLLAPSE_PROBE_CACHE: dict[tuple, bool] = {}
 
 
 def _documents_fingerprint(sf_dir: str) -> tuple:
-    """Cheap identity of the documents table: (path, size, mtime) per
-    parquet part file — no Spark job. Changes whenever the data does."""
-    root = os.path.join(sf_dir, "documents.parquet")
-    parts = []
+    """Cheap identity of the documents table, no Spark job: its absolute
+    path and :func:`file_fingerprint` (a single file's size and mtime,
+    or a directory's part files). Changes whenever the data does."""
+    root = os.path.abspath(os.path.join(sf_dir, "documents.parquet"))
     try:
-        for entry in sorted(os.scandir(root), key=lambda e: e.name):
-            if entry.name.endswith(".parquet"):
-                st = entry.stat()
-                parts.append((entry.name, st.st_size, st.st_mtime_ns))
+        return (root, file_fingerprint(root))
     except OSError:
-        return (sf_dir, None)  # non-directory source: no stable key, still cached per sf_dir
-    return (os.path.abspath(sf_dir), tuple(parts))
+        return (sf_dir, None)  # no documents file: still cached per sf_dir
 
 
 def _collapse_pays(
@@ -190,10 +186,9 @@ def _collapse_pays(
     groups but costs a handful of linear joins (md5 grouping, member
     expansion) — pure overhead on a dup-free corpus (measured +1.1 s
     on l2 at sf0.1, where 4992/5000 texts are distinct). One
-    approx_count_distinct over text decides (same adaptive posture as
-    _verify_pairs' vocab probe): collapse when ≥ ~10 % of docs are
-    copies. The estimator's ±2 % error only shifts a threshold that is
-    itself a heuristic.
+    approx_count_distinct over text decides: collapse when ≥ ~10 % of
+    docs are copies. The estimator's ±2 % error only shifts a threshold
+    that is itself a heuristic.
 
     ``key`` is the collapse-identity expression (default: the raw text).
     r11: the Jaccard family collapses on the CANONICAL TOKEN SET — the
@@ -201,11 +196,13 @@ def _collapse_pays(
     token sets still collapse; pass the same key the builder groups by,
     with a ``tag`` naming it for the memo.
 
-    MEMOIZED per (sf_dir, file fingerprint, tag) when sf_dir is given
+    MEMOIZED per (documents fingerprint, tag) when sf_dir is given
     (ADVICE r10): the probe is an eager corpus scan, and builders run
     at plan-construction time — EXPLAIN-only consumers and plan tests
     shouldn't pay a full text scan per builder call, and timing
-    harnesses shouldn't attribute it to 'build' more than once."""
+    harnesses shouldn't attribute it to 'build' more than once. The
+    fingerprint follows the files, so a corpus rewritten in place is
+    probed again."""
     memo_key = (_documents_fingerprint(sf_dir), tag) if sf_dir else None
     if memo_key is not None and memo_key in _COLLAPSE_PROBE_CACHE:
         return _COLLAPSE_PROBE_CACHE[memo_key]
@@ -232,8 +229,8 @@ def _int_tokens(tok: DataFrame, dict_: DataFrame | None = None) -> DataFrame:
     The joined relation is ALSO pinned (r12): PPJoin's
     general tier consumes it several times (sizes, prefix ranking,
     verify sets) and Spark re-runs the tokenize/shingle + dict join
-    above the reused exchanges per consumer — the one-shot pin A/B
-    (scripts/exp_pin_ab.py, PERF_PIN_AB.json) measured the pin worth
+    above the reused exchanges per consumer — a one-shot A/B with and
+    without the pin (rebuild plus execute, 32 cores) measured it worth
     1.3-1.8 s per shingle-family query (l23/l71/l81/l84). The mask tier
     (:func:`_ppjoin_mask_pairs`) reads the tokens once, in one Arrow
     pass, so it takes no joined pin. Its word-token consumers did not
@@ -246,10 +243,12 @@ def _int_tokens(tok: DataFrame, dict_: DataFrame | None = None) -> DataFrame:
     return ephemeral_cache(joined)
 
 
-def _token_dict(tok: DataFrame) -> DataFrame:
+def _token_dict(tok: DataFrame, probe: Column | None = None) -> DataFrame:
     """The pinned token dictionary (token, df, tid) of a distinct
     (doc_id, token) relation: each distinct token's document frequency
-    and an integer id.
+    and an integer id. With ``probe`` (see :func:`ppjoin_pairs`) df
+    counts only the docs outside the probe, so a token only probe docs
+    hold has df 0.
 
     The id is ``monotonically_increasing_id`` over the grouped
     dictionary — and the dictionary MUST be pinned with
@@ -264,9 +263,10 @@ def _token_dict(tok: DataFrame) -> DataFrame:
     shingle dictionary through one window partition is a single-task
     bottleneck at scale; any bijection works — ranking ties break on
     (df, tid), still one global total order.)"""
+    df = F.count("*") if probe is None else F.count(F.when(~probe, 1))
     return ephemeral_cache(
         tok.groupBy("token")
-        .agg(F.count("*").alias("df"))
+        .agg(df.alias("df"))
         .withColumn("tid", F.monotonically_increasing_id()),
         required=True,  # mono-id mapping must be a fact, not a plan
     )
@@ -275,13 +275,25 @@ def _token_dict(tok: DataFrame) -> DataFrame:
 PPJOIN_MASK_MAX_VOCAB = 1024
 
 
-def ppjoin_pairs(tok: DataFrame, threshold: float) -> DataFrame:
-    """Exact set-similarity self-join via PPJoin prefix filtering over a
-    distinct (doc_id, token) relation: returns (doc_a < doc_b, jaccard
-    ≥ threshold) pairs with raw jaccard. Reused by l2 and the composed
-    curation pipeline (llm_curation.py) — candidates fan out only on
-    each doc's |d|-⌈t·|d|⌉+1 rarest tokens, so the join is inverted-
-    index-shaped at any corpus size.
+def ppjoin_pairs(
+    tok: DataFrame, threshold: float, probe: Column | None = None
+) -> DataFrame:
+    """Exact set-similarity join via PPJoin prefix filtering over a
+    distinct (doc_id, token) relation: returns (doc_a, doc_b, jaccard)
+    pairs with jaccard ≥ threshold, raw (unrounded). Candidates fan out
+    only on each doc's |d|-⌈t·|d|⌉+1 rarest tokens, so the join is
+    inverted-index-shaped at any corpus size.
+
+    Without ``probe`` it is the self-join: every pair once, doc_a <
+    doc_b (l2, l18, l23 and the composed curation pipelines).
+    ``probe`` is a boolean Column over doc_id that splits the docs into
+    a batch and its history: pairs then have doc_a a probe doc and
+    doc_b a non-probe doc, and two probe docs or two history docs never
+    pair (x7's incremental check of a new batch). The dictionary's df
+    then counts only history docs — the stored index's frequencies — so
+    a token seen only in the batch ranks rarest. Any one global order
+    keeps the prefix filter exact; both sides share this one. A doc
+    whose probe is null is on neither side.
 
     Two tiers, picked by the dictionary's size. The dictionary is
     pinned first (one job path for both tiers), then ONE bounded read
@@ -294,39 +306,23 @@ def ppjoin_pairs(tok: DataFrame, threshold: float) -> DataFrame:
         builds each doc's bitmask and prefix, overlap is a map-side
         popcount at the candidate join. No joined pin, no windows.
       * general tier (wider dictionaries: shingles, whose collisions
-        are rare by construction): the aggregated candidate-bound and
-        verify-join machinery below, over the pinned (doc_id, tid, df)
-        relation.
+        are rare by construction): the aggregated candidate bound and
+        the sorted-array verify below, over the pinned (doc_id, tid,
+        df) relation.
+
+    Each tier splits its prefix relation into the two sides
+    (_ppjoin_sides) right before the tid join; everything upstream is
+    the same plan with or without ``probe``.
 
     The bounded read comes from the PIN, never from the unpinned
     dictionary: a probe of the unpinned plan re-runs the tokenize/
     shingle subtree, which the general tier then pays again."""
-    dict_ = _token_dict(tok)
+    dict_ = _token_dict(tok, probe)
     held = collect_if_small(dict_.select("token", "df"), PPJOIN_MASK_MAX_VOCAB)
     if held is not None:
-        return _ppjoin_mask_pairs(tok, held, threshold)
+        return _ppjoin_mask_pairs(tok, held, threshold, probe)
     toki = _int_tokens(tok, dict_=dict_)
-    sizes = toki.groupBy("doc_id").agg(F.count("*").alias("n"))
-    # Global token frequency orders tokens rarest-first: prefixes then
-    # collide only on rare tokens, which is what bounds the fan-out.
-    # No broadcast hint: a WORD vocabulary fits a broadcast, but this
-    # helper also ranks SHINGLE relations (l23) whose dictionary grows
-    # with the corpus — AQE picks broadcast when the dictionary is
-    # small and a shuffle hash join when it is not, which is the
-    # correct posture at both scales.
-    ranked = (
-        toki
-        .join(sizes, "doc_id")
-        .withColumn(
-            "rank",
-            # per-doc ordering rarest-first; deterministic tiebreak on
-            # tid ((df, tid) is a global total order — see _token_dict)
-            F.row_number().over(Window.partitionBy("doc_id").orderBy("df", "tid")),
-        )
-    )
-    prefix = ranked.filter(
-        F.col("rank") <= F.col("n") - F.ceil(F.lit(threshold) * F.col("n")) + 1
-    ).select("doc_id", "tid", "rank", "n")
+    _, prefix = _ranked_prefix(toki, threshold)
 
     # Candidate pruning beyond the prefix collision itself (Xiao et al.
     # WWW'08 §3): the LENGTH filter (jaccard ≥ t forces |a|,|b| within
@@ -351,11 +347,12 @@ def ppjoin_pairs(tok: DataFrame, threshold: float) -> DataFrame:
         F.lit(threshold) / (1.0 + threshold) * (na + nb)
     )
     ubound = F.least(pa, pb) + F.least(na - pa, nb - pb)
+    side_a, side_b, pair = _ppjoin_sides(prefix, probe, "a.doc_id", "b.doc_id")
     cand = (
-        prefix.alias("a")
-        .join(prefix.alias("b"), on="tid")
+        side_a.alias("a")
+        .join(side_b.alias("b"), on="tid")
         .filter(
-            (F.col("a.doc_id") < F.col("b.doc_id"))
+            pair
             & (na >= F.ceil(F.lit(threshold) * nb))
             & (nb >= F.ceil(F.lit(threshold) * na))
             & (ubound >= min_overlap)
@@ -384,43 +381,86 @@ def ppjoin_pairs(tok: DataFrame, threshold: float) -> DataFrame:
         )
         .select("doc_a", "doc_b")
     )
-    return _verify_pairs(
-        cand,
-        toki.select("doc_id", F.col("tid").alias("token")),
-        threshold,
-        "doc_a",
-        "doc_b",
-        # wider than the mask tier, so verify by sorted-array
-        # intersect: a vocab over 64 never takes the one-word branch
-        vocab=max(PPJOIN_MASK_MAX_VOCAB, 64) + 1,
-    )
-
-
-def _doc_bitmasks(tok: DataFrame, key: str, nwords: int) -> DataFrame:
-    """Per-doc token bitsets over a distinct (doc_id, ``key``)
-    relation whose dictionary fits 64·nwords bits: each distinct key
-    gets a dense bit (row_number over the key order), and each doc
-    becomes long columns w0..w{nwords-1} plus its set size n: masks
-    (doc_id, w0.., n) for _verify_pairs' ≤ 64 branch."""
-    bit_dict = (
-        tok.select(key).distinct()
-        # ≤ 64·nwords rows — the single-task window is fine
-        .select(
-            key, (F.row_number().over(Window.orderBy(key)) - 1).alias("bit")
+    return (
+        _set_overlap(cand, toki, "doc_a", "doc_b")
+        .withColumn(
+            "jaccard",
+            F.col("overlap")
+            * F.lit(1.0)
+            / (F.col("na") + F.col("nb") - F.col("overlap")),
         )
+        .filter(F.col("jaccard") >= threshold)
+        .select("doc_a", "doc_b", "jaccard")
     )
-    tokb = tok.join(F.broadcast(bit_dict), key)
-    # each (doc_id, key) is distinct upstream, so per-word SUM == OR
-    word_sums = [
-        F.sum(
-            F.when(
-                (F.col("bit") / 64).cast("int") == w,
-                F.expr("shiftleft(CAST(1 AS BIGINT), bit % 64)"),
-            ).otherwise(F.lit(0).cast("bigint"))
-        ).alias(f"w{w}")
-        for w in range(nwords)
-    ]
-    return tokb.groupBy("doc_id").agg(*word_sums, F.count("*").alias("n"))
+
+
+def _ppjoin_sides(prefix: DataFrame, probe: Column | None, a: str, b: str):
+    """(side a, side b, pair predicate) of PPJoin's prefix join, for
+    both tiers: the self-join's (prefix, prefix, a < b), or with
+    ``probe`` (probe docs' prefixes, the rest's, every pair). ``a`` and
+    ``b`` name the two sides' doc columns after the join."""
+    if probe is None:
+        return prefix, prefix, F.col(a) < F.col(b)
+    return prefix.filter(probe), prefix.filter(~probe), F.lit(True)
+
+
+def _ranked_prefix(toki: DataFrame, threshold: float):
+    """(ranked, prefix) of a (doc_id, tid, df) relation: ranked is
+    (doc_id, tid, rank, n), each doc's tokens numbered rarest-first by
+    the global (df, tid) order, n its size; prefix keeps the rows with
+    rank ≤ n − ⌈t·n⌉ + 1. Shared by PPJoin's general tier and the
+    one-sided containment join (_containment_pairs).
+
+    Global token frequency orders tokens rarest-first: prefixes then
+    collide only on rare tokens, which is what bounds the fan-out. No
+    broadcast hint on the size join: AQE picks broadcast when the
+    relation is small and a shuffle hash join when it is not."""
+    sizes = toki.groupBy("doc_id").agg(F.count("*").alias("n"))
+    ranked = (
+        toki.join(sizes, "doc_id")
+        .withColumn(
+            "rank",
+            # deterministic tiebreak on tid ((df, tid) is a global
+            # total order — see _token_dict)
+            F.row_number().over(Window.partitionBy("doc_id").orderBy("df", "tid")),
+        )
+        .select("doc_id", "tid", "rank", "n")
+    )
+    prefix = ranked.filter(
+        F.col("rank") <= F.col("n") - F.ceil(F.lit(threshold) * F.col("n")) + 1
+    )
+    return ranked, prefix
+
+
+def _set_overlap(cand: DataFrame, toki: DataFrame, a_col: str, b_col: str) -> DataFrame:
+    """Exact overlap of the candidate pairs ``cand`` (columns a_col,
+    b_col) over a distinct (doc_id, tid) relation: each doc's tids
+    become one sorted array, joined to both sides, and overlap is the
+    size of their intersection. Returns a_col, b_col, na, nb, overlap
+    and the arrays (toks_a, toks_b)."""
+    sets = toki.groupBy("doc_id").agg(
+        F.array_sort(F.collect_set("tid")).alias("toks"),
+        F.count("*").alias("n"),
+    )
+    return (
+        cand.join(
+            sets.select(
+                F.col("doc_id").alias(a_col),
+                F.col("toks").alias("toks_a"),
+                F.col("n").alias("na"),
+            ),
+            a_col,
+        )
+        .join(
+            sets.select(
+                F.col("doc_id").alias(b_col),
+                F.col("toks").alias("toks_b"),
+                F.col("n").alias("nb"),
+            ),
+            b_col,
+        )
+        .withColumn("overlap", F.size(F.array_intersect("toks_a", "toks_b")))
+    )
 
 
 def _mask_prefix_fn(tokens, threshold: float, nwords: int):
@@ -487,7 +527,9 @@ def _mask_prefix_fn(tokens, threshold: float, nwords: int):
     return fn
 
 
-def _ppjoin_mask_pairs(tok: DataFrame, held, threshold: float) -> DataFrame:
+def _ppjoin_mask_pairs(
+    tok: DataFrame, held, threshold: float, probe: Column | None
+) -> DataFrame:
     """PPJoin's mask tier, for a dictionary the driver holds (``held``:
     its (token, df) rows, at most PPJOIN_MASK_MAX_VOCAB): each doc's
     token set is ⌈vocab/64⌉ SEPARATE long columns (w0..wk — scalar
@@ -497,7 +539,8 @@ def _ppjoin_mask_pairs(tok: DataFrame, held, threshold: float) -> DataFrame:
     evaluated MAP-SIDE on each prefix collision — nothing shuffles
     after the candidate join except qualifying pairs. At vocab ≤ 64
     that is one word and one popcount per collision (the fixture's
-    31-token corpus: l2, l18, l22, l90).
+    31-token corpus: l2, l18, l22, l90, x7). ``probe`` splits the
+    prefix relation as ppjoin_pairs describes.
 
     The driver ranks the dictionary by (df, token) — deterministic, so
     no id needs pinning — and one groupBy(doc_id) plus the
@@ -542,13 +585,14 @@ def _ppjoin_mask_pairs(tok: DataFrame, held, threshold: float) -> DataFrame:
         .agg(F.collect_list("token").alias("tokens"))
         .mapInArrow(_mask_prefix_fn(tokens, threshold, nwords), schema)
     )
-    side_a = prefix.select(
+    side_a, side_b, pair = _ppjoin_sides(prefix, probe, "doc_a", "doc_b")
+    side_a = side_a.select(
         F.col("doc_id").alias("doc_a"),
         "tid",
         F.col("n").alias("na"),
         *[F.col(f"w{w}").alias(f"a{w}") for w in range(nwords)],
     )
-    side_b = prefix.select(
+    side_b = side_b.select(
         F.col("doc_id").alias("doc_b"),
         "tid",
         F.col("n").alias("nb"),
@@ -561,99 +605,13 @@ def _ppjoin_mask_pairs(tok: DataFrame, held, threshold: float) -> DataFrame:
     return (
         side_a.join(side_b, on="tid")
         .filter(
-            (F.col("doc_a") < F.col("doc_b"))
+            pair
             & (F.col("na") >= F.ceil(F.lit(threshold) * F.col("nb")))
             & (F.col("nb") >= F.ceil(F.lit(threshold) * F.col("na")))
         )
         .select("doc_a", "doc_b", jaccard.alias("jaccard"))
         .filter(F.col("jaccard") >= threshold)
         .distinct()
-    )
-
-
-def _verify_pairs(
-    cand: DataFrame,
-    tok: DataFrame,
-    threshold: float,
-    a_col: str,
-    b_col: str,
-    vocab: int | None = None,
-) -> DataFrame:
-    """Dictionary-width-adaptive EXACT Jaccard verification of a
-    candidate pair relation (columns a_col, b_col) against the distinct
-    (doc_id, token) relation.  The candidate machinery upstream is
-    unchanged either way; only the per-pair overlap differs:
-
-      * dictionary fits 64 bits → docs become BITSET longs, overlap is
-        one popcount(ma & mb), and the verify joins shuffle 16 bytes a
-        side instead of a string array (measured on the fixture's
-        31-token corpus: l2 38 s → 5 s at sf0.1).  Small dictionaries
-        are real — categorical feature sets, tags, enum attributes —
-        not just a fixture artifact.
-      * otherwise → sorted-array intersect (the shingle relations
-        l23/l71 live here; their dictionaries grow with the corpus).
-
-    The driver-side vocab probe is one COUNT over the dictionary the
-    plan already builds (skipped when the caller already knows it).
-    Returns (a_col, b_col, jaccard)."""
-    if vocab is None:
-        vocab = tok.select("token").distinct().count()
-    if vocab <= 64:
-        masks = _doc_bitmasks(tok, "token", 1)
-        verified = (
-            cand.join(
-                masks.select(
-                    F.col("doc_id").alias(a_col),
-                    F.col("w0").alias("ma"),
-                    F.col("n").alias("na"),
-                ),
-                a_col,
-            )
-            .join(
-                masks.select(
-                    F.col("doc_id").alias(b_col),
-                    F.col("w0").alias("mb"),
-                    F.col("n").alias("nb"),
-                ),
-                b_col,
-            )
-            .withColumn("overlap", F.expr("bit_count(ma & mb)"))
-        )
-    else:
-        token_sets = tok.groupBy("doc_id").agg(
-            F.array_sort(F.collect_set("token")).alias("toks"),
-            F.count("*").alias("n"),
-        )
-        verified = (
-            cand.join(
-                token_sets.select(
-                    F.col("doc_id").alias(a_col),
-                    F.col("toks").alias("toks_a"),
-                    F.col("n").alias("na"),
-                ),
-                a_col,
-            )
-            .join(
-                token_sets.select(
-                    F.col("doc_id").alias(b_col),
-                    F.col("toks").alias("toks_b"),
-                    F.col("n").alias("nb"),
-                ),
-                b_col,
-            )
-            .withColumn(
-                "overlap", F.size(F.array_intersect("toks_a", "toks_b"))
-            )
-        )
-    return (
-        verified.withColumn(
-            "jaccard",
-            F.col("overlap")
-            * F.lit(1.0)
-            / (F.col("na") + F.col("nb") - F.col("overlap")),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select(a_col, b_col, "jaccard")
     )
 
 
@@ -1466,68 +1424,22 @@ def x7_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     tick, where re-running the full self-join (l2) would rescan all
     history for pairs it already knows.
 
-    Plan: both sides keep only their PPJoin prefixes, ranked by the
-    HISTORY token dictionary (the stored index a production pipeline
-    maintains; tokens unseen in history rank rarest, preserving the
-    shared total order the prefix theorem requires), and the candidate
-    join is new-prefix × history-prefix — fan-out bounded by prefix
-    tokens, candidate set bounded by the new batch, zero
-    history×history pairs.  Exact Jaccard verification follows; the
-    oracle is the naive new×history token join, so the hash-match
-    proves the incremental prefix index loses nothing."""
-    tok = _doc_tokens(spark, sf_dir)
-    is_new = F.col("doc_id") % 5 == 4
-    new_tok = tok.filter(is_new)
-    hist_tok = tok.filter(~is_new)
-
-    # Stored-index side: history's document frequencies define the
-    # rarest-first total order for BOTH sides.
-    dfreq = hist_tok.groupBy("token").agg(F.count("*").alias("df"))
-
-    def prefixes(side: DataFrame) -> DataFrame:
-        sizes = side.groupBy("doc_id").agg(F.count("*").alias("n"))
-        # Same no-hint policy as ppjoin_pairs: AQE broadcasts the
-        # dictionary only while it actually fits.
-        ranked = (
-            side.join(dfreq, "token", "left")
-            .withColumn("df", F.coalesce("df", F.lit(0)))
-            .join(sizes, "doc_id")
-            .withColumn(
-                "rank",
-                F.row_number().over(
-                    Window.partitionBy("doc_id").orderBy("df", "token")
-                ),
-            )
-        )
-        return ranked.filter(
-            F.col("rank")
-            <= F.col("n") - F.ceil(F.lit(JACCARD_T) * F.col("n")) + 1
-        ).select("doc_id", "token", "rank", "n")
-
-    # Same length + positional pruning as ppjoin_pairs (round 4): both
-    # admit supersets, verification stays exact.
-    na, nb = F.col("a.n"), F.col("b.n")
-    pa, pb = F.col("a.rank"), F.col("b.rank")
-    min_overlap = F.ceil(F.lit(JACCARD_T) / (1.0 + JACCARD_T) * (na + nb))
-    ubound = F.least(pa, pb) + F.least(na - pa, nb - pb)
-    cand = (
-        prefixes(new_tok)
-        .alias("a")
-        .join(prefixes(hist_tok).alias("b"), "token")
-        .filter(
-            (na >= F.ceil(F.lit(JACCARD_T) * nb))
-            & (nb >= F.ceil(F.lit(JACCARD_T) * na))
-            & (ubound >= min_overlap)
-        )
-        .select(
-            F.col("a.doc_id").alias("new_doc"),
-            F.col("b.doc_id").alias("dup_of"),
-        )
-        .distinct()
+    Plan: ppjoin_pairs with the batch as its ``probe``: both sides keep
+    only their PPJoin prefixes, ranked by the HISTORY token
+    frequencies (the stored index a production pipeline maintains;
+    tokens unseen in history rank rarest), and the candidate join is
+    batch-prefix × history-prefix — fan-out bounded by prefix tokens,
+    candidate set bounded by the new batch, zero history×history
+    pairs. Verification is exact; the oracle is the naive new×history
+    token join, so the hash-match proves the prefix index loses
+    nothing."""
+    pairs = ppjoin_pairs(
+        _doc_tokens(spark, sf_dir), JACCARD_T, probe=F.col("doc_id") % 5 == 4
     )
-    verified = _verify_pairs(cand, tok, JACCARD_T, "new_doc", "dup_of")
-    return verified.select(
-        "new_doc", "dup_of", F.round("jaccard", 6).alias("jaccard")
+    return pairs.select(
+        F.col("doc_a").alias("new_doc"),
+        F.col("doc_b").alias("dup_of"),
+        F.round("jaccard", 6).alias("jaccard"),
     )
 
 
@@ -1879,23 +1791,11 @@ def _containment_pairs(docs: DataFrame) -> DataFrame:
     relation — l71's core. One-sided PPJoin prefix on A's rarest
     shingles, b-side length (|B| ≥ ⌈τ|A|⌉) and positional
     (min(pa,pb) + min(na−pa, nb−pb) ≥ ⌈τ|A|⌉) prunes, integer token
-    ids (_int_tokens) end-to-end, exact int-array-intersect verify."""
+    ids (_int_tokens) end-to-end, exact int-array-intersect verify. The
+    ranking, the prefix and the overlap are PPJoin's general tier's
+    (_ranked_prefix, _set_overlap)."""
     sh = _int_tokens(_shingles(docs))
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
-    ranked = (
-        sh.join(sizes, "doc_id")
-        .withColumn(
-            "rank",
-            F.row_number().over(
-                Window.partitionBy("doc_id").orderBy("df", "tid")
-            ),
-        )
-        .select("doc_id", "tid", "rank", "n")
-    )
-    prefix = ranked.filter(
-        F.col("rank")
-        <= F.col("n") - F.ceil(F.lit(CONTAIN_T) * F.col("n")) + 1
-    )
+    ranked, prefix = _ranked_prefix(sh, CONTAIN_T)
     # aggregated positional bound (see ppjoin_pairs): m = a-prefix
     # tokens shared with b (b side is COMPLETE, so every shared token
     # beyond m lies in a's unprobed tail — at most ⌈τ·na⌉ − 1 of them —
@@ -1933,27 +1833,8 @@ def _containment_pairs(docs: DataFrame) -> DataFrame:
         )
         .select("doc_a", "doc_b")
     )
-    shingle_sets = sh.groupBy("doc_id").agg(
-        F.array_sort(F.collect_list("tid")).alias("toks"),
-        F.count("*").alias("n"),
-    )
     return (
-        cand.join(
-            shingle_sets.select(
-                F.col("doc_id").alias("doc_a"),
-                F.col("toks").alias("toks_a"),
-                F.col("n").alias("na"),
-            ),
-            "doc_a",
-        )
-        .join(
-            shingle_sets.select(
-                F.col("doc_id").alias("doc_b"),
-                F.col("toks").alias("toks_b"),
-            ),
-            "doc_b",
-        )
-        .withColumn("overlap", F.size(F.array_intersect("toks_a", "toks_b")))
+        _set_overlap(cand, sh, "doc_a", "doc_b")
         .withColumn(
             "containment", F.col("overlap") * F.lit(1.0) / F.col("na")
         )

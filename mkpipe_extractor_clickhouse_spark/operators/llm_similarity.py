@@ -581,17 +581,11 @@ def _packed_cache_dir(sf_dir: str) -> str:
     import os
     import tempfile
 
+    from ._cache import file_fingerprint
+
     src = os.path.join(sf_dir, "embeddings.parquet")
     parts = [os.path.abspath(src)]
-    if os.path.isdir(src):
-        for root, _dirs, names in os.walk(src):
-            for f in sorted(names):
-                if f.endswith(".parquet"):
-                    st = os.stat(os.path.join(root, f))
-                    parts.append(f"{f}:{st.st_size}:{st.st_mtime_ns}")
-    else:
-        st = os.stat(src)
-        parts.append(f"{st.st_size}:{st.st_mtime_ns}")
+    parts += [":".join(map(str, p)) for p in file_fingerprint(src)]
     parts.append("layout-v2")  # uncompressed+mmap format (r9 wave 3)
     fp = hashlib.sha1("|".join(parts).encode()).hexdigest()[:16]
     cache = os.path.join(

@@ -761,6 +761,38 @@ def test_collapse_probe_memo_holds_only_bools(spark, sf_dir):
     assert all(type(v) is bool for v in memo.values()), memo
 
 
+def test_collapse_probe_memo_follows_a_rewritten_single_file(spark, tmp_path):
+    """The collapse-probe memo is keyed by the documents file's size and
+    mtime, also when documents.parquet is one file (every fixture's
+    layout): a duplicate-free corpus probes False, and the same path
+    rewritten with that corpus four times over must probe True, not
+    return the memoized False."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from mkpipe_extractor_clickhouse_spark.operators.llm_dedup import (
+        _collapse_pays,
+    )
+
+    path = str(tmp_path / "documents.parquet")
+    texts = [f"doc {i} alpha beta" for i in range(200)]
+
+    def probe(copies):
+        pq.write_table(
+            pa.table(
+                {
+                    "doc_id": pa.array(range(200 * copies), pa.int64()),
+                    "text": texts * copies,
+                }
+            ),
+            path,
+        )
+        return _collapse_pays(spark.read.parquet(path), str(tmp_path))
+
+    assert probe(1) is False
+    assert probe(4) is True
+
+
 def test_pq_topk_recall(spark, sf_dir):
     """PQ-ADC candidates + exact re-rank must recover at least half of
     the exact top-k. Uniformly random embeddings are PQ's adversarial
@@ -1562,21 +1594,44 @@ def test_dedup_mixture_shift_conserves(spark, sf_dir):
         assert r.shift_ppm == r.weight_dedup_ppm - r.weight_full_ppm
 
 
-def _ppjoin_tiers(tok, monkeypatch):
-    """ppjoin_pairs over ``tok`` on both tiers as {(doc_a, doc_b):
-    jaccard}: the mask tier at the default cap, then the general tier,
-    forced by a PPJOIN_MASK_MAX_VOCAB of 0. Also returns both optimized
-    plans."""
+def _ppjoin_tiers(tok, monkeypatch, probe=None):
+    """ppjoin_pairs over ``tok`` (and ``probe``) on both tiers: the mask
+    tier at the default cap, then the general tier, forced by a
+    PPJOIN_MASK_MAX_VOCAB of 0. Each as ({(doc_a, doc_b): jaccard}, the
+    pair DataFrame)."""
     from mkpipe_extractor_clickhouse_spark.operators import llm_dedup
 
     out = []
     for cap in (llm_dedup.PPJOIN_MASK_MAX_VOCAB, 0):
         with monkeypatch.context() as m:
             m.setattr(llm_dedup, "PPJOIN_MASK_MAX_VOCAB", cap)
-            df = llm_dedup.ppjoin_pairs(tok, llm_dedup.JACCARD_T)
-            pairs = {(r.doc_a, r.doc_b): r.jaccard for r in df.collect()}
-            out.append((pairs, df._jdf.queryExecution().optimizedPlan().toString()))
+            df = llm_dedup.ppjoin_pairs(tok, llm_dedup.JACCARD_T, probe)
+            out.append(({(r.doc_a, r.doc_b): r.jaccard for r in df.collect()}, df))
     return out
+
+
+def _optimized(df) -> str:
+    return df._jdf.queryExecution().optimizedPlan().toString()
+
+
+def _salted_tokens(spark, sf_dir, replicas):
+    """The fixture's (doc_id, token) relation unioned ``replicas`` times,
+    each replica's doc ids shifted past the last and its tokens salted
+    (replicas are token-disjoint). Returns (base, salted)."""
+    from pyspark.sql import functions as F
+
+    from mkpipe_extractor_clickhouse_spark.operators.llm_dedup import _doc_tokens
+
+    tok = _doc_tokens(spark, sf_dir)
+    stride = tok.agg(F.max("doc_id")).collect()[0][0] + 1
+    salted = None
+    for r in range(replicas):
+        part = tok.select(
+            (F.col("doc_id") + r * stride).alias("doc_id"),
+            F.concat(F.lit(f"s{r}_"), F.col("token")).alias("token"),
+        )
+        salted = part if salted is None else salted.unionAll(part)
+    return tok, salted
 
 
 @pytest.mark.parametrize("replicas", [1, 3])
@@ -1589,34 +1644,92 @@ def test_ppjoin_mask_tier_equals_general_tier(spark, sf_dir, replicas, monkeypat
     (two words, the dedup scale-up's dense salted-corpus shape). The
     general tier is forced by a cap of 0; the mask tier's plan carries
     the map-side popcount and the general tier's does not."""
-    from pyspark.sql import functions as F
-
     from mkpipe_extractor_clickhouse_spark.operators.llm_dedup import (
         JACCARD_T,
-        _doc_tokens,
         ppjoin_pairs,
     )
 
-    tok = _doc_tokens(spark, sf_dir)
-    stride = tok.agg(F.max("doc_id")).collect()[0][0] + 1
-    salted = None
-    for r in range(replicas):
-        part = tok.select(
-            (F.col("doc_id") + r * stride).alias("doc_id"),
-            F.concat(F.lit(f"s{r}_"), F.col("token")).alias("token"),
-        )
-        salted = part if salted is None else salted.unionAll(part)
+    tok, salted = _salted_tokens(spark, sf_dir, replicas)
     vocab = salted.select("token").distinct().count()
     words = {1: 1, 3: 2}[replicas]  # 31 and 93 tokens
     assert vocab <= 1024 and (vocab + 63) // 64 == words
 
-    (mask, mask_plan), (general, general_plan) = _ppjoin_tiers(salted, monkeypatch)
+    (mask, mask_df), (general, general_df) = _ppjoin_tiers(salted, monkeypatch)
     base_pairs = ppjoin_pairs(tok, JACCARD_T).count()
     assert base_pairs > 0
     assert len(mask) == replicas * base_pairs  # salting preserves per-replica structure
     assert mask == general
-    assert "bit_count" in mask_plan
-    assert "bit_count" not in general_plan
+    assert "bit_count" in _optimized(mask_df)
+    assert "bit_count" not in _optimized(general_df)
+
+
+def _cross_pairs(pairs, is_probe):
+    """The self-join pairs that cross the probe split, oriented (probe
+    doc, other doc)."""
+    return {
+        ((a, b) if is_probe(a) else (b, a)): j
+        for (a, b), j in pairs.items()
+        if is_probe(a) != is_probe(b)
+    }
+
+
+@pytest.mark.parametrize("replicas", [1, 3])
+def test_ppjoin_probe_is_the_self_joins_cross_pairs(
+    spark, sf_dir, replicas, monkeypatch
+):
+    """With a ``probe``, ppjoin_pairs returns exactly the self-join's
+    pairs between a probe doc and a non-probe doc, oriented (probe doc,
+    other doc), with the same jaccard bits, on both tiers. The probe is
+    x7's batch (doc_id % 5 = 4); its dictionary counts history docs
+    only, so the prefixes differ from the self-join's and only the
+    pairs must agree."""
+    from pyspark.sql import functions as F
+
+    _, salted = _salted_tokens(spark, sf_dir, replicas)
+    probe = F.col("doc_id") % 5 == 4
+    tiers = _ppjoin_tiers(salted, monkeypatch)
+    probed = _ppjoin_tiers(salted, monkeypatch, probe)
+    for (self_pairs, _), (pairs, _) in zip(tiers, probed):
+        expected = _cross_pairs(self_pairs, lambda d: d % 5 == 4)
+        assert expected
+        assert pairs == expected
+
+
+def test_ppjoin_probe_token_only_in_probe_docs(spark, monkeypatch):
+    """A token that only probe docs hold has df 0 and ranks rarest on
+    both tiers; the probe docs still find their history match. Docs 101
+    and 102 (the probe) hold doc 1's ten tokens plus ``new``: each
+    pairs with doc 1 at 10/11, and the probe pair (101, 102) at 1.0 is
+    not returned."""
+    from pyspark.sql import functions as F
+
+    rows = [(d, f"t{i}") for d in (1, 101, 102) for i in range(10)]
+    rows += [(101, "new"), (102, "new"), (2, "t0"), (2, "u1")]
+    tok = spark.createDataFrame(rows, "doc_id long, token string")
+    probe = F.col("doc_id") >= 100
+    tiers = _ppjoin_tiers(tok, monkeypatch)
+    for (self_pairs, _), (pairs, _) in zip(
+        tiers, _ppjoin_tiers(tok, monkeypatch, probe)
+    ):
+        assert self_pairs[(101, 102)] == 1.0
+        assert pairs == {(101, 1): 10 / 11, (102, 1): 10 / 11}
+        assert pairs == _cross_pairs(self_pairs, lambda d: d >= 100)
+
+
+@pytest.mark.parametrize("probe_sql", ["doc_id < 0", "doc_id >= 0"])
+def test_ppjoin_probe_of_no_doc_or_every_doc(spark, monkeypatch, probe_sql):
+    """A probe that matches no doc, or every doc, leaves one side empty:
+    zero pairs on both tiers, in the self-join's schema, although the
+    relation holds an exact duplicate pair."""
+    from pyspark.sql import functions as F
+
+    rows = [(d, f"t{i}") for d in (1, 2) for i in range(10)]
+    tok = spark.createDataFrame(rows, "doc_id long, token string")
+    (self_pairs, self_df), _ = _ppjoin_tiers(tok, monkeypatch)
+    assert self_pairs == {(1, 2): 1.0}
+    for pairs, df in _ppjoin_tiers(tok, monkeypatch, F.expr(probe_sql)):
+        assert pairs == {}
+        assert df.schema == self_df.schema
 
 
 def test_ppjoin_drops_null_tokens_on_both_tiers(spark, monkeypatch):

@@ -450,10 +450,17 @@ def test_returning_users_no_self_join(spark, sf_dir):
 
 def test_incremental_neardup_no_nested_loop(spark, sf_dir):
     """x7: candidate generation is an equi-join of prefix relations on
-    token — no cartesian/nested-loop pairing shapes anywhere."""
+    token — no cartesian/nested-loop pairing shapes anywhere. x7 is
+    ppjoin_pairs with a probe, so at the fixture's 31-token vocabulary
+    it runs the mask tier (the map-side bit_count) and ranks no prefix
+    through a window."""
     plan = plan_of("x7_incremental_neardup", spark, sf_dir)
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
+    df = SPECS["x7_incremental_neardup"].builder(spark, sf_dir)
+    optimized = df._jdf.queryExecution().optimizedPlan().toString()
+    assert "bit_count" in optimized
+    assert "Window" not in optimized
 
 
 def test_lateral_topn_decorrelated(spark, sf_dir):
