@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 from ..catalog import load_table
 from ..registry import register
 from ._determinism import DAVG, DSUM, SPARK_DSUM, davg, dsum
+from ._ngrams import md5_hash60
 
 
 @register(
@@ -529,15 +530,7 @@ def a16b_hll_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     emitted so a consumer can apply it. Estimate-vs-exact accuracy is
     pytest-bounded in tests/test_llm.py."""
     li = load_table(spark, sf_dir, "lineitem")
-    h = (
-        F.conv(
-            F.substring(F.md5(F.col("l_partkey").cast("string")), 1, 15),
-            16,
-            10,
-        )
-        .cast("long")
-        .alias("h")
-    )
+    h = md5_hash60(F.col("l_partkey").cast("string")).alias("h")
     jr = (
         li.select("l_returnflag", h)
         .withColumn("w", F.expr(f"h DIV {HLL_M}"))

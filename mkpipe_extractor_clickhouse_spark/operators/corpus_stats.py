@@ -20,6 +20,7 @@ from ..catalog import load_table
 from ..registry import register
 from ._cache import ephemeral_cache
 from ._determinism import _quantize
+from ._ngrams import word_ngrams
 
 PMI_MIN_COUNT = 20
 PMI_TOP = 20
@@ -287,25 +288,14 @@ def l70_shingle_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     novelty, the signal behind dedup-aware data ordering: train on
     high-novelty docs first, drop the near-zero tail). One global
     min-per-shingle aggregation (the first-seen dictionary), one
-    dictionary join back, exact integer ppm. The shingle dictionary is
-    the same relation l23/l58 build — at 100 TB it shuffles 16-byte
-    hashes, not text."""
+    dictionary join back, exact integer ppm. The shingles are the
+    relation l23/l58 build (_ngrams.word_ngrams)."""
     d = load_table(spark, sf_dir, "documents")
-    p = F.split("text", " ")
-    shingles = F.expr(
-        "transform(sequence(1, size(p) - 2), i -> concat("
-        "element_at(p, i), ' ', element_at(p, i + 1), ' ',"
-        " element_at(p, i + 2)))"
-    )
     # pinned (r12): the first-seen dictionary AND the join back both
     # consume the shingle explode — it re-executed twice before
-    sh = ephemeral_cache(
-        d.select("doc_id", p.alias("p"))
-        .filter(F.size("p") >= 3)
-        .select("doc_id", F.explode(F.array_distinct(shingles)).alias("s"))
-    )
-    firsts = sh.groupBy("s").agg(F.min("doc_id").alias("first_doc"))
-    j = sh.join(firsts, "s")
+    sh = ephemeral_cache(word_ngrams(d, 3, "doc_id"))
+    firsts = sh.groupBy("gram").agg(F.min("doc_id").alias("first_doc"))
+    j = sh.join(firsts, "gram")
     novel = (F.col("first_doc") == F.col("doc_id")).cast("long")
     return j.groupBy("doc_id").agg(
         F.count("*").alias("n_shingles"),
@@ -371,30 +361,20 @@ def l113_novelty_decay(spark: SparkSession, sf_dir: str) -> DataFrame:
     crawl elsewhere').  l70 scores the same first-seen signal per
     document; this rolls it up into the planning curve.
 
-    One global first-seen dictionary (min doc_id per shingle — the
-    same 16-byte-hash shuffle l23/l58 build), one join back, one
-    decile rollup; decile = integer position scaling, so every output
-    is an exact integer in both engines."""
+    One global first-seen dictionary (min doc_id per shingle, over
+    l70's shingle relation), one join back, one decile rollup; decile =
+    integer position scaling, so every output is an exact integer in
+    both engines."""
     d = load_table(spark, sf_dir, "documents")
     bounds = d.agg(
         F.min("doc_id").alias("lo"),
         (F.max("doc_id") + 1).alias("hi"),
     )
-    p = F.split("text", " ")
-    shingles = F.expr(
-        "transform(sequence(1, size(p) - 2), i -> concat("
-        "element_at(p, i), ' ', element_at(p, i + 1), ' ',"
-        " element_at(p, i + 2)))"
-    )
     # pinned (r12): same two-consumer shape as l70
-    sh = ephemeral_cache(
-        d.select("doc_id", p.alias("p"))
-        .filter(F.size("p") >= 3)
-        .select("doc_id", F.explode(F.array_distinct(shingles)).alias("s"))
-    )
-    firsts = sh.groupBy("s").agg(F.min("doc_id").alias("first_doc"))
+    sh = ephemeral_cache(word_ngrams(d, 3, "doc_id"))
+    firsts = sh.groupBy("gram").agg(F.min("doc_id").alias("first_doc"))
     per_doc = (
-        sh.join(firsts, "s")
+        sh.join(firsts, "gram")
         .groupBy("doc_id")
         .agg(
             F.count("*").alias("n_sh"),

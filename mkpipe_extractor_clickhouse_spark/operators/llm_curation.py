@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..registry import register
+from ._ngrams import md5_hash60
 
 CHUNK_TOKENS = 16
 CHUNK_STRIDE = 8  # 50% overlap
@@ -175,7 +176,7 @@ def a14b_quantile_deterministic(spark: SparkSession, sf_dir: str) -> DataFrame:
     estimate hash-matches DuckDB instead of settling for rows-only."""
     li = load_table(spark, sf_dir, "lineitem")
     key = (F.col("l_orderkey") * 10 + F.col("l_linenumber")).cast("string")
-    h = F.conv(F.substring(F.md5(key), 1, 15), 16, 10).cast("long")
+    h = md5_hash60(key)
     samp = li.filter(h % QDET_MOD == 0)
     return samp.groupBy("l_returnflag").agg(
         F.round(F.percentile("l_extendedprice", F.lit(0.90)), 6).alias(

@@ -16,7 +16,12 @@ Scale posture (the whole point of these operators at 100 TB):
   * embedding-cosine near-dup buckets by centroid and prunes cluster
     pairs with a sound triangle-inequality bound — exact output, no
     all-pairs join in the plan;
-  * all signatures use JVM built-ins (xxhash64), no Python UDFs.
+  * hashes are JVM built-ins: xxhash64 on the production paths (l2b,
+    l2c, l2e), the md5 prefix (_ngrams.md5_hash60) on the portable
+    twins whose DuckDB oracles must reproduce every signature bit;
+  * no row-at-a-time Python UDFs. Python runs only in vectorized
+    mapInArrow passes: PPJoin's mask tier (one pass per doc group)
+    and the embedding verify kernels of l2d and l32.
 """
 
 from __future__ import annotations
@@ -31,6 +36,7 @@ from pyspark.sql import types as T
 from ..catalog import load_table
 from ..registry import register
 from ._cache import collect_if_small, ephemeral_cache, file_fingerprint
+from ._ngrams import md5_hash60, word_ngrams
 from .graph import connected_components
 
 JACCARD_T = 0.9
@@ -621,17 +627,17 @@ N_HASHES = 16
 BAND_SIZE = 4  # 4 bands of 4 rows → candidates concentrate above jaccard ≈ 0.7
 
 
-def minhash_signatures(tok: DataFrame, n_hashes: int = N_HASHES) -> DataFrame:
+def minhash_signatures(tok: DataFrame) -> DataFrame:
     """(doc_id, sig: array<long>) — minimum of xxhash64(token, seed)
     per seed; entirely JVM-side (one explode already done upstream)."""
     sigs = [
         F.min(F.xxhash64(F.col("token"), F.lit(i))).alias(f"h{i}")
-        for i in range(n_hashes)
+        for i in range(N_HASHES)
     ]
     return (
         tok.groupBy("doc_id")
         .agg(*sigs)
-        .select("doc_id", F.array(*[f"h{i}" for i in range(n_hashes)]).alias("sig"))
+        .select("doc_id", F.array(*[f"h{i}" for i in range(N_HASHES)]).alias("sig"))
     )
 
 
@@ -763,15 +769,8 @@ def l2c_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """64-bit SimHash per document: sign-sum of token hash bits —
     near-dup docs land within small Hamming distance. Computed with
     built-ins only (no UDF): bit b of the fingerprint is the sign of
-    Σ_tokens (bit b ? +1 : -1).
-
-    r11: the registered query now shares _simhash_fingerprints — the
-    r10 one-pass sign pack (64 narrow int sums in ONE groupBy, sign
-    via 2·cnt_b > n) that l2e already used — instead of the original
-    explode-64-bit-rows-per-token form (a 64× row blowup through two
-    aggregations; 4.1 → measured below at sf0.1). Fingerprints are
-    identical by construction (s = Σ±1 = 2·cnt_b − n > 0 ⇔
-    2·cnt_b > n)."""
+    Σ_tokens (bit b ? +1 : -1), packed in one aggregation pass
+    (_simhash_fingerprints)."""
     return _simhash_fingerprints(spark, sf_dir).select("doc_id", "simhash")
 
 
@@ -839,15 +838,27 @@ def l2e_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     fingerprint table is 16 bytes/doc, the block join shuffles
     4 rows/doc of 12 bytes, and collisions localize to equal-block
     buckets — the same posture as l2b with a deterministic guarantee."""
-    fp = _simhash_fingerprints(spark, sf_dir)
+    return _hamming_pairs(_simhash_fingerprints(spark, sf_dir), 16)
+
+
+def _hamming_pairs(fp: DataFrame, block_bits: int) -> DataFrame:
+    """(doc_a < doc_b, hamming ≤ SIMHASH_MAX_HD) over (doc_id, simhash)
+    fingerprints of (SIMHASH_MAX_HD + 1) · block_bits bits: each print
+    splits into SIMHASH_MAX_HD + 1 disjoint block_bits-bit blocks, so a
+    pair within the bound agrees on a whole block (pigeonhole), the
+    candidates are one equi-join on (block index, block value), and a
+    popcount verifies them. Shared by l2e (4 × 16 bits) and
+    l2e_portable (4 × 15)."""
+    nblocks = SIMHASH_MAX_HD + 1
     blocks = fp.select(
         "doc_id",
         "simhash",
         F.explode(
             F.expr(
-                "transform(sequence(0, 3), k -> named_struct("
-                "  'k', k,"
-                "  'blk', shiftright(simhash, k * 16) & 65535))"
+                f"transform(sequence(0, {nblocks - 1}), k -> named_struct("
+                f"  'k', k,"
+                f"  'blk', shiftright(simhash, k * {block_bits})"
+                f" & {2**block_bits - 1}))"
             )
         ).alias("kb"),
     ).select("doc_id", "simhash", "kb.k", "kb.blk")
@@ -1204,30 +1215,7 @@ def l23_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     all-shared-shingles join, so the hash-match proves the prefix
     filter loses nothing."""
     d = load_table(spark, sf_dir, "documents")
-    t = F.split("text", " ")
-    # positions 0..size-3 → concat of 3 consecutive tokens (1-indexed
-    # element_at); docs with <3 tokens yield no shingles, as in the
-    # oracle's empty GENERATE_SERIES.
-    idx = F.when(
-        F.size(t) >= 3, F.sequence(F.lit(1), F.size(t) - 2)
-    ).otherwise(F.array().cast("array<int>"))
-    sh = (
-        d.select(
-            "doc_id",
-            F.explode(idx).alias("i"),
-            t.alias("t"),
-        )
-        .select(
-            "doc_id",
-            F.concat_ws(
-                " ",
-                F.element_at("t", F.col("i")),
-                F.element_at("t", F.col("i") + 1),
-                F.element_at("t", F.col("i") + 2),
-            ).alias("token"),
-        )
-        .distinct()
-    )
+    sh = word_ngrams(d, 3, "doc_id").withColumnRenamed("gram", "token")
     verified = ppjoin_pairs(sh, NGRAM_T)
     return verified.select("doc_a", "doc_b", F.round("jaccard", 6).alias("jaccard"))
 
@@ -1614,50 +1602,36 @@ def l58_minhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate-pair set hash-matches a DuckDB oracle exactly. The
     recall/precision trade is still probabilistic in the corpus, but
     the COMPUTATION is reproducible — which is what a correctness gate
-    can check. Shapes: explode distinct shingles ×16 hash slots (map-
-    side), per-(doc, slot) min, band-signature equi-join — never
-    all-pairs. md5-per-token costs ~2× xxhash64; at 100 TB keep l2b
+    can check. Shapes: one per-doc aggregation of the 16 slot minima
+    over the shingle relation (_mhp_wide, map-side partial combine),
+    band-signature equi-join — never all-pairs. md5-per-token costs ~2× xxhash64; at 100 TB keep l2b
     for production and this for cross-engine verification."""
-    return _mhp_band_pairs(_mhp_wide(spark, sf_dir)).orderBy("doc_a", "doc_b")
-
-
-def _mhp_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Engine-portable MinHash signatures in WIDE form (doc_id,
-    m0..m15) over 3-gram shingles — the md5-derived hash family shared
-    by l58/l2b_portable/l103/l112 (see l58's docstring for why md5,
-    not xxhash64).
-
-    r11: all 16 slot-mins aggregate in ONE pass over the shingle
-    relation — min((2i+1)·h + Ci mod P) per slot as 16 agg columns
-    with partial (map-side) combine, instead of exploding ×16 before
-    the shuffle (shuffle rows 4.2 M → 260 k at sf0.1, groups
-    80 k → 5 k; l58 steady 4.6 → 1.6 s). The md5 is hashed once per
-    shingle either way; the explode was pure shuffle inflation. Every
-    downstream shape (band rows, slot agreement) now derives map-side
-    from the 16 columns — the DuckDB oracles keep their relational
-    CROSS JOIN form, so the hash-match proves the wide refactor
-    equivalent."""
     d = load_table(spark, sf_dir, "documents")
-    p = F.split("text", " ")
-    shingles = F.expr(
-        "transform(sequence(1, size(p) - 2), i -> concat("
-        "element_at(p, i), ' ', element_at(p, i + 1), ' ',"
-        " element_at(p, i + 2)))"
-    )
-    toks = (
-        d.select("doc_id", p.alias("p"))
-        .filter(F.size("p") >= 3)
-        .select("doc_id", F.explode(F.array_distinct(shingles)).alias("t"))
-    )
-    hm = (
-        F.conv(F.substring(F.md5("t"), 1, 15), 16, 10).cast("long") % MHP_P
-    ).alias("hm")
+    grams = word_ngrams(d, 3, "doc_id")
+    return _mhp_band_pairs(_mhp_wide(grams, "doc_id")).orderBy("doc_a", "doc_b")
+
+
+def _mhp_wide(grams: DataFrame, key: str) -> DataFrame:
+    """Engine-portable MinHash signatures in WIDE form (key, m0..m15)
+    over an n-gram relation (key, gram) — the md5-derived hash family
+    shared by l58/l2b_portable/l75/l103/l112 (see l58's docstring for
+    why md5, not xxhash64). Slot minima do not see duplicate rows, so
+    ``grams`` need not be distinct per key.
+
+    All 16 slot-mins aggregate in ONE pass over the n-gram relation —
+    min((2i+1)·h + Ci mod P) per slot as 16 agg columns with partial
+    (map-side) combine, instead of exploding ×16 before the shuffle
+    (shuffle rows 4.2 M → 260 k at sf0.1, groups 80 k → 5 k). Every
+    downstream shape (band rows, slot agreement) derives map-side from
+    the 16 columns — the DuckDB oracles keep their relational CROSS
+    JOIN form, so the hash-match proves the wide form equivalent."""
+    hm = (md5_hash60("gram") % MHP_P).alias("hm")
     mins = [
         F.min((F.lit(2 * i + 1) * F.col("hm") + F.lit(1000003 * i)) % MHP_P)
         .alias(f"m{i}")
         for i in range(MHP_HASHES)
     ]
-    return toks.select("doc_id", hm).groupBy("doc_id").agg(*mins)
+    return grams.select(key, hm).groupBy(key).agg(*mins)
 
 
 def _mhp_band_pairs(wide: DataFrame) -> DataFrame:
@@ -1764,28 +1738,6 @@ def l69_dup_multiplicity_histogram(spark: SparkSession, sf_dir: str) -> DataFram
 CONTAIN_T = 0.8  # directional coverage threshold
 
 
-def _shingles(docs: DataFrame) -> DataFrame:
-    """Distinct (doc_id, token) 3-word shingles of a documents
-    relation; docs under 3 tokens yield no rows."""
-    t = F.split("text", " ")
-    idx = F.when(
-        F.size(t) >= 3, F.sequence(F.lit(1), F.size(t) - 2)
-    ).otherwise(F.array().cast("array<int>"))
-    return (
-        docs.select("doc_id", F.explode(idx).alias("i"), t.alias("t"))
-        .select(
-            "doc_id",
-            F.concat_ws(
-                " ",
-                F.element_at("t", F.col("i")),
-                F.element_at("t", F.col("i") + 1),
-                F.element_at("t", F.col("i") + 2),
-            ).alias("token"),
-        )
-        .distinct()
-    )
-
-
 def _containment_pairs(docs: DataFrame) -> DataFrame:
     """(doc_a, doc_b, containment ≥ CONTAIN_T) over a documents
     relation — l71's core. One-sided PPJoin prefix on A's rarest
@@ -1794,7 +1746,9 @@ def _containment_pairs(docs: DataFrame) -> DataFrame:
     ids (_int_tokens) end-to-end, exact int-array-intersect verify. The
     ranking, the prefix and the overlap are PPJoin's general tier's
     (_ranked_prefix, _set_overlap)."""
-    sh = _int_tokens(_shingles(docs))
+    sh = _int_tokens(
+        word_ngrams(docs, 3, "doc_id").withColumnRenamed("gram", "token")
+    )
     ranked, prefix = _ranked_prefix(sh, CONTAIN_T)
     # aggregated positional bound (see ppjoin_pairs): m = a-prefix
     # tokens shared with b (b side is COMPLETE, so every shared token
@@ -1899,7 +1853,9 @@ def l71_shingle_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     mem = m.join(groups, "h").select("doc_id", "rep")
     dd = d.join(groups.select(F.col("rep").alias("doc_id")), "doc_id")
     rp = _containment_pairs(dd)
-    sizes = _shingles(dd).groupBy("doc_id").agg(F.count("*").alias("n"))
+    sizes = word_ngrams(dd, 3, "doc_id").groupBy("doc_id").agg(
+        F.count("*").alias("n")
+    )
     # expand rep pairs to member pairs (directional — rp already holds
     # each qualifying direction); members inherit their rep's shingle
     # presence (same text), so no member-side shingle guard is needed
@@ -1979,55 +1935,29 @@ def l75_source_minhash_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     estimates shingle-set Jaccard between sources WITHOUT any
     doc-level join. Built on l58's engine-portable md5-derived hash so
     the sketch itself — not just its shape — hash-matches the oracle.
-    Shapes: explode ×16 slots map-side, one partial→final min per
-    (source, slot), then a 20-source × 16-slot self-join — O(sources²)
-    final stage, corpus touched once."""
+    Shapes: the wide signature (_mhp_wide) is one partial→final min
+    per source over the source-keyed shingles (the slot minima ignore
+    a shingle repeated across a source's docs, so no distinct runs
+    first), then a 20-source self-join whose 16-term slot sum is a
+    map-side expression — O(sources²) final stage, corpus touched once."""
     d = load_table(spark, sf_dir, "documents")
-    p = F.split("text", " ")
-    shingles = F.expr(
-        "transform(sequence(1, size(p) - 2), i -> concat("
-        "element_at(p, i), ' ', element_at(p, i + 1), ' ',"
-        " element_at(p, i + 2)))"
-    )
-    toks = (
-        d.select("source", p.alias("p"))
-        .filter(F.size("p") >= 3)
-        .select("source", F.explode(F.array_distinct(shingles)).alias("t"))
-        .distinct()
-    )
-    hashed = toks.select(
-        "source",
-        F.explode(F.sequence(F.lit(0), F.lit(MHP_HASHES - 1))).alias("i"),
-        F.conv(F.substring(F.md5("t"), 1, 15), 16, 10).cast("long").alias("ht"),
-    ).select(
-        "source",
-        "i",
-        (
-            ((2 * F.col("i") + 1) * (F.col("ht") % MHP_P) + 1000003 * F.col("i"))
-            % MHP_P
-        ).alias("h"),
-    )
     # pinned (r12): both self-join sides re-ran the whole shingle +
-    # 16-way hash + min pipeline (320 output rows) before
-    sigs = ephemeral_cache(
-        hashed.groupBy("source", "i").agg(F.min("h").alias("mh"))
+    # hash + min pipeline (20 output rows) before
+    wide = ephemeral_cache(_mhp_wide(word_ngrams(d, 3, "source"), "source"))
+    agree = sum(
+        (F.col(f"a.m{i}") == F.col(f"b.m{i}")).cast("long")
+        for i in range(MHP_HASHES)
     )
-    a = sigs.alias("a")
-    b = sigs.alias("b")
     return (
-        a.join(
-            F.broadcast(b),
-            (F.col("a.i") == F.col("b.i"))
-            & (F.col("a.source") < F.col("b.source")),
+        wide.alias("a")
+        .join(
+            F.broadcast(wide.alias("b")),
+            F.col("a.source") < F.col("b.source"),
         )
-        .groupBy(
+        .select(
             F.col("a.source").alias("source_a"),
             F.col("b.source").alias("source_b"),
-        )
-        .agg(
-            F.sum(
-                F.when(F.col("a.mh") == F.col("b.mh"), 1).otherwise(0)
-            ).alias("matching_slots")
+            agree.alias("matching_slots"),
         )
         .orderBy("source_a", "source_b")
     )
@@ -2100,7 +2030,10 @@ def l81_dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         [(float(x),) for x in SWEEP_TAUS], ["tau"]
     )
     if not _collapse_pays(d, sf_dir):
-        jac = ppjoin_pairs(_shingles(d), min(SWEEP_TAUS))
+        jac = ppjoin_pairs(
+            word_ngrams(d, 3, "doc_id").withColumnRenamed("gram", "token"),
+            min(SWEEP_TAUS),
+        )
         j = F.broadcast(taus).join(
             jac, F.col("jaccard") >= F.col("tau"), "left"
         )
@@ -2122,7 +2055,7 @@ def l81_dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     mem = m.join(groups.select("h", "rep"), "h").select("doc_id", "rep")
     dd = d.join(groups.select(F.col("rep").alias("doc_id")), "doc_id")
-    sh = _shingles(dd)
+    sh = word_ngrams(dd, 3, "doc_id").withColumnRenamed("gram", "token")
     rj = ppjoin_pairs(sh, min(SWEEP_TAUS))  # rep pairs, doc_a < doc_b
     gsz = groups.select("rep", "k")
     rjk = rj.join(
@@ -2268,25 +2201,11 @@ def l83_lsh_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     the SPARK plan (the oracle's naive join is the point of
     comparison)."""
     d = load_table(spark, sf_dir, "documents")
-    t = F.split("text", " ")
-    idx = F.when(
-        F.size(t) >= 3, F.sequence(F.lit(1), F.size(t) - 2)
-    ).otherwise(F.array().cast("array<int>"))
-    sh = (
-        d.select("doc_id", F.explode(idx).alias("i"), t.alias("t"))
-        .select(
-            "doc_id",
-            F.concat_ws(
-                " ",
-                F.element_at("t", F.col("i")),
-                F.element_at("t", F.col("i") + 1),
-                F.element_at("t", F.col("i") + 2),
-            ).alias("token"),
-        )
-        .distinct()
-    )
-    exact = ppjoin_pairs(sh, LSH_EVAL_TAU).select("doc_a", "doc_b")
-    cand = l58_minhash_portable(spark, sf_dir)
+    grams = word_ngrams(d, 3, "doc_id")
+    exact = ppjoin_pairs(
+        grams.withColumnRenamed("gram", "token"), LSH_EVAL_TAU
+    ).select("doc_a", "doc_b")
+    cand = _mhp_band_pairs(_mhp_wide(grams, "doc_id"))
     # ONE action for all three counts (r12): tp/n_exact/n_cand as three
     # separate driver actions re-executed each side's pipeline above its
     # pinned inputs per action (the exact side's candidate+verify ran
@@ -2296,7 +2215,7 @@ def l83_lsh_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # distinct on (doc_a, doc_b), so SUMs of the markers are exact
     # set cardinalities.
     e = exact.withColumn("ex", F.lit(1))
-    c = cand.select("doc_a", "doc_b").withColumn("cd", F.lit(1))
+    c = cand.withColumn("cd", F.lit(1))
     stats = (
         e.join(c, ["doc_a", "doc_b"], "full_outer")
         .agg(
@@ -2433,13 +2352,12 @@ def l2b_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     Production keeps xxhash64 (l2b); this twin exists so every stage of
     the LSH semantics is differentially tested against DuckDB.
 
-    r11: signatures come from the one-pass wide agg (_mhp_wide), band
-    rows and the slot-agreement verify are map-side projections of the
-    16 signature columns (_mhp_band_pairs/_mhp_slot_agreement) — the
-    earlier explode-×16 + three shuffled re-aggregations were pure
-    shuffle inflation (steady 3.0 → 0.9 s at sf0.1, oracle
-    hash-match unchanged)."""
-    wide = ephemeral_cache(_mhp_wide(spark, sf_dir))
+    Band rows and the slot-agreement verify are map-side projections
+    of the 16 signature columns (_mhp_band_pairs/_mhp_slot_agreement):
+    an explode ×16 with three shuffled re-aggregations was pure
+    shuffle inflation (steady 3.0 → 0.9 s at sf0.1)."""
+    d = load_table(spark, sf_dir, "documents")
+    wide = ephemeral_cache(_mhp_wide(word_ngrams(d, 3, "doc_id"), "doc_id"))
     cand = _mhp_band_pairs(wide)
     return (
         _mhp_slot_agreement(cand, wide)
@@ -2507,51 +2425,13 @@ def l2e_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-matches DuckDB, closing the rows-only gap on the SimHash
     family.  Same 100 TB posture as l2e: 4 block rows/doc, collisions
     localized to equal-block buckets, no all-pairs anywhere."""
-    d = load_table(spark, sf_dir, "documents")
-    tok = d.select(
-        "doc_id",
-        F.explode(F.array_distinct(F.split("text", " "))).alias("t"),
-    )
+    tok = _doc_tokens(spark, sf_dir)
     # one-pass sign pack (see _simhash_fingerprints — no 60× bit-row
-    # explode); conv() returns STRING, hence the cast
+    # explode)
     fp = _pack_signhash(
-        tok.selectExpr(
-            "doc_id",
-            "CAST(conv(substring(md5(t), 1, 15), 16, 10) AS BIGINT) AS hx",
-        ),
-        SHP_BITS,
+        tok.select("doc_id", md5_hash60("token").alias("hx")), SHP_BITS
     )
-    blocks = fp.select(
-        "doc_id",
-        "simhash",
-        F.explode(
-            F.expr(
-                f"transform(sequence(0, {SHP_BLOCKS - 1}), k -> named_struct("
-                f"  'k', k,"
-                f"  'blk', shiftright(simhash, k * {SHP_BLOCK_BITS})"
-                f"         & {2**SHP_BLOCK_BITS - 1}))"
-            )
-        ).alias("kb"),
-    ).select("doc_id", "simhash", "kb.k", "kb.blk")
-    cand = (
-        blocks.alias("a")
-        .join(blocks.alias("b"), on=["k", "blk"])
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.col("a.simhash").alias("ha"),
-            F.col("b.simhash").alias("hb"),
-        )
-        .distinct()
-    )
-    hd = F.expr("bit_count(ha ^ hb)")
-    return (
-        cand.withColumn("hamming", hd.cast("long"))
-        .filter(F.col("hamming") <= SIMHASH_MAX_HD)
-        .select("doc_a", "doc_b", "hamming")
-        .orderBy("doc_a", "doc_b")
-    )
+    return _hamming_pairs(fp, SHP_BLOCK_BITS)
 
 
 # ---- l103: LSH parameter tuning against the corpus ------------------
@@ -2656,7 +2536,8 @@ def l103_lsh_param_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
     # hist dedup through exchange reuse (one groupBy("m") exchange,
     # re-read per union branch), so the pins only added two checkpoint
     # round-trips — l112 one-shot 2.31 pinned vs 1.62 unpinned.
-    wide = _mhp_wide(spark, sf_dir)
+    d = load_table(spark, sf_dir, "documents")
+    wide = _mhp_wide(word_ngrams(d, 3, "doc_id"), "doc_id")
     agree = _mhp_slot_agreement(_mhp_band_pairs(wide), wide)
     hist = agree.groupBy("m").agg(F.count("*").alias("cnt"))
     cfg = None
@@ -2896,22 +2777,14 @@ def l112_minhash_estimator_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     estimator-vs-truth divergence is real signal, not noise — both
     engines compute both columns exactly, and the bias they agree on
     is the corpus' actual sketch error."""
-    wide = ephemeral_cache(_mhp_wide(spark, sf_dir))
-    agree = _mhp_slot_agreement(_mhp_band_pairs(wide), wide)
     d = load_table(spark, sf_dir, "documents")
-    p = F.split("text", " ")
-    shingles = F.expr(
-        "transform(sequence(1, size(p) - 2), i -> concat("
-        "element_at(p, i), ' ', element_at(p, i + 1), ' ',"
-        " element_at(p, i + 2)))"
-    )
-    toks = (
-        d.select("doc_id", p.alias("p"))
-        .filter(F.size("p") >= 3)
-        .select("doc_id", F.explode(F.array_distinct(shingles)).alias("t"))
-    )
-    toks = ephemeral_cache(toks)
-    sizes = toks.groupBy("doc_id").agg(F.count_distinct("t").alias("n"))
+    grams = word_ngrams(d, 3, "doc_id")
+    wide = ephemeral_cache(_mhp_wide(grams, "doc_id"))
+    agree = _mhp_slot_agreement(_mhp_band_pairs(wide), wide)
+    # the n-grams are distinct per doc (doc_id is unique), so a count is
+    # each doc's shingle-set size
+    toks = ephemeral_cache(grams)
+    sizes = toks.groupBy("doc_id").agg(F.count("*").alias("n"))
     ta = toks.alias("ta")
     tb = toks.alias("tb")
     overlap = (
@@ -2920,7 +2793,7 @@ def l112_minhash_estimator_error(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(
             tb,
             (F.col("tb.doc_id") == F.col("doc_b"))
-            & (F.col("tb.t") == F.col("ta.t")),
+            & (F.col("tb.gram") == F.col("ta.gram")),
         )
         .groupBy("doc_a", "doc_b")
         .agg(F.count("*").alias("o"))

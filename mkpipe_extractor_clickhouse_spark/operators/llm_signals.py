@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 from ..catalog import load_table
 from ..registry import register
 from ._cache import ephemeral_cache
+from ._ngrams import word_ngrams
 
 _PPB = 1_000_000_000
 _STOP_SRC = 8  # shingles seen in more than this many sources are stop-grams
@@ -127,29 +128,13 @@ def l37_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded dimension (like l9's labels), so the output is a small
     matrix no matter the corpus row count."""
     d = load_table(spark, sf_dir, "documents")
-    t = F.split("text", " ")
-    idx = F.when(
-        F.size(t) >= 3, F.sequence(F.lit(1), F.size(t) - 2)
-    ).otherwise(F.array().cast("array<int>"))
-    sh = (
-        d.select("source", F.explode(idx).alias("i"), t.alias("t"))
-        .select(
-            "source",
-            F.concat_ws(
-                " ",
-                F.element_at("t", F.col("i")),
-                F.element_at("t", F.col("i") + 1),
-                F.element_at("t", F.col("i") + 2),
-            ).alias("shingle"),
-        )
-        .distinct()
-    )
+    sh = word_ngrams(d, 3, "source").distinct()
     # One aggregation collects each shingle's (sorted, ≤_STOP_SRC-bound)
     # source set; pair expansion is then a per-row ARRAY EXPRESSION —
     # the oracle's equi-self-join never appears in the plan at all, and
     # the hash-match proves the expansion is equivalent to it.
     capped = ephemeral_cache(
-        sh.groupBy("shingle")
+        sh.groupBy("gram")
         .agg(F.sort_array(F.collect_set("source")).alias("srcs"))
         .filter(F.size("srcs") <= _STOP_SRC)
     )

@@ -19,6 +19,7 @@ from ..catalog import load_table
 from ..registry import register
 from ._cache import ephemeral_cache
 from ._determinism import DAVG, DSUM, davg, dsum
+from ._ngrams import md5_hash60
 
 # Tiny sentiment-style lexicon over the fixture vocabulary (SURVEY L8,
 # lexicon-join pattern). Kept inline so Spark and the oracle agree.
@@ -552,7 +553,7 @@ def _cms_token_hash(t):
     """Portable base token hash: md5-prefix integer, computed ONCE per
     token (the affine row mix below derives the CMS_DEPTH row hashes
     from it — md5 is the expensive part, ~8× xxhash64)."""
-    return F.conv(F.substring(F.md5(t), 1, 15), 16, 10).cast("long") % CMS_P
+    return md5_hash60(t) % CMS_P
 
 
 def _cms_bucket(ht):
@@ -793,11 +794,7 @@ def a25_kmv_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         # 60-bit md5-prefix hash: uniform over [0, 2^60), engine-
         # portable (the l58 seam)
-        F.conv(
-            F.substring(F.md5(F.col("user_id").cast("string")), 1, 15), 16, 10
-        )
-        .cast("long")
-        .alias("h"),
+        md5_hash60(F.col("user_id").cast("string")).alias("h"),
     ).distinct()
     w = Window.partitionBy("event_type").orderBy("h")
     # pinned (r12): both pair-join sides and the k-th-minimum rollup

@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 from ..catalog import load_table
 from ..registry import register
 from ._cache import ephemeral_cache
+from ._ngrams import md5_hash60, word_ngrams
 
 # Benchmark decontamination: any training document sharing a word
 # n-gram with the held-out set is dropped. 5-grams calibrated on this
@@ -36,21 +37,6 @@ PACK_BUDGET = 256  # tokens per packed training sequence
 SPLIT_HASH = 2654435761
 SAMPLE_HASH = 1099087573
 M32 = 4294967296
-
-
-def _grams(docs: DataFrame, n: int) -> DataFrame:
-    """Distinct (doc_id, source, gram) word n-grams via one explode —
-    row-local, codegen'd; docs shorter than n yield no grams."""
-    t = F.split("text", " ")
-    idx = F.when(
-        F.size(t) >= n, F.sequence(F.lit(1), F.size(t) - (n - 1))
-    ).otherwise(F.array().cast("array<int>"))
-    parts = [F.element_at("t", F.col("i") + k) for k in range(n)]
-    return (
-        docs.select("doc_id", "source", F.explode(idx).alias("i"), t.alias("t"))
-        .select("doc_id", "source", F.concat_ws(" ", *parts).alias("gram"))
-        .distinct()
-    )
 
 
 def _gram_sql(n: int) -> str:
@@ -90,7 +76,7 @@ def l24_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     one map-side semi join + one anti join on the (tiny) flag set."""
     d = load_table(spark, sf_dir, "documents")
     train = d.filter(~F.col("source").isin(*EVAL_SOURCES))
-    sh = _grams(d, DECON_N)
+    sh = word_ngrams(d, DECON_N, "doc_id", "source")
     eval_grams = (
         sh.filter(F.col("source").isin(*EVAL_SOURCES)).select("gram").distinct()
     )
@@ -594,23 +580,7 @@ def l84_leakage_free_split(spark: SparkSession, sf_dir: str) -> DataFrame:
         "source",
         F.when(bucket < 900, "train").otherwise("val").alias("split"),
     )
-    t = F.split("text", " ")
-    idx = F.when(
-        F.size(t) >= 3, F.sequence(F.lit(1), F.size(t) - 2)
-    ).otherwise(F.array().cast("array<int>"))
-    sh = (
-        d.select("doc_id", F.explode(idx).alias("i"), t.alias("t"))
-        .select(
-            "doc_id",
-            F.concat_ws(
-                " ",
-                F.element_at("t", F.col("i")),
-                F.element_at("t", F.col("i") + 1),
-                F.element_at("t", F.col("i") + 2),
-            ).alias("token"),
-        )
-        .distinct()
-    )
+    sh = word_ngrams(d, 3, "doc_id").withColumnRenamed("gram", "token")
     from .llm_dedup import ppjoin_pairs
 
     dup = ppjoin_pairs(sh, LEAK_TAU).select("doc_a", "doc_b")
@@ -1024,23 +994,12 @@ def l99_inbatch_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents").select("doc_id")
     docs = d.select(
         "doc_id",
-        (
-            F.conv(
-                F.substring(F.md5(F.col("doc_id").cast("string")), 1, 15),
-                16,
-                10,
-            ).cast("long")
-            % NEG_BATCHES
-        ).alias("batch"),
+        (md5_hash60(F.col("doc_id").cast("string")) % NEG_BATCHES).alias(
+            "batch"
+        ),
         (F.col("doc_id") % NEG_ANCHOR_MOD == 0).alias("is_anchor"),
     )
-    order_h = F.conv(
-        F.substring(
-            F.md5(F.concat(F.lit("n"), F.col("doc_id").cast("string"))), 1, 15
-        ),
-        16,
-        10,
-    ).cast("long")
+    order_h = md5_hash60(F.concat(F.lit("n"), F.col("doc_id").cast("string")))
     w = Window.partitionBy("batch").orderBy(order_h, "doc_id")
     negs = (
         docs.filter(~F.col("is_anchor"))
@@ -1248,7 +1207,7 @@ def l104_contamination_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     source) — the corpus text never shuffles."""
     d = load_table(spark, sf_dir, "documents")
     train = d.filter(~F.col("source").isin(*EVAL_SOURCES))
-    sh = _grams(d, DECON_N)
+    sh = word_ngrams(d, DECON_N, "doc_id", "source")
     eval_grams = (
         sh.filter(F.col("source").isin(*EVAL_SOURCES)).select("gram").distinct()
     )

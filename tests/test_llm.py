@@ -1047,6 +1047,70 @@ def test_simhash_pairs_equal_bruteforce_hamming_join(spark, sf_dir):
     assert got  # non-degenerate fixture: some near pairs exist
 
 
+# (doc_id, source, text): a doc shorter than n, docs that repeat an
+# n-gram (within a doc and across a source), consecutive and trailing
+# spaces (empty tokens), an empty and a null text.
+_NGRAM_DOCS = [
+    (1, "s1", "a b c d e f"),
+    (2, "s1", "a b"),
+    (3, "s2", "x y x y x y x y"),
+    (4, "s2", "a  b c d  e"),
+    (5, "s3", ""),
+    (6, "s3", None),
+    (7, "s1", "b c d e f g "),
+    (8, "s3", "x y x y x y"),
+    (9, "s2", "one two three four"),
+]
+
+
+@pytest.mark.parametrize("n", [3, 5])
+@pytest.mark.parametrize(
+    "keys", [("doc_id",), ("source",), ("doc_id", "source")]
+)
+def test_word_ngrams_match_duckdb(spark, n, keys):
+    """word_ngrams is the one Spark form of the oracles' n-gram
+    relation: distinct per key, it equals DuckDB's ``SELECT DISTINCT …
+    UNNEST(GENERATE_SERIES(1, LEN(t) - n + 1))`` (the _gram_sql shape),
+    and keyed by doc_id it is already distinct without a shuffle."""
+    import duckdb
+    import pyarrow as pa
+
+    from mkpipe_extractor_clickhouse_spark.operators._ngrams import word_ngrams
+
+    docs = spark.createDataFrame(
+        _NGRAM_DOCS, "doc_id long, source string, text string"
+    )
+    grams = word_ngrams(docs, n, *keys)
+    if keys == ("source",):
+        grams = grams.distinct()
+    rows = [tuple(r) for r in grams.collect()]
+    assert len(rows) == len(set(rows))
+
+    con = duckdb.connect()
+    con.register(
+        "docs",
+        pa.table({
+            "doc_id": [d[0] for d in _NGRAM_DOCS],
+            "source": [d[1] for d in _NGRAM_DOCS],
+            "text": [d[2] for d in _NGRAM_DOCS],
+        }),
+    )
+    k = ", ".join(keys)
+    gram = " || ' ' || ".join(f"t[i+{j}]" for j in range(n))
+    want = set(
+        con.execute(
+            f"""
+            SELECT DISTINCT {k}, {gram} AS gram
+            FROM (SELECT {k}, STRING_SPLIT(text, ' ') AS t FROM docs),
+                 UNNEST(GENERATE_SERIES(1, LEN(t) - {n - 1})) AS s(i)
+            """
+        ).fetchall()
+    )
+    con.close()
+    assert set(rows) == want
+    assert any("  " in r[-1] for r in rows)  # empty tokens reached a gram
+
+
 def test_arrow_kernel_rejects_ragged_rows_summing_to_dim(spark):
     """The zero-copy reshape guard must validate PER-ROW lengths, not
     just the flat total: a batch of 3-dim and 5-dim vectors sums to

@@ -916,6 +916,80 @@ def test_operators_pin_only_through_ephemeral_cache():
     assert not offenders, f"raw localCheckpoint calls: {offenders}"
 
 
+def test_operators_build_word_ngrams_in_one_place():
+    """One word n-gram relation: no operator module but ``_ngrams.py``
+    builds a word 3-gram by hand, i.e. pairs an ``element_at(…, i + 2)``
+    with a ``sequence(1, size(…) - 2)`` in one top-level definition,
+    as Column calls or inside a Spark SQL string. Strings passed as a
+    query's ``oracle=`` are DuckDB's side and do not count."""
+    import ast
+    import re
+    from pathlib import Path
+
+    import mkpipe_extractor_clickhouse_spark.operators as ops_pkg
+
+    sql_elem = re.compile(r"element_at\(\s*[^,()]+,\s*\w+\s*\+\s*2\s*\)")
+    sql_seq = re.compile(r"sequence\(\s*1\s*,\s*size\([^()]*\)\s*-\s*2\s*\)")
+
+    def is_int(node, v):
+        return isinstance(node, ast.Constant) and node.value == v
+
+    def call_name(node):
+        f = node.func
+        return f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
+
+    def hits(tree, oracle_ids):
+        elem, seq = [], []
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Call) and len(node.args) >= 2:
+                name, arg = call_name(node), node.args[1]
+                if (
+                    name == "element_at"
+                    and isinstance(arg, ast.BinOp)
+                    and isinstance(arg.op, ast.Add)
+                    and is_int(arg.right, 2)
+                ):
+                    elem.append(node.lineno)
+                if (
+                    name == "sequence"
+                    and isinstance(arg, ast.BinOp)
+                    and isinstance(arg.op, ast.Sub)
+                    and isinstance(arg.left, ast.Call)
+                    and call_name(arg.left) == "size"
+                    and is_int(arg.right, 2)
+                ):
+                    seq.append(node.lineno)
+            if (
+                isinstance(node, ast.Constant)
+                and isinstance(node.value, str)
+                and id(node) not in oracle_ids
+            ):
+                if sql_elem.search(node.value):
+                    elem.append(node.lineno)
+                if sql_seq.search(node.value):
+                    seq.append(node.lineno)
+        return elem, seq
+
+    offenders = []
+    for path in sorted(Path(ops_pkg.__file__).parent.glob("*.py")):
+        if path.name == "_ngrams.py":
+            continue
+        tree = ast.parse(path.read_text(), str(path))
+        oracle_ids = {
+            id(c)
+            for node in ast.walk(tree)
+            if isinstance(node, ast.keyword) and node.arg == "oracle"
+            for c in ast.walk(node.value)
+        }
+        for top in tree.body:
+            elem, seq = hits(top, oracle_ids)
+            if elem and seq:
+                offenders.append(f"{path.name}:{min(elem + seq)}")
+    assert not offenders, (
+        f"hand-built word n-grams (use _ngrams.word_ngrams): {offenders}"
+    )
+
+
 # (module, enclosing function) → why its monotonically_increasing_id
 # may stay unpinned.
 _UNPINNED_MONO_ID_OK = {
