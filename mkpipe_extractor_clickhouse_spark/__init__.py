@@ -10,7 +10,10 @@ natively on Spark — DataFrame/SQL API, Catalyst optimizer, Structured
 Streaming — instead of being delegated to a remote engine.
 
 Layout:
-  session.py    — SparkSession builder tuned for the local[32] harness
+  session.py    — SparkSession builder: local-mode defaults (heap sized
+                  from host RAM), Python workers started from _pydaemon
+  _pydaemon.py  — Python worker daemon that drops Spark's archives from
+                  sys.path where site-packages holds the same versions
   catalog.py    — fixture tables: explicit schemas, loaders, temp views
   registry.py   — QuerySpec registry: every operator's Spark builder +
                   its DuckDB oracle SQL, consumed by __spark_entry__.py

@@ -563,8 +563,10 @@ def packed_topk_cosine(
                 yield ids[cand], (m64 @ q64) / (norms[cand] * qn)
 
     # parallelize() slices the shard list directly — one task per shard
-    # with no repartition exchange (a whole extra stage and Python
-    # worker round-trip measured ~0.5 s of fixed latency at any scale)
+    # with no repartition exchange.  The exchange's extra stage adds a
+    # fixed ~0.06 s (min of 6: 0.13-0.14 → 0.20 s for the sf0.1 pack at
+    # local[4]; 0.26-0.27 → 0.35-0.37 s on Spark's default Python worker
+    # path; plans/r24/probe_repartition_floor.py)
     rdd = spark.sparkContext.parallelize(shards, min(len(shards), par))
     tasks = spark.createDataFrame(rdd, "path string, rg int")
     local = tasks.mapInArrow(
@@ -612,12 +614,16 @@ def _packed_layout_if_warm(sf_dir: str) -> str | None:
     memory bandwidth; a cold call must not pay the one-time pack build
     inside an interactive query, so it falls back to the list<float>
     brute-force kernel. The size gate exists because the packed kernel
-    carries a fixed floor (shard task scheduling + Python worker
-    spin-up, ~0.5 s) that dwarfs the whole brute-force wall on a small
-    corpus — measured 0.50 vs 0.15 s on the 4 k-vector sf0.1 fixture,
-    while at ≥0.8 M vectors the two kernels cross and the pack wins
-    outright (SCALEUP llm points). The probe is one os.stat sum over
-    the source files — no Spark action."""
+    carries a fixed floor (one task per shard, each paying the Python
+    worker's per-task start) that a small corpus may not repay. On the
+    4 k-vector sf0.1 fixture (one-shot min of 3, local[4], plans/r24/)
+    l4c read 0.29 s against l3's brute force 0.18 s on Spark's default
+    worker path, and 0.13 against 0.16 s with get_spark's _pydaemon
+    workers. The crossover the gate encodes (≥0.8 M vectors, SCALEUP
+    llm points) was measured before that and has not been re-measured,
+    so _PACKED_MIN_BYTES and the l3/l4 dispatch stay as they were. The
+    probe is one os.stat sum over the source files — no Spark
+    action."""
     import os
 
     cache = _packed_cache_dir(sf_dir)

@@ -5,6 +5,18 @@ Local-mode defaults follow the 100 TB design posture scaled down: AQE on
 partitions sized to the core count rather than the 200 default, UTC
 session timezone so timestamp semantics are independent of host TZ, and
 Arrow enabled for the pandas-UDF slow path.
+
+Under a ``local`` master, Python workers start from ``_pydaemon``
+(``spark.python.daemon.module``), which takes Spark's ``pyspark.zip``,
+py4j zip and spark-core jar off the worker's ``sys.path`` where pip
+installed the same versions, so a task no longer re-reads those
+archives (about 75 ms of CPU per Python task on a 4-core host).  The
+package's parent directory is appended to
+``spark.executorEnv.PYTHONPATH`` so the worker can import the module
+from any working directory.  Only ``get_spark`` sets this: a session
+the caller builds itself (the default-config session that runs
+``__spark_entry__.py``, ``scripts/driver_sim.py``'s) keeps Spark's
+default daemon and worker path.
 """
 
 from __future__ import annotations
@@ -13,6 +25,8 @@ import logging
 import os
 
 from pyspark.sql import SparkSession
+
+from . import _pydaemon
 
 _log = logging.getLogger(__name__)
 
@@ -102,7 +116,17 @@ def get_spark(
         # count for scheduling overhead — AQE coalesces the excess.
         .config("spark.sql.files.maxPartitionBytes", "16m")
     )
-    for k, v in (extra_conf or {}).items():
+    conf = dict(extra_conf or {})
+    if master.startswith("local"):
+        # A cluster's executors need not have this path; they keep
+        # Spark's default daemon.
+        pkg_parent = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        pythonpath = conf.pop("spark.executorEnv.PYTHONPATH", "")
+        builder = builder.config("spark.python.daemon.module", _pydaemon.__name__).config(
+            "spark.executorEnv.PYTHONPATH",
+            os.pathsep.join(p for p in (pythonpath, pkg_parent) if p),
+        )
+    for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

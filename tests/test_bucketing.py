@@ -13,21 +13,24 @@ from mkpipe_extractor_clickhouse_spark.plans import plan_tree
 
 
 @pytest.fixture(scope="module")
-def bucketed_tables(spark, sf_dir):
-    # Managed tables land in ./spark-warehouse (gitignored); the
-    # warehouse dir is a static conf and cannot move per-test.
+def bucketed_tables(spark, sf_dir, tmp_path_factory):
+    # External tables under a per-run directory: two test runs in one
+    # checkout never share a table location.
+    root = tmp_path_factory.mktemp("bucketed")
     li = load_table(spark, sf_dir, "lineitem")
     o = load_table(spark, sf_dir, "orders")
     (
         li.write.bucketBy(8, "l_orderkey")
         .sortBy("l_orderkey")
         .mode("overwrite")
+        .option("path", str(root / "li_bucketed"))
         .saveAsTable("li_bucketed")
     )
     (
         o.write.bucketBy(8, "o_orderkey")
         .sortBy("o_orderkey")
         .mode("overwrite")
+        .option("path", str(root / "o_bucketed"))
         .saveAsTable("o_bucketed")
     )
     yield "li_bucketed", "o_bucketed"
